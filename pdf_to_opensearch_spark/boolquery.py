@@ -30,10 +30,16 @@ that :mod:`.query` scores:
   max_query_terms gates, Lucene MoreLikeThis defaults) and run them as a
   disjunction, excluding the seed doc from the hits.
 
-All four reuse the physical shape of :func:`.query.search`: dictionary
-point-lookup (pruned parquet scan) → bucket/term-pruned postings scan →
-per-range vectorized kernel → global top-k window. Nothing here collects
-more than the dictionary rows for the query's own terms.
+Every surface here that reads postings does it through the one postings
+executor, :func:`.query.execute`: dictionary point-lookup (or a
+dictionary expansion pass) → bucket/term-pruned postings scan →
+per-range vectorized kernel, and ranked pages go through the one global
+top-k window, :func:`.query.ranked_topk`. ``execute`` takes one of three
+branches: the unfiltered per-file pyio scan (no Exchange), the filtered
+``cogroup`` with the allowed-doc frame, or — for non-local postings or
+ranges split across files — the JVM scan grouped by ``range_id``.
+Nothing here collects more than the dictionary rows for the query's own
+terms.
 """
 
 from __future__ import annotations
@@ -47,58 +53,30 @@ from pyspark.sql import functions as F
 
 from .analyzer import tokenize_text
 from .codec import decode_postings
-from .indexer import IndexPaths, bucket_of
+from .indexer import IndexPaths
 from .oracle import idf as idf_fn
 from .query import (
-    RESULT_SCHEMA,
+    RANKED,
     _allowed_docs,
     _filter_in,
     _score_kernel,
+    _weighted_qinfo,
+    execute,
     load_stats,
     lookup_dict_rows,
+    ranked_topk,
 )
-
-RANKED = "query_id int, rank int, doc_id long, score double"
-
-
-def _ranked_topk(per_range: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (per_range.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
-
-
-def _pruned_postings(spark: SparkSession, paths: IndexPaths, n_buckets: int,
-                     terms: list[str]) -> DataFrame:
-    buckets = sorted({bucket_of(t, n_buckets) for t in terms})
-    return _filter_in(
-        spark.read.parquet(paths.postings)
-        .filter(F.col("bucket").isin(buckets)),
-        "term", terms)
 
 
 def _run_kernel(spark: SparkSession, paths: IndexPaths, stats, qinfo: dict,
                 k: int, prune: bool, live_terms: list[str],
                 doc_filter: str | None, filter_root: str | None,
                 bool_spec: dict | None = None) -> DataFrame:
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live_terms)
-    if doc_filter is not None:
-        fpaths = IndexPaths(filter_root) if filter_root else paths
-        allowed = _allowed_docs(spark, fpaths, doc_filter)
-        per_range = (postings.groupBy("range_id")
-                     .cogroup(allowed.groupBy("range_id"))
-                     .applyInPandas(
-                         _score_kernel(qinfo, k, stats, prune, filtered=True,
-                                       bool_spec=bool_spec),
-                         schema=RESULT_SCHEMA))
-    else:
-        per_range = (postings.groupBy("range_id")
-                     .applyInPandas(
-                         _score_kernel(qinfo, k, stats, prune,
-                                       bool_spec=bool_spec),
-                         schema=RESULT_SCHEMA))
-    return _ranked_topk(per_range, k)
+    """Ranked BM25 page of ``qinfo`` through :func:`.query.execute`."""
+    kern = _score_kernel(qinfo, k, stats, prune, bool_spec=bool_spec)
+    allowed = _allowed_docs(spark, paths, doc_filter, filter_root)
+    return ranked_topk(execute(spark, paths, stats, live_terms, kern,
+                               allowed=allowed), k)
 
 
 # ------------------------------------------------------------- bool query
@@ -458,13 +436,8 @@ def more_like_this(spark: SparkSession, index_dir: str,
                       doc_filter, filter_root)
     seed_df = spark.createDataFrame(sorted(seed_of.items()),
                                     "query_id int, seed_id long")
-    res = (res.join(F.broadcast(seed_df), "query_id")
-           .filter(F.col("doc_id") != F.col("seed_id")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (res.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    return ranked_topk(res.join(F.broadcast(seed_df), "query_id")
+                       .filter(F.col("doc_id") != F.col("seed_id")), k)
 
 
 # --------------------------------------------------------- terms aggregation
@@ -546,10 +519,8 @@ def _match_docs(spark: SparkSession, paths: IndexPaths, stats,
             "doc_id": np.concatenate(out_d).astype(np.int64),
         })
 
-    postings = _pruned_postings(spark, paths, stats.n_buckets, terms)
-    return (postings.groupBy("range_id")
-            .applyInPandas(lambda pdf: match_kernel(pdf),
-                           schema="query_id int, doc_id long"))
+    return execute(spark, paths, stats, terms, match_kernel,
+                   schema="query_id int, doc_id long")
 
 
 def search_histogram(spark: SparkSession, index_dir: str,
@@ -902,31 +873,15 @@ def search_top_hits(spark: SparkSession, index_dir: str,
     stats = load_stats(spark, index_dir)
     out_schema = ("query_id int, facet_value string, rank int, "
                   "doc_id long, score double")
-    q_terms = {qid: tokenize_text(text) for qid, text in queries}
-    terms = sorted({t for toks in q_terms.values() for t in toks})
-    if not terms:
+    scored = _full_bm25_scores(spark, paths, stats, queries)
+    if scored is None:
         return spark.createDataFrame([], out_schema)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in terms if t in dfs}
-    from .query import _weighted_qinfo
-    qinfo = _weighted_qinfo(q_terms, idfs)
-    if not qinfo:
-        return spark.createDataFrame([], out_schema)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(_score_kernel(qinfo, 1 << 31, stats,
-                                           prune=False),
-                             schema=RESULT_SCHEMA))
     facets = (spark.read.parquet(paths.docs)
               .select("doc_id", F.col(facet_col).cast("string")
                       .alias("facet_value")))
     w = Window.partitionBy("query_id", "facet_value").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.withColumn("score", F.round("score", 4))
-            .join(facets, "doc_id")
+    return (scored.join(facets, "doc_id")
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= per_bucket)
             .select("query_id", "facet_value", "rank", "doc_id", "score"))
@@ -971,7 +926,6 @@ def boosting_search(spark: SparkSession, index_dir: str,
     dfs = {r["term"]: int(r["df"]) for r in dict_rows}
     idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
             for t in all_terms if t in dfs}
-    from .query import _weighted_qinfo
     qinfo = _weighted_qinfo(pos_q, idfs)
     if not qinfo:
         return spark.createDataFrame([], RANKED)
@@ -1004,11 +958,7 @@ def boosting_search(spark: SparkSession, index_dir: str,
             out = out.assign(score=sc)
         return out
 
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    per_range = (postings.groupBy("range_id")
-                 .applyInPandas(lambda pdf: kernel(pdf),
-                                schema=RESULT_SCHEMA))
-    return _ranked_topk(per_range, k)
+    return ranked_topk(execute(spark, paths, stats, live, kernel), k)
 
 
 # --------------------------------------------------------------- rescore
@@ -1056,7 +1006,7 @@ def rescore(spark: SparkSession, index_dir: str,
                                 + F.lit(float(rescore_weight))
                                 * F.coalesce(F.col("ph_score"), F.lit(0.0)),
                                 4)))
-    return _ranked_topk(comb, k)
+    return ranked_topk(comb, k)
 
 
 # ----------------------------------------------------------- query_string
@@ -1115,7 +1065,7 @@ def query_string_search(spark: SparkSession, index_dir: str,
     (k=∞, bool constraints range-local) full-outer-combined with the
     phrase kernel's match set — no new shuffle classes.
     """
-    from .query import _weighted_qinfo, phrase_search
+    from .query import phrase_search
 
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
@@ -1169,12 +1119,9 @@ def query_string_search(spark: SparkSession, index_dir: str,
     if qinfo:
         live = sorted({t for ti in qinfo.values() for t in ti}
                       | {t for _m, ns in bool_spec.values() for t in ns})
-        postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-        leg1 = (postings.groupBy("range_id")
-                .applyInPandas(_score_kernel(qinfo, 1 << 31, stats,
-                                             prune=False,
-                                             bool_spec=bool_spec),
-                               schema=RESULT_SCHEMA))
+        leg1 = execute(spark, paths, stats, live,
+                       _score_kernel(qinfo, 1 << 31, stats, prune=False,
+                                     bool_spec=bool_spec))
         legs.append(("terms", leg1))
     ph_qs = [(qid * 1000 + j, p) for qid, ps in phrase_map.items()
              for j, p in enumerate(ps)]
@@ -1224,7 +1171,7 @@ def query_string_search(spark: SparkSession, index_dir: str,
             leg_map["phrase"].select("query_id", "doc_id", "score"))
     else:
         combined = leg_map["terms"].select("query_id", "doc_id", "score")
-    return _ranked_topk(combined, k)
+    return ranked_topk(combined, k)
 
 
 # ------------------------------------------------------------- collapse
@@ -1239,29 +1186,13 @@ def search_collapse(spark: SparkSession, index_dir: str,
     rounds to 4 dp, takes rank-1 per (query, group), then the global
     ranked page. Returns (query_id, rank, doc_id, facet_value, score).
     """
-    from .query import _weighted_qinfo
-
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
     out_schema = ("query_id int, rank int, doc_id long, "
                   "facet_value string, score double")
-    q_terms = {qid: tokenize_text(text) for qid, text in queries}
-    terms = sorted({t for toks in q_terms.values() for t in toks})
-    if not terms:
+    scored = _full_bm25_scores(spark, paths, stats, queries)
+    if scored is None:
         return spark.createDataFrame([], out_schema)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in terms if t in dfs}
-    qinfo = _weighted_qinfo(q_terms, idfs)
-    if not qinfo:
-        return spark.createDataFrame([], out_schema)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(_score_kernel(qinfo, 1 << 31, stats,
-                                           prune=False),
-                             schema=RESULT_SCHEMA))
     groups = (spark.read.parquet(paths.docs)
               .select("doc_id", F.col(collapse_col).cast("string")
                       .alias("facet_value")))
@@ -1269,8 +1200,7 @@ def search_collapse(spark: SparkSession, index_dir: str,
         F.col("score").desc(), F.col("doc_id").asc())
     wk = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.withColumn("score", F.round("score", 4))
-            .join(groups, "doc_id")
+    return (scored.join(groups, "doc_id")
             .withColumn("rg", F.row_number().over(wg))
             .filter(F.col("rg") == 1)
             .withColumn("rank", F.row_number().over(wk))
@@ -1586,37 +1516,17 @@ def function_score_search(spark: SparkSession, index_dir: str,
     Returns DataFrame(query_id, rank, doc_id, score)."""
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
-    out_schema = RANKED
-    q_terms = {qid: tokenize_text(text) for qid, text in queries}
-    terms = sorted({t for toks in q_terms.values() for t in toks})
-    if not terms:
-        return spark.createDataFrame([], out_schema)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in terms if t in dfs}
-    from .query import _weighted_qinfo
-    qinfo = _weighted_qinfo(q_terms, idfs)
-    if not qinfo:
-        return spark.createDataFrame([], out_schema)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(_score_kernel(qinfo, 1 << 31, stats,
-                                           prune=False),
-                             schema=RESULT_SCHEMA))
+    scored = _full_bm25_scores(spark, paths, stats, queries)
+    if scored is None:
+        return spark.createDataFrame([], RANKED)
     factors = (spark.read.parquet(paths.docs)
                .select("doc_id", *factor_cols)
                .select("doc_id",
                        F.expr(factor_expr).cast("double").alias("factor")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.withColumn("score", F.round("score", 4))
-            .join(factors, "doc_id")
-            .withColumn("score", F.round(F.col("score") * F.col("factor"), 4))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    return ranked_topk(
+        scored.join(factors, "doc_id")
+        .withColumn("score", F.round(F.col("score") * F.col("factor"), 4)),
+        k)
 
 
 # ------------------------------------------ round-5 agg widening (set 3)
@@ -1785,25 +1695,13 @@ def _full_bm25_scores(spark: SparkSession, paths: IndexPaths, stats,
     dfs = {r["term"]: int(r["df"]) for r in dict_rows}
     idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
             for t in terms if t in dfs}
-    from .query import _weighted_qinfo
     qinfo = _weighted_qinfo(q_terms, idfs)
     if not qinfo:
         return None
     live = sorted({t for ti in qinfo.values() for t in ti})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    return (postings.groupBy("range_id")
-            .applyInPandas(_score_kernel(qinfo, 1 << 31, stats,
-                                         prune=False),
-                           schema=RESULT_SCHEMA)
+    return (execute(spark, paths, stats, live,
+                    _score_kernel(qinfo, 1 << 31, stats, prune=False))
             .withColumn("score", F.round("score", 4)))
-
-
-def _ranked_page(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
 
 
 def decay_score_search(spark: SparkSession, index_dir: str,
@@ -1840,7 +1738,7 @@ def decay_score_search(spark: SparkSession, index_dir: str,
     scored = (scored.join(factors, "doc_id")
               .withColumn("score",
                           F.round(F.col("score") * F.col("factor"), 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 def script_score_search(spark: SparkSession, index_dir: str,
@@ -1868,7 +1766,7 @@ def script_score_search(spark: SparkSession, index_dir: str,
               .withColumn("score",
                           F.round(F.expr(script_expr).cast("double"), 4))
               .select("query_id", "doc_id", "score"))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 RANDOM_SCORE_MULT = 2654435761  # Knuth multiplicative-hash constant
@@ -1895,7 +1793,7 @@ def random_score_search(spark: SparkSession, index_dir: str,
             * F.lit(RANDOM_SCORE_MULT)) % F.lit(4294967296)
            ).cast("double") / F.lit(4294967296.0)
     scored = matches.withColumn("score", F.round(rnd, 6))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 # ------------------------------------------- round-5 positional widening
@@ -1966,12 +1864,10 @@ def span_first_search(spark: SparkSession, index_dir: str,
             "score": pd.Series(out_s, dtype="float64"),
         })
 
-    postings = _pruned_postings(spark, paths, stats.n_buckets,
-                                sorted(set(q_term.values())))
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(kernel, schema=RESULT_SCHEMA)
+    scored = (execute(spark, paths, stats, sorted(set(q_term.values())),
+                      kernel, need_positions=True)
               .withColumn("score", F.round("score", 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
@@ -2073,11 +1969,10 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
 
     live = sorted({t for info in qinfo.values()
                    for t in info["fixed"] + info["exp"]})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(kernel, schema=RESULT_SCHEMA)
+    scored = (execute(spark, paths, stats, live, kernel,
+                      need_positions=True)
               .withColumn("score", F.round("score", 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 # --------------------------------------- round-5 filter-context queries
@@ -2257,7 +2152,7 @@ def percolate(spark: SparkSession, index_dir: str,
 
     Returns DataFrame(query_id int, doc_id long): the full match set.
     """
-    from .query import _weighted_qinfo, resolve_msm
+    from .query import resolve_msm
 
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
@@ -2277,24 +2172,11 @@ def percolate(spark: SparkSession, index_dir: str,
     if not qinfo:
         return spark.createDataFrame([], out_schema)
     live = sorted({t for ti in qinfo.values() for t in ti})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    if doc_filter is not None:
-        fpaths = IndexPaths(filter_root) if filter_root else paths
-        allowed = _allowed_docs(spark, fpaths, doc_filter)
-        per_range = (postings.groupBy("range_id")
-                     .cogroup(allowed.groupBy("range_id"))
-                     .applyInPandas(
-                         _score_kernel(qinfo, 1 << 31, stats, prune=False,
-                                       filtered=True, msm_spec=msm_spec),
-                         schema=RESULT_SCHEMA))
-    else:
-        per_range = (postings.groupBy("range_id")
-                     .applyInPandas(
-                         _score_kernel(qinfo, 1 << 31, stats, prune=False,
-                                       msm_spec=msm_spec),
-                         schema=RESULT_SCHEMA))
-    return per_range.select(F.col("query_id").cast("int"),
-                            F.col("doc_id").cast("long"))
+    return execute(
+        spark, paths, stats, live,
+        _score_kernel(qinfo, 1 << 31, stats, prune=False, msm_spec=msm_spec),
+        allowed=_allowed_docs(spark, paths, doc_filter, filter_root)
+    ).select(F.col("query_id").cast("int"), F.col("doc_id").cast("long"))
 
 
 def span_near_search(spark: SparkSession, index_dir: str,
@@ -2402,11 +2284,10 @@ def span_near_search(spark: SparkSession, index_dir: str,
         })
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(kernel, schema=RESULT_SCHEMA)
+    scored = (execute(spark, paths, stats, live, kernel,
+                      need_positions=True)
               .withColumn("score", F.round("score", 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 def search_rare_terms(spark: SparkSession, index_dir: str,
@@ -2620,7 +2501,7 @@ def rank_feature_search(spark: SparkSession, index_dir: str,
               .withColumn("score",
                           F.round(F.col("score")
                                   + F.lit(float(boost)) * sat, 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 def build_bigram_table(spark: SparkSession, index_dir: str) -> str:
@@ -3064,7 +2945,7 @@ def distance_feature_search(spark: SparkSession, index_dir: str,
                                                 + F.col("dist"))
     scored = (scored.join(feats, "doc_id")
               .withColumn("score", F.round(F.col("score") + bonus, 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 PINNED_BASE = 1_000_000_000.0
@@ -3090,10 +2971,10 @@ def pinned_search(spark: SparkSession, index_dir: str,
     pins = spark.createDataFrame(
         pin_rows, "query_id int, doc_id long, score double")
     if scored is None:
-        return _ranked_topk(pins, k)
+        return ranked_topk(pins, k)
     organic = scored.join(pins.select("query_id", "doc_id"),
                           ["query_id", "doc_id"], "left_anti")
-    return _ranked_topk(organic.unionByName(pins), k)
+    return ranked_topk(organic.unionByName(pins), k)
 
 
 def span_not_search(spark: SparkSession, index_dir: str,
@@ -3188,11 +3069,10 @@ def span_not_search(spark: SparkSession, index_dir: str,
 
     live = sorted({t for inc, ex in parsed.values()
                    for t in [inc] + ex})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(kernel, schema=RESULT_SCHEMA)
+    scored = (execute(spark, paths, stats, live, kernel,
+                      need_positions=True)
               .withColumn("score", F.round("score", 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 def synonym_search(spark: SparkSession, index_dir: str,
@@ -3281,11 +3161,9 @@ def synonym_search(spark: SparkSession, index_dir: str,
 
     live = sorted({t for groups in qinfo.values()
                    for members, _ in groups for t in members})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(kernel, schema=RESULT_SCHEMA)
+    scored = (execute(spark, paths, stats, live, kernel)
               .withColumn("score", F.round("score", 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)
 
 
 def named_bool_search(spark: SparkSession, index_dir: str,
@@ -3559,8 +3437,7 @@ def intervals_search(spark: SparkSession, index_dir: str,
         })
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
-    postings = _pruned_postings(spark, paths, stats.n_buckets, live)
-    scored = (postings.groupBy("range_id")
-              .applyInPandas(kernel, schema=RESULT_SCHEMA)
+    scored = (execute(spark, paths, stats, live, kernel,
+                      need_positions=True)
               .withColumn("score", F.round("score", 4)))
-    return _ranked_page(scored, k)
+    return ranked_topk(scored, k)

@@ -31,12 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyzer import tokenize_text
-from .boolquery import RANKED, _ranked_topk
 from .codec import decode_postings, tf_norm
 from .fields import field_root
 from .indexer import IndexPaths, bucket_of
 from .oracle import idf as idf_fn
-from .query import RESULT_SCHEMA, _filter_in, load_stats
+from .query import RANKED, RESULT_SCHEMA, _filter_in, load_stats, ranked_topk
 
 _ROOT_NAMES = (None, "current", "text")
 
@@ -199,4 +198,4 @@ def multi_match(spark: SparkSession, index_dir: str,
                       k, mode, tie_breaker=tie_breaker)
     per_range = (postings.groupBy("range_id")
                  .applyInPandas(kern, schema=RESULT_SCHEMA))
-    return _ranked_topk(per_range, k)
+    return ranked_topk(per_range, k)

@@ -12,16 +12,31 @@ Physical plan:
 2. Scan only postings partitions whose term-bucket can contain a query term
    (``bucket IN (...)`` partition pruning) further filtered ``term IN (...)``
    (parquet row-group min/max pruning).
-3. ``applyInPandas`` per doc-range: decode blocks, score **term-at-a-time,
-   fully vectorized** (numpy concat → groupby-sum), per-range top-k.
-   Because every document lives in exactly one range, per-range scores are
-   complete — no cross-range combine of partial scores is needed.
-   Optional block-max pruning drops whole 128-posting blocks whose
-   summed upper bounds cannot reach the running threshold (sound: uses the
-   per-block max stored at build time; differential-tested vs exhaustive).
-4. Global top-k: per-range candidates are ≤ k·n_ranges rows → window
-   ``row_number() over (partition by query order by score desc, doc_id)``
-   ≤ k (TakeOrderedAndProject-scale, not a full sort).
+3. :func:`execute` — the one postings executor every single-index query
+   surface calls — runs a per-range kernel on each WHOLE doc range's
+   postings rows. Because every document lives in exactly one range,
+   per-range scores are complete — no cross-range combine of partial
+   scores is needed. It picks one of three branches:
+
+   * unfiltered, local, range-aligned postings: one ``mapInPandas`` task
+     per bin of postings files reads them with pyarrow (C++-side
+     bucket/term row-group pruning) — no Exchange, and the postings
+     bytes never cross the JVM↔Python Arrow socket;
+   * filtered (``allowed`` doc set): the pushed-down JVM postings scan
+     ``cogroup``-ed with the allowed (doc_id, range_id) frame on
+     ``range_id``, so each range sees only its own allowed ids;
+   * non-local postings, or postings whose ranges are not file-aligned:
+     the same JVM scan grouped by ``range_id`` into ``applyInPandas``.
+
+   The BM25 kernel scores **term-at-a-time, fully vectorized** (numpy
+   concat → groupby-sum) and keeps a per-range top-k. Optional
+   block-max pruning drops whole 128-posting blocks whose summed upper
+   bounds cannot reach the running threshold (sound: uses the per-block
+   max stored at build time; differential-tested vs exhaustive).
+4. Global top-k (:func:`ranked_topk`): per-range candidates are
+   ≤ k·n_ranges rows → window ``row_number() over (partition by query
+   order by score desc, doc_id)`` ≤ k (TakeOrderedAndProject-scale, not
+   a full sort).
 
 Rank identity: ties broken by ascending doc_id everywhere, scores f64.
 """
@@ -45,6 +60,7 @@ from .indexer import IndexPaths, bucket_of
 from .oracle import idf as idf_fn
 
 RESULT_SCHEMA = "query_id int, doc_id long, score double"
+RANKED = "query_id int, rank int, doc_id long, score double"
 
 # Above this many terms/keys, a literal IN-list bloats the plan (and its
 # serialized size) — switch to a broadcast semi-join. Below it, keep isin:
@@ -143,47 +159,76 @@ def _ranges_file_aligned(files: list[str]) -> bool:
     return ok
 
 
-def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
-                           kernel, buckets: list[int], terms: list[str],
-                           need_positions: bool = False
-                           ) -> DataFrame | None:
-    """Fused postings scan + per-range kernel with PYTHON-NATIVE I/O:
-    one Spark task per postings FILE; the task reads its file with
-    pyarrow (``filters=`` gives C++-side bucket/term row-group pruning,
-    the same pruning the JVM scan did) and runs the scoring kernel on
-    each whole range inside it — the postings bytes never cross the
-    JVM↔Python Arrow socket and the ``groupBy(range_id)`` EXCHANGE
-    disappears (every range's rows live in exactly one file by the
-    build's range-alignment invariant, for both the JVM and the pyio
-    writer).
+def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
+            live_terms: list[str], kernel, *, need_positions: bool = False,
+            allowed: DataFrame | None = None,
+            schema: str = RESULT_SCHEMA) -> DataFrame:
+    """The one postings executor: run ``kernel`` on the bucket/term-pruned
+    postings rows of ``live_terms``, one WHOLE doc range per call, and
+    return the union of its outputs (``schema``).
 
-    Why (BENCH.md §6 round-5 diagnosis): the kernel scales 1→4 cores
-    like the Spark-free pool control (~0.86) while the JVM→Arrow
-    transfer path scales at ~0.60 — the boundary doubles memory traffic
-    and hits the shared-bandwidth wall first; for the 2048-query batch
-    the transfer is the whole pruned postings table plus a shuffle of
-    it. ``need_positions=False`` additionally prunes the ``poss``
-    column (dead weight for pure BM25 — the JVM path shipped it).
+    ``kernel(pdf)`` gets one range's postings rows; with ``allowed`` (a
+    (doc_id, range_id) frame, see :func:`_allowed_docs`) it is called as
+    ``kernel(pdf, allowed_ids)`` with that range's allowed doc_ids. The
+    ``poss`` column is read only with ``need_positions=True``.
 
-    Returns None when the layout doesn't allow it (non-local postings,
-    or the legacy ``bucket=N/`` partitioned dirs whose files lack the
-    bucket column) — callers fall back to the JVM scan. Disable
-    globally with SPARK_GRAFT_PYSCAN=0.
+    Branches (this is the only place that reads the postings table for a
+    query):
+
+    * unfiltered, local, range-aligned postings — the pyio scan: one
+      ``mapInPandas`` task per bin of postings files reads them with
+      pyarrow (``filters=`` gives C++-side bucket/term row-group pruning)
+      and runs the kernel on each range inside them. No Exchange, and
+      the postings bytes never cross the JVM↔Python Arrow socket (BENCH.md
+      §6 round-5 diagnosis: the kernel scales 1→4 cores like the
+      Spark-free pool control, ~0.86, while the JVM→Arrow transfer path
+      scales at ~0.60 — the boundary doubles memory traffic and hits the
+      shared-bandwidth wall first);
+    * filtered — the pushed-down JVM scan ``cogroup``-ed with ``allowed``
+      on ``range_id``: each range sees only its own allowed ids, never a
+      global id broadcast;
+    * non-local postings, the legacy ``bucket=N/`` partitioned dirs (no
+      top-level files), or a range split across files — the JVM scan
+      grouped by ``range_id``. A per-file task would see part of a range
+      and emit wrong partial scores, so this is the only correct path
+      for those inputs.
     """
     import glob
     import os
 
-    if os.environ.get("SPARK_GRAFT_PYSCAN", "1") == "0":
-        return None
     from .indexer import _is_local_path
 
-    if not _is_local_path(paths.postings, spark):
-        return None
-    files = sorted(glob.glob(os.path.join(paths.postings, "*.parquet")))
-    if not files or not _ranges_file_aligned(files):
-        return None
-    bucket_list = sorted(int(b) for b in buckets)
-    term_list = sorted(terms)
+    buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
+    terms = sorted(live_terms)
+    if allowed is None and _is_local_path(paths.postings, spark):
+        files = sorted(glob.glob(os.path.join(paths.postings, "*.parquet")))
+        if files and _ranges_file_aligned(files):
+            return _pyio_scan(spark, files, kernel, buckets, terms,
+                              need_positions, schema)
+    postings = _filter_in(                                    # row-group pruning
+        spark.read.parquet(paths.postings)
+        .filter(F.col("bucket").isin(buckets)),               # partition pruning
+        "term", terms)
+    if not need_positions:
+        postings = postings.drop("poss")
+    if allowed is not None:
+        return (postings.groupBy("range_id")
+                .cogroup(allowed.groupBy("range_id"))
+                .applyInPandas(
+                    lambda pdf, ok: kernel(
+                        pdf, ok["doc_id"].to_numpy(np.int64)),
+                    schema=schema))
+    return (postings.groupBy("range_id")
+            .applyInPandas(lambda pdf: kernel(pdf), schema=schema))
+
+
+def _pyio_scan(spark: SparkSession, files: list[str], kernel,
+               buckets: list[int], terms: list[str], need_positions: bool,
+               schema: str) -> DataFrame:
+    """:func:`execute`'s unfiltered branch over range-aligned local
+    postings ``files`` (every range's rows live in exactly one file, by
+    the build's range-alignment invariant)."""
+    import os
 
     def task(it):
         import pyarrow as pa
@@ -193,8 +238,7 @@ def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
         # defaults to ALL host CPUs per process (oversubscription)
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
-        filters = [("bucket", "in", bucket_list),
-                   ("term", "in", term_list)]
+        filters = [("bucket", "in", buckets), ("term", "in", terms)]
         for fdf in it:
             for path in (p for b in fdf["bin"] for p in bins[int(b)]):
                 pf_names = pq.ParquetFile(path).schema_arrow.names
@@ -222,20 +266,29 @@ def _python_scan_per_range(spark: SparkSession, paths: IndexPaths,
     # Bin ids ride a spark.range frame (one id per partition, pure JVM —
     # no shuffle, no pickled-RDD evaluation under the Arrow runner); the
     # bins themselves travel in the task closure next to qinfo.
-    import os as _os
-
     slots = max(1, spark.sparkContext.defaultParallelism)
     n_bins = min(len(files), max(8, 2 * slots))
     bins: list[list[str]] = [[] for _ in range(n_bins)]
     loads = [0] * n_bins
-    for f in sorted(files, key=_os.path.getsize, reverse=True):
+    for f in sorted(files, key=os.path.getsize, reverse=True):
         i = loads.index(min(loads))
         bins[i].append(f)
-        loads[i] += _os.path.getsize(f)
-    bins.sort(key=lambda b: -sum(_os.path.getsize(f) for f in b))
+        loads[i] += os.path.getsize(f)
+    bins.sort(key=lambda b: -sum(os.path.getsize(f) for f in b))
     return (spark.range(0, n_bins, 1, numPartitions=n_bins)
             .withColumnRenamed("id", "bin")
-            .mapInPandas(task, schema=RESULT_SCHEMA))
+            .mapInPandas(task, schema=schema))
+
+
+def ranked_topk(per_range: DataFrame, k: int) -> DataFrame:
+    """The global top-k page over per-range candidates: rank each
+    query's rows by (score desc, doc_id asc) — the engine's one
+    tie-break rule — and keep ranks ≤ k. Returns :data:`RANKED` rows."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc())
+    return (per_range.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id", "score"))
 
 
 def _weighted_qinfo(q_terms: dict, idfs: dict) -> dict:
@@ -270,7 +323,7 @@ def load_stats(spark: SparkSession, index_dir: str) -> IndexStats:
 
 
 def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
-                  filtered: bool = False, bool_spec: dict | None = None,
+                  bool_spec: dict | None = None,
                   after_spec: dict | None = None,
                   msm_spec: dict | None = None):
     """Per-doc-range scorer. qinfo: {query_id: {term: weight}} where
@@ -278,11 +331,11 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
     per query-term occurrence (Lucene BooleanQuery / BruteForceBM25.search
     semantics), so 'the the cat' scores 'the' twice.
 
-    With ``filtered=True`` the kernel is used as a cogroup function:
-    (postings_pdf, allowed_pdf) where allowed_pdf carries the doc_ids that
-    pass the metadata filter in this range (the Lucene bool/filter context:
-    scores are corpus-global, the filter only restricts the candidate set —
-    opensearch_loader.py:873-884 semantics).
+    The kernel is ``score_range(pdf, allowed_ids=None)`` (the
+    :func:`execute` contract): ``allowed_ids`` carries the doc_ids of
+    this range that pass the metadata filter (the Lucene bool/filter
+    context: scores are corpus-global, the filter only restricts the
+    candidate set — opensearch_loader.py:873-884 semantics).
 
     ``after_spec``: {query_id: (score, doc_id)} — the search_after
     cursor: only docs sorting STRICTLY AFTER the cursor in the
@@ -325,13 +378,10 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
     # small declared query sets (3-5 queries, oracle-hash-gated) keep the
     # loop path byte-for-byte (the dense accumulator's per-doc sums can
     # differ from np.add.reduceat's SIMD association by 1 ULP)
-    dense_ok = (not prune and not filtered and not bool_spec
-                and not after_spec and not msm_spec and len(qinfo) >= 16)
+    # (and no metadata filter: checked per call, on allowed_ids)
+    dense_ok = (not prune and not bool_spec and not after_spec
+                and not msm_spec and len(qinfo) >= 16)
     batch_terms = sorted({t for ti in qinfo.values() for t in ti})
-
-    def score_cogroup(pdf: pd.DataFrame, allowed: pd.DataFrame) -> pd.DataFrame:
-        out = score_range(pdf, allowed["doc_id"].to_numpy(np.int64))
-        return out
 
     def score_range(pdf: pd.DataFrame,
                     allowed_ids: np.ndarray | None = None) -> pd.DataFrame:
@@ -368,7 +418,7 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
         # Gated on density — per-query work is O(ncols), which only
         # beats the loop's O(Σ|lists| · log) when the batch touches most
         # columns; sparse workloads keep the loop.
-        if dense_ok:
+        if dense_ok and allowed_ids is None:
             live: dict[str, tuple] = {}
             lo_id = hi_id = None
             nnz = 0
@@ -543,12 +593,7 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
             "score": pd.Series(out_s, dtype="float64"),
         })
 
-    def score_plain(pdf: pd.DataFrame) -> pd.DataFrame:
-        # single-arg wrapper: applyInPandas passes (key, pdf) to two-arg
-        # functions, so score_range(pdf, allowed_ids=None) must be wrapped
-        return score_range(pdf)
-
-    return score_cogroup if filtered else score_plain
+    return score_range
 
 
 def _block_prune_masks(hits: list, contribs: dict, k: int,
@@ -606,13 +651,25 @@ def _block_prune_masks(hits: list, contribs: dict, k: int,
 
 
 def _allowed_docs(spark: SparkSession, paths: IndexPaths,
-                  doc_filter: str) -> DataFrame:
+                  doc_filter: str | None,
+                  filter_root: str | None = None) -> DataFrame | None:
     """(doc_id, range_id) of docs passing a SQL predicate over the docs
     table — the bool/filter context shared by every query type
     (opensearch_loader.py:386-408 builds term filters; 873-884 attaches
-    them to ANY search, match and match_phrase alike). Grouped by range_id
-    for the cogroup with the postings scan: each doc-range kernel sees only
-    its own allowed ids, never a global id broadcast."""
+    them to ANY search, match and match_phrase alike) — or None without
+    a predicate. Grouped by range_id for the cogroup with the postings
+    scan (:func:`execute`): each doc-range kernel sees only its own
+    allowed ids, never a global id broadcast.
+
+    ``filter_root``: index root whose DOCS table resolves ``doc_filter``
+    (default: ``paths``' own root). Field posting spaces project their
+    docs down to (doc_id, text, range_id, dl), so metadata predicates
+    must resolve against the ROOT index's docs — doc_ids and ranges are
+    shared."""
+    if doc_filter is None:
+        return None
+    if filter_root:
+        paths = IndexPaths(filter_root)
     docs_scan = spark.read.parquet(paths.docs)
     if "range_id" in docs_scan.columns:
         # prepare-assigned ranges ride on the docs table
@@ -643,92 +700,13 @@ def search(spark: SparkSession, index_dir: str, queries: list[tuple[int, str]],
            filter_root: str | None = None,
            after: dict[int, tuple[float, int]] | None = None,
            minimum_should_match: int | str | None = None) -> DataFrame:
-    """queries: [(query_id, text)] → DataFrame(query_id, rank, doc_id, score).
-
-    ``after``: {query_id: (score, doc_id)} — search_after cursor
-    pagination: return the top-k among docs sorting STRICTLY AFTER the
-    cursor in (score desc, doc_id asc) order. Cursor values must be the
-    engine's own previous-page last-row values (bit-identical f64).
-    Forces ``prune=False`` (block-max thresholds assume the
-    unconstrained top-k; the after-page lives below it). Queries without
-    a cursor entry page from the top.
-
-    ``doc_filter``: optional SQL predicate over the ``docs`` table columns
-    (url, lang, ...) — the bool/filter context of the reference's search
-    (opensearch_loader.py:873-884): restricts the candidate set without
-    changing corpus-global BM25 statistics. Implemented as a cogrouped
-    kernel so each doc-range only sees its own allowed doc_ids (no
-    broadcast of a global id set — scale-safe).
-
-    ``filter_root``: index root whose DOCS table resolves ``doc_filter``
-    (default ``index_dir``). Field posting spaces project their docs down
-    to (doc_id, text, range_id, dl), so metadata predicates must resolve
-    against the ROOT index's docs — doc_ids and ranges are shared.
-
-    ``minimum_should_match``: int or ``"N%"`` — a doc must match at least
-    that many DISTINCT query terms (OpenSearch match-query semantics;
-    percentage resolves per query by Lucene's positive-percentage floor).
-    Forces ``prune=False`` when the resolved floor exceeds 1."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    if after:
-        prune = False
-        after = {int(q): (float(s), int(d)) for q, (s, d) in after.items()}
-
-    q_terms = {qid: tokenize_text(text) for qid, text in queries}
-    msm_spec = None
-    if minimum_should_match is not None:
-        # clause count = DISTINCT analyzed terms; terms absent from the
-        # dictionary still count as clauses (Lucene builds the TermQuery
-        # regardless — it just never matches), so resolve BEFORE the df
-        # lookup. m > live-term count ⇒ the query legitimately matches
-        # nothing.
-        msm_spec = {qid: resolve_msm(minimum_should_match, len(set(toks)))
-                    for qid, toks in q_terms.items()}
-        if any(m > 1 for m in msm_spec.values()):
-            prune = False  # block-max masks would undercount match tallies
-    terms = sorted({t for toks in q_terms.values() for t in toks})
-    if not terms:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
-    # dictionary point-lookup with pushdown (Lucene term-dict seek analogue)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in terms if t in dfs}
-    qinfo = _weighted_qinfo(q_terms, idfs)
-    if not qinfo:
-        return spark.createDataFrame([], "query_id int, rank int, doc_id long, score double")
-
-    live_terms = sorted({t for ti in qinfo.values() for t in ti})
-    buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-    postings = _filter_in(                                    # row-group pruning
-        spark.read.parquet(paths.postings)
-        .filter(F.col("bucket").isin(buckets)),               # partition pruning
-        "term", live_terms)
-    if doc_filter is not None:
-        fpaths = IndexPaths(filter_root) if filter_root else paths
-        allowed = _allowed_docs(spark, fpaths, doc_filter)
-        per_range = (postings.groupBy("range_id")
-                     .cogroup(allowed.groupBy("range_id"))
-                     .applyInPandas(
-                         _score_kernel(qinfo, k, stats, prune, filtered=True,
-                                       after_spec=after, msm_spec=msm_spec),
-                         schema=RESULT_SCHEMA))
-    else:
-        kern = _score_kernel(qinfo, k, stats, prune, after_spec=after,
-                             msm_spec=msm_spec)
-        per_range = _python_scan_per_range(spark, paths, kern, buckets,
-                                           live_terms)
-        if per_range is None:
-            per_range = (postings
-                         .groupBy("range_id")
-                         .applyInPandas(kern, schema=RESULT_SCHEMA))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (per_range
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    """BM25 top-k: queries [(query_id, text)] → DataFrame(query_id, rank,
+    doc_id, score). One-shot form of :meth:`Searcher.search`, which
+    documents the options."""
+    return Searcher(spark, index_dir).search(
+        queries, k=k, prune=prune, doc_filter=doc_filter,
+        filter_root=filter_root, after=after,
+        minimum_should_match=minimum_should_match)
 
 
 # --------------------------------------------------------- phrase queries
@@ -737,8 +715,7 @@ _POS_SHIFT = np.uint64(24)  # doc_id<<24 | position keys: dl < 2^24 tokens,
 #                             doc_id < 2^39 — both safe at 10^12-doc scale
 
 
-def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats,
-                   filtered: bool = False, slop: int = 0):
+def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
     """Per-doc-range phrase scorer (match_phrase semantics,
     opensearch_loader.py:386-408 / Lucene PhraseQuery):
     tf = exact-phrase frequency, idf = Σ per-term idfs,
@@ -759,17 +736,14 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats,
 
     qinfo: {query_id: {"terms": [t0, t1, ...], "idf": float}}.
 
-    With ``filtered=True`` the kernel cogroups with the allowed-doc frame
-    (same contract as :func:`_score_kernel`): the metadata filter only
-    restricts the candidate set, phrase statistics stay corpus-global. The
+    ``allowed_ids`` is the metadata filter (same :func:`execute` contract
+    as :func:`_score_kernel`): it only restricts the candidate set, phrase
+    statistics stay corpus-global. The
     restriction is applied to the matched docs AFTER position intersection
     — phrase candidates are already tiny, so a per-term pre-filter buys
     nothing and would complicate the position-key bookkeeping.
     """
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
-
-    def score_cogroup(pdf: pd.DataFrame, allowed: pd.DataFrame) -> pd.DataFrame:
-        return score_range(pdf, allowed["doc_id"].to_numpy(np.int64))
 
     def score_range(pdf: pd.DataFrame,
                     allowed_ids: np.ndarray | None = None) -> pd.DataFrame:
@@ -849,10 +823,7 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats,
             "score": pd.Series(out_s, dtype="float64"),
         })
 
-    def score_plain(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_range(pdf)
-
-    return score_cogroup if filtered else score_plain
+    return score_range
 
 
 def phrase_search(spark: SparkSession, index_dir: str,
@@ -861,65 +832,11 @@ def phrase_search(spark: SparkSession, index_dir: str,
                   filter_root: str | None = None,
                   slop: int = 0) -> DataFrame:
     """Exact-phrase top-k (the match_phrase surface of the reference).
-
-    ``slop``: the match_phrase slop option under the ordered-window
-    contract documented on :func:`_phrase_kernel` (0 = exact phrase).
-
-    Same physical shape as :func:`search`: dictionary point-lookup →
-    bucket/term-pruned postings scan → per-range vectorized kernel →
-    global top-k window.
-
-    ``doc_filter``: optional SQL predicate over the docs table — the
-    reference attaches the same bool/filter context to every query type
-    including match_phrase (opensearch_loader.py:386-408, 873-884); the
-    filter restricts candidates without changing corpus-global stats.
-    """
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    q_terms = {qid: tokenize_text(text) for qid, text in queries}
-    terms = sorted({t for toks in q_terms.values() for t in toks})
-    empty = "query_id int, rank int, doc_id long, score double"
-    if not terms:
-        return spark.createDataFrame([], empty)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    qinfo = {}
-    for qid, toks in q_terms.items():
-        if toks and all(t in dfs for t in toks):
-            s_idf = float(sum(
-                idf_fn(stats.N, np.array([dfs[t]]))[0] for t in toks))
-            qinfo[int(qid)] = {"terms": toks, "idf": s_idf}
-    if not qinfo:
-        return spark.createDataFrame([], empty)
-    live_terms = sorted({t for i in qinfo.values() for t in i["terms"]})
-    buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-    postings = _filter_in(
-        spark.read.parquet(paths.postings)
-        .filter(F.col("bucket").isin(buckets)),
-        "term", live_terms)
-    if doc_filter is not None:
-        fpaths = IndexPaths(filter_root) if filter_root else paths
-        allowed = _allowed_docs(spark, fpaths, doc_filter)
-        per_range = (postings.groupBy("range_id")
-                     .cogroup(allowed.groupBy("range_id"))
-                     .applyInPandas(
-                         _phrase_kernel(qinfo, k, stats, filtered=True,
-                                        slop=slop),
-                         schema=RESULT_SCHEMA))
-    else:
-        kern = _phrase_kernel(qinfo, k, stats, slop=slop)
-        per_range = _python_scan_per_range(spark, paths, kern, buckets,
-                                           live_terms,
-                                           need_positions=True)
-        if per_range is None:
-            per_range = (postings.groupBy("range_id")
-                         .applyInPandas(kern, schema=RESULT_SCHEMA))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (per_range
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    One-shot form of :meth:`Searcher.phrase_search`, which documents the
+    options."""
+    return Searcher(spark, index_dir).phrase_search(
+        queries, k=k, doc_filter=doc_filter, filter_root=filter_root,
+        slop=slop)
 
 
 def explain_scores(spark: SparkSession, index_dir: str,
@@ -998,9 +915,10 @@ def explain_scores(spark: SparkSession, index_dir: str,
 class Searcher:
     """Reusable query handle: caches stats + (optionally) the dictionary.
 
-    ``search()``/``phrase_search()`` re-read the tiny stats/dictionary
-    parquet on every call — correct, but two extra driver round-trips per
-    query. A serving deployment keeps stats resident (one row). The
+    The module-level :func:`search`/:func:`phrase_search` open a fresh
+    handle per call, so they re-read the tiny stats/dictionary parquet
+    every time — correct, but two extra driver round-trips per query. A
+    serving deployment keeps stats resident (one row). The
     dictionary default is the per-query pruned parquet point-lookup:
     at web scale |vocab| is billions of rows and collecting it to the
     driver would OOM. ``preload_dictionary=True`` is an explicit opt-in
@@ -1029,58 +947,92 @@ class Searcher:
 
     def search(self, queries: list[tuple[int, str]], k: int = 10,
                prune: bool = True,
-               doc_filter: str | None = None) -> DataFrame:
+               doc_filter: str | None = None,
+               filter_root: str | None = None,
+               after: dict[int, tuple[float, int]] | None = None,
+               minimum_should_match: int | str | None = None) -> DataFrame:
+        """queries: [(query_id, text)] → DataFrame(query_id, rank, doc_id,
+        score).
+
+        ``after``: {query_id: (score, doc_id)} — search_after cursor
+        pagination: return the top-k among docs sorting STRICTLY AFTER the
+        cursor in (score desc, doc_id asc) order. Cursor values must be
+        the engine's own previous-page last-row values (bit-identical
+        f64). Forces ``prune=False`` (block-max thresholds assume the
+        unconstrained top-k; the after-page lives below it). Queries
+        without a cursor entry page from the top.
+
+        ``doc_filter``: optional SQL predicate over the ``docs`` table
+        columns (url, lang, ...) — the bool/filter context of the
+        reference's search (opensearch_loader.py:873-884): restricts the
+        candidate set without changing corpus-global BM25 statistics.
+        ``filter_root``: index root whose docs table resolves it (see
+        :func:`_allowed_docs`).
+
+        ``minimum_should_match``: int or ``"N%"`` — a doc must match at
+        least that many DISTINCT query terms (OpenSearch match-query
+        semantics; percentage resolves per query by Lucene's
+        positive-percentage floor). Forces ``prune=False`` when the
+        resolved floor exceeds 1."""
         stats = self.stats
+        if after:
+            prune = False
+            after = {int(q): (float(s), int(d))
+                     for q, (s, d) in after.items()}
         q_terms = {qid: tokenize_text(text) for qid, text in queries}
+        msm_spec = None
+        if minimum_should_match is not None:
+            # clause count = DISTINCT analyzed terms; terms absent from the
+            # dictionary still count as clauses (Lucene builds the
+            # TermQuery regardless — it just never matches), so resolve
+            # BEFORE the df lookup. m > live-term count ⇒ the query
+            # legitimately matches nothing.
+            msm_spec = {qid: resolve_msm(minimum_should_match,
+                                         len(set(toks)))
+                        for qid, toks in q_terms.items()}
+            if any(m > 1 for m in msm_spec.values()):
+                prune = False  # block-max masks would undercount tallies
         terms = sorted({t for toks in q_terms.values() for t in toks})
-        empty = "query_id int, rank int, doc_id long, score double"
         if not terms:
-            return self.spark.createDataFrame([], empty)
+            return self.spark.createDataFrame([], RANKED)
         dfs = self._lookup_dfs(terms)
         idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
                 for t in terms if t in dfs}
         qinfo = _weighted_qinfo(q_terms, idfs)
         if not qinfo:
-            return self.spark.createDataFrame([], empty)
+            return self.spark.createDataFrame([], RANKED)
         live_terms = sorted({t for ti in qinfo.values() for t in ti})
-        buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-        postings = _filter_in(
-            self.spark.read.parquet(self.paths.postings)
-            .filter(F.col("bucket").isin(buckets)),
-            "term", live_terms)
-        if doc_filter is not None:
-            allowed = _allowed_docs(self.spark, self.paths, doc_filter)
-            per_range = (postings.groupBy("range_id")
-                         .cogroup(allowed.groupBy("range_id"))
-                         .applyInPandas(
-                             _score_kernel(qinfo, k, stats, prune,
-                                           filtered=True),
-                             schema=RESULT_SCHEMA))
-        else:
-            kern = _score_kernel(qinfo, k, stats, prune)
-            per_range = _python_scan_per_range(self.spark, self.paths,
-                                               kern, buckets, live_terms)
-            if per_range is None:
-                per_range = (postings.groupBy("range_id")
-                             .applyInPandas(kern, schema=RESULT_SCHEMA))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc())
-        return (per_range
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score"))
+        kern = _score_kernel(qinfo, k, stats, prune, after_spec=after,
+                             msm_spec=msm_spec)
+        allowed = _allowed_docs(self.spark, self.paths, doc_filter,
+                                filter_root)
+        return ranked_topk(execute(self.spark, self.paths, stats,
+                                   live_terms, kern, allowed=allowed), k)
 
     def phrase_search(self, queries: list[tuple[int, str]], k: int = 10,
-                      doc_filter: str | None = None) -> DataFrame:
-        """match_phrase through the resident-stats handle (same engine as
-        module-level :func:`phrase_search`, minus the per-call stats read;
-        the dictionary lookup reuses the preloaded df map when present)."""
+                      doc_filter: str | None = None,
+                      filter_root: str | None = None,
+                      slop: int = 0) -> DataFrame:
+        """Exact-phrase top-k (the match_phrase surface of the reference).
+
+        ``slop``: the match_phrase slop option under the ordered-window
+        contract documented on :func:`_phrase_kernel` (0 = exact phrase).
+
+        Same physical shape as :meth:`search`: dictionary point-lookup →
+        bucket/term-pruned positional postings scan → per-range
+        vectorized kernel → global top-k window.
+
+        ``doc_filter`` / ``filter_root``: as for :meth:`search` — the
+        reference attaches the same bool/filter context to every query
+        type including match_phrase (opensearch_loader.py:386-408,
+        873-884); the filter restricts candidates without changing
+        corpus-global stats.
+        """
         stats = self.stats
         q_terms = {qid: tokenize_text(text) for qid, text in queries}
         terms = sorted({t for toks in q_terms.values() for t in toks})
-        empty = "query_id int, rank int, doc_id long, score double"
         if not terms:
-            return self.spark.createDataFrame([], empty)
+            return self.spark.createDataFrame([], RANKED)
         dfs = self._lookup_dfs(terms)
         qinfo = {}
         for qid, toks in q_terms.items():
@@ -1089,27 +1041,11 @@ class Searcher:
                     idf_fn(stats.N, np.array([dfs[t]]))[0] for t in toks))
                 qinfo[int(qid)] = {"terms": toks, "idf": s_idf}
         if not qinfo:
-            return self.spark.createDataFrame([], empty)
+            return self.spark.createDataFrame([], RANKED)
         live_terms = sorted({t for i in qinfo.values() for t in i["terms"]})
-        buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-        postings = _filter_in(
-            self.spark.read.parquet(self.paths.postings)
-            .filter(F.col("bucket").isin(buckets)),
-            "term", live_terms)
-        if doc_filter is not None:
-            allowed = _allowed_docs(self.spark, self.paths, doc_filter)
-            per_range = (postings.groupBy("range_id")
-                         .cogroup(allowed.groupBy("range_id"))
-                         .applyInPandas(
-                             _phrase_kernel(qinfo, k, stats, filtered=True),
-                             schema=RESULT_SCHEMA))
-        else:
-            per_range = (postings.groupBy("range_id")
-                         .applyInPandas(_phrase_kernel(qinfo, k, stats),
-                                        schema=RESULT_SCHEMA))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc())
-        return (per_range
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score"))
+        kern = _phrase_kernel(qinfo, k, stats, slop=slop)
+        allowed = _allowed_docs(self.spark, self.paths, doc_filter,
+                                filter_root)
+        return ranked_topk(execute(self.spark, self.paths, stats,
+                                   live_terms, kern, need_positions=True,
+                                   allowed=allowed), k)

@@ -18,12 +18,17 @@ def _daemon_module() -> str | None:
     if the JVM has not launched yet. When a SparkContext already exists
     the conf could not apply anyway (PythonWorkerFactory reads the
     context-creation conf), so return None and keep the stock daemon.
+    The same holds once the JVM gateway is up even with no active
+    context (a stopped session, or a gateway launched by other code): the
+    JVM's environment is fixed, the exported ``PYTHONPATH`` cannot reach
+    the daemon it would launch, and every Python job would fail.
     """
     from pyspark import SparkContext
 
     if os.environ.get("SPARK_GRAFT_DAEMON_PRELOAD", "1") == "0":
         return None
-    if SparkContext._active_spark_context is not None:
+    if (SparkContext._active_spark_context is not None
+            or SparkContext._gateway is not None):
         return None
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")

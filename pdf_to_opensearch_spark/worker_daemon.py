@@ -17,22 +17,29 @@ preloads must never take the daemon down: they only mean the first
 task pays the import again, exactly as without this module.
 """
 
-try:  # pragma: no cover - trivial import wiring
-    import pyarrow  # noqa: F401
-    import pyarrow.parquet  # noqa: F401
+import importlib
+import sys
 
-    # deliberately ONLY the deep shared import chains (indexer/query pull
-    # analyzer, codec, oracle, numpy/pandas plumbing): the daemon's own
-    # import time is paid when the session's FIRST Python-worker job
-    # triggers the daemon fork — which in a build-then-query session is
-    # inside the timed index build — so each module preloaded here must
-    # save more downstream than it costs there. Leaf task modules
-    # (ops.dedup, ops.similarity, hybrid, boolquery) import in 5-50 ms
-    # once these chains are resident and are left to first use.
-    import pdf_to_opensearch_spark.indexer  # noqa: F401  (analyzer, codec)
-    import pdf_to_opensearch_spark.query  # noqa: F401
-except Exception:  # noqa: BLE001 - preload is best-effort by design
-    pass
+# deliberately ONLY the deep shared import chains (indexer/query pull
+# analyzer, codec, oracle, numpy/pandas plumbing): the daemon's own
+# import time is paid when the session's FIRST Python-worker job
+# triggers the daemon fork — which in a build-then-query session is
+# inside the timed index build — so each module preloaded here must
+# save more downstream than it costs there. Leaf task modules
+# (ops.dedup, ops.similarity, hybrid, boolquery) import in 5-50 ms
+# once these chains are resident and are left to first use.
+PRELOAD = ("pyarrow", "pyarrow.parquet",
+           "pdf_to_opensearch_spark.indexer",  # analyzer, codec
+           "pdf_to_opensearch_spark.query")
+
+for _name in PRELOAD:
+    try:
+        importlib.import_module(_name)
+    except Exception as _exc:  # noqa: BLE001 - preload is best-effort
+        # stderr only: the JVM reads the daemon's port from its stdout
+        print(f"worker_daemon: preload of {_name} failed: {_exc!r}",
+              file=sys.stderr)
+        break
 
 from pyspark.daemon import manager
 

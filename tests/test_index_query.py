@@ -307,3 +307,83 @@ def test_msm_int_and_unmatchable_floor(spark, index_dir):
                   [(1, "spark nonexistentterm12345")], k=K,
                   minimum_should_match=2).toPandas()
     assert len(none) == 0
+
+
+def _split_one_range(root: str) -> None:
+    """Move half of one range's postings rows into a second parquet file,
+    so that range spans two files and the postings are no longer
+    range-aligned."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(root, "postings", "*.parquet")))
+    src = max(files, key=os.path.getsize)
+    tbl = pq.read_table(src)
+    rid = pc.min(tbl["range_id"]).as_py()
+    idx = np.flatnonzero(tbl["range_id"].to_numpy() == rid)
+    moved = np.zeros(tbl.num_rows, dtype=bool)
+    moved[idx[len(idx) // 2:]] = True
+    pq.write_table(tbl.filter(pa.array(~moved)), src)
+    pq.write_table(tbl.filter(pa.array(moved)),
+                   os.path.join(root, "postings", "split-extra.parquet"))
+
+
+def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
+                                                       corpus, tmp_path):
+    """Both sides of query.execute's unfiltered fork: with one range
+    split across two postings files the per-file pyio scan would score
+    partial ranges, so execute must take the JVM range_id grouping —
+    and every surface must return the rows of the aligned index."""
+    import glob
+    import os
+    import shutil
+
+    import pandas as pd
+
+    from pdf_to_opensearch_spark.boolquery import fuzzy_search
+    from pdf_to_opensearch_spark.query import Searcher, _ranges_file_aligned
+
+    _, oracle = corpus
+    split = str(tmp_path / "split_idx")
+    shutil.copytree(index_dir, split)
+    _split_one_range(split)
+    assert _ranges_file_aligned(
+        sorted(glob.glob(os.path.join(index_dir, "postings", "*.parquet"))))
+    assert not _ranges_file_aligned(
+        sorted(glob.glob(os.path.join(split, "postings", "*.parquet"))))
+
+    phrases = [(1, "duplicate content row"), (2, "딸기 육묘는"),
+               (3, "spark index")]
+    fuzzy = [(1, "sprak indx"), (2, "postng"), (3, "documnt serch")]
+
+    def rows(df):
+        return (df.toPandas().sort_values(["query_id", "rank"],
+                                          ignore_index=True))
+
+    def plan(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+
+    got = {}
+    for name, root in (("aligned", index_dir), ("split", split)):
+        res = search(spark, root, QUERIES, k=K, prune=False)
+        # the aligned side reads postings in pyio tasks (no JVM scan);
+        # the split side falls back to the JVM scan + range_id grouping
+        assert ("Scan parquet" in plan(res)) == (name == "split"), name
+        got[name] = (rows(res),
+                     rows(Searcher(spark, root).phrase_search(phrases, k=K)),
+                     rows(fuzzy_search(spark, root, fuzzy, k=K)))
+    for a, b in zip(got["aligned"], got["split"]):
+        assert len(a) > 0
+        pd.testing.assert_frame_equal(a, b)
+    res = got["split"][0]
+    for qid, qtext in QUERIES:
+        want = oracle.search(qtext, K)
+        sub = res[res["query_id"] == qid]
+        assert list(sub["doc_id"]) == [d for d, _ in want], qtext
+        np.testing.assert_allclose(
+            sub["score"].to_numpy(), [s for _, s in want], rtol=0, atol=1e-6)

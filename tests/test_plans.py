@@ -269,15 +269,79 @@ def test_top_hits_no_extra_shuffle_beyond_group_join_window(spark,
 
 def test_percolate_has_no_window_or_global_sort(spark, index_dir):
     """percolate emits the match set straight from the per-range kernel:
-    no Window (the set is not a page), no global Sort, and the postings
-    scan keeps the bucket partition filter."""
+    no Window (the set is not a page), no global Sort, no Exchange at all
+    — the unfiltered postings scan runs inside the kernel's pyio tasks
+    (bucket/term pruning happens in pyarrow there), so no postings
+    parquet scan appears in the Spark plan."""
     from pdf_to_opensearch_spark.boolquery import percolate
 
     res = percolate(spark, index_dir, [(1, "spark index"), (2, "document")])
     plan = _plan(res)
     tree = plan.split("\n\n")[0]
     assert "Window" not in plan, plan
-    # exactly one exchange: the range_id grouping for the kernel (its
-    # local sort is partition-internal, not a global order-by)
-    assert tree.count("Exchange") == 1, tree
-    assert "bucket" in plan  # partition filter reached the postings scan
+    assert tree.count("Exchange") == 0, tree
+    assert "Scan parquet" not in tree, tree
+
+
+def _exchanges_below_topk_window(plan: str) -> list[str]:
+    """Partitioning of every Exchange in the subtree of the plan's
+    deepest Window (the per-range candidates' top-k window), top down."""
+    import re
+
+    tree, details = plan.split("\n\n", 1)
+    lines = tree.splitlines()
+    win = max(i for i, ln in enumerate(lines)
+              if re.search(r"[- ]Window \(\d+\)$", ln))
+    depth = len(lines[win]) - len(lines[win].lstrip(" +-:"))
+    out = []
+    for ln in lines[win + 1:]:
+        if len(ln) - len(ln.lstrip(" +-:")) <= depth:
+            break
+        m = re.search(r"[- ]Exchange \((\d+)\)$", ln)
+        if m:
+            args = details.split(f"({m.group(1)}) Exchange")[1]
+            out.append(args.split("Arguments: ")[1].split("\n")[0])
+    return out
+
+
+def test_ranked_surfaces_have_no_exchange_below_topk_window(spark,
+                                                            index_dir):
+    """Every unfiltered single-index ranked surface goes through
+    query.execute's pyio branch: the only Exchange under the top-k Window
+    is the window's own query_id partitioning — no range_id grouping, no
+    JVM postings scan below it."""
+    from pdf_to_opensearch_spark import boolquery as bq
+    from pdf_to_opensearch_spark.query import Searcher, search
+
+    surfaces = {
+        "search": lambda: search(spark, index_dir, [(1, "spark index")],
+                                 k=5),
+        "phrase_search": lambda: Searcher(spark, index_dir).phrase_search(
+            [(1, "spark index")], k=5),
+        "boolean_search": lambda: bq.boolean_search(
+            spark, index_dir, [(1, {"must": "spark", "should": "index",
+                                    "must_not": "zzz"})], k=5),
+        "prefix_search": lambda: bq.prefix_search(
+            spark, index_dir, [(1, "spa")], k=5),
+        "fuzzy_search": lambda: bq.fuzzy_search(
+            spark, index_dir, [(1, "sprak")], k=5),
+        "wildcard_search": lambda: bq.wildcard_search(
+            spark, index_dir, [(1, "sp*k")], k=5),
+        "more_like_this": lambda: bq.more_like_this(
+            spark, index_dir, [(1, 0)], k=5, min_term_freq=1),
+        "boosting_search": lambda: bq.boosting_search(
+            spark, index_dir, [(1, {"positive": "spark index",
+                                    "negative": "posting"})], k=5),
+        "span_near_search": lambda: bq.span_near_search(
+            spark, index_dir, [(1, "spark index")], k=5),
+        "intervals_search": lambda: bq.intervals_search(
+            spark, index_dir, [(1, "spark index")], k=5),
+    }
+    for name, run in surfaces.items():
+        plan = _plan(run())
+        tree = plan.split("\n\n")[0]
+        assert "Scan parquet" not in tree, (name, tree)
+        below = _exchanges_below_topk_window(plan)
+        assert len(below) == 1, (name, below, tree)
+        assert below[0].startswith("hashpartitioning(query_id"), \
+            (name, below)
