@@ -10,6 +10,7 @@ as idiomatic Spark DataFrame dataflow plus vectorized Arrow/pandas kernels:
 - ``extract``   — html → text vectorized extraction (byte-identical per url)
 - ``chunking``  — deterministic sentence-packing chunker + prev/next context
 - ``indexer``   — SPIMI per-partition posting build + doc-range-partitioned merge
+- ``tablefs``   — the one I/O path: every index table through a pyarrow filesystem
 - ``query``     — BM25 top-k with block-max pruning; rank-identical to the oracle
 - ``oracle``    — brute-force single-node BM25 reference implementation
 - ``maintenance`` — delete-by-metadata + resumable manifest semantics

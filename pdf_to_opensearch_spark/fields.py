@@ -33,53 +33,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexer import (
-    IndexPaths,
-    build_postings,
-    read_small_table,
-    write_small_table,
-)
+from . import tablefs
+from .indexer import IndexPaths, build_postings, load_stats
 
 
 def field_root(index_dir: str, field: str) -> str:
-    return f"{index_dir}/fields/{field}"
+    return f"{IndexPaths(index_dir).fields}/{field}"
 
 
 def list_field_roots(spark: SparkSession, index_dir: str) -> list[str]:
     """Names of the field posting spaces present under ``<root>/fields/``
     (empty when the index has no extra analyzed fields). Used by
     maintenance to carry field spaces through snapshots."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/fields")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    return sorted(st.getPath().getName() for st in fs.listStatus(p)
-                  if st.isDirectory())
+    from pyarrow import fs as pafs
+
+    fs, p = tablefs.resolve(spark, IndexPaths(index_dir).fields)
+    infos = fs.get_file_info(pafs.FileSelector(p, allow_not_found=True))
+    return sorted(i.base_name for i in infos
+                  if i.type == pafs.FileType.Directory)
 
 
-def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
-    """Data files of one parquet directory via the Hadoop FileSystem API
-    (scheme-agnostic: local, HDFS, object stores)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            out.append(st.getPath().toString())
-    return sorted(out)
-
-
-def _project_field_files(field: str):
+def _project_field_files(field: str, fs):
     """mapInPandas kernel over a file-list frame: each task reads its
-    docs parquet file(s) directly (pyarrow) and emits the projected field
-    docs — one output file per source file, so the docs-file ↔ doc-range
-    alignment that makes the posting build shuffle-free is preserved by
-    construction, with NO session-conf involvement (the previous
-    implementation toggled the global no-split read conf, which raced
-    with any concurrent read in the same session)."""
+    docs parquet file(s) of ``fs`` directly (pyarrow) and emits the
+    projected field docs — one output file per source file, so the
+    docs-file ↔ doc-range alignment that makes the posting build
+    shuffle-free is preserved by construction, with NO session-conf
+    involvement."""
     import pandas as pd
 
     def project(it):
@@ -88,18 +68,10 @@ def _project_field_files(field: str):
         from .analyzer import tokenize_arrow_batch
 
         for pdf in it:
-            for uri in pdf["path"]:
-                if uri.startswith("file:"):
-                    tbl = pq.read_table(
-                        uri[5:], columns=["doc_id", field, "range_id"])
-                else:
-                    import pyarrow.fs as pafs
-
-                    fsys, rel = pafs.FileSystem.from_uri(uri)
-                    tbl = pq.read_table(
-                        rel, filesystem=fsys,
-                        columns=["doc_id", field, "range_id"])
-                sub = tbl.to_pandas()
+            for path in pdf["path"]:
+                sub = pq.read_table(
+                    path, filesystem=fs,
+                    columns=["doc_id", field, "range_id"]).to_pandas()
                 # NULL field values analyze as empty documents (dl 0),
                 # matching an absent optional field
                 text = sub[field].fillna("").astype(str)
@@ -127,14 +99,16 @@ def build_field_index(spark: SparkSession, index_dir: str, field: str,
     """
     import pandas as pd
 
+    import pyarrow.parquet as pq
+
     paths = IndexPaths(index_dir)
     froot = field_root(index_dir, field)
     fpaths = IndexPaths(froot)
-    st = read_small_table(spark, paths.stats).iloc[0]
+    st = load_stats(spark, index_dir)
     if num_ranges is None:
-        num_ranges = int(st["num_ranges"])
+        num_ranges = st.num_ranges
     if n_buckets is None:
-        n_buckets = int(st["n_buckets"])
+        n_buckets = st.n_buckets
 
     # zero-shuffle field projection via an EXPLICIT per-file read (the
     # round-5 fix for the session-global no-split conf toggle, which
@@ -142,16 +116,18 @@ def build_field_index(spark: SparkSession, index_dir: str, field: str,
     # docs file reads it directly and writes the projected field docs in
     # the same layout — range alignment is preserved by construction, so
     # build_postings over the field space needs no repartition either
-    if field not in spark.read.parquet(paths.docs).schema.names:
+    fs, docs_dir = tablefs.resolve(spark, paths.docs)
+    files = [f.path for f in tablefs.list_files(fs, docs_dir)]
+    have = pq.read_schema(files[0], filesystem=fs).names if files else []
+    if field not in have:
         raise ValueError(
             f"field {field!r} is not a column of the docs table "
-            f"(have: {spark.read.parquet(paths.docs).schema.names})")
-    files = _list_parquet_files(spark, paths.docs)
+            f"(have: {have})")
     file_rows = spark.sparkContext.parallelize(
         [(p,) for p in files], max(len(files), 1))
     fl = spark.createDataFrame(file_rows, "path string")
     sub = fl.mapInPandas(
-        _project_field_files(field),
+        _project_field_files(field, fs),
         schema="doc_id long, text string, range_id int, dl int")
     sub.write.mode("overwrite").parquet(fpaths.docs)
 
@@ -164,7 +140,7 @@ def build_field_index(spark: SparkSession, index_dir: str, field: str,
     n_docs, sum_dl = int(g["N"]), int(g["sum_dl"] or 0)
     meta = pd.DataFrame([{"N": n_docs, "sum_dl": sum_dl,
                           "avgdl": (sum_dl / n_docs) if n_docs else 0.0}])
-    write_small_table(spark, meta, fpaths.docs_meta)
+    tablefs.write_small_table(spark, meta, fpaths.docs_meta)
 
     build_postings(spark, froot, num_ranges=num_ranges, n_buckets=n_buckets)
     return froot

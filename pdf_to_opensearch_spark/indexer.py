@@ -22,13 +22,16 @@ inverted index:
    wide operations are the range repartition (by doc_id, balanced, never
    skewed regardless of Zipfian term skew) and the tiny dictionary
    aggregate (map-side combined sum — associative, skew-immune).
-4. **Term-bucket write partitioning** — postings written
-   ``partitionBy(bucket = crc32(term) % n_buckets)`` so query-time term
-   lookups prune partitions, plus parquet min/max row-group stats on
-   ``term`` within each bucket file.
+4. **Term buckets** — postings rows carry ``bucket = crc32(term) %
+   n_buckets`` and are written sorted by (bucket, term), so query-time
+   bucket/term filters prune parquet row groups by their min/max stats.
 5. **Manifest + lineage** per range (the archive-sink analogue,
    opensearch_loader.py:608-702): docs, terms, bytes, wall-clock,
    analyzer version, commit timestamp.
+
+Every table is read and written through the one pyarrow filesystem
+:func:`tablefs.resolve` returns for its path; ``stats`` carries the
+``format_version`` stamp that :func:`load_stats` checks.
 """
 
 from __future__ import annotations
@@ -36,13 +39,14 @@ from __future__ import annotations
 import time
 import zlib
 from collections.abc import Iterator
+from dataclasses import asdict, dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import ANALYZER_VERSION, BM25_B, BM25_K1
+from . import ANALYZER_VERSION, BM25_B, BM25_K1, tablefs
 from .analyzer import tokenize_arrow_batch
 from .codec import encode_postings_batch
 
@@ -253,59 +257,7 @@ def _empty_postings_frame() -> pd.DataFrame:
     })
 
 
-def _is_local_path(path: str, spark: SparkSession | None = None) -> bool:
-    """True iff the driver-local pyarrow fast path is safe for ``path``.
-
-    A scheme-less path is NOT inherently local: Spark executors resolve it
-    against ``fs.defaultFS`` (e.g. HDFS on a real cluster), so the fast
-    path would silently write the driver's disk while the cluster reads
-    elsewhere. Only take it when the cluster default FS is the local FS."""
-    if path.startswith("file://"):
-        return True
-    if "://" in path:
-        return False
-    if spark is not None:
-        default_fs = (spark.sparkContext._jsc.hadoopConfiguration()
-                      .get("fs.defaultFS", "file:///"))
-        return default_fs.startswith("file:")
-    return True
-
-
-def write_small_table(spark: SparkSession, pdf: pd.DataFrame,
-                      path: str) -> None:
-    """Overwrite a tiny driver-side table (stats, docs_meta — one to a
-    few rows). On a local FS this is a direct pyarrow write: a full
-    Spark job for a 1-row parquet is pure scheduling overhead (~0.3 s)
-    that shows up as SERIAL epilogue in the build's scaling profile. On
-    an object store it falls back to the Spark writer (at real scale
-    these writes are catalog commits anyway)."""
-    if _is_local_path(path, spark):
-        import os
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        p = path[7:] if path.startswith("file://") else path
-        staging = p + ".staging_small"
-        shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(staging)
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                       os.path.join(staging, "part-00000.parquet"))
-        shutil.rmtree(p, ignore_errors=True)
-        os.rename(staging, p)
-    else:
-        (spark.createDataFrame(pdf).coalesce(1)
-         .write.mode("overwrite").parquet(path))
-
-
-def read_small_table(spark: SparkSession, path: str) -> pd.DataFrame:
-    """Driver-side read of a tiny table (pandas/pyarrow on a local FS —
-    no Spark job; Spark reader otherwise)."""
-    if _is_local_path(path, spark):
-        p = path[7:] if path.startswith("file://") else path
-        return pd.read_parquet(p)
-    return spark.read.parquet(path).toPandas()
+FORMAT_VERSION = 1  # on-disk layout version, stamped in every stats row
 
 
 class IndexPaths:
@@ -318,6 +270,51 @@ class IndexPaths:
         self.docs_meta = f"{root}/docs_meta"
         self.stats = f"{root}/stats"
         self.manifest = f"{root}/manifest"
+        self.fields = f"{root}/fields"  # per-field posting spaces
+
+
+@dataclass(frozen=True)
+class IndexStats:
+    """One posting space's ``stats`` row: corpus statistics, BM25
+    parameters and range geometry."""
+    N: int
+    avgdl: float
+    avgdl_build: float
+    docs_per_range: int
+    num_ranges: int
+    n_buckets: int
+    k1: float
+    b: float
+
+
+def load_stats(spark: SparkSession, index_dir: str) -> IndexStats:
+    """The ``stats`` row of ``index_dir`` (one driver-side read, no Spark
+    job) — and the ONE on-disk format check: every layout older than
+    the ``format_version`` stamp (``bucket=N/`` postings, docs without
+    ``range_id``, no ``docs_meta``) lacks it, so it fails here, loudly,
+    instead of taking a per-layout branch."""
+    row = tablefs.read_small_table(spark, IndexPaths(index_dir).stats).iloc[0]
+    version = row.get("format_version")
+    if version is None or pd.isna(version) or int(version) != FORMAT_VERSION:
+        raise ValueError(
+            f"index {index_dir!r} has stats format_version {version}, but "
+            f"this engine reads format_version {FORMAT_VERSION} only: "
+            f"rebuild it with build_index")
+    return IndexStats(
+        N=int(row["N"]), avgdl=float(row["avgdl"]),
+        avgdl_build=float(row["avgdl_build"]),
+        docs_per_range=int(row["docs_per_range"]),
+        num_ranges=int(row["num_ranges"]), n_buckets=int(row["n_buckets"]),
+        k1=float(row["k1"]), b=float(row["b"]))
+
+
+def write_stats(spark: SparkSession, paths: IndexPaths,
+                stats: IndexStats) -> None:
+    """The one stats writer: ``stats`` plus the analyzer version and the
+    ``format_version`` stamp :func:`load_stats` checks."""
+    row = asdict(stats) | {"analyzer_version": ANALYZER_VERSION,
+                           "format_version": FORMAT_VERSION}
+    tablefs.write_small_table(spark, pd.DataFrame([row]), paths.stats)
 
 
 def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
@@ -332,18 +329,19 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
     FUSED write (guide §4.1/§2.4): the id-assign ``mapInPandas`` computes
     ``dl`` itself (one Arrow tokenize per batch) instead of a second
     ``token_count_udf`` ArrowEvalPython node — the text column crosses
-    the JVM↔Python boundary ONCE, not twice. On a local FS with a
-    driver-sized corpus each task additionally side-writes its
-    partition's ``doc_stats`` (doc_id, dl) file with pyarrow
-    (deterministic per-partition names — retries overwrite idempotently,
-    the :func:`_spimi_python_io` pattern) and the N/sum_dl meta comes
-    from one driver-side pandas read — the separate doc_stats-write and
-    aggregate Spark jobs disappear (3 jobs instead of 5 per build).
-    Non-local targets / web-scale corpora keep the distributed writes."""
-    import os
-    import shutil
+    the JVM↔Python boundary ONCE, not twice. With a driver-sized corpus
+    each task additionally side-writes its partition's ``doc_stats``
+    (doc_id, dl) file with pyarrow (deterministic per-partition names —
+    retries overwrite idempotently, the :func:`_spimi_python_io`
+    pattern) and the N/sum_dl meta comes from one driver-side read — the
+    separate doc_stats-write and aggregate Spark jobs disappear (3 jobs
+    instead of 5 per build). Web-scale corpora keep the distributed
+    writes.
 
+    A new docs table reassigns doc_ids, so the field posting spaces
+    built over the old one (``<root>/fields``) are removed."""
     paths = IndexPaths(out_dir)
+    tablefs.delete_dir(*tablefs.resolve(spark, paths.fields))
     ranged = (docs_df
               .repartitionByRange(id_partitions, "url")
               .sortWithinPartitions("url")
@@ -361,12 +359,11 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
             offsets[pid] = acc
             acc += counts[pid]
         N = acc
-        local_stats = (_is_local_path(paths.doc_stats, spark)
-                       and N <= SMALL_DERIVED_DOCS_MAX)
-        stats_dir = paths.doc_stats
+        local_stats = N <= SMALL_DERIVED_DOCS_MAX
+        fs, stats_dir = tablefs.resolve(spark, paths.doc_stats)
         if local_stats:
-            shutil.rmtree(stats_dir, ignore_errors=True)
-            os.makedirs(stats_dir, exist_ok=True)
+            tablefs.delete_dir(fs, stats_dir)
+            fs.create_dir(stats_dir)
 
         out_schema = ", ".join(
             f"{f.name} {f.dataType.simpleString()}"
@@ -404,7 +401,7 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
                 st = pd.concat(stat_chunks, ignore_index=True)
                 pq.write_table(
                     pa.Table.from_pandas(st, preserve_index=False),
-                    os.path.join(stats_dir, f"part-r{pid:05d}.parquet"))
+                    f"{stats_dir}/part-r{pid:05d}.parquet", filesystem=fs)
 
         # one file per id-partition → each docs file holds exactly one doc
         # range; build_postings exploits this to run with ZERO shuffle
@@ -417,24 +414,23 @@ def prepare_docs(spark: SparkSession, docs_df: DataFrame, out_dir: str,
     # docs-derived tables belong to phase A: they never change during the
     # indexing job, so the job itself doesn't pay for them (and doesn't
     # rescan docs for N/avgdl — docs_meta is a one-row point read)
-    if local_stats:
-        try:
-            st = pd.read_parquet(stats_dir, columns=["dl"])
-            sum_dl = int(st["dl"].sum())
-        except Exception:  # empty corpus: no side-written files
-            write_small_table(spark, pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "dl": pd.Series(dtype="int32")}), stats_dir)
-            sum_dl = 0
-    else:
+    if not local_stats:
         docs_tbl = spark.read.parquet(paths.docs)
         (docs_tbl.select("doc_id", "dl")
          .write.mode("overwrite").parquet(paths.doc_stats))
         g = docs_tbl.agg(F.sum("dl").alias("sum_dl")).collect()[0]
         sum_dl = int(g["sum_dl"] or 0)
+    elif tablefs.list_files(fs, stats_dir):
+        sum_dl = int(tablefs.read_small_table(
+            spark, paths.doc_stats, columns=["dl"])["dl"].sum())
+    else:  # empty corpus: no side-written files
+        tablefs.write_small_table(spark, pd.DataFrame(
+            {"doc_id": pd.Series(dtype="int64"),
+             "dl": pd.Series(dtype="int32")}), paths.doc_stats)
+        sum_dl = 0
     meta = pd.DataFrame([{"N": N, "sum_dl": sum_dl,
                           "avgdl": (sum_dl / N) if N else 0.0}])
-    write_small_table(spark, meta, paths.docs_meta)
+    tablefs.write_small_table(spark, meta, paths.docs_meta)
     return paths
 
 
@@ -442,9 +438,10 @@ _POSTINGS_ARROW_SCHEMA = None
 
 
 def _postings_arrow_schema():
-    """pyarrow schema EXACTLY matching the JVM writer's parquet footer
-    (parquet column resolution is by name + type per file, so a pyio
-    file and a Spark-written file must agree field-for-field)."""
+    """pyarrow schema EXACTLY matching the Spark writer's parquet footer
+    (``maintenance`` snapshots write postings with Spark; parquet column
+    resolution is by name + type per file, so a pyio file and a
+    Spark-written file must agree field-for-field)."""
     global _POSTINGS_ARROW_SCHEMA
     if _POSTINGS_ARROW_SCHEMA is None:
         import pyarrow as pa
@@ -462,15 +459,46 @@ def _postings_arrow_schema():
     return _POSTINGS_ARROW_SCHEMA
 
 
+def _range_spans(fs, files: list[str]) -> list[tuple[int, int] | None]:
+    """(min, max) ``range_id`` of each parquet file, from FOOTER stats
+    only (None for a file without rows). Raises ValueError when a row
+    group carries no ``range_id`` min/max."""
+    import pyarrow.parquet as pq
+
+    spans = []
+    for f in files:
+        md = pq.read_metadata(f, filesystem=fs)
+        idx = [md.schema.column(i).path
+               for i in range(md.num_columns)].index("range_id")
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is None or not st.has_min_max:
+                raise ValueError(f"{f}: no range_id statistics")
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        spans.append(None if lo is None else (lo, hi))
+    return spans
+
+
+def _spans_disjoint(spans) -> bool:
+    """True iff no two (min, max) range_id spans overlap — i.e. every
+    range lives wholly in one file (None spans are empty files)."""
+    spans = sorted(sp for sp in spans if sp)
+    return all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+
+
 def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
-                     n_buckets: int, mode: str,
-                     completed_ranges: set[int] | None,
-                     collect_meta: bool = False):
-    """The SPIMI stage with PYTHON-NATIVE I/O: Spark schedules one task
-    per range-aligned docs FILE; the task reads its file with pyarrow,
-    runs the same :func:`_spimi_batches` kernel, and writes its postings
-    parquet directly with pyarrow — the document bytes never cross the
-    JVM↔Python Arrow socket in either direction.
+                     n_buckets: int,
+                     completed_ranges: set[int] | None = None,
+                     collect_meta: bool = False) -> pd.DataFrame | None:
+    """The one SPIMI writer (build, resume and streaming append): Spark
+    schedules one task per bin of range-aligned docs FILES; the task
+    reads its files with pyarrow, runs the :func:`_spimi_batches`
+    kernel, and writes its postings parquet directly with pyarrow — the
+    document bytes never cross the JVM↔Python Arrow socket in either
+    direction. All I/O goes through the filesystem :func:`tablefs.resolve`
+    returns for the index root, which rides in the task closure.
 
     Why: the measured single-machine envelope (BENCH.md §6, round-5
     diagnosis) shows the pure kernel scaling 1→4 cores at ~0.86 — like
@@ -478,28 +506,24 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
     transfer scales at ~0.60 and the Arrow-return→JVM-sort→write path at
     ~0.62: the boundary crossings double memory traffic and hit the
     shared-bandwidth wall first. Removing them makes the Spark stage the
-    pool control plus a scheduler. At cluster scale the same holds per
-    executor (Arrow IPC is intra-node but still 2× the bytes); pyarrow
-    reads object storage through fsspec the same way.
+    pool control plus a scheduler.
 
-    Contract parity with the JVM writer: identical columns and types
-    (:func:`_postings_arrow_schema`), rows sorted by (bucket, term)
-    within each file (row-group pruning), deterministic per-file names
-    (task retries overwrite idempotently — the manifest remains the
-    commit record, exactly as before). ``overwrite`` cleans the dir
-    driver-side first; ``append`` (resume/streaming) writes only
-    not-yet-committed ranges under names that cannot collide with
-    existing files.
-
-    Returns False when the layout doesn't allow it (no local
-    range-aligned docs files) — the caller falls back to the JVM path.
+    Output contract: the columns and types of
+    :func:`_postings_arrow_schema`, rows sorted by (bucket, term) within
+    each file (row-group pruning), deterministic per-file names (task
+    retries overwrite idempotently — the manifest remains the commit
+    record). Without ``completed_ranges`` the postings dir is cleaned
+    first; with them (resume, append) only the docs files holding a
+    range outside the set are read — chosen from footer ``range_id``
+    stats — and only those ranges are written, under names that cannot
+    collide with existing files.
 
     ``collect_meta=True`` (small-index builds only): each task also
-    YIELDS the two derived-tables grouping-set partials it can compute
+    writes the two derived-tables grouping-set partials it can compute
     locally — the manifest row of every range it wrote (complete: a
     range never spans files) and its per-term (df, cf) partial sums —
-    and the function returns the collected partials DataFrame instead
-    of True. :func:`refresh_derived_tables` then finishes the
+    and the function returns the collected partials DataFrame (None
+    otherwise). :func:`refresh_derived_tables` then finishes the
     dictionary/manifest with a pandas groupby, so the whole build is
     ONE Spark job: the epilogue's separate scan+aggregate job (the
     serial Amdahl term of whole-job scaling) disappears. The collect
@@ -507,31 +531,37 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
     SMALL_DERIVED_DOCS_MAX guard keeps driver-sized; web-scale builds
     keep the distributed epilogue.
     """
-    import glob as _glob
-    import os
-    import shutil
+    import pyarrow.parquet as pq
 
-    if not _is_local_path(paths.docs, spark):
-        return False
-    files = sorted(_glob.glob(os.path.join(paths.docs, "*.parquet")))
-    if not files:
-        return False
-    if mode == "overwrite":
-        shutil.rmtree(paths.postings, ignore_errors=True)
-    os.makedirs(paths.postings, exist_ok=True)
-    post_dir = paths.postings
-    # derived-table partials return via SIDE FILES under _partials/ (a
-    # "_"-prefixed dir is invisible to both the Spark reader and the
-    # pyio globs): the Arrow collect of bins×vocab partial rows through
-    # mapInPandas→toPandas cost ~0.1-0.3 s of pure serial driver time
-    # per build; a pyarrow write per task + ONE driver read replaces it
-    # and the job's action shrinks to a count of one ack row per task
-    partials_dir = os.path.join(post_dir, "_partials")
-    shutil.rmtree(partials_dir, ignore_errors=True)
-    if collect_meta:
-        os.makedirs(partials_dir, exist_ok=True)
-    nb = int(n_buckets)
+    fs, root = tablefs.resolve(spark, paths.root)
+    post_dir = f"{root}/postings"
+    files = tablefs.list_files(fs, f"{root}/docs")
     skip = sorted(int(r) for r in (completed_ranges or ()))
+    if skip:
+        done = set(skip)
+        todo = [(f, sp) for f, sp in
+                zip(files, _range_spans(fs, [f.path for f in files]))
+                if sp and not set(range(sp[0], sp[1] + 1)) <= done]
+        if not _spans_disjoint(sp for _f, sp in todo):
+            raise ValueError(
+                f"{paths.docs}: a doc range to build spans several docs "
+                f"files; the per-file SPIMI writer needs range-aligned "
+                f"docs files")
+        files = [f for f, _sp in todo]
+    else:
+        tablefs.delete_dir(fs, post_dir)
+    fs.create_dir(post_dir)
+    # derived-table partials return via SIDE FILES under _partials/ (a
+    # "_"-prefixed dir is invisible to both the Spark reader and
+    # tablefs.list_files): the Arrow collect of bins×vocab partial rows
+    # through mapInPandas→toPandas cost ~0.1-0.3 s of pure serial driver
+    # time per build; a pyarrow write per task + ONE driver read
+    # replaces it and the job's action shrinks to one ack row per task
+    partials_dir = f"{post_dir}/_partials"
+    tablefs.delete_dir(fs, partials_dir)
+    if collect_meta:
+        fs.create_dir(partials_dir)
+    nb = int(n_buckets)
     spimi = _spimi_batches()
 
     def task(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -556,7 +586,7 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
                          for p in _paths_of(int(b))):
                 tbl = pq.read_table(
                     path, columns=["doc_id", "text", "range_id"],
-                    use_threads=False)
+                    use_threads=False, filesystem=fs)
                 dpdf = tbl.to_pandas()
                 if skip:
                     dpdf = dpdf[~dpdf["range_id"].isin(skip)]
@@ -578,12 +608,12 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
                 out["range_id"] = out["range_id"].astype("int32")
                 ranges = out["range_id"].to_numpy()
                 lo, hi = int(ranges.min()), int(ranges.max())
-                fname = os.path.join(
-                    post_dir, f"part-pyio-r{lo:05d}-{hi:05d}.parquet")
                 patbl = pa.Table.from_pandas(
                     out, schema=_postings_arrow_schema(),
                     preserve_index=False)
-                pq.write_table(patbl, fname, compression="snappy")
+                pq.write_table(
+                    patbl, f"{post_dir}/part-pyio-r{lo:05d}-{hi:05d}.parquet",
+                    compression="snappy", filesystem=fs)
                 if not collect_meta:
                     continue
                 # retain ONLY the metadata columns per file; the actual
@@ -598,9 +628,7 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
             # or tasks), gid=1 per-term dictionary partial sums folded
             # across this task's files. Written as a SIDE FILE under
             # _partials/ (deterministic per-bin name — retries overwrite
-            # idempotently) and read back with ONE driver pyarrow read:
-            # collecting bins×vocab rows through mapInPandas→toPandas
-            # cost ~0.1-0.3 s of serial driver time per build.
+            # idempotently) and read back with ONE driver pyarrow read.
             # n_terms=('term','size') relies on the one-row-per-
             # (term, range) invariant of the SPIMI kernel; sum_cf is
             # computed for real so no column carries placeholder values
@@ -629,30 +657,23 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
             folded = pd.concat([man[cols], dic[cols]], ignore_index=True)
             pq.write_table(
                 pa.Table.from_pandas(folded, preserve_index=False),
-                os.path.join(partials_dir,
-                             f"part-b{min(seen_bins):05d}.parquet"))
+                f"{partials_dir}/part-b{min(seen_bins):05d}.parquet",
+                filesystem=fs)
         yield pd.DataFrame({"ok": [1]})
 
     # task granularity: ONE wave of slots. Each mapInPandas task costs a
     # fixed JVM↔worker turnaround (~140 ms measured on this sandbox —
     # socket-heavy task protocol), so one-file-per-task serializes
     # len(files) of that overhead through the scheduler when files
-    # outnumber slots — pack files into min(len(files), slots) bins,
-    # largest-first (LPT, ≤4/3·OPT imbalance): the per-task constant is
-    # paid once per slot and there is no wave-boundary barrier (round 6;
-    # the previous 2·slots granularity cost an extra ~0.2 s at the
-    # scaling bench's local[4] level for no measurable balance win on
-    # near-uniform range files). On a real cluster slots ≫ files keeps
-    # one file per task.
+    # outnumber slots — pack files into min(len(files), slots) LPT bins:
+    # the per-task constant is paid once per slot and there is no
+    # wave-boundary barrier (round 6; the previous 2·slots granularity
+    # cost an extra ~0.2 s at the scaling bench's local[4] level for no
+    # measurable balance win on near-uniform range files). On a real
+    # cluster slots ≫ files keeps one file per task.
     slots = max(1, spark.sparkContext.defaultParallelism)
     n_bins = max(1, min(len(files), slots))
-    bins: list[list[str]] = [[] for _ in range(n_bins)]
-    loads = [0] * n_bins
-    for f in sorted(files, key=os.path.getsize, reverse=True):
-        i = loads.index(min(loads))
-        bins[i].append(f)
-        loads[i] += os.path.getsize(f)
-    bins.sort(key=lambda b: -sum(os.path.getsize(f) for f in b))
+    bins = tablefs.lpt_bins(files, n_bins)
     # bin ids distributed via spark.range (one id per partition, pure
     # JVM): the previous parallelize(...).flatMap path evaluated a
     # pickled Python RDD under the mapInPandas stage, and the FIRST such
@@ -669,14 +690,10 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
      .mapInPandas(task, schema="ok long")
      .collect())
     if not collect_meta:
-        return True
-    import glob as _glob
-
-    pfiles = sorted(_glob.glob(os.path.join(partials_dir, "*.parquet")))
+        return None
+    pfiles = [f.path for f in tablefs.list_files(fs, partials_dir)]
     if pfiles:
-        import pyarrow.parquet as pq
-
-        meta = pq.read_table(pfiles).to_pandas()
+        meta = pq.read_table(pfiles, filesystem=fs).to_pandas()
     else:  # empty corpus: no task produced postings
         meta = pd.DataFrame({
             "gid": pd.Series(dtype="int64"),
@@ -688,25 +705,22 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
             "bytes": pd.Series(dtype="int64"),
             "wall_ms": pd.Series(dtype="int64"),
         })
-    shutil.rmtree(partials_dir, ignore_errors=True)
+    tablefs.delete_dir(fs, partials_dir)
     return meta
 
 
 def build_postings(spark: SparkSession, out_dir: str,
                    num_ranges: int = 16, n_buckets: int = DEFAULT_BUCKETS,
-                   completed_ranges: set[int] | None = None,
-                   python_io: bool | None = None) -> IndexPaths:
-    """Phase B: the indexing job — docs table → postings + dictionary +
-    stats + manifest.
+                   completed_ranges: set[int] | None = None) -> IndexPaths:
+    """Phase B: the indexing job — docs table → postings (the
+    :func:`_spimi_python_io` writer) + dictionary + stats + manifest.
 
     ``completed_ranges`` (from :func:`resume_info`) skips already-committed
-    ranges — the resumable-checkpoint path (manifest anti-join).
-
-    ``python_io``: True forces the python-native-I/O SPIMI stage
-    (:func:`_spimi_python_io`), False forces the JVM scan/write path,
-    None (default) auto-selects pyio when the docs table is local
-    range-aligned parquet and the target isn't a legacy
-    bucket-partitioned layout.
+    ranges — the resumable-checkpoint path (manifest anti-join); only the
+    docs files holding a pending range are read. A resume onto an index
+    whose ``stats`` predates the current format raises ``ValueError``
+    (:func:`load_stats`); a first build that crashed before writing
+    ``stats`` has none yet, and its resume runs.
     """
     import os
 
@@ -723,117 +737,23 @@ def build_postings(spark: SparkSession, out_dir: str,
         t0 = now
 
     paths = IndexPaths(out_dir)
-    mode = "append" if completed_ranges else "overwrite"
-    # docs table handles are LAZY (round 6): spark.read.parquet pays a
-    # file-listing + schema job on the driver before any work, and the
-    # pyio path never needs the JVM scan at all — only the JVM fallback
-    # (and the legacy no-docs_meta stats probe) materializes it
-    _docs_tbl: list = [None]
-
-    def docs_tbl():
-        if _docs_tbl[0] is None:
-            _docs_tbl[0] = spark.read.parquet(paths.docs)
-        return _docs_tbl[0]
-
-    def docs_columns() -> list[str]:
-        if _is_local_path(paths.docs, spark):
-            import glob as _glob
-
-            p = paths.docs[7:] if paths.docs.startswith("file://") \
-                else paths.docs
-            fs = sorted(_glob.glob(os.path.join(p, "*.parquet")))
-            if fs:
-                import pyarrow.parquet as pq
-
-                return list(pq.ParquetFile(fs[0]).schema_arrow.names)
-        return list(docs_tbl().columns)
-
-    try:
-        m = read_small_table(spark, paths.docs_meta).iloc[0]
-        N, avgdl = int(m["N"]), float(m["avgdl"])
-    except Exception:  # pre-docs_meta layout: one aggregate over docs
-        g = docs_tbl().agg(F.count("*").alias("N"),
-                           F.avg("dl").alias("avgdl")).collect()[0]
-        N, avgdl = int(g["N"]), float(g["avgdl"] or 0.0)
-    docs_per_range = max(1, -(-N // num_ranges))  # ceil (legacy/stats)
+    if completed_ranges and tablefs.exists(
+            *tablefs.resolve(spark, paths.stats)):
+        load_stats(spark, out_dir)
+    m = tablefs.read_small_table(spark, paths.docs_meta).iloc[0]
+    N, avgdl = int(m["N"]), float(m["avgdl"])
+    docs_per_range = max(1, -(-N // num_ranges))  # ceil
     tick("stats_read")
 
-    use_pyio = python_io
-    if use_pyio is None:
-        from .streaming import _bucket_partitioned
-        use_pyio = ("range_id" in docs_columns()
-                    and not (mode == "append"
-                             and _bucket_partitioned(paths.postings)))
     # piggy-back the derived-tables partials on the SPIMI job itself
     # only when the whole index is being (re)built small enough for
-    # the driver-side epilogue — on append/resume the partials would
-    # miss the already-committed ranges.
-    want_meta = (N <= SMALL_DERIVED_DOCS_MAX and mode == "overwrite"
-                 and not completed_ranges)
-    meta_partials = None
-    pyio_done = False
-    if use_pyio:
-        r = _spimi_python_io(spark, paths, n_buckets, mode,
-                             completed_ranges, collect_meta=want_meta)
-        if r is not False:
-            pyio_done = True
-            if want_meta and isinstance(r, pd.DataFrame):
-                meta_partials = r
-    if pyio_done:
-        tick("spimi_write")
-    else:
-        # JVM fallback: read docs with NO file splitting and NO file
-        # packing — one partition per docs file = one (or more whole)
-        # doc range(s), so the SPIMI stage needs no repartition and
-        # the build stays SHUFFLE-FREE
-        conf = spark.conf
-        old_mpb = conf.get("spark.sql.files.maxPartitionBytes", None)
-        old_ocb = conf.get("spark.sql.files.openCostInBytes", None)
-        conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
-        conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
-        _docs_tbl[0] = None  # re-read under the no-split conf
-        docs_scan = docs_tbl()
-        if "range_id" in docs_scan.columns:
-            # prepare-assigned ranges: zero-shuffle
-            spimi_in = docs_scan.select("doc_id", "text", "range_id")
-        else:
-            # legacy docs table without stored ranges: derive fixed-width
-            # ranges from doc_id and shuffle once onto them
-            indexable = docs_scan.withColumn(
-                "range_id",
-                (F.col("doc_id") / F.lit(docs_per_range)).cast("int"))
-            spimi_in = (indexable.select("doc_id", "text", "range_id")
-                        .repartitionByRange(num_ranges, "range_id"))
-        if completed_ranges:
-            spimi_in = spimi_in.filter(
-                ~F.col("range_id").isin(*[int(r) for r in completed_ranges]))
-        postings = spimi_in.mapInPandas(
-            _spimi_batches(), schema=POSTINGS_SCHEMA)
-        postings = postings.withColumn(
-            "bucket", term_bucket_col(F.col("term"), n_buckets))
-        # flat write, sorted by (bucket, term) within each task: query-time
-        # bucket/term filters prune via parquet row-group min/max stats —
-        # same pruning power as directory partitioning without the dynamic
-        # -partition writer's sort + many-small-files commit cost
-        w = postings.sortWithinPartitions("bucket", "term").write.mode(mode)
-        if mode == "append":
-            from .streaming import _bucket_partitioned
-            if _bucket_partitioned(paths.postings):
-                # resuming onto a legacy bucket=N/ partitioned index: a
-                # root-level flat append would be invisible to partition
-                # discovery — keep the dir's own layout
-                w = w.partitionBy("bucket")
-        try:
-            w.parquet(paths.postings)
-        finally:
-            for key, old in (
-                    ("spark.sql.files.maxPartitionBytes", old_mpb),
-                    ("spark.sql.files.openCostInBytes", old_ocb)):
-                if old is None:
-                    conf.unset(key)
-                else:
-                    conf.set(key, old)
-        tick("spimi_write")
+    # the driver-side epilogue — on resume the partials would miss the
+    # already-committed ranges.
+    want_meta = N <= SMALL_DERIVED_DOCS_MAX and not completed_ranges
+    meta_partials = _spimi_python_io(spark, paths, n_buckets,
+                                     completed_ranges,
+                                     collect_meta=want_meta)
+    tick("spimi_write")
 
     refresh_derived_tables(spark, paths, N=N, avgdl=avgdl,
                            docs_per_range=docs_per_range,
@@ -949,7 +869,7 @@ def refresh_derived_tables(spark: SparkSession, paths: IndexPaths, *,
             "df": d["sum_n"].astype("int64"),
             "cf": d["sum_cf"].astype("int64"),
         })
-        write_small_table(spark, dict_pdf, paths.dictionary)
+        tablefs.write_small_table(spark, dict_pdf, paths.dictionary)
         m = pdf[pdf["gid"] == 2]
         man_pdf = pd.DataFrame({
             "range_id": m["range_id"].astype("int32"),
@@ -963,16 +883,13 @@ def refresh_derived_tables(spark: SparkSession, paths: IndexPaths, *,
         })
         man_pdf["committed_at"] = man_pdf["committed_at"].astype(
             "datetime64[us]")  # Spark's parquet reader rejects NANOS
-        write_small_table(spark, man_pdf, paths.manifest)
+        tablefs.write_small_table(spark, man_pdf, paths.manifest)
 
     def _stats_job():
-        stats_pdf = pd.DataFrame([{
-            "N": N, "avgdl": avgdl, "avgdl_build": avgdl,
-            "docs_per_range": docs_per_range, "num_ranges": num_ranges,
-            "n_buckets": n_buckets, "analyzer_version": ANALYZER_VERSION,
-            "k1": BM25_K1, "b": BM25_B,
-        }])
-        write_small_table(spark, stats_pdf, paths.stats)
+        write_stats(spark, paths, IndexStats(
+            N=N, avgdl=avgdl, avgdl_build=avgdl,
+            docs_per_range=docs_per_range, num_ranges=num_ranges,
+            n_buckets=n_buckets, k1=BM25_K1, b=BM25_B))
 
     if use_small:
         jobs = [_small_derived_job, _stats_job]
@@ -1008,11 +925,10 @@ def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,
 
 def resume_info(spark: SparkSession, out_dir: str) -> set[int]:
     """Committed range_ids from the manifest (empty set if no manifest)."""
-    paths = IndexPaths(out_dir)
     try:
-        rows = (spark.read.parquet(paths.manifest)
-                .filter(F.col("status") == "committed")
-                .select("range_id").collect())
-        return {int(r["range_id"]) for r in rows}
-    except Exception:
+        man = tablefs.read_small_table(spark, IndexPaths(out_dir).manifest,
+                                       columns=["range_id", "status"])
+    except FileNotFoundError:
         return set()
+    return {int(r) for r in man.loc[man["status"] == "committed",
+                                    "range_id"]}

@@ -18,23 +18,27 @@ idempotent re-ingestion of one source. Here:
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import ANALYZER_VERSION
+from . import ANALYZER_VERSION, tablefs
 from .indexer import (
     POSTINGS_SCHEMA,
     IndexPaths,
+    IndexStats,
     _spimi_batches,
     build_index,
+    load_stats,
     term_bucket_col,
+    write_stats,
 )
-from .query import load_stats
 
 
 def _snapshot_space(spark: SparkSession, src: IndexPaths, dst: IndexPaths,
-                    survivors, affected: set[int],
+                    survivors, affected: set[int], stats: IndexStats,
                     num_ranges: int | None = None,
                     docs_per_range: int | None = None) -> None:
     """Copy-on-write snapshot of ONE posting space (the root index or a
@@ -42,12 +46,10 @@ def _snapshot_space(spark: SparkSession, src: IndexPaths, dst: IndexPaths,
     affected ranges only (unaffected ranges' parquet rows carry over
     unchanged), and recompute the space's derived tables (dictionary,
     doc_stats, docs_meta, stats, manifest). ``survivors`` must carry
-    (doc_id, text, range_id, dl)."""
-    stats = load_stats(spark, src.root)
-    st_row = spark.read.parquet(src.stats).collect()[0]
-    docs_per_range = docs_per_range or int(st_row["docs_per_range"])
-    num_ranges = num_ranges or int(st_row["num_ranges"])
-    n_buckets = int(st_row["n_buckets"])
+    (doc_id, text, range_id, dl); ``stats`` is the source space's."""
+    docs_per_range = docs_per_range or stats.docs_per_range
+    num_ranges = num_ranges or stats.num_ranges
+    n_buckets = stats.n_buckets
 
     # keep range_id in the snapshot: the ranges remain the SPIMI unit
     survivors.write.mode("overwrite").parquet(dst.docs)
@@ -81,20 +83,12 @@ def _snapshot_space(spark: SparkSession, src: IndexPaths, dst: IndexPaths,
     g = surv_tbl.agg(F.count("*").alias("N"), F.sum("dl").alias("s")).collect()[0]
     N_s = int(g["N"])
     sum_dl = int(g["s"] or 0)
-    from .indexer import write_small_table
-
-    meta = pd.DataFrame([{"N": N_s, "sum_dl": sum_dl,
-                          "avgdl": (sum_dl / N_s) if N_s else 0.0}])
-    write_small_table(spark, meta, dst.docs_meta)
-    stats_pdf = pd.DataFrame([{
-        "N": N_s, "avgdl": (sum_dl / N_s) if N_s else 0.0,
-        "avgdl_build": stats.avgdl_build,
-        "docs_per_range": docs_per_range,
-        "num_ranges": num_ranges, "n_buckets": n_buckets,
-        "analyzer_version": ANALYZER_VERSION,
-        "k1": stats.k1, "b": stats.b,
-    }])
-    write_small_table(spark, stats_pdf, dst.stats)
+    avgdl = (sum_dl / N_s) if N_s else 0.0
+    meta = pd.DataFrame([{"N": N_s, "sum_dl": sum_dl, "avgdl": avgdl}])
+    tablefs.write_small_table(spark, meta, dst.docs_meta)
+    write_stats(spark, dst, replace(stats, N=N_s, avgdl=avgdl,
+                                    docs_per_range=docs_per_range,
+                                    num_ranges=num_ranges))
     (built.groupBy("range_id")
      .agg(F.sum("n").alias("n_postings"),
           F.countDistinct("term").alias("n_terms"),
@@ -122,13 +116,8 @@ def delete_from_index(spark: SparkSession, index_dir: str, out_dir: str,
 
     src = IndexPaths(index_dir)
     dst = IndexPaths(out_dir)
-    st_row = spark.read.parquet(src.stats).collect()[0]
-    docs_per_range = int(st_row["docs_per_range"])
-
+    stats = load_stats(spark, index_dir)
     docs = spark.read.parquet(src.docs)
-    if "range_id" not in docs.columns:  # legacy fixed-width ranges
-        docs = docs.withColumn(
-            "range_id", (F.col("doc_id") / F.lit(docs_per_range)).cast("int"))
     from .query import IN_LIST_MAX
 
     if len(urls) <= IN_LIST_MAX:
@@ -143,7 +132,7 @@ def delete_from_index(spark: SparkSession, index_dir: str, out_dir: str,
         survivors = docs.join(F.broadcast(udf_), "url", "left_anti")
     affected = {int(r["range_id"]) for r in
                 doomed.select("range_id").distinct().collect()}
-    _snapshot_space(spark, src, dst, survivors, affected)
+    _snapshot_space(spark, src, dst, survivors, affected, stats)
 
     # field spaces: same doc_ids, same ranges → same affected set. The
     # deleted doc_id set is the doomed subset (small — one source's docs
@@ -157,7 +146,8 @@ def delete_from_index(spark: SparkSession, index_dir: str, out_dir: str,
             fdst = IndexPaths(field_root(out_dir, fname))
             f_surv = (spark.read.parquet(fsrc.docs)
                       .join(F.broadcast(doomed_ids), "doc_id", "left_anti"))
-            _snapshot_space(spark, fsrc, fdst, f_surv, affected)
+            _snapshot_space(spark, fsrc, fdst, f_surv, affected,
+                            load_stats(spark, fsrc.root))
     return dst
 
 
@@ -184,13 +174,9 @@ def force_merge(spark: SparkSession, index_dir: str, out_dir: str,
     """
     src = IndexPaths(index_dir)
     dst = IndexPaths(out_dir)
-    st_row = spark.read.parquet(src.stats).collect()[0]
-    dpr = docs_per_range or int(st_row["docs_per_range"])
-
+    stats = load_stats(spark, index_dir)
+    dpr = docs_per_range or stats.docs_per_range
     docs = spark.read.parquet(src.docs)
-    if "range_id" not in docs.columns:  # legacy fixed-width ranges
-        docs = docs.withColumn(
-            "range_id", (F.col("doc_id") / F.lit(dpr)).cast("int"))
     remapped = docs.withColumn(
         "new_range", (F.col("doc_id") / F.lit(dpr)).cast("int"))
     # a range value r carries over iff its membership is unchanged:
@@ -214,7 +200,7 @@ def force_merge(spark: SparkSession, index_dir: str, out_dir: str,
 
     survivors = (remapped.drop("range_id")
                  .withColumnRenamed("new_range", "range_id"))
-    _snapshot_space(spark, src, dst, survivors, affected,
+    _snapshot_space(spark, src, dst, survivors, affected, stats,
                     num_ranges=n_ranges, docs_per_range=dpr)
 
     from .fields import field_root, list_field_roots
@@ -226,6 +212,7 @@ def force_merge(spark: SparkSession, index_dir: str, out_dir: str,
         f_surv = f_docs.withColumn(
             "range_id", (F.col("doc_id") / F.lit(dpr)).cast("int"))
         _snapshot_space(spark, fsrc, fdst, f_surv, affected,
+                        load_stats(spark, fsrc.root),
                         num_ranges=n_ranges, docs_per_range=dpr)
     return dst
 
@@ -351,8 +338,6 @@ def rollover(spark: SparkSession, registry_path: str, alias: str,
     scan. Returns {"rolled": bool, "old_index", "new_index",
     "doc_count"}."""
     import re
-
-    from .query import load_stats
 
     old = resolve_alias(registry_path, alias)
     n = int(load_stats(spark, old).N)

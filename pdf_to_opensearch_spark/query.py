@@ -18,15 +18,16 @@ Physical plan:
    per-range scores are complete — no cross-range combine of partial
    scores is needed. It picks one of three branches:
 
-   * unfiltered, local, range-aligned postings: one ``mapInPandas`` task
-     per bin of postings files reads them with pyarrow (C++-side
-     bucket/term row-group pruning) — no Exchange, and the postings
-     bytes never cross the JVM↔Python Arrow socket;
+   * unfiltered, range-aligned postings: one ``mapInPandas`` task per
+     bin of postings files reads them with pyarrow through the
+     filesystem :func:`tablefs.resolve` returns (C++-side bucket/term
+     row-group pruning) — no Exchange, and the postings bytes never
+     cross the JVM↔Python Arrow socket;
    * filtered (``allowed`` doc set): the pushed-down JVM postings scan
      ``cogroup``-ed with the allowed (doc_id, range_id) frame on
      ``range_id``, so each range sees only its own allowed ids;
-   * non-local postings, or postings whose ranges are not file-aligned:
-     the same JVM scan grouped by ``range_id`` into ``applyInPandas``.
+   * postings whose ranges are not file-aligned: the same JVM scan
+     grouped by ``range_id`` into ``applyInPandas``.
 
    The BM25 kernel scores **term-at-a-time, fully vectorized** (numpy
    concat → groupby-sum) and keeps a per-range top-k. Optional
@@ -48,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import tablefs
 from .analyzer import tokenize_text
 from .codec import (
     BLOCK,
@@ -56,7 +58,15 @@ from .codec import (
     decode_postings,
     tf_norm,
 )
-from .indexer import IndexPaths, bucket_of
+from .indexer import (
+    IndexPaths,
+    IndexStats,
+    _postings_arrow_schema,
+    _range_spans,
+    _spans_disjoint,
+    bucket_of,
+    load_stats,
+)
 from .oracle import idf as idf_fn
 
 RESULT_SCHEMA = "query_id int, doc_id long, score double"
@@ -83,76 +93,38 @@ def lookup_dict_rows(spark: SparkSession, dict_path: str,
                      terms: list[str]) -> list:
     """Dictionary point-lookup: (term, df, …) rows for ``terms``.
 
-    On a local FS this is a driver-side pyarrow read with a C++-side
-    ``term IN`` filter (parquet row-group min/max pruning — the same
-    pruning the Spark scan did) and NO Spark job: a search call's term
-    set is tiny, and the previous per-call scan job spent more wall on
+    A driver-side pyarrow read with a C++-side ``term IN`` filter
+    (parquet row-group min/max pruning) and NO Spark job: a search
+    call's term set is tiny, and a per-call scan job spent more wall on
     scheduling than on I/O. The row-group pruning keeps this a point
     read at any dictionary size (Lucene's term-dict seek analogue runs
-    on one node too). Non-local paths keep the pushed-down Spark scan.
+    on one node too).
     """
-    import glob
-    import os
-
-    from .indexer import _is_local_path
-
-    if _is_local_path(dict_path, spark):
-        p = dict_path[7:] if dict_path.startswith("file://") else dict_path
-        files = sorted(glob.glob(os.path.join(p, "*.parquet")))
-        if files:
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(files, filters=[("term", "in",
-                                                 list(terms))])
-            return tbl.to_pylist()
-    return _filter_in(spark.read.parquet(dict_path), "term",
-                      list(terms)).collect()
+    return tablefs.read_small_table(
+        spark, dict_path, filters=[("term", "in", list(terms))]
+    ).to_dict("records")
 
 
 _ALIGN_CACHE: dict[tuple, bool] = {}
 
 
-def _ranges_file_aligned(files: list[str]) -> bool:
+def _ranges_file_aligned(fs, files: list[str]) -> bool:
     """True iff every doc range's postings live WHOLLY in one file —
     the property that lets a per-file task score its ranges completely.
-    Both builders write range-aligned files, but an external rewrite
+    Every builder writes range-aligned files, but an external rewrite
     (a crash-simulation overwrite, a third-party compaction) can
     scatter a range across files, and a kernel that sees only part of
     a range would emit wrong partial scores. Checked from parquet
     FOOTER stats only (range_id min/max per file, pairwise-disjoint
     intervals ⟹ aligned); memoized per (path, mtime, size) snapshot."""
-    import os
-
-    key = tuple((f, int(os.path.getmtime(f) * 1000), os.path.getsize(f))
-                for f in files)
+    key = tuple((i.path, i.mtime_ns, i.size) for i in fs.get_file_info(files))
     hit = _ALIGN_CACHE.get(key)
     if hit is not None:
         return hit
-    import pyarrow.parquet as pq
-
-    spans = []
-    ok = True
-    for f in files:
-        try:
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.to_arrow_schema().names.index("range_id")
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError("no stats")
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if lo is None:
-                continue  # empty file
-            spans.append((lo, hi))
-        except Exception:
-            ok = False
-            break
-    if ok:
-        spans.sort()
-        ok = all(a_hi < b_lo for (_a, a_hi), (b_lo, _b)
-                 in zip(spans, spans[1:]))
+    try:
+        ok = _spans_disjoint(_range_spans(fs, files))
+    except ValueError:
+        ok = False
     if len(_ALIGN_CACHE) > 64:
         _ALIGN_CACHE.clear()
     _ALIGN_CACHE[key] = ok
@@ -175,10 +147,11 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
     Branches (this is the only place that reads the postings table for a
     query):
 
-    * unfiltered, local, range-aligned postings — the pyio scan: one
+    * unfiltered, range-aligned postings — the pyio scan: one
       ``mapInPandas`` task per bin of postings files reads them with
-      pyarrow (``filters=`` gives C++-side bucket/term row-group pruning)
-      and runs the kernel on each range inside them. No Exchange, and
+      pyarrow through the resolved filesystem (``filters=`` gives
+      C++-side bucket/term row-group pruning) and runs the kernel on
+      each range inside them. No Exchange, and
       the postings bytes never cross the JVM↔Python Arrow socket (BENCH.md
       §6 round-5 diagnosis: the kernel scales 1→4 cores like the
       Spark-free pool control, ~0.86, while the JVM→Arrow transfer path
@@ -187,23 +160,18 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
     * filtered — the pushed-down JVM scan ``cogroup``-ed with ``allowed``
       on ``range_id``: each range sees only its own allowed ids, never a
       global id broadcast;
-    * non-local postings, the legacy ``bucket=N/`` partitioned dirs (no
-      top-level files), or a range split across files — the JVM scan
-      grouped by ``range_id``. A per-file task would see part of a range
-      and emit wrong partial scores, so this is the only correct path
-      for those inputs.
+    * a range split across files — the JVM scan grouped by
+      ``range_id``. A per-file task would see part of a range and emit
+      wrong partial scores, so this is the only correct path for that
+      layout.
     """
-    import glob
-    import os
-
-    from .indexer import _is_local_path
-
     buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
     terms = sorted(live_terms)
-    if allowed is None and _is_local_path(paths.postings, spark):
-        files = sorted(glob.glob(os.path.join(paths.postings, "*.parquet")))
-        if files and _ranges_file_aligned(files):
-            return _pyio_scan(spark, files, kernel, buckets, terms,
+    if allowed is None:
+        fs, post_dir = tablefs.resolve(spark, paths.postings)
+        files = tablefs.list_files(fs, post_dir)
+        if files and _ranges_file_aligned(fs, [f.path for f in files]):
+            return _pyio_scan(spark, fs, files, kernel, buckets, terms,
                               need_positions, schema)
     postings = _filter_in(                                    # row-group pruning
         spark.read.parquet(paths.postings)
@@ -222,13 +190,14 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
             .applyInPandas(lambda pdf: kernel(pdf), schema=schema))
 
 
-def _pyio_scan(spark: SparkSession, files: list[str], kernel,
+def _pyio_scan(spark: SparkSession, fs, files: list, kernel,
                buckets: list[int], terms: list[str], need_positions: bool,
                schema: str) -> DataFrame:
-    """:func:`execute`'s unfiltered branch over range-aligned local
-    postings ``files`` (every range's rows live in exactly one file, by
-    the build's range-alignment invariant)."""
-    import os
+    """:func:`execute`'s unfiltered branch over range-aligned postings
+    ``files`` (``FileInfo``s of ``fs``; every range's rows live in
+    exactly one file, by the build's range-alignment invariant)."""
+    cols = [c for c in _postings_arrow_schema().names
+            if need_positions or c != "poss"]
 
     def task(it):
         import pyarrow as pa
@@ -241,11 +210,8 @@ def _pyio_scan(spark: SparkSession, files: list[str], kernel,
         filters = [("bucket", "in", buckets), ("term", "in", terms)]
         for fdf in it:
             for path in (p for b in fdf["bin"] for p in bins[int(b)]):
-                pf_names = pq.ParquetFile(path).schema_arrow.names
-                cols = [c for c in pf_names
-                        if need_positions or c != "poss"]
                 tbl = pq.read_table(path, columns=cols, filters=filters,
-                                    use_threads=False)
+                                    use_threads=False, filesystem=fs)
                 if tbl.num_rows == 0:
                     continue
                 pdf = tbl.to_pandas()
@@ -268,13 +234,7 @@ def _pyio_scan(spark: SparkSession, files: list[str], kernel,
     # bins themselves travel in the task closure next to qinfo.
     slots = max(1, spark.sparkContext.defaultParallelism)
     n_bins = min(len(files), max(8, 2 * slots))
-    bins: list[list[str]] = [[] for _ in range(n_bins)]
-    loads = [0] * n_bins
-    for f in sorted(files, key=os.path.getsize, reverse=True):
-        i = loads.index(min(loads))
-        bins[i].append(f)
-        loads[i] += os.path.getsize(f)
-    bins.sort(key=lambda b: -sum(os.path.getsize(f) for f in b))
+    bins = tablefs.lpt_bins(files, n_bins)
     return (spark.range(0, n_bins, 1, numPartitions=n_bins)
             .withColumnRenamed("id", "bin")
             .mapInPandas(task, schema=schema))
@@ -303,23 +263,6 @@ def _weighted_qinfo(q_terms: dict, idfs: dict) -> dict:
         if ti:
             qinfo[int(qid)] = ti
     return qinfo
-
-
-class IndexStats:
-    def __init__(self, row):
-        self.N = int(row["N"])
-        self.avgdl = float(row["avgdl"])
-        self.avgdl_build = float(row["avgdl_build"])
-        self.n_buckets = int(row["n_buckets"])
-        self.k1 = float(row["k1"])
-        self.b = float(row["b"])
-
-
-def load_stats(spark: SparkSession, index_dir: str) -> IndexStats:
-    from .indexer import read_small_table
-
-    return IndexStats(
-        read_small_table(spark, IndexPaths(index_dir).stats).iloc[0])
 
 
 def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
@@ -670,17 +613,8 @@ def _allowed_docs(spark: SparkSession, paths: IndexPaths,
         return None
     if filter_root:
         paths = IndexPaths(filter_root)
-    docs_scan = spark.read.parquet(paths.docs)
-    if "range_id" in docs_scan.columns:
-        # prepare-assigned ranges ride on the docs table
-        return docs_scan.filter(doc_filter).select("doc_id", "range_id")
-    # legacy fixed-width ranges
-    st_row = spark.read.parquet(paths.stats).collect()[0]
-    dpr = int(st_row["docs_per_range"])
-    return (docs_scan.filter(doc_filter)
-            .select("doc_id",
-                    (F.col("doc_id") / F.lit(dpr)).cast("int")
-                    .alias("range_id")))
+    return (spark.read.parquet(paths.docs).filter(doc_filter)
+            .select("doc_id", "range_id"))
 
 
 def resolve_msm(spec: int | str, n_terms: int) -> int:
@@ -933,9 +867,7 @@ class Searcher:
         self.stats = load_stats(spark, index_dir)
         self._dfs: dict[str, int] | None = None
         if preload_dictionary:
-            from .indexer import read_small_table
-
-            pdf = read_small_table(spark, self.paths.dictionary)
+            pdf = tablefs.read_small_table(spark, self.paths.dictionary)
             self._dfs = dict(zip(pdf["term"],
                                  pdf["df"].astype(int).tolist()))
 

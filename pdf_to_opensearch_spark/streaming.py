@@ -33,42 +33,41 @@ via ``applyInPandasWithState``).
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import ANALYZER_VERSION
+from . import ANALYZER_VERSION, tablefs
 from .analyzer import token_count_udf
 from .indexer import (
-    POSTINGS_SCHEMA,
     IndexPaths,
-    _spimi_batches,
+    IndexStats,
+    _spimi_python_io,
     assign_doc_ids,
-    term_bucket_col,
+    load_stats,
+    refresh_derived_tables,
+    write_stats,
 )
 
 
 def _refresh_derived_full(spark: SparkSession, paths: IndexPaths,
-                          docs_per_range: int, num_ranges: int,
-                          n_buckets: int) -> None:
+                          st: IndexStats) -> None:
     """Full recompute after a rollback rewrite (rare crash-recovery path):
     docs changed, so N/avgdl/doc_stats/docs_meta are re-derived from the
     surviving docs, everything else from the surviving postings."""
     import pandas as pd
-
-    from .indexer import refresh_derived_tables
 
     g = (spark.read.parquet(paths.docs)
          .agg(F.count("*").alias("N"), F.sum("dl").alias("s")).collect()[0])
     N = int(g["N"])
     sum_dl = int(g["s"] or 0)
     avgdl = (sum_dl / N) if N else 0.0
-    from .indexer import write_small_table
-
     meta = pd.DataFrame([{"N": N, "sum_dl": sum_dl, "avgdl": avgdl}])
-    write_small_table(spark, meta, paths.docs_meta)
+    tablefs.write_small_table(spark, meta, paths.docs_meta)
     refresh_derived_tables(spark, paths, N=N, avgdl=avgdl,
-                           docs_per_range=docs_per_range,
-                           num_ranges=num_ranges, n_buckets=n_buckets,
+                           docs_per_range=st.docs_per_range,
+                           num_ranges=st.num_ranges, n_buckets=st.n_buckets,
                            refresh_doc_stats=True)
 
 
@@ -84,9 +83,9 @@ def _read_batch_log(spark: SparkSession, paths: IndexPaths):
         return set(), []
     by_batch: dict[int, dict] = {}
     for r in rows:
-        br = int(r["base_range"]) if "base_range" in r.__fields__ else -1
         e = by_batch.setdefault(int(r["batch_id"]),
-                                {"base": int(r["base"]), "base_range": br,
+                                {"base": int(r["base"]),
+                                 "base_range": int(r["base_range"]),
                                  "committed": False})
         if r["status"] == "committed":
             e["committed"] = True
@@ -104,36 +103,15 @@ def _log_batch(spark: SparkSession, paths: IndexPaths, batch_id: int,
         .write.mode("append").parquet(_batch_log_path(paths))
 
 
-def _bucket_partitioned(postings_path: str) -> bool:
-    """True when the postings dir uses the legacy ``bucket=N/`` directory
-    layout (pre-flat-write indexes). Appending root-level flat files to
-    such a dir would be SILENTLY IGNORED by Spark partition discovery —
-    every write path must check this and keep the layout consistent."""
-    import glob
-    import os
-
-    return any(os.path.isdir(p)
-               for p in glob.glob(os.path.join(postings_path, "bucket=*")))
-
-
-def _swap_rewrite(spark: SparkSession, path: str, df: DataFrame,
-                  partition_by: str | None = None) -> None:
-    """Rewrite a local parquet dir from a filtered read (staging + rename).
-
-    On a production object store this is an Iceberg snapshot commit; the
-    local-FS rename is the sandbox equivalent with the same semantics.
+def _swap_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
+    """Rewrite a parquet dir from a filtered read: Spark writes a staging
+    dir, committed through the resolved filesystem
+    (:func:`tablefs.replace_dir`). On a production object store this is
+    an Iceberg snapshot commit with the same semantics.
     """
-    import os
-    import shutil
-
-    staging = path + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(staging)
-    shutil.rmtree(path)
-    os.rename(staging, path)
+    df.write.mode("overwrite").parquet(path + ".staging")
+    fs, p = tablefs.resolve(spark, path)
+    tablefs.replace_dir(fs, p + ".staging", p)
 
 
 def rollback_incomplete(spark: SparkSession, index_dir: str) -> list[int]:
@@ -148,29 +126,20 @@ def rollback_incomplete(spark: SparkSession, index_dir: str) -> list[int]:
     _committed, pending = _read_batch_log(spark, paths)
     if not pending:
         return []
+    st = load_stats(spark, index_dir)
     min_base = min(b for _i, b, _r in pending)
-    st = spark.read.parquet(paths.stats).collect()[0]
-    dpr = int(st["docs_per_range"])
-    # the log records each batch's first NEW range id; a legacy entry
-    # (base_range = -1) falls back to fixed-width arithmetic FOR THAT
-    # ENTRY ONLY — an all-or-nothing fallback on a mixed-era log would
-    # apply doc_id//dpr arithmetic to assigned-range ids it has no
-    # relation to, orphaning or dropping committed ranges
-    min_range = min((r if r >= 0 else b // dpr) for _i, b, r in pending)
+    min_range = min(r for _i, _b, r in pending)
     _swap_rewrite(spark, paths.docs,
                   spark.read.parquet(paths.docs)
                   .filter(F.col("doc_id") < min_base))
     _swap_rewrite(spark, paths.postings,
                   spark.read.parquet(paths.postings)
-                  .filter(F.col("range_id") < min_range),
-                  partition_by="bucket"
-                  if _bucket_partitioned(paths.postings) else None)
+                  .filter(F.col("range_id") < min_range))
     # mark as committed-with-rollback so they are not retried against
     for bid, base, brange in pending:
         _log_batch(spark, paths, bid, base, brange, "rolled_back")
         _log_batch(spark, paths, bid, base, brange, "committed")
-    _refresh_derived_full(spark, paths, dpr, int(st["num_ranges"]),
-                          int(st["n_buckets"]))
+    _refresh_derived_full(spark, paths, st)
     return [bid for bid, _b, _r in pending]
 
 
@@ -183,6 +152,9 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
     committed is skipped, and a crashed batch is rolled back (its doc_ids
     AND range_ids are strictly above every committed one — appended docs
     get fresh ranges, so committed postings files are never touched).
+    The new ranges' postings come from the one SPIMI writer
+    (:func:`indexer._spimi_python_io`), which reads only the new docs
+    files.
     """
     paths = IndexPaths(index_dir)
     if batch_id is not None:
@@ -191,24 +163,16 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
             return 0
         if pending:
             rollback_incomplete(spark, index_dir)
-    st = spark.read.parquet(paths.stats).collect()[0]
-    docs_per_range = int(st["docs_per_range"])
-    n_buckets = int(st["n_buckets"])
-    docs_now = spark.read.parquet(paths.docs)
-    if "range_id" in docs_now.columns:
-        cur = docs_now.agg(F.max("doc_id").alias("m"),
-                           F.max("range_id").alias("r")).collect()[0]
-        base = int(cur["m"]) + 1 if cur["m"] is not None else 0
-        base_range = int(cur["r"]) + 1 if cur["r"] is not None else 0
-    else:  # legacy fixed-width ranges: align base to a range boundary
-        cur = docs_now.agg(F.max("doc_id").alias("m")).collect()[0]
-        nxt = int(cur["m"]) + 1 if cur["m"] is not None else 0
-        base = -(-nxt // docs_per_range) * docs_per_range
-        base_range = base // docs_per_range
+    st = load_stats(spark, index_dir)
+    cur = (spark.read.parquet(paths.docs)
+           .agg(F.max("doc_id").alias("m"), F.max("range_id").alias("r"))
+           .collect()[0])
+    base = int(cur["m"]) + 1 if cur["m"] is not None else 0
+    base_range = int(cur["r"]) + 1 if cur["r"] is not None else 0
 
+    n_parts = max(new_docs.rdd.getNumPartitions(), 1)
     ided = assign_doc_ids(new_docs.select("url", "text", "lang"),
-                          partitions=max(new_docs.rdd.getNumPartitions(), 1),
-                          with_range_id=True)
+                          partitions=n_parts, with_range_id=True)
     try:
         with_ids = (ided
                     .withColumn("doc_id", F.col("doc_id") + F.lit(base))
@@ -221,7 +185,14 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
             return 0
         if batch_id is not None:
             _log_batch(spark, paths, batch_id, base, base_range, "begin")
-        with_ids.write.mode("append").parquet(paths.docs)
+        # pack the batch's ranges into about docs_per_range-sized docs
+        # files: the SPIMI writer emits one postings file per docs file,
+        # and one tiny file per batch partition would multiply the query
+        # fan-out. Range partitioning keeps each range whole and each
+        # file's ranges contiguous, so the files stay range-aligned.
+        n_files = min(n_parts, -(-n_new // st.docs_per_range))
+        (with_ids.repartitionByRange(n_files, "range_id")
+         .write.mode("append").parquet(paths.docs))
     finally:
         ided._persisted_input.unpersist()
     # batch-local Σdl for the incremental N/avgdl update (O(batch) agg
@@ -231,22 +202,9 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
               .agg(F.sum("dl").alias("s")).collect()[0])
     batch_dl_sum = int(dl_row["s"] or 0)
 
-    indexable = (spark.read.parquet(paths.docs)
-                 .filter(F.col("doc_id") >= base))
-    n_ranges = max(1, min(int(indexable.rdd.getNumPartitions()),
-                          -(-n_new // max(docs_per_range, 1))))
-    spimi_in = (indexable.select("doc_id", "text", "range_id")
-                .repartitionByRange(n_ranges, "range_id"))
-    postings = spimi_in.mapInPandas(
-        _spimi_batches(), schema=POSTINGS_SCHEMA)
-    postings = postings.withColumn(
-        "bucket", term_bucket_col(F.col("term"), n_buckets))
-    w = postings.sortWithinPartitions("bucket", "term").write.mode("append")
-    if _bucket_partitioned(paths.postings):
-        # legacy bucket=N/ directory layout: a root-level flat append would
-        # be invisible to partition discovery — keep the dir's own layout
-        w = w.partitionBy("bucket")
-    w.parquet(paths.postings)
+    # every range below base_range is committed: the writer reads only
+    # the docs files this batch just wrote
+    _spimi_python_io(spark, paths, st.n_buckets, set(range(base_range)))
 
     _incremental_refresh(spark, paths, st, base, base_range, n_new,
                          batch_dl_sum)
@@ -255,7 +213,8 @@ def append_batch(spark: SparkSession, new_docs: DataFrame, index_dir: str,
     return n_new
 
 
-def _incremental_refresh(spark: SparkSession, paths: IndexPaths, st,
+def _incremental_refresh(spark: SparkSession, paths: IndexPaths,
+                         st: IndexStats,
                          base: int, base_range: int, n_new: int,
                          batch_dl_sum: int) -> None:
     """O(batch) derived-table maintenance after an append.
@@ -285,25 +244,13 @@ def _incremental_refresh(spark: SparkSession, paths: IndexPaths, st,
      .filter(F.col("doc_id") >= base)
      .select("doc_id", "dl")
      .write.mode("append").parquet(paths.doc_stats))
-    N_old, avgdl_old = int(st["N"]), float(st["avgdl"])
-    N_new = N_old + n_new
-    avgdl_new = (N_old * avgdl_old + batch_dl_sum) / N_new if N_new else 0.0
-    from .indexer import write_small_table
-
+    N_new = st.N + n_new
+    avgdl_new = (st.N * st.avgdl + batch_dl_sum) / N_new if N_new else 0.0
     meta = pd.DataFrame([{"N": N_new,
                           "sum_dl": int(round(N_new * avgdl_new)),
                           "avgdl": avgdl_new}])
-    write_small_table(spark, meta, paths.docs_meta)
-    stats_pdf = pd.DataFrame([{
-        "N": N_new, "avgdl": avgdl_new,
-        "avgdl_build": float(st["avgdl_build"]),
-        "docs_per_range": int(st["docs_per_range"]),
-        "num_ranges": int(st["num_ranges"]),
-        "n_buckets": int(st["n_buckets"]),
-        "analyzer_version": ANALYZER_VERSION,
-        "k1": float(st["k1"]), "b": float(st["b"]),
-    }])
-    write_small_table(spark, stats_pdf, paths.stats)
+    tablefs.write_small_table(spark, meta, paths.docs_meta)
+    write_stats(spark, paths, replace(st, N=N_new, avgdl=avgdl_new))
     (new_posts.groupBy("range_id")
      .agg(F.sum("n").alias("n_postings"),
           F.countDistinct("term").alias("n_terms"),

@@ -194,3 +194,21 @@ def test_delete_snapshot_carries_field_spaces(spark, field_index,
         assert [d for d, _ in want] == [d for d, _ in have], (qid, want, have)
         for (_, ws), (_, hs) in zip(want, have):
             assert abs(ws - hs) <= 1e-6
+
+
+def test_rebuild_drops_stale_field_spaces(spark, tmp_path):
+    """build_index reassigns doc_ids, so field spaces built over the old
+    docs table must not survive a rebuild of the root (maintenance would
+    otherwise carry them into every snapshot)."""
+    from pdf_to_opensearch_spark.fields import list_field_roots
+
+    root = str(tmp_path / "rebuilt")
+    docs = extract_docs(make_pages(spark, n_docs=40, seed=2, partitions=2))
+    docs = docs.withColumn("text_prev", F.col("text"))
+    build_index(spark, docs, root, num_ranges=2, n_buckets=4,
+                id_partitions=2)
+    build_field_index(spark, root, "text_prev")
+    assert list_field_roots(spark, root) == ["text_prev"]
+    build_index(spark, docs, root, num_ranges=2, n_buckets=4,
+                id_partitions=2)
+    assert list_field_roots(spark, root) == []

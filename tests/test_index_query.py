@@ -343,6 +343,7 @@ def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
     import shutil
 
     import pandas as pd
+    from pyarrow.fs import LocalFileSystem
 
     from pdf_to_opensearch_spark.boolquery import fuzzy_search
     from pdf_to_opensearch_spark.query import Searcher, _ranges_file_aligned
@@ -351,10 +352,10 @@ def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
     split = str(tmp_path / "split_idx")
     shutil.copytree(index_dir, split)
     _split_one_range(split)
-    assert _ranges_file_aligned(
-        sorted(glob.glob(os.path.join(index_dir, "postings", "*.parquet"))))
-    assert not _ranges_file_aligned(
-        sorted(glob.glob(os.path.join(split, "postings", "*.parquet"))))
+    assert _ranges_file_aligned(LocalFileSystem(), sorted(
+        glob.glob(os.path.join(index_dir, "postings", "*.parquet"))))
+    assert not _ranges_file_aligned(LocalFileSystem(), sorted(
+        glob.glob(os.path.join(split, "postings", "*.parquet"))))
 
     phrases = [(1, "duplicate content row"), (2, "딸기 육묘는"),
                (3, "spark index")]

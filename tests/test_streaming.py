@@ -145,37 +145,93 @@ def test_streaming_end_to_end(spark, base_index, tmp_path):
     _check(spark, root, oracle)
 
 
-def test_append_to_legacy_bucket_partitioned_index(spark, base_index):
-    # legacy indexes store postings under bucket=N/ subdirs; a flat append
-    # would be silently invisible to partition discovery — the writer must
-    # detect the layout and keep it (appended docs stay searchable)
+def test_stats_format_version_is_checked_loudly(spark, base_index,
+                                               tmp_path):
+    # every layout older than the stats format_version stamp (bucket=N/
+    # postings, docs without range_id, no docs_meta) lacks the stamp: a
+    # missing or unknown stamp must fail every entry point with a
+    # ValueError naming the index root — never fall back to a slow path
+    import glob
+    import os
+    import re
     import shutil
 
-    from pdf_to_opensearch_spark.indexer import IndexPaths
-    from pdf_to_opensearch_spark.streaming import _bucket_partitioned
+    from pdf_to_opensearch_spark.indexer import (
+        FORMAT_VERSION,
+        IndexPaths,
+        build_postings,
+        resume_info,
+    )
+    from pdf_to_opensearch_spark.maintenance import (
+        delete_from_index,
+        force_merge,
+    )
+    from pdf_to_opensearch_spark.tablefs import (
+        read_small_table,
+        write_small_table,
+    )
 
     root, pdf0 = base_index
     paths = IndexPaths(root)
-    # migrate the flat postings dir to the legacy bucket-partitioned layout
-    legacy = paths.postings + ".legacy"
-    (spark.read.parquet(paths.postings)
-     .write.partitionBy("bucket").parquet(legacy))
-    shutil.rmtree(paths.postings)
-    shutil.move(legacy, paths.postings)
-    assert _bucket_partitioned(paths.postings)
-
-    pdf1, sdf1 = _batch_docs(spark, 30, seed=44)
-    assert append_batch(spark, sdf1, root, batch_id=2) == len(pdf1)
-    # the appended postings are VISIBLE: per-range doc coverage is complete
-    posts = spark.read.parquet(paths.postings)
+    stats = read_small_table(spark, paths.stats)
+    assert int(stats["format_version"].iloc[0]) == FORMAT_VERSION
+    _pdf1, sdf1 = _batch_docs(spark, 10, seed=44)
+    ops = {
+        "search": lambda: search(spark, root, QUERIES, k=5),
+        "append": lambda: append_batch(spark, sdf1, root, batch_id=2),
+        "delete": lambda: delete_from_index(
+            spark, root, str(tmp_path / "del"), [pdf0["url"].iloc[0]]),
+        "force_merge": lambda: force_merge(spark, root,
+                                           str(tmp_path / "fm")),
+        "resume": lambda: build_postings(spark, root, num_ranges=4,
+                                         n_buckets=8,
+                                         completed_ranges={0, 2, 3}),
+    }
+    for stale in (stats.drop(columns=["format_version"]),
+                  stats.assign(format_version=FORMAT_VERSION + 1)):
+        write_small_table(spark, stale, paths.stats)
+        for name, op in ops.items():
+            with pytest.raises(ValueError,
+                               match=re.escape(root) + ".*build_index"):
+                op()
+            assert not (tmp_path / "del").exists(), name
     n0 = len(pdf0)
-    n_docs = spark.read.parquet(f"{root}/docs").count()
-    assert n_docs == n0 + len(pdf1)
-    appended_terms = posts.filter(posts["first_doc_id"] >= n0).count()
-    assert appended_terms > 0
-    oracle = _oracle_for([pdf0, pdf1],
-                         [np.arange(n0), np.arange(n0, n0 + len(pdf1))])
-    _check(spark, root, oracle)
+    assert spark.read.parquet(paths.docs).count() == n0
+
+    # an ABSENT stats table is a first build that crashed before its
+    # epilogue, not a legacy layout: the resume runs and rebuilds range 1
+    shutil.rmtree(paths.stats)
+    lost = glob.glob(f"{paths.postings}/part-pyio-r00001-00001.parquet")
+    assert len(lost) == 1
+    os.remove(lost[0])
+    assert resume_info(spark, root) == {0, 1, 2, 3}
+    build_postings(spark, root, num_ranges=4, n_buckets=8,
+                   completed_ranges={0, 2, 3})
+    _check(spark, root, _oracle_for([pdf0], [np.arange(n0)]))
+
+
+def test_resume_refuses_a_range_split_across_docs_files(spark, base_index):
+    # the SPIMI writer builds each range from ONE docs file; a pending
+    # range spread over two files would yield duplicate (term, range)
+    # rows, so the resume must refuse it instead of writing them
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pdf_to_opensearch_spark.indexer import IndexPaths, build_postings
+
+    root, _pdf0 = base_index
+    docs = IndexPaths(root).docs
+    src = max(glob.glob(f"{docs}/*.parquet"), key=lambda f: (
+        pq.read_metadata(f).num_rows, f))
+    tbl = pq.read_table(src)
+    rid = tbl["range_id"][0].as_py()
+    half = tbl.num_rows // 2
+    pq.write_table(tbl.slice(0, half), src)
+    pq.write_table(tbl.slice(half), f"{docs}/split-extra.parquet")
+    with pytest.raises(ValueError, match="range-aligned"):
+        build_postings(spark, root, num_ranges=4, n_buckets=8,
+                       completed_ranges={0, 1, 2, 3} - {rid})
 
 
 def test_append_doc_stats_consistency(spark, tmp_path):
