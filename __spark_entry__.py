@@ -4392,86 +4392,6 @@ FROM sents_list WHERE len(sents) = 0
 """
 
 
-# ------------------------------------------------------------ registries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "bm25_brute_topk": _brute_bm25,
-        "bm25_engine_topk": _engine_bm25,
-        "phrase_topk": _phrase_topk,
-        "corpus_stats": _corpus_stats,
-        "term_df_topk": _term_df_topk,
-        "doc_token_counts": _doc_token_counts,
-        "w2_lag_lead": _w2_lag_lead,
-        "a1_modal_argmax": _a1_modal_argmax,
-        "w7_topk_per_group": _w7_topk_per_group,
-        "f4_anti_join": _f4_anti_join,
-        "w5_sessionize": _w5_sessionize,
-        "a4_repeated_patterns": _a4_repeated_patterns,
-        "a3_median": _a3_median,
-        "w6_para_merge": _w6_para_merge,
-        "dedup_exact": _dedup_exact,
-        "fingerprints": _fingerprints,
-        "quality_scores": _quality,
-        "lang_id": _lang_id,
-        "minhash_pairs": _minhash_pairs,
-        "simhash_pairs": _simhash_pairs,
-        "minhash_pairs_md5": _minhash_pairs_md5,
-        "simhash_pairs_md5": _simhash_pairs_md5,
-        "ann_cosine_topk": _ann_topk,
-        "ann_l2_topk": _ann_l2_topk,
-        "ann_lsh_topk": _lsh_topk,
-        "embedding_near_dups": _embedding_near_dups,
-        "chunk_stats": _chunk_stats,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    from pdf_to_opensearch_spark.ops.textstats import (
-        fingerprints_oracle_sql,
-        lang_id_oracle_sql,
-        quality_scores_oracle_sql,
-    )
-
-    return {
-        "bm25_brute_topk": _bm25_oracle_sql(),
-        "bm25_engine_topk": _bm25_oracle_sql(),
-        "phrase_topk": _phrase_oracle_sql(),
-        "corpus_stats": _CORPUS_STATS_SQL,
-        "term_df_topk": _TERM_DF_SQL,
-        "doc_token_counts": _DOC_TOKEN_SQL,
-        "w2_lag_lead": _W2_SQL,
-        "a1_modal_argmax": _A1_SQL,
-        "w7_topk_per_group": _W7_SQL,
-        "f4_anti_join": _F4_SQL,
-        "w5_sessionize": _W5_SQL,
-        "a4_repeated_patterns": _A4_SQL,
-        "a3_median": _A3_SQL,
-        "w6_para_merge": _W6_SQL,
-        "dedup_exact": _DEDUP_EXACT_SQL,
-        "fingerprints": fingerprints_oracle_sql(),
-        "quality_scores": quality_scores_oracle_sql(),
-        "lang_id": lang_id_oracle_sql(),
-        "ann_cosine_topk": _ANN_SQL,
-        "ann_l2_topk": _ANN_L2_SQL,
-        "ann_lsh_topk": _lsh_oracle_sql(),
-        "embedding_near_dups": _EMB_DUPS_SQL,
-        "chunk_stats": _chunk_stats_oracle_sql(),
-        "minhash_pairs_md5": _minhash_md5_oracle_sql(),
-        "simhash_pairs_md5": _simhash_md5_oracle_sql(),
-        "minhash_pairs": _jaccard_allpairs_oracle_sql(),
-        # simhash_pairs (xxhash64 production family): hamming over
-        # xxhash64 isn't SQL-computable, so the oracle is a VALUES literal
-        # of the expected pair set, independently derived from the public
-        # XXH64 spec by tools/derive_simhash_pairs.py (see note at
-        # _SIMHASH_XX_VALUES); the md5 twin oracle-checks the full
-        # pipeline in SQL and tests/test_ops.py pins family agreement on a
-        # planted fixture.
-        "simhash_pairs": _SIMHASH_XX_SQL,
-    }
-
-
 # ------------------------------------------------ spatial / misc operators
 
 def _rects_from_part(spark, sf_dir):
@@ -6030,9 +5950,6 @@ def _extra_oracles():
     }
 
 
-_base_queries = queries
-_base_oracles = oracle_sql
-
 def _last_verified_round() -> dict[str, int]:
     """Per-entry most recent driver round that SAMPLED it (has a row in
     that round's CORRECTNESS_r*.json), derived mechanically from the
@@ -6072,165 +5989,6 @@ def _reorder(d: dict) -> dict:
     order = sorted(range(len(names)),
                    key=lambda i: (last.get(names[i], -1), i))
     return {names[i]: d[names[i]] for i in order}
-
-
-def queries():  # noqa: F811 — extend the registry with the spatial/misc ops
-    out = dict(_base_queries())
-    out.update(_extra_queries())
-    out.update({
-        "bm25_filtered_topk": _bm25_filtered_topk,
-        "phrase_topk_filtered": _phrase_topk_filtered,
-        "bm25_field_topk": _bm25_field_topk,
-        "phrase_field_topk": _phrase_field_topk,
-        "hybrid_field_topk": _hybrid_field_topk,
-        "hybrid_topk_filtered": _hybrid_topk_filtered,
-        "dedup_clusters": _dedup_clusters,
-        "clean_corpus": _clean_corpus,
-        "bool_search_topk": _bool_search_topk,
-        "prefix_topk": _prefix_topk,
-        "facet_counts": _facet_counts,
-        "highlight_topk": _highlight_topk,
-        "fuzzy_topk": _fuzzy_topk,
-        "wildcard_topk": _wildcard_topk,
-        "mlt_topk": _mlt_topk,
-        "multi_match_topk": _multi_match_topk,
-        "multi_match_best_topk": _multi_match_best_topk,
-        "histogram_facets": _histogram_facets,
-        "phrase_slop_topk": _phrase_slop_topk,
-        "significant_terms": _significant_terms,
-        "bm25_page2": _bm25_page2,
-        "explain_topk": _explain_topk,
-        "msm_topk": _msm_topk,
-        "term_suggest": _term_suggest,
-        "stats_agg": _stats_agg,
-        "percentiles_agg": _percentiles_agg,
-        "cardinality_agg": _cardinality_agg,
-        "date_histogram": _date_histogram,
-        "top_hits_agg": _top_hits_agg,
-        "dismax_tb_topk": _dismax_tb_topk,
-        "regexp_topk": _regexp_topk,
-        "boosting_topk": _boosting_topk,
-        "force_merge_requery": _force_merge_requery,
-        "rescore_topk": _rescore_topk,
-        "query_string_topk": _query_string_topk,
-        "collapse_topk": _collapse_topk,
-        "range_agg": _range_agg,
-        "filters_agg": _filters_agg,
-        "composite_agg": _composite_agg,
-        "adjacency_matrix": _adjacency_matrix,
-        "matrix_stats": _matrix_stats,
-        "sorted_search": _sorted_search,
-        "constant_score": _constant_score,
-        "function_score_topk": _function_score_topk,
-        "extended_stats_agg": _extended_stats_agg,
-        "weighted_avg_agg": _weighted_avg_agg,
-        "missing_agg": _missing_agg,
-        "global_agg": _global_agg,
-        "pipeline_aggs": _pipeline_aggs,
-        "decay_score_topk": _decay_score_topk,
-        "script_score_topk": _script_score_topk,
-        "random_score_topk": _random_score_topk,
-        "span_first_topk": _span_first_topk,
-        "span_near_topk": _span_near_topk,
-        "match_phrase_prefix_topk": _mpp_topk,
-        "rare_terms_agg": _rare_terms_agg,
-        "multi_terms_agg": _multi_terms_agg,
-        "auto_date_histogram": _auto_date_histogram,
-        "reindex_requery": _reindex_requery,
-        "scroll_export": _scroll_export,
-        "rank_feature_topk": _rank_feature_topk,
-        "phrase_suggest": _phrase_suggest,
-        "analyze_api": _analyze_api,
-        "exists_topk": _exists_topk,
-        "ids_topk": _ids_topk,
-        "terms_keyword_topk": _terms_keyword_topk,
-        "sampler_agg": _sampler_agg,
-        "diversified_sampler_agg": _diversified_sampler_agg,
-        "count_api": _count_api,
-        "completion_suggest": _completion_suggest,
-        "percolate_matches": _percolate_matches,
-    })
-    return _reorder(out)
-
-
-def oracle_sql():  # noqa: F811
-    out = dict(_base_oracles())
-    out.update(_extra_oracles())
-    out.update({
-        "bm25_filtered_topk": _bm25_oracle_sql(cand_where=FILTER_PRED),
-        "msm_topk": _bm25_oracle_sql(msm=_resolved_msm()),
-        "term_suggest": _suggest_oracle_sql(),
-        "stats_agg": _stats_agg_oracle_sql(),
-        "percentiles_agg": _percentiles_oracle_sql(),
-        "cardinality_agg": _cardinality_oracle_sql(),
-        "date_histogram": _date_histogram_oracle_sql(),
-        "top_hits_agg": _top_hits_oracle_sql(),
-        "phrase_topk_filtered": _phrase_oracle_sql(cand_where=FILTER_PRED),
-        "bm25_field_topk": _bm25_oracle_sql(docs_src=_FIELD_DOCS_SRC),
-        "phrase_field_topk": _phrase_oracle_sql(docs_src=_FIELD_DOCS_SRC),
-        "hybrid_field_topk": _hybrid_oracle_sql(docs_src=_FIELD_DOCS_SRC),
-        "hybrid_topk_filtered": _hybrid_oracle_sql(cand_where=FILTER_PRED),
-        "dedup_clusters": _dedup_clusters_oracle_sql(),
-        "clean_corpus": _clean_corpus_oracle_sql(),
-        "bool_search_topk": _bool_oracle_sql(),
-        "prefix_topk": _prefix_oracle_sql(),
-        "facet_counts": _facet_oracle_sql(),
-        "highlight_topk": _highlight_oracle_sql(),
-        "fuzzy_topk": _fuzzy_oracle_sql(),
-        "wildcard_topk": _wildcard_oracle_sql(),
-        "mlt_topk": _mlt_oracle_sql(),
-        "multi_match_topk": _mm_oracle_sql("most_fields"),
-        "multi_match_best_topk": _mm_oracle_sql("best_fields"),
-        "dismax_tb_topk": _mm_oracle_sql("best_fields",
-                                         tie_breaker=DISMAX_TB),
-        "regexp_topk": _regexp_oracle_sql(),
-        "boosting_topk": _boosting_oracle_sql(),
-        "force_merge_requery": _bm25_oracle_sql(docs_src=_fm_docs_src_sql()),
-        "rescore_topk": _rescore_oracle_sql(),
-        "query_string_topk": _qs_oracle_sql(),
-        "collapse_topk": _collapse_oracle_sql(),
-        "histogram_facets": _histogram_oracle_sql(),
-        "phrase_slop_topk": _phrase_oracle_sql(slop=PHRASE_SLOP),
-        "significant_terms": _significant_terms_oracle_sql(),
-        "bm25_page2": _bm25_oracle_sql(page=2),
-        "explain_topk": _explain_oracle_sql(),
-        "range_agg": _range_agg_oracle_sql(),
-        "filters_agg": _filters_agg_oracle_sql(),
-        "composite_agg": _composite_agg_oracle_sql(),
-        "adjacency_matrix": _adjacency_matrix_oracle_sql(),
-        "matrix_stats": _matrix_stats_oracle_sql(),
-        "sorted_search": _sorted_search_oracle_sql(),
-        "constant_score": _constant_score_oracle_sql(),
-        "function_score_topk": _function_score_oracle_sql(),
-        "extended_stats_agg": _extended_stats_oracle_sql(),
-        "weighted_avg_agg": _weighted_avg_oracle_sql(),
-        "missing_agg": _missing_agg_oracle_sql(),
-        "global_agg": _global_agg_oracle_sql(),
-        "pipeline_aggs": _pipeline_aggs_oracle_sql(),
-        "decay_score_topk": _decay_score_oracle_sql(),
-        "script_score_topk": _script_score_oracle_sql(),
-        "random_score_topk": _random_score_oracle_sql(),
-        "span_first_topk": _span_first_oracle_sql(),
-        "span_near_topk": _span_near_oracle_sql(),
-        "match_phrase_prefix_topk": _mpp_oracle_sql(),
-        "rare_terms_agg": _rare_terms_oracle_sql(),
-        "multi_terms_agg": _multi_terms_oracle_sql(),
-        "auto_date_histogram": _auto_dh_oracle_sql(),
-        "reindex_requery": _bm25_oracle_sql(docs_src=_REINDEX_DOCS_SRC),
-        "scroll_export": _scroll_oracle_sql(),
-        "rank_feature_topk": _rank_feature_oracle_sql(),
-        "phrase_suggest": _phrase_suggest_oracle_sql(),
-        "analyze_api": _analyze_api_oracle_sql(),
-        "exists_topk": _exists_oracle_sql(),
-        "ids_topk": _ids_oracle_sql(),
-        "terms_keyword_topk": _terms_keyword_oracle_sql(),
-        "sampler_agg": _sampler_oracle_sql(),
-        "diversified_sampler_agg": _diversified_sampler_oracle_sql(),
-        "count_api": _count_api_oracle_sql(),
-        "completion_suggest": _completion_oracle_sql(),
-        "percolate_matches": _percolate_oracle_sql(),
-    })
-    return _reorder(out)
 
 
 # ------------------------------------------ round-5d widening (aggs II +
@@ -6988,13 +6746,112 @@ SELECT query_id, rank, doc_id, score FROM (
 """
 
 
-_prev_queries_5d = queries
-_prev_oracles_5d = oracle_sql
+# ------------------------------------------------------------ registries
 
 
-def queries():  # noqa: F811 — round-5d widening layer
-    out = dict(_prev_queries_5d())
-    out.update({
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The oracle board: entry name → engine function (sf_dir → frame),
+    least-recently-driver-verified first (:func:`_reorder`)."""
+    return _reorder({
+        "bm25_brute_topk": _brute_bm25,
+        "bm25_engine_topk": _engine_bm25,
+        "phrase_topk": _phrase_topk,
+        "corpus_stats": _corpus_stats,
+        "term_df_topk": _term_df_topk,
+        "doc_token_counts": _doc_token_counts,
+        "w2_lag_lead": _w2_lag_lead,
+        "a1_modal_argmax": _a1_modal_argmax,
+        "w7_topk_per_group": _w7_topk_per_group,
+        "f4_anti_join": _f4_anti_join,
+        "w5_sessionize": _w5_sessionize,
+        "a4_repeated_patterns": _a4_repeated_patterns,
+        "a3_median": _a3_median,
+        "w6_para_merge": _w6_para_merge,
+        "dedup_exact": _dedup_exact,
+        "fingerprints": _fingerprints,
+        "quality_scores": _quality,
+        "lang_id": _lang_id,
+        "minhash_pairs": _minhash_pairs,
+        "simhash_pairs": _simhash_pairs,
+        "minhash_pairs_md5": _minhash_pairs_md5,
+        "simhash_pairs_md5": _simhash_pairs_md5,
+        "ann_cosine_topk": _ann_topk,
+        "ann_l2_topk": _ann_l2_topk,
+        "ann_lsh_topk": _lsh_topk,
+        "embedding_near_dups": _embedding_near_dups,
+        "chunk_stats": _chunk_stats,
+        **_extra_queries(),
+        "bm25_filtered_topk": _bm25_filtered_topk,
+        "phrase_topk_filtered": _phrase_topk_filtered,
+        "bm25_field_topk": _bm25_field_topk,
+        "phrase_field_topk": _phrase_field_topk,
+        "hybrid_field_topk": _hybrid_field_topk,
+        "hybrid_topk_filtered": _hybrid_topk_filtered,
+        "dedup_clusters": _dedup_clusters,
+        "clean_corpus": _clean_corpus,
+        "bool_search_topk": _bool_search_topk,
+        "prefix_topk": _prefix_topk,
+        "facet_counts": _facet_counts,
+        "highlight_topk": _highlight_topk,
+        "fuzzy_topk": _fuzzy_topk,
+        "wildcard_topk": _wildcard_topk,
+        "mlt_topk": _mlt_topk,
+        "multi_match_topk": _multi_match_topk,
+        "multi_match_best_topk": _multi_match_best_topk,
+        "histogram_facets": _histogram_facets,
+        "phrase_slop_topk": _phrase_slop_topk,
+        "significant_terms": _significant_terms,
+        "bm25_page2": _bm25_page2,
+        "explain_topk": _explain_topk,
+        "msm_topk": _msm_topk,
+        "term_suggest": _term_suggest,
+        "stats_agg": _stats_agg,
+        "percentiles_agg": _percentiles_agg,
+        "cardinality_agg": _cardinality_agg,
+        "date_histogram": _date_histogram,
+        "top_hits_agg": _top_hits_agg,
+        "dismax_tb_topk": _dismax_tb_topk,
+        "regexp_topk": _regexp_topk,
+        "boosting_topk": _boosting_topk,
+        "force_merge_requery": _force_merge_requery,
+        "rescore_topk": _rescore_topk,
+        "query_string_topk": _query_string_topk,
+        "collapse_topk": _collapse_topk,
+        "range_agg": _range_agg,
+        "filters_agg": _filters_agg,
+        "composite_agg": _composite_agg,
+        "adjacency_matrix": _adjacency_matrix,
+        "matrix_stats": _matrix_stats,
+        "sorted_search": _sorted_search,
+        "constant_score": _constant_score,
+        "function_score_topk": _function_score_topk,
+        "extended_stats_agg": _extended_stats_agg,
+        "weighted_avg_agg": _weighted_avg_agg,
+        "missing_agg": _missing_agg,
+        "global_agg": _global_agg,
+        "pipeline_aggs": _pipeline_aggs,
+        "decay_score_topk": _decay_score_topk,
+        "script_score_topk": _script_score_topk,
+        "random_score_topk": _random_score_topk,
+        "span_first_topk": _span_first_topk,
+        "span_near_topk": _span_near_topk,
+        "match_phrase_prefix_topk": _mpp_topk,
+        "rare_terms_agg": _rare_terms_agg,
+        "multi_terms_agg": _multi_terms_agg,
+        "auto_date_histogram": _auto_date_histogram,
+        "reindex_requery": _reindex_requery,
+        "scroll_export": _scroll_export,
+        "rank_feature_topk": _rank_feature_topk,
+        "phrase_suggest": _phrase_suggest,
+        "analyze_api": _analyze_api,
+        "exists_topk": _exists_topk,
+        "ids_topk": _ids_topk,
+        "terms_keyword_topk": _terms_keyword_topk,
+        "sampler_agg": _sampler_agg,
+        "diversified_sampler_agg": _diversified_sampler_agg,
+        "count_api": _count_api,
+        "completion_suggest": _completion_suggest,
+        "percolate_matches": _percolate_matches,
         "percentile_ranks_agg": _percentile_ranks_agg,
         "boxplot_agg": _boxplot_agg,
         "mad_agg": _mad_agg,
@@ -7014,11 +6871,127 @@ def queries():  # noqa: F811 — round-5d widening layer
         "mget_api": _mget_api,
         "intervals_topk": _intervals_topk,
     })
-    return _reorder(out)
 
 
-def oracle_sql():  # noqa: F811 — round-5d widening layer
-    out = dict(_prev_oracles_5d())
+def oracle_sql() -> dict[str, str]:
+    """Entry name → DuckDB SQL whose result the entry must equal."""
+    from pdf_to_opensearch_spark.ops.textstats import (
+        fingerprints_oracle_sql,
+        lang_id_oracle_sql,
+        quality_scores_oracle_sql,
+    )
+
+    out = _reorder({
+        "bm25_brute_topk": _bm25_oracle_sql(),
+        "bm25_engine_topk": _bm25_oracle_sql(),
+        "phrase_topk": _phrase_oracle_sql(),
+        "corpus_stats": _CORPUS_STATS_SQL,
+        "term_df_topk": _TERM_DF_SQL,
+        "doc_token_counts": _DOC_TOKEN_SQL,
+        "w2_lag_lead": _W2_SQL,
+        "a1_modal_argmax": _A1_SQL,
+        "w7_topk_per_group": _W7_SQL,
+        "f4_anti_join": _F4_SQL,
+        "w5_sessionize": _W5_SQL,
+        "a4_repeated_patterns": _A4_SQL,
+        "a3_median": _A3_SQL,
+        "w6_para_merge": _W6_SQL,
+        "dedup_exact": _DEDUP_EXACT_SQL,
+        "fingerprints": fingerprints_oracle_sql(),
+        "quality_scores": quality_scores_oracle_sql(),
+        "lang_id": lang_id_oracle_sql(),
+        "ann_cosine_topk": _ANN_SQL,
+        "ann_l2_topk": _ANN_L2_SQL,
+        "ann_lsh_topk": _lsh_oracle_sql(),
+        "embedding_near_dups": _EMB_DUPS_SQL,
+        "chunk_stats": _chunk_stats_oracle_sql(),
+        "minhash_pairs_md5": _minhash_md5_oracle_sql(),
+        "simhash_pairs_md5": _simhash_md5_oracle_sql(),
+        "minhash_pairs": _jaccard_allpairs_oracle_sql(),
+        # simhash_pairs (xxhash64 production family): hamming over
+        # xxhash64 isn't SQL-computable, so the oracle is a VALUES literal
+        # of the expected pair set, independently derived from the public
+        # XXH64 spec by tools/derive_simhash_pairs.py (see note at
+        # _SIMHASH_XX_VALUES); the md5 twin oracle-checks the full
+        # pipeline in SQL and tests/test_ops.py pins family agreement on a
+        # planted fixture.
+        "simhash_pairs": _SIMHASH_XX_SQL,
+        **_extra_oracles(),
+        "bm25_filtered_topk": _bm25_oracle_sql(cand_where=FILTER_PRED),
+        "msm_topk": _bm25_oracle_sql(msm=_resolved_msm()),
+        "term_suggest": _suggest_oracle_sql(),
+        "stats_agg": _stats_agg_oracle_sql(),
+        "percentiles_agg": _percentiles_oracle_sql(),
+        "cardinality_agg": _cardinality_oracle_sql(),
+        "date_histogram": _date_histogram_oracle_sql(),
+        "top_hits_agg": _top_hits_oracle_sql(),
+        "phrase_topk_filtered": _phrase_oracle_sql(cand_where=FILTER_PRED),
+        "bm25_field_topk": _bm25_oracle_sql(docs_src=_FIELD_DOCS_SRC),
+        "phrase_field_topk": _phrase_oracle_sql(docs_src=_FIELD_DOCS_SRC),
+        "hybrid_field_topk": _hybrid_oracle_sql(docs_src=_FIELD_DOCS_SRC),
+        "hybrid_topk_filtered": _hybrid_oracle_sql(cand_where=FILTER_PRED),
+        "dedup_clusters": _dedup_clusters_oracle_sql(),
+        "clean_corpus": _clean_corpus_oracle_sql(),
+        "bool_search_topk": _bool_oracle_sql(),
+        "prefix_topk": _prefix_oracle_sql(),
+        "facet_counts": _facet_oracle_sql(),
+        "highlight_topk": _highlight_oracle_sql(),
+        "fuzzy_topk": _fuzzy_oracle_sql(),
+        "wildcard_topk": _wildcard_oracle_sql(),
+        "mlt_topk": _mlt_oracle_sql(),
+        "multi_match_topk": _mm_oracle_sql("most_fields"),
+        "multi_match_best_topk": _mm_oracle_sql("best_fields"),
+        "dismax_tb_topk": _mm_oracle_sql("best_fields",
+                                         tie_breaker=DISMAX_TB),
+        "regexp_topk": _regexp_oracle_sql(),
+        "boosting_topk": _boosting_oracle_sql(),
+        "force_merge_requery": _bm25_oracle_sql(docs_src=_fm_docs_src_sql()),
+        "rescore_topk": _rescore_oracle_sql(),
+        "query_string_topk": _qs_oracle_sql(),
+        "collapse_topk": _collapse_oracle_sql(),
+        "histogram_facets": _histogram_oracle_sql(),
+        "phrase_slop_topk": _phrase_oracle_sql(slop=PHRASE_SLOP),
+        "significant_terms": _significant_terms_oracle_sql(),
+        "bm25_page2": _bm25_oracle_sql(page=2),
+        "explain_topk": _explain_oracle_sql(),
+        "range_agg": _range_agg_oracle_sql(),
+        "filters_agg": _filters_agg_oracle_sql(),
+        "composite_agg": _composite_agg_oracle_sql(),
+        "adjacency_matrix": _adjacency_matrix_oracle_sql(),
+        "matrix_stats": _matrix_stats_oracle_sql(),
+        "sorted_search": _sorted_search_oracle_sql(),
+        "constant_score": _constant_score_oracle_sql(),
+        "function_score_topk": _function_score_oracle_sql(),
+        "extended_stats_agg": _extended_stats_oracle_sql(),
+        "weighted_avg_agg": _weighted_avg_oracle_sql(),
+        "missing_agg": _missing_agg_oracle_sql(),
+        "global_agg": _global_agg_oracle_sql(),
+        "pipeline_aggs": _pipeline_aggs_oracle_sql(),
+        "decay_score_topk": _decay_score_oracle_sql(),
+        "script_score_topk": _script_score_oracle_sql(),
+        "random_score_topk": _random_score_oracle_sql(),
+        "span_first_topk": _span_first_oracle_sql(),
+        "span_near_topk": _span_near_oracle_sql(),
+        "match_phrase_prefix_topk": _mpp_oracle_sql(),
+        "rare_terms_agg": _rare_terms_oracle_sql(),
+        "multi_terms_agg": _multi_terms_oracle_sql(),
+        "auto_date_histogram": _auto_dh_oracle_sql(),
+        "reindex_requery": _bm25_oracle_sql(docs_src=_REINDEX_DOCS_SRC),
+        "scroll_export": _scroll_oracle_sql(),
+        "rank_feature_topk": _rank_feature_oracle_sql(),
+        "phrase_suggest": _phrase_suggest_oracle_sql(),
+        "analyze_api": _analyze_api_oracle_sql(),
+        "exists_topk": _exists_oracle_sql(),
+        "ids_topk": _ids_oracle_sql(),
+        "terms_keyword_topk": _terms_keyword_oracle_sql(),
+        "sampler_agg": _sampler_oracle_sql(),
+        "diversified_sampler_agg": _diversified_sampler_oracle_sql(),
+        "count_api": _count_api_oracle_sql(),
+        "completion_suggest": _completion_oracle_sql(),
+        "percolate_matches": _percolate_oracle_sql(),
+    })
+    # these trail the reordered block: oracle_sql()'s key order is part
+    # of its output and stays fixed
     out.update({
         "percentile_ranks_agg": _percentile_ranks_oracle_sql(),
         "boxplot_agg": _boxplot_oracle_sql(),

@@ -1,45 +1,44 @@
-"""Boolean / prefix / facet / highlight query surfaces (SURVEY.md §3.3).
+"""The OpenSearch query, aggregation and API surfaces beyond plain
+match / match_phrase (SURVEY.md §3.3), served over the same SPIMI index
+that :mod:`.query` scores. The reference builds OpenSearch ``bool``
+queries from term + match_phrase clauses (opensearch_loader.py:395-441)
+and lets Lucene execute them and every other query type; this module
+re-owns that vocabulary — bool, prefix / wildcard / regexp / fuzzy,
+more_like_this, query_string, the span / intervals family, the
+function_score family, suggesters, and the bucket, metric and pipeline
+aggregations.
 
-The reference builds OpenSearch ``bool`` queries from term + match_phrase
-clauses (opensearch_loader.py:395-441) and lets Lucene execute them; this
-module re-owns the remaining Lucene query types over the same SPIMI index
-that :mod:`.query` scores:
+Each surface is only its own analysis, kernel or value expressions,
+aggregation and output ordering. Everything else is one of three shared
+pieces:
 
-* :func:`boolean_search` — BooleanQuery must/should/must_not with
-  sum-of-scores semantics (must terms score AND constrain, should terms
-  score, must_not terms exclude).
-* :func:`prefix_search` — PrefixQuery under the ``scoring_boolean``
-  rewrite: expand the prefix against the term dictionary in term order
-  (Lucene's rewrite picks the first ``max_expansions`` terms), then score
-  the expansion as a disjunction of TermQuery clauses (weight = idf).
-* :func:`search_facets` — the ``terms`` aggregation run alongside a match
-  query: bucket counts over ALL matching docs, not just the top-k page.
-* :func:`search_histogram` — the numeric ``histogram`` aggregation over
-  the same match-query hit set: fixed-interval buckets, key order.
-* :func:`highlight_snippets` — per-hit snippet extraction (the ``highlight``
-  block of an OpenSearch search body): first query-term occurrence, fixed
-  character window, computed relationally so the DuckDB oracle can
-  reproduce it byte-for-byte.
-* :func:`fuzzy_search` — FuzzyQuery: Levenshtein expansion against the
-  term dictionary (closest terms first, per-term boost 1 − d/|token|),
-  scored as a weighted TermQuery disjunction.
-* :func:`wildcard_search` — WildcardQuery (``*``/``?``) under the
-  ``scoring_boolean`` rewrite, expansion in term order.
-* :func:`more_like_this` — the MLT query: select the seed doc's most
-  significant terms by tf·idf (min_term_freq / min_doc_freq /
-  max_query_terms gates, Lucene MoreLikeThis defaults) and run them as a
-  disjunction, excluding the seed doc from the hits.
+* **One hit-set frame.** :func:`_match_docs` is the distinct
+  (query_id, doc_id) set of ANY-term matches — the scope of every
+  aggregation (never the top-k page). :func:`_full_bm25_scores` is the
+  same set BM25-scored (k=∞, 4 dp) — the base of top_hits, collapse,
+  sampler, scroll and the function_score family. Neither returns None:
+  when no term survives analysis or the dictionary lookup, each returns
+  an empty frame of its own schema (:func:`.query.empty_frame`), the
+  surface runs its one plan on it, and Catalyst folds that plan to an
+  empty relation: no postings or docs file is scanned.
+  :func:`_with_docs` joins a hit set to the docs table projected to the
+  caller's column expressions.
+* **One dictionary-expansion pass.** :func:`_expand` broadcasts the
+  batch's probe table (prefixes, patterns, fuzzy source tokens) against
+  ONE dictionary scan with a per-probe ranked cut — one Spark job per
+  batch for prefix, wildcard, regexp, fuzzy, query_string and
+  match_phrase_prefix. Point lookups are :func:`.query.term_stats`.
+* **One postings executor.** :func:`.query.execute` runs a per-range
+  kernel over the bucket/term-pruned postings: the unfiltered per-file
+  pyio scan (no Exchange), the filtered ``cogroup`` with the allowed-doc
+  frame, or — for ranges split across files — the JVM scan grouped by
+  ``range_id``. Positional kernels decode through
+  :func:`.query.decode_position_keys`, kernels emit
+  :func:`.query.result_frame` rows, and ranked pages go through the one
+  global top-k window, :func:`.query.ranked_topk`.
 
-Every surface here that reads postings does it through the one postings
-executor, :func:`.query.execute`: dictionary point-lookup (or a
-dictionary expansion pass) → bucket/term-pruned postings scan →
-per-range vectorized kernel, and ranked pages go through the one global
-top-k window, :func:`.query.ranked_topk`. ``execute`` takes one of three
-branches: the unfiltered per-file pyio scan (no Exchange), the filtered
-``cogroup`` with the allowed-doc frame, or — for non-local postings or
-ranges split across files — the JVM scan grouped by ``range_id``.
-Nothing here collects more than the dictionary rows for the query's own
-terms.
+Nothing here collects more than the dictionary rows of the queries' own
+terms and expansions.
 """
 
 from __future__ import annotations
@@ -52,31 +51,98 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .analyzer import tokenize_text
-from .codec import decode_postings
+from .codec import decode_postings, tf_norm
 from .indexer import IndexPaths
-from .oracle import idf as idf_fn
 from .query import (
+    _POS_MASK,
+    _POS_SHIFT,
     RANKED,
     _allowed_docs,
     _filter_in,
     _score_kernel,
     _weighted_qinfo,
+    decode_position_keys,
     execute,
+    idf_of,
     load_stats,
-    lookup_dict_rows,
     ranked_topk,
+    result_frame,
+    term_stats,
 )
+
+HITS = "query_id int, doc_id long"
 
 
 def _run_kernel(spark: SparkSession, paths: IndexPaths, stats, qinfo: dict,
-                k: int, prune: bool, live_terms: list[str],
-                doc_filter: str | None, filter_root: str | None,
+                k: int, prune: bool, doc_filter: str | None,
+                filter_root: str | None,
                 bool_spec: dict | None = None) -> DataFrame:
-    """Ranked BM25 page of ``qinfo`` through :func:`.query.execute`."""
+    """Ranked BM25 page of ``qinfo`` (plus the must_not terms of
+    ``bool_spec``, which only exclude) through :func:`.query.execute`."""
+    live = sorted({t for ti in qinfo.values() for t in ti}
+                  | {t for _ms, ns in (bool_spec or {}).values()
+                     for t in ns})
     kern = _score_kernel(qinfo, k, stats, prune, bool_spec=bool_spec)
     allowed = _allowed_docs(spark, paths, doc_filter, filter_root)
-    return ranked_topk(execute(spark, paths, stats, live_terms, kern,
+    return ranked_topk(execute(spark, paths, stats, live, kern,
                                allowed=allowed), k)
+
+
+def _rounded_page(spark: SparkSession, paths: IndexPaths, stats,
+                  live: list[str], kernel, k: int,
+                  need_positions: bool = True) -> DataFrame:
+    """Ranked page of a custom per-range kernel, scores rounded to 4 dp
+    BEFORE ranking (the span / intervals / synonym contract)."""
+    return ranked_topk(execute(spark, paths, stats, live, kernel,
+                               need_positions=need_positions)
+                       .withColumn("score", F.round("score", 4)), k)
+
+
+def _expand(spark: SparkSession, paths: IndexPaths, probes: list[tuple],
+            schema: str, cond, cut: int, order: tuple[str, ...] = ("term",),
+            **derived) -> list:
+    """The one dictionary-expansion pass. The batch's probe table
+    (``probes`` rows of ``schema``) is broadcast against ONE dictionary
+    scan; ``derived`` columns are added, ``cond`` filters, and each probe
+    row keeps its first ``cut`` matches by ``order`` — one Spark job for
+    the whole batch (a per-probe scan loop would read a 100-TB-scale
+    term dictionary once per probe, one driver-serialized job each).
+
+    Returns the surviving (probe columns, term, df, derived columns)
+    rows, sorted by (probe columns, ``order``): the order every caller
+    accumulates its weights in. No probes, no job."""
+    if not probes:
+        return []
+    probe = spark.createDataFrame(probes, schema)
+    keys = probe.columns
+    cand = spark.read.parquet(paths.dictionary).join(F.broadcast(probe))
+    for name, col in derived.items():
+        cand = cand.withColumn(name, col)
+    w = Window.partitionBy(*keys).orderBy(*order)
+    rows = (cand.filter(cond)
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= cut)
+            .select(*keys, "term", "df", *derived).collect())
+    return sorted(rows, key=lambda r: tuple(r[c] for c in (*keys, *order)))
+
+
+def _rewrite_search(spark: SparkSession, index_dir: str,
+                    probes: list[tuple], schema: str, cond, k: int,
+                    max_expansions: int, doc_filter: str | None,
+                    filter_root: str | None) -> DataFrame:
+    """The ``scoring_boolean`` rewrite of prefix / wildcard / regexp: each
+    query's (query_id, pattern) probe expands to its first
+    ``max_expansions`` dictionary terms in term order (Lucene enumerates
+    the term dict in order and stops there), scored as a TermQuery
+    disjunction with boost 1: weight = idf(term)."""
+    paths = IndexPaths(index_dir)
+    stats = load_stats(spark, index_dir)
+    qinfo: dict[int, dict] = {}
+    for r in _expand(spark, paths, probes, schema, cond, max_expansions):
+        qinfo.setdefault(int(r["query_id"]), {})[r["term"]] = idf_of(
+            stats.N, int(r["df"]))
+    return _run_kernel(spark, paths, stats, qinfo, k, True, doc_filter,
+                       filter_root)
 
 
 # ------------------------------------------------------------- bool query
@@ -114,12 +180,7 @@ def boolean_search(spark: SparkSession, index_dir: str,
                              tokenize_text(q.get("should", "") or ""),
                              tokenize_text(q.get("must_not", "") or ""))
     all_terms = sorted({t for m, s, n in clauses.values() for t in m + s + n})
-    if not all_terms:
-        return spark.createDataFrame([], RANKED)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, all_terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in all_terms if t in dfs}
+    dfs, idfs = term_stats(spark, paths, stats, all_terms)
     qinfo: dict[int, dict] = {}
     bool_spec: dict[int, tuple] = {}
     for qid, (must, should, mnot) in clauses.items():
@@ -132,12 +193,8 @@ def boolean_search(spark: SparkSession, index_dir: str,
         qinfo[qid] = ti
         bool_spec[qid] = (tuple(sorted(set(must))),
                           tuple(sorted({t for t in mnot if t in dfs})))
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
-    live = sorted({t for ti in qinfo.values() for t in ti}
-                  | {t for ms, ns in bool_spec.values() for t in ns})
-    return _run_kernel(spark, paths, stats, qinfo, k, False, live,
-                       doc_filter, filter_root, bool_spec=bool_spec)
+    return _run_kernel(spark, paths, stats, qinfo, k, False, doc_filter,
+                       filter_root, bool_spec=bool_spec)
 
 
 # ------------------------------------------------------------ prefix query
@@ -160,36 +217,15 @@ def prefix_search(spark: SparkSession, index_dir: str,
     then scores as a disjunction of TermQuery clauses with boost 1:
     weight = idf(term), tf-normalized per doc like any other scored term.
     """
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
     prefs: dict[int, str] = {}
     for qid, p in queries:
         toks = tokenize_text(p)
         if toks:
             prefs[int(qid)] = toks[0]
-    if not prefs:
-        return spark.createDataFrame([], RANKED)
-    dictionary = spark.read.parquet(paths.dictionary)
-    # ONE dictionary pass for all prefixes (the fuzzy/wildcard shape):
-    # broadcast the tiny prefix table, startswith against the pattern
-    # column, rank in term order per query, cut at max_expansions
-    pref_df = spark.createDataFrame(sorted(prefs.items()),
-                                    "query_id int, pref string")
-    wexp = Window.partitionBy("query_id").orderBy("term")
-    rows = (dictionary.join(F.broadcast(pref_df))
-            .filter(F.col("term").startswith(F.col("pref")))
-            .withColumn("rn", F.row_number().over(wexp))
-            .filter(F.col("rn") <= max_expansions)
-            .select("query_id", "term", "df").collect())
-    qinfo: dict[int, dict] = {}
-    for r in rows:
-        qinfo.setdefault(int(r["query_id"]), {})[r["term"]] = float(
-            idf_fn(stats.N, np.array([int(r["df"])]))[0])
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    return _run_kernel(spark, paths, stats, qinfo, k, True, live,
-                       doc_filter, filter_root)
+    return _rewrite_search(spark, index_dir, sorted(prefs.items()),
+                           "query_id int, pref string",
+                           F.col("term").startswith(F.col("pref")), k,
+                           max_expansions, doc_filter, filter_root)
 
 
 # ------------------------------------------------------------- fuzzy query
@@ -227,24 +263,13 @@ def fuzzy_search(spark: SparkSession, index_dir: str,
         toks = tokenize_text(text)
         if toks:
             q_toks[int(qid)] = toks
-    if not q_toks:
-        return spark.createDataFrame([], RANKED)
-    dictionary = spark.read.parquet(paths.dictionary)
     srcs = sorted({t for toks in q_toks.values() for t in toks})
-    # ONE distributed dictionary pass for every source token: broadcast
-    # the (tiny) token list against the scan, per-token closest-first
-    # window cut — a per-token scan loop would read the 100-TB-scale
-    # term dictionary len(srcs) times
-    src_df = spark.createDataFrame([(s,) for s in srcs], "src string")
-    wexp = Window.partitionBy("src").orderBy("dist", "term")
-    rows = (dictionary.join(F.broadcast(src_df))
-            .withColumn("dist", F.levenshtein(F.col("term"), F.col("src")))
-            .filter(F.col("dist") <= max_edits)
-            .withColumn("rn", F.row_number().over(wexp))
-            .filter(F.col("rn") <= max_expansions)
-            .select("src", "term", "df", "dist").collect())
+    # per source token, closest-first: (distance asc, term asc)
     exp: dict[str, list[tuple[str, int, int]]] = {s: [] for s in srcs}
-    for r in sorted(rows, key=lambda r: (r["src"], r["dist"], r["term"])):
+    for r in _expand(spark, paths, [(s,) for s in srcs], "src string",
+                     F.col("dist") <= max_edits, max_expansions,
+                     order=("dist", "term"),
+                     dist=F.levenshtein(F.col("term"), F.col("src"))):
         exp[r["src"]].append((r["term"], int(r["df"]), int(r["dist"])))
     qinfo: dict[int, dict] = {}
     for qid, toks in q_toks.items():
@@ -254,15 +279,11 @@ def fuzzy_search(spark: SparkSession, index_dir: str,
                 boost = 1.0 - dist / len(src)
                 if boost <= 0.0:
                     continue
-                idf = float(idf_fn(stats.N, np.array([df]))[0])
-                ti[term] = ti.get(term, 0.0) + boost * idf
+                ti[term] = ti.get(term, 0.0) + boost * idf_of(stats.N, df)
         if ti:
             qinfo[qid] = ti
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    return _run_kernel(spark, paths, stats, qinfo, k, True, live,
-                       doc_filter, filter_root)
+    return _run_kernel(spark, paths, stats, qinfo, k, True, doc_filter,
+                       filter_root)
 
 
 # ----------------------------------------------------------- wildcard query
@@ -288,35 +309,15 @@ def wildcard_search(spark: SparkSession, index_dir: str,
     LIKE-pushdown scan (``*``→``%``, ``?``→``_`` — the analyzer alphabet
     contains neither SQL metacharacter, so no escaping is needed).
     """
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
     pats: dict[int, str] = {}
     for qid, raw in queries:
         p = (raw or "").strip().lower()
         if p and set(p) <= _WILDCARD_OK:
             pats[int(qid)] = p.replace("*", "%").replace("?", "_")
-    if not pats:
-        return spark.createDataFrame([], RANKED)
-    dictionary = spark.read.parquet(paths.dictionary)
-    # ONE dictionary pass for all patterns (broadcast pattern table,
-    # LIKE with a column-valued pattern, per-query term-order cut)
-    pat_df = spark.createDataFrame(sorted(pats.items()),
-                                   "query_id int, pat string")
-    wexp = Window.partitionBy("query_id").orderBy("term")
-    rows = (dictionary.join(F.broadcast(pat_df))
-            .filter(F.expr("term LIKE pat"))
-            .withColumn("rn", F.row_number().over(wexp))
-            .filter(F.col("rn") <= max_expansions)
-            .select("query_id", "term", "df").collect())
-    qinfo: dict[int, dict] = {}
-    for r in rows:
-        qinfo.setdefault(int(r["query_id"]), {})[r["term"]] = float(
-            idf_fn(stats.N, np.array([int(r["df"])]))[0])
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    return _run_kernel(spark, paths, stats, qinfo, k, True, live,
-                       doc_filter, filter_root)
+    return _rewrite_search(spark, index_dir, sorted(pats.items()),
+                           "query_id int, pat string",
+                           F.expr("term LIKE pat"), k, max_expansions,
+                           doc_filter, filter_root)
 
 
 # -------------------------------------------------------------- regexp query
@@ -342,33 +343,15 @@ def regexp_search(spark: SparkSession, index_dir: str,
     Lucene's FST automaton walk is the single-node analogue of this
     pruned distributed scan.
     """
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
     pats: dict[int, str] = {}
     for qid, raw in queries:
         p = (raw or "").strip().lower()
         if p:
             pats[int(qid)] = f"^(?:{p})$"
-    if not pats:
-        return spark.createDataFrame([], RANKED)
-    dictionary = spark.read.parquet(paths.dictionary)
-    pat_df = spark.createDataFrame(sorted(pats.items()),
-                                   "query_id int, pat string")
-    wexp = Window.partitionBy("query_id").orderBy("term")
-    rows = (dictionary.join(F.broadcast(pat_df))
-            .filter(F.expr("term RLIKE pat"))
-            .withColumn("rn", F.row_number().over(wexp))
-            .filter(F.col("rn") <= max_expansions)
-            .select("query_id", "term", "df").collect())
-    qinfo: dict[int, dict] = {}
-    for r in rows:
-        qinfo.setdefault(int(r["query_id"]), {})[r["term"]] = float(
-            idf_fn(stats.N, np.array([int(r["df"])]))[0])
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    return _run_kernel(spark, paths, stats, qinfo, k, True, live,
-                       doc_filter, filter_root)
+    return _rewrite_search(spark, index_dir, sorted(pats.items()),
+                           "query_id int, pat string",
+                           F.expr("term RLIKE pat"), k, max_expansions,
+                           doc_filter, filter_root)
 
 
 # ------------------------------------------------------------ more_like_this
@@ -405,10 +388,7 @@ def more_like_this(spark: SparkSession, index_dir: str,
     tfs = {d: Counter(tokenize_text(t or "")) for d, t in texts.items()}
     cand = sorted({t for tf in tfs.values()
                    for t, c in tf.items() if c >= min_term_freq})
-    if not cand:
-        return spark.createDataFrame([], RANKED)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, cand)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
+    dfs, idfs = term_stats(spark, paths, stats, cand)
     qinfo: dict[int, dict] = {}
     seed_of: dict[int, int] = {}
     for qid, d in seeds:
@@ -419,21 +399,16 @@ def more_like_this(spark: SparkSession, index_dir: str,
         for t, c in tf.items():
             if c < min_term_freq:
                 continue
-            df = dfs.get(t)
-            if df is None or df < min_doc_freq:
+            if t not in dfs or dfs[t] < min_doc_freq:
                 continue
-            idf = float(idf_fn(stats.N, np.array([df]))[0])
-            scored.append((round(c * idf, 6), t, idf))
+            scored.append((round(c * idfs[t], 6), t, idfs[t]))
         if not scored:
             continue
         scored.sort(key=lambda x: (-x[0], x[1]))
         qinfo[int(qid)] = {t: idf for _s, t, idf in scored[:max_query_terms]}
         seed_of[int(qid)] = int(d)
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
-    live = sorted({t for ti in qinfo.values() for t in ti})
-    res = _run_kernel(spark, paths, stats, qinfo, k + 1, True, live,
-                      doc_filter, filter_root)
+    res = _run_kernel(spark, paths, stats, qinfo, k + 1, True, doc_filter,
+                      filter_root)
     seed_df = spark.createDataFrame(sorted(seed_of.items()),
                                     "query_id int, seed_id long")
     return ranked_topk(res.join(F.broadcast(seed_df), "query_id")
@@ -458,17 +433,9 @@ def search_facets(spark: SparkSession, index_dir: str,
 
     Returns DataFrame(query_id, facet_value, doc_count, rank).
     """
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, facet_value string, doc_count long, rank int"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    facets = (matches
-              .join(spark.read.parquet(paths.docs)
-                    .select("doc_id", F.col(facet_col).cast("string")
-                            .alias("facet_value")),
-                    "doc_id")
+    facets = (_hit_values(spark, index_dir, queries,
+                          F.col(facet_col).cast("string")
+                          .alias("facet_value"))
               .groupBy("query_id", "facet_value")
               .agg(F.count("*").alias("doc_count")))
     w = Window.partitionBy("query_id").orderBy(
@@ -478,19 +445,18 @@ def search_facets(spark: SparkSession, index_dir: str,
             .select("query_id", "facet_value", "doc_count", "rank"))
 
 
-def _match_docs(spark: SparkSession, paths: IndexPaths, stats,
-                queries: list[tuple[int, str]]) -> DataFrame | None:
+def _match_docs(spark: SparkSession, index_dir: str,
+                queries: list[tuple[int, str]]) -> DataFrame:
     """Distinct (query_id, doc_id) hit set for ANY-term matches — the
     shared aggregation scope of every OpenSearch agg that runs alongside
     a match query (terms/histogram/...). Pruned postings scan → per-range
     decode of each needed term ONCE → range-local distinct; the hit set
-    stays distributed. None = no analyzable query terms."""
+    stays distributed. No analyzable query term → the empty :data:`HITS`
+    frame (:func:`.query.execute` reads nothing)."""
     q_terms = {int(qid): sorted(set(tokenize_text(text)))
                for qid, text in queries}
     q_terms = {qid: ts for qid, ts in q_terms.items() if ts}
     terms = sorted({t for ts in q_terms.values() for t in ts})
-    if not terms:
-        return None
 
     def match_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
@@ -512,15 +478,29 @@ def _match_docs(spark: SparkSession, paths: IndexPaths, stats,
             out_q.append(np.full(u.size, qid, dtype=np.int32))
             out_d.append(u)
         if not out_q:
-            return pd.DataFrame({"query_id": pd.Series(dtype="int32"),
-                                 "doc_id": pd.Series(dtype="int64")})
-        return pd.DataFrame({
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-        })
+            return result_frame([], [])
+        return result_frame(np.concatenate(out_q), np.concatenate(out_d))
 
-    return execute(spark, paths, stats, terms, match_kernel,
-                   schema="query_id int, doc_id long")
+    return execute(spark, IndexPaths(index_dir),
+                   load_stats(spark, index_dir), terms, match_kernel,
+                   schema=HITS)
+
+
+def _with_docs(hits: DataFrame, index_dir: str, *cols) -> DataFrame:
+    """``hits`` joined on doc_id to the docs table projected to
+    ``cols`` (column names or Column expressions, evaluated on the docs
+    side) — the one docs read under every hit-set surface; the parquet
+    ReadSchema keeps only the columns those expressions reference."""
+    docs = hits.sparkSession.read.parquet(IndexPaths(index_dir).docs)
+    return hits.join(docs.select("doc_id", *cols), "doc_id")
+
+
+def _hit_values(spark: SparkSession, index_dir: str,
+                queries: list[tuple[int, str]], *cols) -> DataFrame:
+    """The aggregation scope: the :func:`_match_docs` hit set with the
+    docs projection ``cols`` (:func:`_with_docs`)."""
+    return _with_docs(_match_docs(spark, index_dir, queries), index_dir,
+                      *cols)
 
 
 def search_histogram(spark: SparkSession, index_dir: str,
@@ -544,16 +524,8 @@ def search_histogram(spark: SparkSession, index_dir: str,
     """
     if interval <= 0:
         raise ValueError(f"interval must be positive, got {interval}")
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, bucket long, doc_count long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id",
-                    F.expr(value_expr).cast("double").alias("v")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(value_expr).cast("double").alias("v"))
             .filter(F.col("v").isNotNull())
             .withColumn("bucket",
                         (F.floor(F.col("v") / interval)
@@ -590,19 +562,11 @@ def significant_terms(spark: SparkSession, index_dir: str,
 
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, term string, fg long, df long, "
-                  "score double, rank int")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    matches = matches.persist()
+    matches = _match_docs(spark, index_dir, queries).persist()
     try:
         sizes = (matches.groupBy("query_id")
                  .agg(F.count("*").alias("fg_total")))
-        hit_docs = matches.join(
-            spark.read.parquet(paths.docs).select("doc_id", "text"),
-            "doc_id")
-        fg = (with_tokens(hit_docs)
+        fg = (with_tokens(_with_docs(matches, index_dir, "text"))
               .select("query_id",
                       F.explode(F.array_distinct("tokens")).alias("term"))
               .groupBy("query_id", "term")
@@ -651,15 +615,11 @@ def highlight_snippets(spark: SparkSession, index_dir: str,
     from .query import search
 
     res = search(spark, index_dir, queries, k=k)
-    qt_rows = [(int(qid), t) for qid, text in queries
-               for t in sorted(set(tokenize_text(text)))]
-    if not qt_rows:
-        return res.withColumn("snippet", F.lit(""))
-    qt = spark.createDataFrame(qt_rows, "query_id int, term string")
-    docs = spark.read.parquet(IndexPaths(index_dir).docs) \
-        .select("doc_id", "text")
-    pos = (res.join(F.broadcast(qt), "query_id")
-           .join(docs, "doc_id")
+    qt = spark.createDataFrame([(int(qid), t) for qid, text in queries
+                                for t in sorted(set(tokenize_text(text)))],
+                               "query_id int, term string")
+    pos = (_with_docs(res.join(F.broadcast(qt), "query_id"), index_dir,
+                      "text")
            .withColumn("p", F.expr("instr(lower(text), term)"))
            .groupBy("query_id", "rank", "doc_id", "score")
            .agg(F.min(F.when(F.col("p") > 0, F.col("p"))).alias("pos"),
@@ -747,16 +707,8 @@ def search_stats(spark: SparkSession, index_dir: str,
     the surface (float-associativity-stable comparison contract).
 
     Returns DataFrame(query_id, doc_count, vmin, vmax, vsum, vavg)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, doc_count long, vmin double, "
-                  "vmax double, vsum double, vavg double")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.expr(value_expr).cast("double").alias("v")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(value_expr).cast("double").alias("v"))
             .groupBy("query_id")
             .agg(F.count("*").alias("doc_count"),
                  F.min("v").alias("vmin"), F.max("v").alias("vmax"),
@@ -777,16 +729,9 @@ def search_percentiles(spark: SparkSession, index_dir: str,
     Returns DataFrame(query_id, percent, value) ordered by percent."""
     ps = percents if percents is not None else [25.0, 50.0, 75.0, 95.0]
     fracs = ", ".join(f"{p / 100.0!r}D" for p in ps)
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, percent double, value double"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.expr(value_expr).cast("double").alias("v")))
     pct = F.array(*[F.lit(float(p)) for p in ps])
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(value_expr).cast("double").alias("v"))
             .groupBy("query_id")
             .agg(F.expr(f"percentile(v, array({fracs}))").alias("qs"))
             .select("query_id",
@@ -808,17 +753,9 @@ def search_cardinality(spark: SparkSession, index_dir: str,
     (one extra shuffle; at 10^12 docs always pass approx=True).
 
     Returns DataFrame(query_id, cardinality)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, cardinality long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.col(col).alias("v")))
     agg = (F.approx_count_distinct("v", rsd) if approx
            else F.countDistinct("v"))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries, F.col(col).alias("v"))
             .groupBy("query_id").agg(agg.alias("cardinality"))
             .orderBy("query_id"))
 
@@ -837,17 +774,9 @@ def search_date_histogram(spark: SparkSession, index_dir: str,
     Returns DataFrame(query_id, bucket_start timestamp, doc_count)."""
     if calendar_interval not in ("day", "week", "month"):
         raise ValueError(f"unsupported interval: {calendar_interval!r}")
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, bucket_start timestamp, doc_count long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.date_trunc(calendar_interval,
-                                           F.expr(ts_col))
-                    .alias("bucket_start")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.date_trunc(calendar_interval, F.expr(ts_col))
+                        .alias("bucket_start"))
             .filter(F.col("bucket_start").isNotNull())
             .groupBy("query_id", "bucket_start")
             .agg(F.count("*").alias("doc_count"))
@@ -869,19 +798,11 @@ def search_top_hits(spark: SparkSession, index_dir: str,
     DuckDB twin) is float-representation-stable; ties break by doc_id.
 
     Returns DataFrame(query_id, facet_value, rank, doc_id, score)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, facet_value string, rank int, "
-                  "doc_id long, score double")
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], out_schema)
-    facets = (spark.read.parquet(paths.docs)
-              .select("doc_id", F.col(facet_col).cast("string")
-                      .alias("facet_value")))
     w = Window.partitionBy("query_id", "facet_value").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.join(facets, "doc_id")
+    return (_with_docs(_full_bm25_scores(spark, index_dir, queries),
+                       index_dir,
+                       F.col(facet_col).cast("string").alias("facet_value"))
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= per_bucket)
             .select("query_id", "facet_value", "rank", "doc_id", "score"))
@@ -918,19 +839,12 @@ def boosting_search(spark: SparkSession, index_dir: str,
             continue
         pos_q[int(qid)] = pos
         neg_q[int(qid)] = tokenize_text(spec.get("negative", ""))
-    if not pos_q:
-        return spark.createDataFrame([], RANKED)
     all_terms = sorted({t for ts in pos_q.values() for t in ts}
                        | {t for ts in neg_q.values() for t in ts})
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, all_terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in all_terms if t in dfs}
+    dfs, idfs = term_stats(spark, paths, stats, all_terms)
     qinfo = _weighted_qinfo(pos_q, idfs)
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
-    neg_terms = {qid: sorted({t for t in ts if t in dfs})
-                 for qid, ts in neg_q.items()}
+    neg_terms = {qid: sorted({t for t in neg_q[qid] if t in dfs})
+                 for qid in qinfo}
     live = sorted({t for ti in qinfo.values() for t in ti}
                   | {t for ts in neg_terms.values() for t in ts})
     nb = float(negative_boost)
@@ -1074,23 +988,12 @@ def query_string_search(spark: SparkSession, index_dir: str,
                         for t in m + n + s})
     pats = sorted({(qid, w) for qid, (_m, _n, _s, ws, _p) in parsed.items()
                    for w in ws})
-    dfs: dict[str, int] = {}
-    if all_terms:
-        dict_rows = lookup_dict_rows(spark, paths.dictionary, all_terms)
-        dfs = {r["term"]: int(r["df"]) for r in dict_rows}
+    dfs, idfs = term_stats(spark, paths, stats, all_terms)
     exp: dict[int, list[tuple[str, int]]] = {}
-    if pats:
-        pat_df = spark.createDataFrame(list(pats), "query_id int, pat string")
-        wexp = Window.partitionBy("query_id", "pat").orderBy("term")
-        rows = (spark.read.parquet(paths.dictionary)
-                .join(F.broadcast(pat_df))
-                .filter(F.expr("term LIKE pat"))
-                .withColumn("rn", F.row_number().over(wexp))
-                .filter(F.col("rn") <= max_expansions)
-                .select("query_id", "term", "df").collect())
-        for r in rows:
-            exp.setdefault(int(r["query_id"]), []).append(
-                (r["term"], int(r["df"])))
+    for r in _expand(spark, paths, pats, "query_id int, pat string",
+                     F.expr("term LIKE pat"), max_expansions):
+        exp.setdefault(int(r["query_id"]), []).append(
+            (r["term"], int(r["df"])))
 
     qinfo: dict[int, dict] = {}
     constraints: dict[int, tuple] = {}
@@ -1103,26 +1006,21 @@ def query_string_search(spark: SparkSession, index_dir: str,
         ti: dict[str, float] = {}
         for t, c in Counter(must + should).items():
             if t in dfs:
-                ti[t] = (ti.get(t, 0.0)
-                         + c * float(idf_fn(stats.N, np.array([dfs[t]]))[0]))
+                ti[t] = ti.get(t, 0.0) + c * idfs[t]
         for t, df in exp.get(qid, []):
-            ti[t] = (ti.get(t, 0.0)
-                     + float(idf_fn(stats.N, np.array([df]))[0]))
+            ti[t] = ti.get(t, 0.0) + idf_of(stats.N, df)
         if ti:
             qinfo[qid] = ti
         if phrases:
             phrase_map[qid] = phrases
     bool_spec = {qid: constraints[qid] for qid in qinfo}
 
-    out_schema = RANKED
-    legs = []
-    if qinfo:
-        live = sorted({t for ti in qinfo.values() for t in ti}
-                      | {t for _m, ns in bool_spec.values() for t in ns})
-        leg1 = execute(spark, paths, stats, live,
+    # the term leg (an empty frame when no query has a term clause)
+    live = sorted({t for ti in qinfo.values() for t in ti}
+                  | {t for _m, ns in bool_spec.values() for t in ns})
+    combined = execute(spark, paths, stats, live,
                        _score_kernel(qinfo, 1 << 31, stats, prune=False,
                                      bool_spec=bool_spec))
-        legs.append(("terms", leg1))
     ph_qs = [(qid * 1000 + j, p) for qid, ps in phrase_map.items()
              for j, p in enumerate(ps)]
     if ph_qs:
@@ -1130,47 +1028,28 @@ def query_string_search(spark: SparkSession, index_dir: str,
               .withColumn("query_id",
                           (F.col("query_id") / 1000).cast("int"))
               .groupBy("query_id", "doc_id")
-              .agg(F.sum("score").alias("score")))
-        legs.append(("phrase", ph))
-    if not legs:
-        return spark.createDataFrame([], out_schema)
-
-    must_qids = [qid for qid, (ms, _ns) in constraints.items() if ms]
-    not_map = {qid: " ".join(ns) for qid, (_m, ns) in constraints.items()
-               if ns}
-
-    def constrain_phrase_only(df):
+              .agg(F.sum("score").alias("s2")))
+        j = (combined.select("query_id", "doc_id", F.col("score").alias("s1"))
+             .join(ph, ["query_id", "doc_id"], "full_outer"))
         # phrase-only docs: excluded when the query has must terms (a
         # qualifying doc would carry them and land in the term leg);
-        # must_not applies regardless
-        out = (df.filter(~F.col("query_id").isin(must_qids))
-               if must_qids else df)
+        # must_not applies regardless. Without a term leg Catalyst folds
+        # the join to the phrase leg alone.
+        only2 = j.filter(F.col("s1").isNull())
+        must_qids = [qid for qid, (ms, _ns) in constraints.items() if ms]
+        if must_qids:
+            only2 = only2.filter(~F.col("query_id").isin(must_qids))
+        not_map = {qid: " ".join(ns)
+                   for qid, (_m, ns) in constraints.items() if ns}
         if not_map:
-            mn = _match_docs(spark, paths, stats,
-                             [(qid, txt) for qid, txt in not_map.items()])
-            if mn is not None:
-                out = out.join(mn, ["query_id", "doc_id"], "left_anti")
-        return out
-
-    leg_map = dict(legs)
-    if "terms" in leg_map and "phrase" in leg_map:
-        l1 = leg_map["terms"].select("query_id", "doc_id",
-                                     F.col("score").alias("s1"))
-        l2 = leg_map["phrase"].select("query_id", "doc_id",
-                                      F.col("score").alias("s2"))
-        j = l1.join(l2, ["query_id", "doc_id"], "full_outer")
-        in_leg1 = j.filter(F.col("s1").isNotNull())
-        only2 = constrain_phrase_only(j.filter(F.col("s1").isNull()))
-        combined = (in_leg1.unionByName(only2)
+            only2 = only2.join(
+                _match_docs(spark, index_dir, list(not_map.items())),
+                ["query_id", "doc_id"], "left_anti")
+        combined = (j.filter(F.col("s1").isNotNull()).unionByName(only2)
                     .withColumn("score",
                                 F.coalesce("s1", F.lit(0.0))
                                 + F.coalesce("s2", F.lit(0.0)))
                     .select("query_id", "doc_id", "score"))
-    elif "phrase" in leg_map:
-        combined = constrain_phrase_only(
-            leg_map["phrase"].select("query_id", "doc_id", "score"))
-    else:
-        combined = leg_map["terms"].select("query_id", "doc_id", "score")
     return ranked_topk(combined, k)
 
 
@@ -1186,21 +1065,14 @@ def search_collapse(spark: SparkSession, index_dir: str,
     rounds to 4 dp, takes rank-1 per (query, group), then the global
     ranked page. Returns (query_id, rank, doc_id, facet_value, score).
     """
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, rank int, doc_id long, "
-                  "facet_value string, score double")
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], out_schema)
-    groups = (spark.read.parquet(paths.docs)
-              .select("doc_id", F.col(collapse_col).cast("string")
-                      .alias("facet_value")))
     wg = Window.partitionBy("query_id", "facet_value").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
     wk = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.join(groups, "doc_id")
+    return (_with_docs(_full_bm25_scores(spark, index_dir, queries),
+                       index_dir,
+                       F.col(collapse_col).cast("string")
+                       .alias("facet_value"))
             .withColumn("rg", F.row_number().over(wg))
             .filter(F.col("rg") == 1)
             .withColumn("rank", F.row_number().over(wk))
@@ -1213,38 +1085,20 @@ def search_collapse(spark: SparkSession, index_dir: str,
 # carry alongside a match query (reference bodies: opensearch_loader.py:
 # 395-441 build match/match_phrase; the agg types below are the standard
 # server-side companions). All share _match_docs' hit-set scope and the
-# column-pruned docs join — no new physical shapes, no collects beyond
-# the queries' own dictionary rows.
-
-
-def _hits_with_docs(spark: SparkSession, paths: IndexPaths, stats,
-                    queries: list[tuple[int, str]],
-                    doc_cols: list[str]) -> DataFrame | None:
-    """Hit set joined to the column-pruned docs table — the shared scan
-    of every aggregation below (matches is distributed; docs is pruned
-    to exactly ``doc_cols`` so the parquet scan's ReadSchema stays
-    minimal)."""
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return None
-    docs = spark.read.parquet(paths.docs).select("doc_id", *doc_cols)
-    return matches.join(docs, "doc_id")
+# column-pruned docs join (_with_docs) — no new physical shapes, no
+# collects beyond the queries' own dictionary rows.
 
 
 def _grid(spark: SparkSession, queries: list[tuple[int, str]],
-          buckets: list[tuple]) -> DataFrame:
-    """query_id × declared-bucket literal grid (driver-side, O(q·buckets)
-    rows): the zero-count scaffold of aggs whose contract emits EVERY
-    declared bucket (range/filters), unlike histogram's min_doc_count=1."""
-    rows = [(int(qid),) + tuple(b) for qid, _ in queries for b in buckets]
-    cols = ["query_id"] + [f"_b{i}" for i in range(len(buckets[0]))]
-    grid = spark.createDataFrame(rows, cols)
-    # int-typed ids so the output schema matches the kernel entries'
-    # (createDataFrame infers Python ints as bigint)
-    casts = [F.col("query_id").cast("int").alias("query_id")] + [
-        F.col(c).cast("int").alias(c) if isinstance(rows[0][i + 1], int)
-        else F.col(c) for i, c in enumerate(cols[1:])]
-    return grid.select(*casts)
+          buckets: list[tuple], schema: str) -> DataFrame:
+    """query_id × declared-bucket literal grid of ``schema`` (query_id
+    int, then the bucket columns; driver-side, O(q·buckets) rows): the
+    zero-count scaffold of aggs whose contract emits EVERY declared
+    bucket (range/filters), unlike histogram's min_doc_count=1. Typed,
+    so an empty query list gives an empty grid."""
+    return spark.createDataFrame(
+        [(int(qid),) + tuple(b) for qid, _ in queries for b in buckets],
+        schema)
 
 
 def search_range_agg(spark: SparkSession, index_dir: str,
@@ -1262,11 +1116,6 @@ def search_range_agg(spark: SparkSession, index_dir: str,
 
     Returns DataFrame(query_id, range_idx, range_key, doc_count) with
     the OpenSearch key format ``from-to`` (``*`` for an open end)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, range_idx int, range_key string, "
-                  "doc_count long")
-    hits = _hits_with_docs(spark, paths, stats, queries, list(value_cols))
     ranges = list(ranges)
 
     def _key(lo, hi):
@@ -1275,13 +1124,8 @@ def search_range_agg(spark: SparkSession, index_dir: str,
                 f"{hi:g}" if hi is not None else "*")
 
     keys = [(i, _key(lo, hi)) for i, (lo, hi) in enumerate(ranges)]
-    grid = (_grid(spark, queries, keys)
-            .withColumnRenamed("_b0", "range_idx")
-            .withColumnRenamed("_b1", "range_key"))
-    if hits is None:
-        return (grid.withColumn("doc_count", F.lit(0).cast("long"))
-                .select("query_id", "range_idx", "range_key", "doc_count")
-                .orderBy("query_id", "range_idx"))
+    grid = _grid(spark, queries, keys,
+                 "query_id int, range_idx int, range_key string")
     v = F.expr(value_expr).cast("double")
     conds = []
     for i, (lo, hi) in enumerate(ranges):
@@ -1291,9 +1135,10 @@ def search_range_agg(spark: SparkSession, index_dir: str,
         if hi is not None:
             c = c & (v < F.lit(float(hi)))
         conds.append(F.when(c, F.lit(i)))
-    cnt = (hits.select("query_id",
-                       F.explode(F.array_compact(F.array(*conds)))
-                       .alias("range_idx"))
+    cnt = (_hit_values(spark, index_dir, queries, *value_cols)
+           .select("query_id",
+                   F.explode(F.array_compact(F.array(*conds)))
+                   .alias("range_idx"))
            .groupBy("query_id", "range_idx")
            .agg(F.count("*").alias("cnt")))
     return (grid.join(cnt, ["query_id", "range_idx"], "left")
@@ -1314,21 +1159,15 @@ def search_filters_agg(spark: SparkSession, index_dir: str,
     all predicates; counts are a map-side-combined groupBy.
 
     Returns DataFrame(query_id, bucket, doc_count)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
     names = sorted(filters)
-    grid = _grid(spark, queries, [(n,) for n in names]) \
-        .withColumnRenamed("_b0", "bucket")
-    hits = _hits_with_docs(spark, paths, stats, queries, doc_cols)
-    if hits is None:
-        return (grid.withColumn("doc_count", F.lit(0).cast("long"))
-                .select("query_id", "bucket", "doc_count")
-                .orderBy("query_id", "bucket"))
+    grid = _grid(spark, queries, [(n,) for n in names],
+                 "query_id int, bucket string")
     marks = F.array(*[
         F.struct(F.lit(n).alias("bucket"),
                  F.expr(filters[n]).cast("boolean").alias("m"))
         for n in names])
-    cnt = (hits.select("query_id", F.explode(marks).alias("x"))
+    cnt = (_hit_values(spark, index_dir, queries, *doc_cols)
+           .select("query_id", F.explode(marks).alias("x"))
            .groupBy("query_id", F.col("x.bucket").alias("bucket"))
            .agg(F.sum(F.col("x.m").cast("long")).alias("cnt")))
     return (grid.join(cnt, ["query_id", "bucket"], "left")
@@ -1353,18 +1192,12 @@ def search_composite_agg(spark: SparkSession, index_dir: str,
     compared/emitted as strings (the deterministic total order the
     cursor contract needs). Returns
     DataFrame(query_id, key_0, key_1, doc_count, rank ≤ size)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
     (n0, e0), (n1, e1) = sources
-    out_schema = ("query_id int, key_0 string, key_1 string, "
-                  "doc_count long, rank int")
     cols = sorted({c for _, e in sources
                    for c in ("text", "lang", "source", "url", "warc_ts")
                    if c in e})
-    hits = _hits_with_docs(spark, paths, stats, queries, cols)
-    if hits is None:
-        return spark.createDataFrame([], out_schema)
-    b = (hits.select("query_id",
+    b = (_hit_values(spark, index_dir, queries, *cols)
+         .select("query_id",
                      F.expr(e0).cast("string").alias("key_0"),
                      F.expr(e1).cast("string").alias("key_1"))
          .groupBy("query_id", "key_0", "key_1")
@@ -1394,17 +1227,12 @@ def search_adjacency_matrix(spark: SparkSession, index_dir: str,
     hit-set self-join).
 
     Returns DataFrame(query_id, bucket, doc_count)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, bucket string, doc_count long"
-    hits = _hits_with_docs(spark, paths, stats, queries, doc_cols)
-    if hits is None:
-        return spark.createDataFrame([], out_schema)
     names = sorted(filters)
     marks = F.array_compact(F.array(*[
         F.when(F.expr(filters[n]).cast("boolean"), F.lit(n))
         for n in names]))
-    return (hits.select("query_id", marks.alias("names"))
+    return (_hit_values(spark, index_dir, queries, *doc_cols)
+            .select("query_id", marks.alias("names"))
             .select("query_id", "names", F.explode("names").alias("a"))
             .select("query_id", "a", F.explode("names").alias("b"))
             .filter(F.col("a") <= F.col("b"))
@@ -1428,18 +1256,11 @@ def matrix_stats_agg(spark: SparkSession, index_dir: str,
 
     Returns DataFrame(query_id, doc_count, mean_a, mean_b, var_a, var_b,
     covariance, correlation), moments rounded to 4 dp."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, doc_count long, mean_a double, "
-                  "mean_b double, var_a double, var_b double, "
-                  "covariance double, correlation double")
-    hits = _hits_with_docs(spark, paths, stats, queries, list(doc_cols))
-    if hits is None:
-        return spark.createDataFrame([], out_schema)
     va = F.expr(expr_a).cast("double")
     vb = F.expr(expr_b).cast("double")
-    d = hits.select("query_id", va.alias("va"), vb.alias("vb"))
-    return (d.groupBy("query_id")
+    return (_hit_values(spark, index_dir, queries, *doc_cols)
+            .select("query_id", va.alias("va"), vb.alias("vb"))
+            .groupBy("query_id")
             .agg(F.count("*").alias("doc_count"),
                  F.round(F.avg("va"), 4).alias("mean_a"),
                  F.round(F.avg("vb"), 4).alias("mean_b"),
@@ -1462,17 +1283,12 @@ def search_sorted(spark: SparkSession, index_dir: str,
     ascending as the tiebreaker.
 
     Returns DataFrame(query_id, rank, doc_id, sort_value string)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, rank int, doc_id long, sort_value string"
-    hits = _hits_with_docs(spark, paths, stats, queries, list(doc_cols))
-    if hits is None:
-        return spark.createDataFrame([], out_schema)
     v = F.expr(sort_expr).cast("string").alias("sort_value")
     order = (F.col("sort_value").asc() if ascending
              else F.col("sort_value").desc())
     w = Window.partitionBy("query_id").orderBy(order, F.col("doc_id").asc())
-    return (hits.select("query_id", "doc_id", v)
+    return (_hit_values(spark, index_dir, queries, *doc_cols)
+            .select("query_id", "doc_id", v)
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "rank", "doc_id", "sort_value"))
@@ -1514,18 +1330,11 @@ def function_score_search(spark: SparkSession, index_dir: str,
     (the engine's float-representation-stable round-then-rank contract).
 
     Returns DataFrame(query_id, rank, doc_id, score)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], RANKED)
-    factors = (spark.read.parquet(paths.docs)
-               .select("doc_id", *factor_cols)
-               .select("doc_id",
-                       F.expr(factor_expr).cast("double").alias("factor")))
+    factor = F.expr(factor_expr).cast("double")
     return ranked_topk(
-        scored.join(factors, "doc_id")
-        .withColumn("score", F.round(F.col("score") * F.col("factor"), 4)),
+        _with_docs(_full_bm25_scores(spark, index_dir, queries), index_dir,
+                   *factor_cols)
+        .withColumn("score", F.round(F.col("score") * factor, 4)),
         k)
 
 
@@ -1548,18 +1357,8 @@ def search_extended_stats(spark: SparkSession, index_dir: str,
 
     Returns DataFrame(query_id, doc_count, vmin, vmax, vsum, vavg,
     sum_of_squares, variance, std_deviation)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, doc_count long, vmin double, "
-                  "vmax double, vsum double, vavg double, "
-                  "sum_of_squares double, variance double, "
-                  "std_deviation double")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.expr(value_expr).cast("double").alias("v")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(value_expr).cast("double").alias("v"))
             .groupBy("query_id")
             .agg(F.count("*").alias("doc_count"),
                  F.min("v").alias("vmin"), F.max("v").alias("vmax"),
@@ -1580,17 +1379,9 @@ def search_weighted_avg(spark: SparkSession, index_dir: str,
     (rounded 4 dp) — one map-side-combined pass, same cost as avg.
 
     Returns DataFrame(query_id, doc_count, weighted_avg)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, doc_count long, weighted_avg double"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id",
-                    F.expr(value_expr).cast("double").alias("v"),
-                    F.expr(weight_expr).cast("double").alias("w")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(value_expr).cast("double").alias("v"),
+                        F.expr(weight_expr).cast("double").alias("w"))
             .groupBy("query_id")
             .agg(F.count("*").alias("doc_count"),
                  F.round(F.sum(F.col("v") * F.col("w"))
@@ -1607,15 +1398,8 @@ def search_missing(spark: SparkSession, index_dir: str,
     single null-predicate count over the pruned docs scan.
 
     Returns DataFrame(query_id, missing_count)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, missing_count long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.expr(col_expr).isNull().alias("m")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(col_expr).isNull().alias("m"))
             .groupBy("query_id")
             .agg(F.sum(F.col("m").cast("long")).alias("missing_count"))
             .orderBy("query_id"))
@@ -1682,22 +1466,18 @@ def search_pipeline_aggs(spark: SparkSession, index_dir: str,
 # function inputs, round-then-rank page.
 
 
-def _full_bm25_scores(spark: SparkSession, paths: IndexPaths, stats,
-                      queries: list[tuple[int, str]]) -> DataFrame | None:
+def _full_bm25_scores(spark: SparkSession, index_dir: str,
+                      queries: list[tuple[int, str]]) -> DataFrame:
     """Kernel-scored FULL hit set (k=∞, prune off), scores rounded to
-    4 dp — the shared base of every function_score variant. None = no
-    scorable terms."""
+    4 dp — the shared base of every function_score variant. No term
+    left after analysis or lookup → the empty (query_id, doc_id, score)
+    frame (:func:`.query.execute` reads nothing)."""
+    paths = IndexPaths(index_dir)
+    stats = load_stats(spark, index_dir)
     q_terms = {qid: tokenize_text(text) for qid, text in queries}
-    terms = sorted({t for toks in q_terms.values() for t in toks})
-    if not terms:
-        return None
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in terms if t in dfs}
+    _dfs, idfs = term_stats(spark, paths, stats,
+                            sorted({t for ts in q_terms.values() for t in ts}))
     qinfo = _weighted_qinfo(q_terms, idfs)
-    if not qinfo:
-        return None
     live = sorted({t for ti in qinfo.values() for t in ti})
     return (execute(spark, paths, stats, live,
                     _score_kernel(qinfo, 1 << 31, stats, prune=False))
@@ -1721,11 +1501,6 @@ def decay_score_search(spark: SparkSession, index_dir: str,
     expression. Product rounded 4 dp before ranking.
 
     Returns the standard RANKED page."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], RANKED)
     sigma2 = -(scale_s ** 2) / (2.0 * float(np.log(decay)))
     dist = F.greatest(
         F.lit(0.0),
@@ -1733,12 +1508,11 @@ def decay_score_search(spark: SparkSession, index_dir: str,
               - F.unix_timestamp(F.to_timestamp(F.lit(origin))))
         .cast("double") - F.lit(float(offset_s)))
     mult = F.exp(-(dist * dist) / F.lit(2.0 * sigma2))
-    factors = (spark.read.parquet(paths.docs)
-               .select("doc_id", mult.alias("factor")))
-    scored = (scored.join(factors, "doc_id")
-              .withColumn("score",
-                          F.round(F.col("score") * F.col("factor"), 4)))
-    return ranked_topk(scored, k)
+    return ranked_topk(
+        _with_docs(_full_bm25_scores(spark, index_dir, queries), index_dir,
+                   mult.alias("factor"))
+        .withColumn("score", F.round(F.col("score") * F.col("factor"), 4)),
+        k)
 
 
 def script_score_search(spark: SparkSession, index_dir: str,
@@ -1754,15 +1528,9 @@ def script_score_search(spark: SparkSession, index_dir: str,
     before ranking.
 
     Returns the standard RANKED page."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], RANKED)
-    fields = (spark.read.parquet(paths.docs)
-              .select("doc_id", *script_cols))
-    scored = (scored.withColumnRenamed("score", "_score")
-              .join(fields, "doc_id")
+    scored = (_with_docs(_full_bm25_scores(spark, index_dir, queries)
+                         .withColumnRenamed("score", "_score"),
+                         index_dir, *script_cols)
               .withColumn("score",
                           F.round(F.expr(script_expr).cast("double"), 4))
               .select("query_id", "doc_id", "score"))
@@ -1784,16 +1552,11 @@ def random_score_search(spark: SparkSession, index_dir: str,
     (boost_mode=replace); page = top-k by the hash, doc_id tiebreak.
 
     Returns the standard RANKED page."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], RANKED)
     rnd = (((F.col("doc_id") + F.lit(int(seed)))
             * F.lit(RANDOM_SCORE_MULT)) % F.lit(4294967296)
            ).cast("double") / F.lit(4294967296.0)
-    scored = matches.withColumn("score", F.round(rnd, 6))
-    return ranked_topk(scored, k)
+    return ranked_topk(_match_docs(spark, index_dir, queries)
+                       .withColumn("score", F.round(rnd, 6)), k)
 
 
 # ------------------------------------------- round-5 positional widening
@@ -1802,11 +1565,6 @@ def random_score_search(spark: SparkSession, index_dir: str,
 # positional postings scan the phrase kernel uses (no new physical
 # shape; the dictionary expansion of match_phrase_prefix is the
 # prefix_search expansion).
-
-from .codec import decode_positions, tf_norm  # noqa: E402
-
-_SF_POS_SHIFT = np.uint64(24)  # doc<<24|pos keys (query._POS_SHIFT twin)
-
 
 def span_first_search(spark: SparkSession, index_dir: str,
                       queries: list[tuple[int, str]],
@@ -1825,16 +1583,9 @@ def span_first_search(spark: SparkSession, index_dir: str,
         toks = tokenize_text(text)
         if toks:
             q_term[int(qid)] = toks[0]
-    if not q_term:
-        return spark.createDataFrame([], RANKED)
-    terms = sorted(set(q_term.values()))
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in terms if t in dfs}
+    _dfs, idfs = term_stats(spark, paths, stats,
+                            sorted(set(q_term.values())))
     q_term = {qid: t for qid, t in q_term.items() if t in idfs}
-    if not q_term:
-        return spark.createDataFrame([], RANKED)
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     end_i = int(end)
 
@@ -1845,12 +1596,10 @@ def span_first_search(spark: SparkSession, index_dir: str,
             rec = by_term.get(t)
             if rec is None:
                 continue
-            doc_ids, tfs, dls = decode_postings(rec)
-            if doc_ids.size == 0:
-                continue
-            poss = decode_positions(rec["poss"], tfs)
+            doc_ids, tfs, dls, keys = decode_position_keys(rec)
             seg = np.repeat(np.arange(doc_ids.size), tfs)
-            qtf = np.bincount(seg[poss < end_i], minlength=doc_ids.size)
+            qtf = np.bincount(seg[(keys & _POS_MASK) < end_i],
+                              minlength=doc_ids.size)
             keep = qtf > 0
             if not keep.any():
                 continue
@@ -1858,16 +1607,10 @@ def span_first_search(spark: SparkSession, index_dir: str,
             out_q.extend([qid] * int(keep.sum()))
             out_d.extend(doc_ids[keep].tolist())
             out_s.extend(sc.tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
-    scored = (execute(spark, paths, stats, sorted(set(q_term.values())),
-                      kernel, need_positions=True)
-              .withColumn("score", F.round("score", 4)))
-    return ranked_topk(scored, k)
+    return _rounded_page(spark, paths, stats, sorted(set(q_term.values())),
+                         kernel, k)
 
 
 def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
@@ -1894,33 +1637,26 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
         toks = tokenize_text(text)
         if len(toks) >= 2:
             parsed[int(qid)] = (toks[:-1], toks[-1])
-    if not parsed:
-        return spark.createDataFrame([], RANKED)
-    dictionary = spark.read.parquet(paths.dictionary)
     expansions: dict[int, list[tuple[str, int]]] = {}
-    for qid, (_fixed, pref) in parsed.items():
-        rows = (dictionary.filter(F.col("term").startswith(pref))
-                .select("term", "df").orderBy("term")
-                .limit(max_expansions).collect())
-        if rows:
-            expansions[qid] = [(r["term"], int(r["df"])) for r in rows]
-    fixed_terms = sorted({t for qid in expansions
-                          for t in parsed[qid][0]})
-    dict_rows = _filter_in(dictionary, "term", fixed_terms).collect()
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
+    for r in _expand(spark, paths,
+                     [(qid, pref) for qid, (_f, pref) in parsed.items()],
+                     "query_id int, pref string",
+                     F.col("term").startswith(F.col("pref")),
+                     max_expansions):
+        expansions.setdefault(int(r["query_id"]), []).append(
+            (r["term"], int(r["df"])))
+    _dfs, idfs = term_stats(spark, paths, stats,
+                            sorted({t for qid in expansions
+                                    for t in parsed[qid][0]}))
     qinfo: dict[int, dict] = {}
     for qid, exp in expansions.items():
         fixed = parsed[qid][0]
-        if any(t not in dfs for t in fixed):
+        if any(t not in idfs for t in fixed):
             continue  # a fixed term absent from the corpus: no hits
-        idf = sum(float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-                  for t in fixed)
-        df_u = min(stats.N, sum(df for _t, df in exp))
-        idf += float(idf_fn(stats.N, np.array([df_u]))[0])
+        idf = sum(idfs[t] for t in fixed)
+        idf += idf_of(stats.N, min(stats.N, sum(df for _t, df in exp)))
         qinfo[qid] = {"fixed": fixed, "exp": [t for t, _df in exp],
                       "idf": idf}
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1933,14 +1669,8 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
             exp_here = [t for t in exp if t in by_term]
             if not exp_here:
                 continue
-            decoded: dict[str, tuple] = {}
-            for t in set(fixed) | set(exp_here):
-                rec = by_term[t]
-                doc_ids, tfs, dls = decode_postings(rec)
-                poss = decode_positions(rec["poss"], tfs)
-                keys = ((np.repeat(doc_ids, tfs).astype(np.uint64)
-                         << _SF_POS_SHIFT) | poss.astype(np.uint64))
-                decoded[t] = (doc_ids, tfs, dls, keys)
+            decoded = {t: decode_position_keys(by_term[t])
+                       for t in set(fixed) | set(exp_here)}
             union_keys = np.sort(np.concatenate(
                 [decoded[t][3] for t in exp_here]))
             d0, _tf0, dl0, keys0 = decoded[fixed[0]]
@@ -1954,25 +1684,18 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
                                     union_keys)]
             if cand.size == 0:
                 continue
-            cand_docs = (cand >> _SF_POS_SHIFT).astype(np.int64)
+            cand_docs = (cand >> _POS_SHIFT).astype(np.int64)
             uniq, pf = np.unique(cand_docs, return_counts=True)
             dl_map = dl0[np.searchsorted(d0, uniq)]
             sc = info["idf"] * tf_norm(pf, dl_map, avgdl, k1, b)
             out_q.extend([qid] * uniq.size)
             out_d.extend(uniq.tolist())
             out_s.extend(sc.tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     live = sorted({t for info in qinfo.values()
                    for t in info["fixed"] + info["exp"]})
-    scored = (execute(spark, paths, stats, live, kernel,
-                      need_positions=True)
-              .withColumn("score", F.round("score", 4)))
-    return ranked_topk(scored, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k)
 
 
 # --------------------------------------- round-5 filter-context queries
@@ -2033,19 +1756,13 @@ def search_sampler(spark: SparkSession, index_dir: str,
     Sample selection is deterministic: rounded-score desc, doc_id asc
     (the engine's round-then-rank contract). Returns
     DataFrame(query_id, facet_value, doc_count) over the sample."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, facet_value string, doc_count long"
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], out_schema)
+    scored = _full_bm25_scores(spark, index_dir, queries)
     if max_docs_per_value is not None:
         dcol = dedup_col or facet_col
-        ddf = (spark.read.parquet(paths.docs)
-               .select("doc_id", F.col(dcol).cast("string").alias("_dv")))
         wd = Window.partitionBy("query_id", "_dv").orderBy(
             F.col("score").desc(), F.col("doc_id").asc())
-        scored = (scored.join(ddf, "doc_id")
+        scored = (_with_docs(scored, index_dir,
+                             F.col(dcol).cast("string").alias("_dv"))
                   .withColumn("_dr", F.row_number().over(wd))
                   .filter(F.col("_dr") <= max_docs_per_value)
                   .drop("_dr", "_dv"))
@@ -2053,10 +1770,8 @@ def search_sampler(spark: SparkSession, index_dir: str,
         F.col("score").desc(), F.col("doc_id").asc())
     sample = (scored.withColumn("_sr", F.row_number().over(ws))
               .filter(F.col("_sr") <= shard_size))
-    facets = (spark.read.parquet(paths.docs)
-              .select("doc_id", F.col(facet_col).cast("string")
-                      .alias("facet_value")))
-    return (sample.join(facets, "doc_id")
+    return (_with_docs(sample, index_dir,
+                       F.col(facet_col).cast("string").alias("facet_value"))
             .groupBy("query_id", "facet_value")
             .agg(F.count("*").alias("doc_count"))
             .orderBy("query_id", "facet_value"))
@@ -2071,13 +1786,7 @@ def search_count(spark: SparkSession, index_dir: str,
     shared match scan.
 
     Returns DataFrame(query_id, total_hits)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, total_hits long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    return (matches.groupBy("query_id")
+    return (_match_docs(spark, index_dir, queries).groupBy("query_id")
             .agg(F.count("*").alias("total_hits"))
             .orderBy("query_id"))
 
@@ -2160,23 +1869,29 @@ def percolate(spark: SparkSession, index_dir: str,
     # clause count BEFORE df lookup: dead terms still count as clauses
     msm_spec = {qid: resolve_msm("100%", len(set(toks)))
                 for qid, toks in q_terms.items() if toks}
-    terms = sorted({t for toks in q_terms.values() for t in toks})
-    out_schema = "query_id int, doc_id long"
-    if not terms:
-        return spark.createDataFrame([], out_schema)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in terms if t in dfs}
+    _dfs, idfs = term_stats(spark, paths, stats,
+                            sorted({t for ts in q_terms.values() for t in ts}))
     qinfo = _weighted_qinfo(q_terms, idfs)
-    if not qinfo:
-        return spark.createDataFrame([], out_schema)
     live = sorted({t for ti in qinfo.values() for t in ti})
     return execute(
         spark, paths, stats, live,
         _score_kernel(qinfo, 1 << 31, stats, prune=False, msm_spec=msm_spec),
         allowed=_allowed_docs(spark, paths, doc_filter, filter_root)
     ).select(F.col("query_id").cast("int"), F.col("doc_id").cast("long"))
+
+
+def _span_qinfo(spark: SparkSession, paths: IndexPaths, stats,
+                queries: list[tuple[int, str]]) -> dict:
+    """{query_id: {"terms": tokens, "idf": Σ term idfs}} of the queries
+    with ≥ 2 analyzed tokens that all occur in the corpus — the clause
+    list and SpanWeight idf of span_near and intervals."""
+    q_terms = {int(qid): ts for qid, ts in
+               ((q, tokenize_text(text)) for q, text in queries)
+               if len(ts) >= 2}
+    _dfs, idfs = term_stats(spark, paths, stats,
+                            sorted({t for ts in q_terms.values() for t in ts}))
+    return {qid: {"terms": ts, "idf": float(sum(idfs[t] for t in ts))}
+            for qid, ts in q_terms.items() if all(t in idfs for t in ts)}
 
 
 def span_near_search(spark: SparkSession, index_dir: str,
@@ -2210,84 +1925,53 @@ def span_near_search(spark: SparkSession, index_dir: str,
     """
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
-    q_terms: dict[int, list[str]] = {}
-    for qid, text in queries:
-        toks = tokenize_text(text)
-        if len(toks) >= 2:
-            q_terms[int(qid)] = toks
-    if not q_terms:
-        return spark.createDataFrame([], RANKED)
-    terms = sorted({t for ts in q_terms.values() for t in ts})
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    qinfo: dict[int, dict] = {}
-    for qid, toks in q_terms.items():
-        if all(t in dfs for t in toks):
-            s_idf = float(sum(
-                idf_fn(stats.N, np.array([dfs[t]]))[0] for t in toks))
-            qinfo[qid] = {"terms": toks, "idf": s_idf}
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
+    qinfo = _span_qinfo(spark, paths, stats, queries)
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     slop_i = int(slop)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
         out_q, out_d, out_s = [], [], []
-        pos_mask = (np.uint64(1) << _SF_POS_SHIFT) - np.uint64(1)
         for qid, info in qinfo.items():
             terms_q = info["terms"]
             if any(t not in by_term for t in terms_q):
                 continue
-            decoded: dict[str, tuple] = {}
-            for t in dict.fromkeys(terms_q):
-                rec = by_term[t]
-                doc_ids, tfs, dls = decode_postings(rec)
-                poss = decode_positions(rec["poss"], tfs)
-                keys = ((np.repeat(doc_ids, tfs).astype(np.uint64)
-                         << _SF_POS_SHIFT) | poss.astype(np.uint64))
-                decoded[t] = (doc_ids, tfs, dls, keys)
+            decoded = {t: decode_position_keys(by_term[t])
+                       for t in dict.fromkeys(terms_q)}
             d0, _tf0, dl0, keys0 = decoded[terms_q[0]]
             if keys0.size == 0:
                 continue
             win = np.uint64(slop_i + len(terms_q) - 1)
-            docs_a = keys0 >> _SF_POS_SHIFT
-            p0 = keys0 & pos_mask
+            docs_a = keys0 >> _POS_SHIFT
+            p0 = keys0 & _POS_MASK
             lo_pos = np.where(p0 > win, p0 - win, np.uint64(0))
             alive = np.ones(keys0.size, dtype=bool)
             for t in dict.fromkeys(terms_q[1:]):
                 keys_t = decoded[t][3]
                 # smallest occurrence of t at or after (doc, p0−win);
                 # the anchor survives iff it lands in-doc and ≤ p0+win
-                lookup = (docs_a << _SF_POS_SHIFT) | lo_pos
+                lookup = (docs_a << _POS_SHIFT) | lo_pos
                 idx = np.searchsorted(keys_t, lookup, side="left")
                 ok = idx < keys_t.size
                 found = keys_t[np.minimum(idx, keys_t.size - 1)]
-                alive &= (ok & ((found >> _SF_POS_SHIFT) == docs_a)
-                          & ((found & pos_mask) <= p0 + win))
+                alive &= (ok & ((found >> _POS_SHIFT) == docs_a)
+                          & ((found & _POS_MASK) <= p0 + win))
                 if not alive.any():
                     break
             cand = keys0[alive]
             if cand.size == 0:
                 continue
-            cand_docs = (cand >> _SF_POS_SHIFT).astype(np.int64)
+            cand_docs = (cand >> _POS_SHIFT).astype(np.int64)
             uniq, pf = np.unique(cand_docs, return_counts=True)
             dl_map = dl0[np.searchsorted(d0, uniq)]
             sc = info["idf"] * tf_norm(pf, dl_map, avgdl, k1, b)
             out_q.extend([qid] * uniq.size)
             out_d.extend(uniq.tolist())
             out_s.extend(sc.tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
-    scored = (execute(spark, paths, stats, live, kernel,
-                      need_positions=True)
-              .withColumn("score", F.round("score", 4)))
-    return ranked_topk(scored, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k)
 
 
 def search_rare_terms(spark: SparkSession, index_dir: str,
@@ -2304,16 +1988,8 @@ def search_rare_terms(spark: SparkSession, index_dir: str,
     groupBy the exact answer is the cheaper path.)
 
     Returns DataFrame(query_id, facet_value, doc_count)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, facet_value string, doc_count long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    return (matches
-            .join(spark.read.parquet(paths.docs)
-                  .select("doc_id", F.col(facet_col).cast("string")
-                          .alias("facet_value")), "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.col(facet_col).cast("string").alias("facet_value"))
             .groupBy("query_id", "facet_value")
             .agg(F.count("*").alias("doc_count"))
             .filter(F.col("doc_count") <= int(max_doc_count))
@@ -2330,20 +2006,10 @@ def search_multi_terms(spark: SparkSession, index_dir: str,
     query. One column-pruned docs join + one map-side-combined groupBy.
 
     Returns DataFrame(query_id, key1, key2, doc_count, rank)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, key1 string, key2 string, "
-                  "doc_count long, rank int")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
     c1, c2 = cols
-    buckets = (matches
-               .join(spark.read.parquet(paths.docs)
-                     .select("doc_id",
-                             F.col(c1).cast("string").alias("key1"),
-                             F.col(c2).cast("string").alias("key2")),
-                     "doc_id")
+    buckets = (_hit_values(spark, index_dir, queries,
+                           F.col(c1).cast("string").alias("key1"),
+                           F.col(c2).cast("string").alias("key2"))
                .groupBy("query_id", "key1", "key2")
                .agg(F.count("*").alias("doc_count")))
     w = Window.partitionBy("query_id").orderBy(
@@ -2378,17 +2044,9 @@ def search_auto_date_histogram(spark: SparkSession, index_dir: str,
 
     Returns DataFrame(query_id, interval string, bucket_start timestamp,
     doc_count)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, interval string, "
-                  "bucket_start timestamp, doc_count long")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.date_trunc("day", F.expr(ts_col))
-                    .alias("day_bucket")))
-    days = (matches.join(vals, "doc_id")
+    days = (_hit_values(spark, index_dir, queries,
+                        F.date_trunc("day", F.expr(ts_col))
+                        .alias("day_bucket"))
             .filter(F.col("day_bucket").isNotNull())
             .groupBy("query_id", "day_bucket")
             .agg(F.count("*").alias("doc_count"))
@@ -2405,24 +2063,24 @@ def search_auto_date_histogram(spark: SparkSession, index_dir: str,
                     lvl = cand
                     break
             chosen[int(r["query_id"])] = lvl
-        lvl_expr = F.create_map(*[
-            x for qid, lvl in sorted(chosen.items())
-            for x in (F.lit(qid), F.lit(lvl))])[F.col("query_id")]
+        levels = spark.createDataFrame(sorted(chosen.items()),
+                                       "query_id int, interval string")
         trunc = F.when(F.col("interval") == _AUTO_DH_LADDER[0],
                        F.date_trunc(_AUTO_DH_LADDER[0],
                                     F.col("day_bucket")))
         for lvl in _AUTO_DH_LADDER[1:]:
             trunc = trunc.when(F.col("interval") == lvl,
                                F.date_trunc(lvl, F.col("day_bucket")))
-        out = (days
-               .withColumn("interval", lvl_expr)
+        out = (days.join(F.broadcast(levels), "query_id")
                .withColumn("bucket_start", trunc)
                .groupBy("query_id", "interval", "bucket_start")
                .agg(F.sum("doc_count").alias("doc_count"))
                .orderBy("query_id", "bucket_start"))
         # bounded materialization: ≤ (target_buckets + year-floor slack)
         # rows per query — the days frame must not outlive its unpersist
-        out = spark.createDataFrame(out.collect(), out_schema)
+        out = spark.createDataFrame(
+            out.collect(), "query_id int, interval string, "
+                           "bucket_start timestamp, doc_count long")
     finally:
         days.unpersist()
     return out
@@ -2447,14 +2105,7 @@ def scroll_export(spark: SparkSession, index_dir: str,
     window, partitioned (query, slice) so no single-reducer hot spot).
 
     Returns DataFrame(query_id, slice_id, page, seq, doc_id, score)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, slice_id int, page int, seq int, "
-                  "doc_id long, score double")
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], out_schema)
-    sliced = scored.withColumn(
+    sliced = _full_bm25_scores(spark, index_dir, queries).withColumn(
         "slice_id", (F.col("doc_id") % n_slices).cast("int"))
     w = Window.partitionBy("query_id", "slice_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
@@ -2487,17 +2138,10 @@ def rank_feature_search(spark: SparkSession, index_dir: str,
     the add; the sum rounds 4 dp before ranking.
 
     Returns the standard RANKED page."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], RANKED)
-    feats = (spark.read.parquet(paths.docs)
-             .select("doc_id", *feature_cols)
-             .select("doc_id",
-                     F.expr(feature_expr).cast("double").alias("f")))
-    sat = F.col("f") / (F.col("f") + F.lit(float(pivot)))
-    scored = (scored.join(feats, "doc_id")
+    f = F.expr(feature_expr).cast("double")
+    sat = f / (f + F.lit(float(pivot)))
+    scored = (_with_docs(_full_bm25_scores(spark, index_dir, queries),
+                         index_dir, *feature_cols)
               .withColumn("score",
                           F.round(F.col("score")
                                   + F.lit(float(boost)) * sat, 4)))
@@ -2647,15 +2291,8 @@ def search_percentile_ranks(spark: SparkSession, index_dir: str,
     agg's quantile_cont twin). Rounded 4 dp.
 
     Returns DataFrame(query_id, value, percent) ordered by value."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, value double, percent double"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.expr(value_expr).cast("double").alias("v")))
-    j = matches.join(vals, "doc_id")
+    j = _hit_values(spark, index_dir, queries,
+                    F.expr(value_expr).cast("double").alias("v"))
     aggs = []
     for x in values:
         aggs.append(F.round(
@@ -2683,16 +2320,8 @@ def search_boxplot(spark: SparkSession, index_dir: str,
     min/max (the OpenSearch default). Rounded 4 dp.
 
     Returns DataFrame(query_id, vmin, q1, q2, q3, vmax)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, vmin double, q1 double, q2 double, "
-                  "q3 double, vmax double")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.expr(value_expr).cast("double").alias("v")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(value_expr).cast("double").alias("v"))
             .groupBy("query_id")
             .agg(F.round(F.min("v"), 4).alias("vmin"),
                  F.round(F.expr("percentile(v, 0.25D)"), 4).alias("q1"),
@@ -2713,15 +2342,8 @@ def search_mad(spark: SparkSession, index_dir: str,
     the same joined frame. Rounded 4 dp.
 
     Returns DataFrame(query_id, mad)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, mad double"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.expr(value_expr).cast("double").alias("v")))
-    j = matches.join(vals, "doc_id")
+    j = _hit_values(spark, index_dir, queries,
+                    F.expr(value_expr).cast("double").alias("v"))
     med = (j.groupBy("query_id")
            .agg(F.expr("percentile(v, 0.5D)").alias("med")))
     return (j.join(med, "query_id")
@@ -2752,15 +2374,7 @@ def search_string_stats(spark: SparkSession, index_dir: str,
     entropy)."""
     from .analyzer import with_tokens
 
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, doc_count long, min_len long, "
-                  "max_len long, avg_len double, entropy double")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    docs = spark.read.parquet(paths.docs).select("doc_id", "text")
-    hit_docs = matches.join(docs, "doc_id")
+    hit_docs = _hit_values(spark, index_dir, queries, "text")
     lens = (hit_docs.groupBy("query_id")
             .agg(F.count("*").alias("doc_count"),
                  F.min(F.length("text")).cast("long").alias("min_len"),
@@ -2793,20 +2407,11 @@ def search_top_metrics(spark: SparkSession, index_dir: str,
     the hit set, only the metric column carried.
 
     Returns DataFrame(query_id, rank, doc_id, sort_value, metric)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = ("query_id int, rank int, doc_id long, "
-                  "sort_value double, metric double")
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id",
-                    F.expr(sort_expr).cast("double").alias("sort_value"),
-                    F.expr(metric_expr).cast("double").alias("metric")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("sort_value").desc(), F.col("doc_id").asc())
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        F.expr(sort_expr).cast("double").alias("sort_value"),
+                        F.expr(metric_expr).cast("double").alias("metric"))
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= int(size))
             .select("query_id", "rank", "doc_id", "sort_value", "metric")
@@ -2826,12 +2431,6 @@ def search_date_range(spark: SparkSession, index_dir: str,
     omitted (relational GROUP BY semantics, declared).
 
     Returns DataFrame(query_id, bucket, doc_count)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, bucket string, doc_count long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
     bs = list(boundaries)
     cond = F.when(F.col("ts") < F.lit(bs[0]).cast("timestamp"),
                   F.lit(f"*..{bs[0]}"))
@@ -2839,9 +2438,7 @@ def search_date_range(spark: SparkSession, index_dir: str,
         cond = cond.when(F.col("ts") < F.lit(hi).cast("timestamp"),
                          F.lit(f"{lo}..{hi}"))
     cond = cond.otherwise(F.lit(f"{bs[-1]}..*"))
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id", F.col(ts_col).alias("ts")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries, F.col(ts_col).alias("ts"))
             .withColumn("bucket", cond)
             .groupBy("query_id", "bucket")
             .agg(F.count("*").alias("doc_count"))
@@ -2858,17 +2455,9 @@ def search_t_test(spark: SparkSession, index_dir: str,
     (sum, sum-of-squares, count). Rounded 4 dp.
 
     Returns DataFrame(query_id, t_value, n)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    out_schema = "query_id int, t_value double, n long"
-    matches = _match_docs(spark, paths, stats, queries)
-    if matches is None:
-        return spark.createDataFrame([], out_schema)
-    vals = (spark.read.parquet(paths.docs)
-            .select("doc_id",
-                    (F.expr(a_expr).cast("double")
-                     - F.expr(b_expr).cast("double")).alias("d")))
-    return (matches.join(vals, "doc_id")
+    return (_hit_values(spark, index_dir, queries,
+                        (F.expr(a_expr).cast("double")
+                         - F.expr(b_expr).cast("double")).alias("d"))
             .groupBy("query_id")
             .agg(F.round(F.avg("d")
                          / (F.stddev_samp("d")
@@ -2929,23 +2518,16 @@ def distance_feature_search(spark: SparkSession, index_dir: str,
 
     The timestamp reads from the column-pruned docs scan (the engine's
     doc-values). Returns the standard RANKED page."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    scored = _full_bm25_scores(spark, paths, stats, queries)
-    if scored is None:
-        return spark.createDataFrame([], RANKED)
-    feats = (spark.read.parquet(paths.docs)
-             .select("doc_id",
-                     F.abs(F.unix_timestamp(F.col(ts_col))
-                           - F.unix_timestamp(
-                               F.lit(origin).cast("timestamp")))
-                     .cast("double").alias("dist")))
+    dist = (F.abs(F.unix_timestamp(F.col(ts_col))
+                  - F.unix_timestamp(F.lit(origin).cast("timestamp")))
+            .cast("double"))
     piv = float(pivot_seconds)
     bonus = F.lit(float(boost)) * F.lit(piv) / (F.lit(piv)
                                                 + F.col("dist"))
-    scored = (scored.join(feats, "doc_id")
-              .withColumn("score", F.round(F.col("score") + bonus, 4)))
-    return ranked_topk(scored, k)
+    return ranked_topk(
+        _with_docs(_full_bm25_scores(spark, index_dir, queries), index_dir,
+                   dist.alias("dist"))
+        .withColumn("score", F.round(F.col("score") + bonus, 4)), k)
 
 
 PINNED_BASE = 1_000_000_000.0
@@ -2962,18 +2544,14 @@ def pinned_search(spark: SparkSession, index_dir: str,
     Lucene's PinnedQuery uses so the pins sort as ordinary scores.
 
     Returns the standard RANKED page."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
-    scored = _full_bm25_scores(spark, paths, stats, queries)
     pin_rows = [(int(qid), int(d), PINNED_BASE - i)
                 for qid, ids in pinned.items()
                 for i, d in enumerate(ids)]
     pins = spark.createDataFrame(
         pin_rows, "query_id int, doc_id long, score double")
-    if scored is None:
-        return ranked_topk(pins, k)
-    organic = scored.join(pins.select("query_id", "doc_id"),
-                          ["query_id", "doc_id"], "left_anti")
+    organic = _full_bm25_scores(spark, index_dir, queries).join(
+        pins.select("query_id", "doc_id"), ["query_id", "doc_id"],
+        "left_anti")
     return ranked_topk(organic.unionByName(pins), k)
 
 
@@ -3001,17 +2579,10 @@ def span_not_search(spark: SparkSession, index_dir: str,
         toks = tokenize_text(text)
         if toks:
             parsed[int(qid)] = (toks[0], toks[1:])
-    if not parsed:
-        return spark.createDataFrame([], RANKED)
-    includes = sorted({inc for inc, _ex in parsed.values()})
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, includes)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-            for t in includes if t in dfs}
+    _dfs, idfs = term_stats(spark, paths, stats,
+                            sorted({inc for inc, _ex in parsed.values()}))
     parsed = {qid: (inc, ex) for qid, (inc, ex) in parsed.items()
               if inc in idfs}
-    if not parsed:
-        return spark.createDataFrame([], RANKED)
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     dist_i = int(dist)
 
@@ -3022,22 +2593,14 @@ def span_not_search(spark: SparkSession, index_dir: str,
             rec = by_term.get(inc)
             if rec is None:
                 continue
-            doc_ids, tfs, dls = decode_postings(rec)
-            if doc_ids.size == 0:
-                continue
-            poss = decode_positions(rec["poss"], tfs)
-            anchors = ((np.repeat(doc_ids, tfs).astype(np.uint64)
-                        << _SF_POS_SHIFT) | poss.astype(np.uint64))
+            doc_ids, tfs, dls, anchors = decode_position_keys(rec)
+            poss = anchors & _POS_MASK
             alive = np.ones(anchors.size, dtype=bool)
             for ex in excludes:
                 rec_e = by_term.get(ex)
                 if rec_e is None:
                     continue
-                e_ids, e_tfs, _e_dls = decode_postings(rec_e)
-                e_pos = decode_positions(rec_e["poss"], e_tfs)
-                e_keys = np.sort(
-                    (np.repeat(e_ids, e_tfs).astype(np.uint64)
-                     << _SF_POS_SHIFT) | e_pos.astype(np.uint64))
+                e_keys = decode_position_keys(rec_e)[3]
                 for off in range(-dist_i, dist_i + 1):
                     if off == 0:
                         continue  # two terms can't share a position
@@ -3061,18 +2624,11 @@ def span_not_search(spark: SparkSession, index_dir: str,
             out_q.extend([qid] * int(keep.sum()))
             out_d.extend(doc_ids[keep].tolist())
             out_s.extend(sc.tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     live = sorted({t for inc, ex in parsed.values()
                    for t in [inc] + ex})
-    scored = (execute(spark, paths, stats, live, kernel,
-                      need_positions=True)
-              .withColumn("score", F.round("score", 4)))
-    return ranked_topk(scored, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k)
 
 
 def synonym_search(spark: SparkSession, index_dir: str,
@@ -3098,12 +2654,9 @@ def synonym_search(spark: SparkSession, index_dir: str,
             groups.append(sorted({t, *synonyms.get(t, [])}))
         if groups:
             q_groups[int(qid)] = groups
-    if not q_groups:
-        return spark.createDataFrame([], RANKED)
-    terms = sorted({t for gs in q_groups.values()
-                    for g in gs for t in g})
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
+    dfs, _idfs = term_stats(spark, paths, stats,
+                            sorted({t for gs in q_groups.values()
+                                    for g in gs for t in g}))
     qinfo: dict[int, list[tuple[list[str], float]]] = {}
     for qid, gs in q_groups.items():
         scored_groups = []
@@ -3111,14 +2664,10 @@ def synonym_search(spark: SparkSession, index_dir: str,
             present = [t for t in g if t in dfs]
             if not present:
                 continue
-            df_g = max(dfs[t] for t in present)
             scored_groups.append(
-                (present,
-                 float(idf_fn(stats.N, np.array([df_g]))[0])))
+                (present, idf_of(stats.N, max(dfs[t] for t in present))))
         if scored_groups:
             qinfo[qid] = scored_groups
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3153,17 +2702,12 @@ def synonym_search(spark: SparkSession, index_dir: str,
             out_q.extend([qid] * len(acc))
             out_d.extend(acc.keys())
             out_s.extend(acc.values())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     live = sorted({t for groups in qinfo.values()
                    for members, _ in groups for t in members})
-    scored = (execute(spark, paths, stats, live, kernel)
-              .withColumn("score", F.round("score", 4)))
-    return ranked_topk(scored, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k,
+                         need_positions=False)
 
 
 def named_bool_search(spark: SparkSession, index_dir: str,
@@ -3183,8 +2727,6 @@ def named_bool_search(spark: SparkSession, index_dir: str,
     names — no per-clause rescan.
 
     Returns DataFrame(query_id, rank, doc_id, score, matched)."""
-    paths = IndexPaths(index_dir)
-    stats = load_stats(spark, index_dir)
     sub: list[tuple[int, str]] = []
     names: dict[int, tuple[int, str]] = {}
     width = max((len(cl) for _qid, cl in queries), default=0) or 1
@@ -3193,11 +2735,7 @@ def named_bool_search(spark: SparkSession, index_dir: str,
             sid = qi * width + ci
             sub.append((sid, text))
             names[sid] = (int(qid), name)
-    scored = _full_bm25_scores(spark, paths, stats, sub)
-    out_schema = ("query_id int, rank int, doc_id long, score double, "
-                  "matched string")
-    if scored is None:
-        return spark.createDataFrame([], out_schema)
+    scored = _full_bm25_scores(spark, index_dir, sub)
     name_rows = [(sid, qid, nm) for sid, (qid, nm) in names.items()]
     name_df = F.broadcast(spark.createDataFrame(
         name_rows, "sub_id int, query_id int, name string"))
@@ -3364,24 +2902,7 @@ def intervals_search(spark: SparkSession, index_dir: str,
     Returns the standard RANKED page."""
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
-    q_terms: dict[int, list[str]] = {}
-    for qid, text in queries:
-        toks = tokenize_text(text)
-        if len(toks) >= 2:
-            q_terms[int(qid)] = toks
-    if not q_terms:
-        return spark.createDataFrame([], RANKED)
-    terms = sorted({t for ts in q_terms.values() for t in ts})
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-    qinfo: dict[int, dict] = {}
-    for qid, toks in q_terms.items():
-        if all(t in dfs for t in toks):
-            s_idf = float(sum(
-                idf_fn(stats.N, np.array([dfs[t]]))[0] for t in toks))
-            qinfo[qid] = {"terms": toks, "idf": s_idf}
-    if not qinfo:
-        return spark.createDataFrame([], RANKED)
+    qinfo = _span_qinfo(spark, paths, stats, queries)
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     gaps = int(max_gaps)
 
@@ -3392,16 +2913,9 @@ def intervals_search(spark: SparkSession, index_dir: str,
             toks = info["terms"]
             if any(t not in by_term for t in toks):
                 continue
-            decoded: dict[str, tuple] = {}
-            for t in set(toks):
-                rec = by_term[t]
-                doc_ids, tfs, dls = decode_postings(rec)
-                poss = decode_positions(rec["poss"], tfs)
-                keys = np.sort(
-                    (np.repeat(doc_ids, tfs).astype(np.uint64)
-                     << _SF_POS_SHIFT) | poss.astype(np.uint64))
-                decoded[t] = (doc_ids, tfs, dls, keys)
-            d0, tf0, dl0, keys0 = decoded[toks[0]]
+            decoded = {t: decode_position_keys(by_term[t])
+                       for t in set(toks)}
+            d0, _tf0, dl0, keys0 = decoded[toks[0]]
             cur = keys0.copy()
             alive = np.ones(cur.size, dtype=bool)
             for t in toks[1:]:
@@ -3410,19 +2924,16 @@ def intervals_search(spark: SparkSession, index_dir: str,
                 ok = ix < nxt_keys.size
                 nxt = np.zeros_like(cur)
                 nxt[ok] = nxt_keys[np.minimum(ix, nxt_keys.size - 1)][ok]
-                same_doc = ((nxt >> _SF_POS_SHIFT)
-                            == (cur >> _SF_POS_SHIFT))
+                same_doc = (nxt >> _POS_SHIFT) == (cur >> _POS_SHIFT)
                 alive &= ok & same_doc
                 cur = np.where(alive, nxt, cur)
-            n = len(toks)
-            slack = (cur & ((np.uint64(1) << _SF_POS_SHIFT)
-                            - np.uint64(1))).astype(np.int64) \
-                - (keys0 & ((np.uint64(1) << _SF_POS_SHIFT)
-                            - np.uint64(1))).astype(np.int64) - (n - 1)
+            slack = ((cur & _POS_MASK).astype(np.int64)
+                     - (keys0 & _POS_MASK).astype(np.int64)
+                     - (len(toks) - 1))
             hit = alive & (slack <= gaps)
             if not hit.any():
                 continue
-            hit_docs = (keys0[hit] >> _SF_POS_SHIFT).astype(np.int64)
+            hit_docs = (keys0[hit] >> _POS_SHIFT).astype(np.int64)
             uniq, qtf = np.unique(hit_docs, return_counts=True)
             dl_map = dl0[np.searchsorted(d0, uniq)]
             sc = info["idf"] * tf_norm(qtf.astype(np.float64), dl_map,
@@ -3430,14 +2941,7 @@ def intervals_search(spark: SparkSession, index_dir: str,
             out_q.extend([qid] * uniq.size)
             out_d.extend(uniq.tolist())
             out_s.extend(sc.tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
-    scored = (execute(spark, paths, stats, live, kernel,
-                      need_positions=True)
-              .withColumn("score", F.round("score", 4)))
-    return ranked_topk(scored, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k)

@@ -34,8 +34,15 @@ from .analyzer import tokenize_text
 from .codec import decode_postings, tf_norm
 from .fields import field_root
 from .indexer import IndexPaths, bucket_of
-from .oracle import idf as idf_fn
-from .query import RANKED, RESULT_SCHEMA, _filter_in, load_stats, ranked_topk
+from .query import (
+    RANKED,
+    RESULT_SCHEMA,
+    _filter_in,
+    load_stats,
+    ranked_topk,
+    result_frame,
+    term_stats,
+)
 
 _ROOT_NAMES = (None, "current", "text")
 
@@ -124,11 +131,7 @@ def _mm_kernel(qinfos: dict, boosts: dict, fparams: dict, k: int, mode: str,
             out_q.extend([qid] * top)
             out_d.extend(uniq[order].tolist())
             out_s.extend(acc[order].tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return score_range(pdf)
@@ -169,11 +172,7 @@ def multi_match(spark: SparkSession, index_dir: str,
     scans = []
     for f in fields:
         paths_f = IndexPaths(froots[f])
-        dict_rows = _filter_in(spark.read.parquet(paths_f.dictionary),
-                               "term", terms).collect()
-        dfs = {r["term"]: int(r["df"]) for r in dict_rows}
-        idfs = {t: float(idf_fn(stats[f].N, np.array([dfs[t]]))[0])
-                for t in terms if t in dfs}
+        _dfs, idfs = term_stats(spark, paths_f, stats[f], terms)
         qi = {}
         for qid, ts in q_terms.items():
             ti = {t: idfs[t] * c for t, c in Counter(ts).items() if t in idfs}

@@ -98,11 +98,50 @@ def lookup_dict_rows(spark: SparkSession, dict_path: str,
     call's term set is tiny, and a per-call scan job spent more wall on
     scheduling than on I/O. The row-group pruning keeps this a point
     read at any dictionary size (Lucene's term-dict seek analogue runs
-    on one node too).
+    on one node too). No terms, no read.
     """
+    if not terms:
+        return []
     return tablefs.read_small_table(
         spark, dict_path, filters=[("term", "in", list(terms))]
     ).to_dict("records")
+
+
+def idf_of(n_docs: int, df: int) -> float:
+    """BM25 idf of one term. Every surface calls the vectorized
+    :func:`.oracle.idf` in this one per-term form, so a term's weight is
+    bit-identical wherever it is computed."""
+    return float(idf_fn(n_docs, np.array([df]))[0])
+
+
+def term_stats(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
+               terms: list[str]) -> tuple[dict[str, int], dict[str, float]]:
+    """(dfs, idfs) of the ``terms`` the dictionary holds — one
+    :func:`lookup_dict_rows` point-lookup; a term absent from the corpus
+    is in neither dict."""
+    dfs = {r["term"]: int(r["df"])
+           for r in lookup_dict_rows(spark, paths.dictionary, terms)}
+    return dfs, {t: idf_of(stats.N, dfs[t]) for t in terms if t in dfs}
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty frame of ``schema`` that Catalyst KNOWS is empty:
+    ``limit(0)`` optimizes to an empty ``LocalRelation``, and
+    ``PropagateEmptyRelation`` then folds every join, aggregation and
+    window above it — a surface runs its one plan on it and scans no
+    postings or docs file."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def result_frame(query_ids, doc_ids, scores=None) -> pd.DataFrame:
+    """A kernel's output rows: (query_id int32, doc_id int64[, score
+    float64]) — :data:`RESULT_SCHEMA`, or the bare hit set without
+    ``scores``."""
+    cols = {"query_id": pd.Series(query_ids, dtype="int32"),
+            "doc_id": pd.Series(doc_ids, dtype="int64")}
+    if scores is not None:
+        cols["score"] = pd.Series(scores, dtype="float64")
+    return pd.DataFrame(cols)
 
 
 _ALIGN_CACHE: dict[tuple, bool] = {}
@@ -164,7 +203,11 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
       ``range_id``. A per-file task would see part of a range and emit
       wrong partial scores, so this is the only correct path for that
       layout.
+
+    No ``live_terms`` → :func:`empty_frame`: no postings are read.
     """
+    if not live_terms:
+        return empty_frame(spark, schema)
     buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
     terms = sorted(live_terms)
     if allowed is None:
@@ -414,19 +457,11 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
                     parts_q.append(np.full(top, query_id, dtype=np.int32))
                     parts_d.append(cand_u[order])
                     parts_s.append(cand_a[order])
-                if parts_q:
-                    qcat = np.concatenate(parts_q)
-                    dcat = np.concatenate(parts_d)
-                    scat = np.concatenate(parts_s)
-                else:
-                    qcat = np.empty(0, dtype=np.int32)
-                    dcat = np.empty(0, dtype=np.int64)
-                    scat = np.empty(0)
-                return pd.DataFrame({
-                    "query_id": pd.Series(qcat, dtype="int32"),
-                    "doc_id": pd.Series(dcat, dtype="int64"),
-                    "score": pd.Series(scat, dtype="float64"),
-                })
+                if not parts_q:
+                    return result_frame([], [], [])
+                return result_frame(np.concatenate(parts_q),
+                                    np.concatenate(parts_d),
+                                    np.concatenate(parts_s))
 
         # NOTE: a fully-batched variant (one global (query,doc) key sort
         # across the query set) was tried and measured 4× SLOWER than this
@@ -530,11 +565,7 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
             out_q.extend([query_id] * top)
             out_d.extend(cand_u[order].tolist())
             out_s.extend(cand_a[order].tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     return score_range
 
@@ -647,6 +678,22 @@ def search(spark: SparkSession, index_dir: str, queries: list[tuple[int, str]],
 
 _POS_SHIFT = np.uint64(24)  # doc_id<<24 | position keys: dl < 2^24 tokens,
 #                             doc_id < 2^39 — both safe at 10^12-doc scale
+_POS_MASK = (np.uint64(1) << _POS_SHIFT) - np.uint64(1)
+
+
+def decode_position_keys(rec) -> tuple:
+    """The one positional decoder: a posting row (read with ``poss``) →
+    (doc_ids, tfs, dls, keys) with one ``doc_id<<24 | position`` key per
+    occurrence. The codec emits doc_ids and each doc's positions
+    ascending, so ``keys`` is sorted — every positional kernel
+    intersects with ``isin``/``searchsorted`` on it directly;
+    ``keys & _POS_MASK`` recovers the positions, ``keys >> _POS_SHIFT``
+    the docs."""
+    doc_ids, tfs, dls = decode_postings(rec)
+    poss = decode_positions(rec["poss"], tfs)
+    keys = ((np.repeat(doc_ids, tfs).astype(np.uint64) << _POS_SHIFT)
+            | poss.astype(np.uint64))
+    return doc_ids, tfs, dls, keys
 
 
 def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
@@ -689,17 +736,8 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
             terms = info["terms"]
             if not all(t in by_term for t in terms):
                 continue
-            decoded = {}
-            for t in set(terms):
-                rec = by_term[t]
-                doc_ids, tfs, dls = decode_postings(rec)
-                poss = decode_positions(rec["poss"], tfs)
-                if doc_ids.size == 0:
-                    keys = np.empty(0, dtype=np.uint64)
-                else:
-                    keys = ((np.repeat(doc_ids, tfs).astype(np.uint64)
-                             << _POS_SHIFT) | poss.astype(np.uint64))
-                decoded[t] = (doc_ids, tfs, dls, keys)
+            decoded = {t: decode_position_keys(by_term[t])
+                       for t in set(terms)}
             # anchor: (doc, pos) pairs of the first term
             d0, t0f, dl0, keys0 = decoded[terms[0]]
             if slop == 0:
@@ -715,9 +753,8 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
                 # codec emits doc_ids and per-doc positions ascending);
                 # anchor survives iff the chain stays in-doc and within
                 # the p0 + (n-1) + slop window
-                pos_mask = (np.uint64(1) << _POS_SHIFT) - np.uint64(1)
                 docs_a = keys0 >> _POS_SHIFT
-                p0 = keys0 & pos_mask
+                p0 = keys0 & _POS_MASK
                 limit = p0 + np.uint64(len(terms) - 1 + slop)
                 prev = p0.copy()
                 alive = np.ones(keys0.size, dtype=bool)
@@ -730,7 +767,7 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
                     ok = idx < keys_t.size
                     found = keys_t[np.minimum(idx, keys_t.size - 1)]
                     fdoc = found >> _POS_SHIFT
-                    fpos = found & pos_mask
+                    fpos = found & _POS_MASK
                     alive &= ok & (fdoc == docs_a) & (fpos <= limit)
                     prev = np.where(alive, fpos, prev)
                 cand = keys0[alive]
@@ -751,11 +788,7 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
             out_q.extend([query_id] * top)
             out_d.extend(uniq[order].tolist())
             out_s.extend(sc[order].tolist())
-        return pd.DataFrame({
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "doc_id": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        })
+        return result_frame(out_q, out_d, out_s)
 
     return score_range
 
@@ -803,19 +836,12 @@ def explain_scores(spark: SparkSession, index_dir: str,
     terms = sorted({t for ts in q_terms.values() for t in ts})
     out_schema = ("query_id int, doc_id long, term string, tf long, "
                   "contribution double")
-    if not terms:
-        return spark.createDataFrame([], out_schema)
-    dict_rows = lookup_dict_rows(spark, paths.dictionary, terms)
-    dfs = {r["term"]: int(r["df"]) for r in dict_rows}
+    _dfs, idfs = term_stats(spark, paths, stats, terms)
     # per-(query, term) weight = idf · occurrence count (search semantics)
     from collections import Counter
 
-    wrows = []
-    for qid, ts in q_terms.items():
-        for t, c in Counter(ts).items():
-            if t in dfs:
-                idf = float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-                wrows.append((qid, t, idf * c))
+    wrows = [(qid, t, idfs[t] * c) for qid, ts in q_terms.items()
+             for t, c in Counter(ts).items() if t in idfs]
     if not wrows:
         return spark.createDataFrame([], out_schema)
     weights = spark.createDataFrame(
@@ -871,11 +897,13 @@ class Searcher:
             self._dfs = dict(zip(pdf["term"],
                                  pdf["df"].astype(int).tolist()))
 
-    def _lookup_dfs(self, terms: list[str]) -> dict[str, int]:
-        if self._dfs is not None:
-            return {t: self._dfs[t] for t in terms if t in self._dfs}
-        rows = lookup_dict_rows(self.spark, self.paths.dictionary, terms)
-        return {r["term"]: int(r["df"]) for r in rows}
+    def _idfs(self, terms: list[str]) -> dict[str, float]:
+        """idfs as :func:`term_stats`, from the resident dictionary when
+        preloaded."""
+        if self._dfs is None:
+            return term_stats(self.spark, self.paths, self.stats, terms)[1]
+        return {t: idf_of(self.stats.N, self._dfs[t])
+                for t in terms if t in self._dfs}
 
     def search(self, queries: list[tuple[int, str]], k: int = 10,
                prune: bool = True,
@@ -925,14 +953,8 @@ class Searcher:
             if any(m > 1 for m in msm_spec.values()):
                 prune = False  # block-max masks would undercount tallies
         terms = sorted({t for toks in q_terms.values() for t in toks})
-        if not terms:
-            return self.spark.createDataFrame([], RANKED)
-        dfs = self._lookup_dfs(terms)
-        idfs = {t: float(idf_fn(stats.N, np.array([dfs[t]]))[0])
-                for t in terms if t in dfs}
+        idfs = self._idfs(terms)
         qinfo = _weighted_qinfo(q_terms, idfs)
-        if not qinfo:
-            return self.spark.createDataFrame([], RANKED)
         live_terms = sorted({t for ti in qinfo.values() for t in ti})
         kern = _score_kernel(qinfo, k, stats, prune, after_spec=after,
                              msm_spec=msm_spec)
@@ -963,17 +985,11 @@ class Searcher:
         stats = self.stats
         q_terms = {qid: tokenize_text(text) for qid, text in queries}
         terms = sorted({t for toks in q_terms.values() for t in toks})
-        if not terms:
-            return self.spark.createDataFrame([], RANKED)
-        dfs = self._lookup_dfs(terms)
-        qinfo = {}
-        for qid, toks in q_terms.items():
-            if toks and all(t in dfs for t in toks):
-                s_idf = float(sum(
-                    idf_fn(stats.N, np.array([dfs[t]]))[0] for t in toks))
-                qinfo[int(qid)] = {"terms": toks, "idf": s_idf}
-        if not qinfo:
-            return self.spark.createDataFrame([], RANKED)
+        idfs = self._idfs(terms)
+        qinfo = {int(qid): {"terms": toks,
+                            "idf": float(sum(idfs[t] for t in toks))}
+                 for qid, toks in q_terms.items()
+                 if toks and all(t in idfs for t in toks)}
         live_terms = sorted({t for i in qinfo.values() for t in i["terms"]})
         kern = _phrase_kernel(qinfo, k, stats, slop=slop)
         allowed = _allowed_docs(self.spark, self.paths, doc_filter,

@@ -113,35 +113,56 @@ def test_prefix_no_match_is_empty(spark, index_dir):
 
 
 def test_prefix_batch_single_expansion_pass(spark, index_dir):
-    """Round-6 batching: a multi-prefix batch must (a) return exactly the
-    union of per-query results and (b) expand every prefix in ONE
-    dictionary job — the round-5 loop ran one Spark job per prefix."""
-    prefs = [(1, "po"), (2, "s"), (3, "do"), (4, "w00")]
-    per_q = {qid: (prefix_search(spark, index_dir, [(qid, p)], k=K)
-                   .toPandas().sort_values("rank", ignore_index=True))
-             for qid, p in prefs}
+    """Batched dictionary expansion: a multi-query batch of every
+    expanding surface (prefix, wildcard, regexp, match_phrase_prefix)
+    must (a) return exactly the union of per-query results and (b)
+    expand every query in ONE dictionary job — a per-query loop runs
+    one Spark job per prefix/pattern."""
+    from pdf_to_opensearch_spark.boolquery import (
+        match_phrase_prefix_search,
+        regexp_search,
+        wildcard_search,
+    )
+
+    cases = {
+        "prefix": (prefix_search,
+                   [(1, "po"), (2, "s"), (3, "do"), (4, "w00")]),
+        "wildcard": (wildcard_search,
+                     [(1, "po*"), (2, "s?ark"), (3, "d*t"), (4, "w00*")]),
+        "regexp": (regexp_search,
+                   [(1, "po.*"), (2, "s[a-z]+"), (3, "d.*t"), (4, "w00.")]),
+        "match_phrase_prefix": (match_phrase_prefix_search,
+                                [(1, "posting me"), (2, "spark in"),
+                                 (3, "the do"), (4, "index s")]),
+    }
     tracker = spark.sparkContext.statusTracker()
 
-    def count_jobs(tag, queries):
-        spark.sparkContext.setJobGroup(tag, "prefix batch")
+    def count_jobs(fn, tag, queries):
+        spark.sparkContext.setJobGroup(tag, "expansion batch")
         try:
-            out = prefix_search(spark, index_dir, queries, k=K).toPandas()
+            out = fn(spark, index_dir, queries, k=K).toPandas()
             return out, len(tracker.getJobIdsForGroup(tag))
         finally:
             spark.sparkContext.setJobGroup(None, None)
 
-    _one, jobs1 = count_jobs("prefix_b1", prefs[:1])
-    batch, jobs4 = count_jobs("prefix_b4", prefs)
-    # job count must be independent of the batch size (the round-5 loop
-    # ran one expansion job PER prefix: jobs4 ≈ jobs1 + 3)
-    assert jobs4 <= jobs1, f"1 prefix: {jobs1} jobs, 4 prefixes: {jobs4}"
-    for qid, _p in prefs:
-        sub = (batch[batch["query_id"] == qid]
-               .sort_values("rank", ignore_index=True))
-        want = per_q[qid]
-        assert list(sub["doc_id"]) == list(want["doc_id"]), qid
-        np.testing.assert_allclose(sub["score"].to_numpy(),
-                                   want["score"].to_numpy(), rtol=0)
+    for name, (fn, queries) in cases.items():
+        per_q = {qid: (fn(spark, index_dir, [(qid, q)], k=K).toPandas()
+                       .sort_values("rank", ignore_index=True))
+                 for qid, q in queries}
+        assert any(len(v) for v in per_q.values()), name
+        _one, jobs1 = count_jobs(fn, f"{name}_b1", queries[:1])
+        batch, jobs4 = count_jobs(fn, f"{name}_b4", queries)
+        # job count must be independent of the batch size (a per-query
+        # expansion loop runs jobs4 ≈ jobs1 + 3)
+        assert jobs4 <= jobs1, \
+            f"{name}: 1 query: {jobs1} jobs, 4 queries: {jobs4}"
+        for qid, _q in queries:
+            sub = (batch[batch["query_id"] == qid]
+                   .sort_values("rank", ignore_index=True))
+            want = per_q[qid]
+            assert list(sub["doc_id"]) == list(want["doc_id"]), (name, qid)
+            np.testing.assert_allclose(sub["score"].to_numpy(),
+                                       want["score"].to_numpy(), rtol=0)
 
 
 def test_facets_vs_brute(spark, index_dir, corpus):
@@ -1904,3 +1925,110 @@ def test_intervals_ordered_chain(spark, index_dir, corpus):
                             max_gaps=gaps, k=1 << 20)
            .toPandas().set_index("doc_id")["score"])
     assert dict(got) == want
+
+
+# Every caller of the two hit-set producers (_match_docs,
+# _full_bm25_scores), with the arguments the rich fixture index needs.
+HIT_SET_CALLS = {
+    "search_facets": {},
+    "search_histogram": {},
+    "significant_terms": {},
+    "search_stats": {},
+    "search_percentiles": {},
+    "search_cardinality": {},
+    "search_date_histogram": {},
+    "search_top_hits": {},
+    "query_string_search": {},
+    "search_collapse": {},
+    "search_range_agg": {},
+    "search_filters_agg": {"filters": {"en": "lang = 'en'"},
+                           "doc_cols": ["lang"]},
+    "search_composite_agg": {"sources": [("lang", "lang"),
+                                         ("src", "source")]},
+    "search_adjacency_matrix": {"filters": {"en": "lang = 'en'",
+                                            "long": "length(text) > 100"},
+                                "doc_cols": ["lang", "text"]},
+    "matrix_stats_agg": {},
+    "search_sorted": {},
+    "function_score_search": {},
+    "search_extended_stats": {},
+    "search_weighted_avg": {},
+    "search_missing": {"col_expr": "source"},
+    "search_pipeline_aggs": {},
+    "decay_score_search": {},
+    "script_score_search": {},
+    "random_score_search": {},
+    "search_sampler": {"max_docs_per_value": 2},
+    "search_count": {},
+    "search_rare_terms": {},
+    "search_multi_terms": {},
+    "search_auto_date_histogram": {},
+    "scroll_export": {},
+    "rank_feature_search": {},
+    "search_percentile_ranks": {},
+    "search_boxplot": {},
+    "search_mad": {},
+    "search_string_stats": {},
+    "search_top_metrics": {},
+    "search_date_range": {},
+    "search_t_test": {},
+    "distance_feature_search": {"origin": "2025-02-15 00:00:00"},
+    "pinned_search": {"pinned": {1: [3]}},
+    "named_bool_search": {},
+    "search_sibling_bucket_aggs": {},
+    "search_bucket_pipeline2": {},
+}
+
+
+def _hit_set_call(spark, index_dir, name, text):
+    from pdf_to_opensearch_spark import boolquery as bq
+
+    q = {"a": text} if name == "named_bool_search" else text
+    return getattr(bq, name)(spark, index_dir, [(1, q)],
+                             **HIT_SET_CALLS[name])
+
+
+@pytest.mark.parametrize("name", sorted(HIT_SET_CALLS))
+def test_hit_set_surfaces_empty_and_matching_share_schema(
+        spark, rich_index_dir, name):
+    """A query with no analyzable term (punctuation only) runs the same
+    plan as a matching one over the empty hit-set frame, so both return
+    the same column names and types; the empty one still executes."""
+    def cols(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    empty = _hit_set_call(spark, rich_index_dir, name, "...!!")
+    matching = _hit_set_call(spark, rich_index_dir, name, "spark document")
+    assert cols(empty) == cols(matching)
+    empty.collect()
+
+
+@pytest.mark.parametrize("name", ["search_count", "search_stats",
+                                  "function_score_search"])
+def test_empty_hit_set_reads_no_parquet(spark, rich_index_dir, name):
+    """Catalyst folds the empty hit set's join / aggregation / window to
+    an empty LocalRelation: the optimized plan of an aggregation, a
+    docs-join user and a scored surface holds no parquet relation."""
+    empty = _hit_set_call(spark, rich_index_dir, name, "...!!")
+    plan = empty._jdf.queryExecution().optimizedPlan().toString()
+    assert "parquet" not in plan.lower(), plan
+    assert "LocalRelation" in plan, plan
+    assert empty.count() == 0
+
+
+def test_range_and_filters_agg_take_an_empty_query_list(spark, index_dir):
+    """An empty query list returns an empty frame with the surface's
+    columns (the declared-bucket grid is typed, not inferred)."""
+    from pdf_to_opensearch_spark.boolquery import (
+        search_filters_agg,
+        search_range_agg,
+    )
+
+    filters = {"en": "lang = 'en'"}
+    for run in (lambda q: search_range_agg(spark, index_dir, q),
+                lambda q: search_filters_agg(spark, index_dir, q, filters,
+                                             ["lang"])):
+        got, ref = run([]), run([(1, "spark")])
+        assert got.columns == ref.columns
+        assert got.count() == 0
+        assert ref.count() > 0

@@ -27,6 +27,30 @@ def test_entry_contract():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
 
 
+def test_entry_names_defined_once():
+    """Every module-level function, class and assigned name of
+    __spark_entry__ is defined exactly once: a redefinition (a second
+    ``queries()`` extending the first) silently shadows the earlier one.
+    Checked on the AST, as no linter runs here."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "__spark_entry__.py")) as f:
+        tree = ast.parse(f.read())
+    names = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.append(node.name)
+        elif isinstance(node, ast.Assign):
+            names += [t.id for t in node.targets if isinstance(t, ast.Name)]
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target,
+                                                             ast.Name):
+            names.append(node.target.id)
+    assert "queries" in names and "oracle_sql" in names
+    dup = sorted({n for n in names if names.count(n) > 1})
+    assert not dup, dup
+
+
 SF001 = "/root/testdata/sf0.01/documents.parquet"
 
 

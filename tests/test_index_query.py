@@ -388,3 +388,37 @@ def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
         assert list(sub["doc_id"]) == [d for d, _ in want], qtext
         np.testing.assert_allclose(
             sub["score"].to_numpy(), [s for _, s in want], rtol=0, atol=1e-6)
+
+
+def test_filter_in_both_sides_of_in_list_max(spark, index_dir):
+    """``_filter_in`` forks at ``IN_LIST_MAX``: ≤ that many keys stay a
+    literal IN (pushed to the parquet reader as row-group pruning), one
+    more becomes a broadcast left-semi join. Both sides return exactly
+    the rows whose key is in the list — on a string column (``term``)
+    and on a long column (``doc_id``, as ``more_like_this`` passes; the
+    join's string-typed key column is cast to bigint implicitly)."""
+    from pdf_to_opensearch_spark.query import IN_LIST_MAX, _filter_in
+
+    tables = {
+        "term": spark.read.parquet(f"{index_dir}/dictionary"),
+        "doc_id": spark.read.parquet(f"{index_dir}/docs"),
+    }
+    for col, df in tables.items():
+        present = sorted(r[col] for r in df.select(col).collect())
+        # every other key exists, so both sides match some rows and miss
+        # some keys
+        absent = ([f"zz{i:04d}" for i in range(IN_LIST_MAX)] if col == "term"
+                  else [10_000_000 + i for i in range(IN_LIST_MAX)])
+        keys = [x for pair in zip(present, absent) for x in pair]
+        assert len(keys) > IN_LIST_MAX, (col, len(keys))
+        for n in (IN_LIST_MAX, IN_LIST_MAX + 1):
+            got = _filter_in(df, col, keys[:n])
+            want = sorted(set(keys[:n]) & set(present))
+            assert sorted(r[col] for r in got.select(col).collect()) == want
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            if n <= IN_LIST_MAX:
+                assert "INSET" in plan or " IN (" in plan, (col, n, plan)
+                assert "LeftSemi" not in plan, (col, n, plan)
+            else:
+                assert "LeftSemi" in plan and "Broadcast" in plan, \
+                    (col, n, plan)
