@@ -29,13 +29,15 @@ pieces:
   batch for prefix, wildcard, regexp, fuzzy, query_string and
   match_phrase_prefix. Point lookups are :func:`.query.term_stats`.
 * **One postings executor.** :func:`.query.execute` runs a per-range
-  kernel over the bucket/term-pruned postings: the unfiltered per-file
-  pyio scan (no Exchange), the filtered ``cogroup`` with the allowed-doc
-  frame, or — for ranges split across files — the JVM scan grouped by
-  ``range_id``. Positional kernels decode through
+  kernel over the bucket/term-pruned postings: on the driver when its
+  sized decision says the call is small (no Spark job), else the
+  unfiltered per-file pyio scan (no Exchange), the filtered ``cogroup``
+  with the allowed-doc frame, or — for ranges split across files — the
+  JVM scan grouped by ``range_id``. Positional kernels decode through
   :func:`.query.decode_position_keys`, kernels emit
-  :func:`.query.result_frame` rows, and ranked pages go through the one
-  global top-k window, :func:`.query.ranked_topk`.
+  :func:`.query.result_frame` rows, and ranked pages come from
+  ``execute(..., k=k)`` (or, for pages ranked on Spark expressions, the
+  one global top-k window, :func:`.query.ranked_topk`).
 
 Nothing here collects more than the dictionary rows of the queries' own
 terms and expansions.
@@ -50,6 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import tablefs
 from .analyzer import tokenize_text
 from .codec import decode_postings, tf_norm
 from .indexer import IndexPaths
@@ -84,16 +87,18 @@ def _run_kernel(spark: SparkSession, paths: IndexPaths, stats, qinfo: dict,
                      for t in ns})
     kern = _score_kernel(qinfo, k, stats, prune, bool_spec=bool_spec)
     allowed = _allowed_docs(spark, paths, doc_filter, filter_root)
-    return ranked_topk(execute(spark, paths, stats, live, kern,
-                               allowed=allowed), k)
+    return execute(spark, paths, stats, live, kern, n_queries=len(qinfo),
+                   k=k, allowed=allowed)
 
 
 def _rounded_page(spark: SparkSession, paths: IndexPaths, stats,
-                  live: list[str], kernel, k: int,
+                  live: list[str], kernel, k: int, n_queries: int,
                   need_positions: bool = True) -> DataFrame:
     """Ranked page of a custom per-range kernel, scores rounded to 4 dp
-    BEFORE ranking (the span / intervals / synonym contract)."""
+    BEFORE ranking (the span / intervals / synonym contract) — Spark's
+    ``round``, so the page ranks in Spark."""
     return ranked_topk(execute(spark, paths, stats, live, kernel,
+                               n_queries=n_queries,
                                need_positions=need_positions)
                        .withColumn("score", F.round("score", 4)), k)
 
@@ -115,7 +120,7 @@ def _expand(spark: SparkSession, paths: IndexPaths, probes: list[tuple],
         return []
     probe = spark.createDataFrame(probes, schema)
     keys = probe.columns
-    cand = spark.read.parquet(paths.dictionary).join(F.broadcast(probe))
+    cand = tablefs.spark_read(spark, paths.dictionary).join(F.broadcast(probe))
     for name, col in derived.items():
         cand = cand.withColumn(name, col)
     w = Window.partitionBy(*keys).orderBy(*order)
@@ -382,7 +387,7 @@ def more_like_this(spark: SparkSession, index_dir: str,
     seed_ids = sorted({int(d) for _qid, d in seeds})
     if not seed_ids:
         return spark.createDataFrame([], RANKED)
-    rows = _filter_in(spark.read.parquet(paths.docs)
+    rows = _filter_in(tablefs.spark_read(spark, paths.docs)
                       .select("doc_id", "text"), "doc_id", seed_ids).collect()
     texts = {int(r["doc_id"]): r["text"] for r in rows}
     tfs = {d: Counter(tokenize_text(t or "")) for d, t in texts.items()}
@@ -483,7 +488,7 @@ def _match_docs(spark: SparkSession, index_dir: str,
 
     return execute(spark, IndexPaths(index_dir),
                    load_stats(spark, index_dir), terms, match_kernel,
-                   schema=HITS)
+                   n_queries=len(q_terms), schema=HITS)
 
 
 def _with_docs(hits: DataFrame, index_dir: str, *cols) -> DataFrame:
@@ -491,7 +496,7 @@ def _with_docs(hits: DataFrame, index_dir: str, *cols) -> DataFrame:
     ``cols`` (column names or Column expressions, evaluated on the docs
     side) — the one docs read under every hit-set surface; the parquet
     ReadSchema keeps only the columns those expressions reference."""
-    docs = hits.sparkSession.read.parquet(IndexPaths(index_dir).docs)
+    docs = tablefs.spark_read(hits.sparkSession, IndexPaths(index_dir).docs)
     return hits.join(docs.select("doc_id", *cols), "doc_id")
 
 
@@ -571,7 +576,7 @@ def significant_terms(spark: SparkSession, index_dir: str,
                       F.explode(F.array_distinct("tokens")).alias("term"))
               .groupBy("query_id", "term")
               .agg(F.count("*").alias("fg")))
-        bg = spark.read.parquet(paths.dictionary).select("term", "df")
+        bg = tablefs.spark_read(spark, paths.dictionary).select("term", "df")
         fg_rate = F.col("fg") / F.col("fg_total")
         bg_rate = F.col("df") / F.lit(float(stats.N))
         sig = (fg.join(bg, "term")
@@ -667,7 +672,7 @@ def term_suggest(spark: SparkSession, index_dir: str, text: str,
                   "score double, df bigint, rank int")
     if not srcs:
         return spark.createDataFrame([], out_schema)
-    dictionary = spark.read.parquet(paths.dictionary)
+    dictionary = tablefs.spark_read(spark, paths.dictionary)
     src_df = spark.createDataFrame([(s,) for s in srcs], "src string")
     if mode == "missing":
         # skip tokens the dictionary already knows (suggest only for
@@ -872,7 +877,8 @@ def boosting_search(spark: SparkSession, index_dir: str,
             out = out.assign(score=sc)
         return out
 
-    return ranked_topk(execute(spark, paths, stats, live, kernel), k)
+    return execute(spark, paths, stats, live, kernel, n_queries=len(qinfo),
+                   k=k)
 
 
 # --------------------------------------------------------------- rescore
@@ -1020,7 +1026,8 @@ def query_string_search(spark: SparkSession, index_dir: str,
                   | {t for _m, ns in bool_spec.values() for t in ns})
     combined = execute(spark, paths, stats, live,
                        _score_kernel(qinfo, 1 << 31, stats, prune=False,
-                                     bool_spec=bool_spec))
+                                     bool_spec=bool_spec),
+                       n_queries=len(qinfo))
     ph_qs = [(qid * 1000 + j, p) for qid, ps in phrase_map.items()
              for j, p in enumerate(ps)]
     if ph_qs:
@@ -1305,7 +1312,7 @@ def constant_score_search(spark: SparkSession, index_dir: str,
 
     Returns the standard RANKED page (query_id=0, rank, doc_id, score)."""
     paths = IndexPaths(index_dir)
-    docs = (spark.read.parquet(paths.docs)
+    docs = (tablefs.spark_read(spark, paths.docs)
             .filter(F.expr(filter_expr))
             .select("doc_id"))
     w = Window.partitionBy(F.lit(0)).orderBy(F.col("doc_id").asc())
@@ -1416,7 +1423,7 @@ def search_global_agg(spark: SparkSession, index_dir: str,
 
     Returns DataFrame(query_id, doc_count, vavg)."""
     q_ids = sorted({int(qid) for qid, _ in queries})
-    corpus = (spark.read.parquet(IndexPaths(index_dir).docs)
+    corpus = (tablefs.spark_read(spark, IndexPaths(index_dir).docs)
               .agg(F.count("*").alias("doc_count"),
                    F.round(F.avg(F.expr(value_expr).cast("double")), 4)
                    .alias("vavg")))
@@ -1480,7 +1487,8 @@ def _full_bm25_scores(spark: SparkSession, index_dir: str,
     qinfo = _weighted_qinfo(q_terms, idfs)
     live = sorted({t for ti in qinfo.values() for t in ti})
     return (execute(spark, paths, stats, live,
-                    _score_kernel(qinfo, 1 << 31, stats, prune=False))
+                    _score_kernel(qinfo, 1 << 31, stats, prune=False),
+                    n_queries=len(qinfo))
             .withColumn("score", F.round("score", 4)))
 
 
@@ -1610,7 +1618,7 @@ def span_first_search(spark: SparkSession, index_dir: str,
         return result_frame(out_q, out_d, out_s)
 
     return _rounded_page(spark, paths, stats, sorted(set(q_term.values())),
-                         kernel, k)
+                         kernel, k, len(q_term))
 
 
 def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
@@ -1695,7 +1703,8 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
 
     live = sorted({t for info in qinfo.values()
                    for t in info["fixed"] + info["exp"]})
-    return _rounded_page(spark, paths, stats, live, kernel, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k,
+                         len(qinfo))
 
 
 # --------------------------------------- round-5 filter-context queries
@@ -1802,7 +1811,7 @@ def completion_suggest(spark: SparkSession, index_dir: str,
     Returns DataFrame(query_id, rank, suggestion, weight)."""
     paths = IndexPaths(index_dir)
     out_schema = "query_id int, rank int, suggestion string, weight long"
-    dictionary = spark.read.parquet(paths.dictionary)
+    dictionary = tablefs.spark_read(spark, paths.dictionary)
     outs = []
     for qid, raw in prefixes:
         toks = tokenize_text(raw)
@@ -1876,6 +1885,7 @@ def percolate(spark: SparkSession, index_dir: str,
     return execute(
         spark, paths, stats, live,
         _score_kernel(qinfo, 1 << 31, stats, prune=False, msm_spec=msm_spec),
+        n_queries=len(qinfo),
         allowed=_allowed_docs(spark, paths, doc_filter, filter_root)
     ).select(F.col("query_id").cast("int"), F.col("doc_id").cast("long"))
 
@@ -1971,7 +1981,8 @@ def span_near_search(spark: SparkSession, index_dir: str,
         return result_frame(out_q, out_d, out_s)
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
-    return _rounded_page(spark, paths, stats, live, kernel, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k,
+                         len(qinfo))
 
 
 def search_rare_terms(spark: SparkSession, index_dir: str,
@@ -2160,7 +2171,7 @@ def build_bigram_table(spark: SparkSession, index_dir: str) -> str:
 
     paths = IndexPaths(index_dir)
     out = f"{paths.root}/bigrams"
-    toks = (spark.read.parquet(paths.docs)
+    toks = (tablefs.spark_read(spark, paths.docs)
             .select(tokenize_udf(F.col("text")).alias("t"))
             .filter(F.size("t") >= 2))
     pairs = toks.select(F.explode(F.expr(
@@ -2213,7 +2224,7 @@ def phrase_suggest(spark: SparkSession, index_dir: str, text: str,
     if len(toks) > 5:
         raise ValueError("phrase_suggest caps the phrase at 5 tokens; "
                          f"got {len(toks)}")
-    dictionary = spark.read.parquet(paths.dictionary)
+    dictionary = tablefs.spark_read(spark, paths.dictionary)
     tot = dictionary.agg(F.count("*").alias("v"),
                          F.sum("cf").alias("t")).collect()[0]
     v_size, t_tokens = int(tot["v"]), int(tot["t"])
@@ -2249,7 +2260,7 @@ def phrase_suggest(spark: SparkSession, index_dir: str, text: str,
                       for t in by_pos[i]})
         w2s = sorted({t for i in range(1, len(toks))
                       for t in by_pos[i]})
-        bg = (spark.read.parquet(f"{paths.root}/bigrams")
+        bg = (tablefs.spark_read(spark, f"{paths.root}/bigrams")
               .filter(F.col("w1").isin(w1s) & F.col("w2").isin(w2s))
               .collect())
         bg_counts = {(r["w1"], r["w2"]): int(r["count"]) for r in bg}
@@ -2490,13 +2501,13 @@ def termvectors(spark: SparkSession, index_dir: str,
 
     paths = IndexPaths(index_dir)
     ids = sorted({int(d) for d in doc_ids})
-    docs = (spark.read.parquet(paths.docs)
+    docs = (tablefs.spark_read(spark, paths.docs)
             .filter(F.col("doc_id").isin(ids))
             .select("doc_id", "text"))
     tf = (with_tokens(docs)
           .select("doc_id", F.explode("tokens").alias("term"))
           .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
-    dictionary = (spark.read.parquet(paths.dictionary)
+    dictionary = (tablefs.spark_read(spark, paths.dictionary)
                   .select("term", "df", F.col("cf").alias("ttf")))
     return (tf.join(dictionary, "term", "left")
             .select("doc_id", "term", "tf", "df", "ttf")
@@ -2628,7 +2639,8 @@ def span_not_search(spark: SparkSession, index_dir: str,
 
     live = sorted({t for inc, ex in parsed.values()
                    for t in [inc] + ex})
-    return _rounded_page(spark, paths, stats, live, kernel, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k,
+                         len(parsed))
 
 
 def synonym_search(spark: SparkSession, index_dir: str,
@@ -2706,7 +2718,7 @@ def synonym_search(spark: SparkSession, index_dir: str,
 
     live = sorted({t for groups in qinfo.values()
                    for members, _ in groups for t in members})
-    return _rounded_page(spark, paths, stats, live, kernel, k,
+    return _rounded_page(spark, paths, stats, live, kernel, k, len(qinfo),
                          need_positions=False)
 
 
@@ -2845,7 +2857,7 @@ def mget(spark: SparkSession, index_dir: str, doc_ids: list[int],
 
     Returns DataFrame(doc_id, *cols) ordered by doc_id."""
     ids = sorted({int(d) for d in doc_ids})
-    return (spark.read.parquet(IndexPaths(index_dir).docs)
+    return (tablefs.spark_read(spark, IndexPaths(index_dir).docs)
             .filter(F.col("doc_id").isin(ids))
             .select("doc_id", *cols)
             .orderBy("doc_id"))
@@ -2944,4 +2956,5 @@ def intervals_search(spark: SparkSession, index_dir: str,
         return result_frame(out_q, out_d, out_s)
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
-    return _rounded_page(spark, paths, stats, live, kernel, k)
+    return _rounded_page(spark, paths, stats, live, kernel, k,
+                         len(qinfo))

@@ -30,10 +30,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import tablefs
 from .analyzer import tokenize_text
 from .codec import decode_postings, tf_norm
 from .fields import field_root
-from .indexer import IndexPaths, bucket_of
+from .indexer import IndexPaths, _postings_arrow_schema, bucket_of
 from .query import (
     RANKED,
     RESULT_SCHEMA,
@@ -184,7 +185,8 @@ def multi_match(spark: SparkSession, index_dir: str,
         live = sorted({t for ti in qi.values() for t in ti})
         buckets = sorted({bucket_of(t, stats[f].n_buckets) for t in live})
         scans.append(_filter_in(
-            spark.read.parquet(paths_f.postings)
+            tablefs.spark_read(spark, paths_f.postings,
+                               _postings_arrow_schema())
             .filter(F.col("bucket").isin(buckets)), "term", live)
             .withColumn("fld", F.lit(f)))
     if not scans:

@@ -16,8 +16,16 @@ Physical plan:
    surface calls — runs a per-range kernel on each WHOLE doc range's
    postings rows. Because every document lives in exactly one range,
    per-range scores are complete — no cross-range combine of partial
-   scores is needed. It picks one of three branches:
+   scores is needed. An unfiltered call first takes one sized decision
+   (:func:`_runs_on_driver`): with B the compressed bytes of the pruned
+   row groups (cached footer summaries), Q the queries and S the task
+   slots, it runs on the driver iff (α·B + β·Q)·(1 − 1/S) ≤ F, with α,
+   β and F measured (see the constants) and B capped. Then it picks one
+   of four branches:
 
+   * unfiltered and small: the driver reads the pruned postings with
+     pyarrow, runs the same kernel per range, ranks in pandas and
+     returns a local relation — the call runs no Spark job;
    * unfiltered, range-aligned postings: one ``mapInPandas`` task per
      bin of postings files reads them with pyarrow through the
      filesystem :func:`tablefs.resolve` returns (C++-side bucket/term
@@ -34,15 +42,20 @@ Physical plan:
    block-max pruning drops whole 128-posting blocks whose summed upper
    bounds cannot reach the running threshold (sound: uses the per-block
    max stored at build time; differential-tested vs exhaustive).
-4. Global top-k (:func:`ranked_topk`): per-range candidates are
-   ≤ k·n_ranges rows → window ``row_number() over (partition by query
-   order by score desc, doc_id)`` ≤ k (TakeOrderedAndProject-scale, not
-   a full sort).
+4. Global top-k (``execute(..., k=k)``): per-range candidates are
+   ≤ k·n_ranges rows → (score desc, doc_id asc) rank ≤ k per query, in
+   pandas on the driver side and as the :func:`ranked_topk` window
+   ``row_number() over (partition by query order by score desc,
+   doc_id)`` on the distributed side (TakeOrderedAndProject-scale, not a
+   full sort).
 
 Rank identity: ties broken by ascending doc_id everywhere, scores f64.
 """
 
 from __future__ import annotations
+
+import bisect
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -62,7 +75,6 @@ from .indexer import (
     IndexPaths,
     IndexStats,
     _postings_arrow_schema,
-    _range_spans,
     _spans_disjoint,
     bucket_of,
     load_stats,
@@ -144,7 +156,76 @@ def result_frame(query_ids, doc_ids, scores=None) -> pd.DataFrame:
     return pd.DataFrame(cols)
 
 
-_ALIGN_CACHE: dict[tuple, bool] = {}
+# ------------------------------------------------- postings footer cache
+
+class _Footer(NamedTuple):
+    """What :func:`execute` needs from one postings file's parquet footer.
+
+    ``span``: (min, max) ``range_id`` over the file (None: no rows);
+    ``range_stats``: every row group carries ``range_id`` min/max;
+    ``groups``: per row group, ``(bucket_lo, bucket_hi, term_lo,
+    term_hi, {column: compressed bytes})`` — a None bound means the row
+    group has no statistics for that column and may hold any value."""
+
+    span: tuple[int, int] | None
+    range_stats: bool
+    groups: tuple
+
+
+_FOOTERS: dict[tuple, _Footer] = {}
+_FOOTERS_MAX = 4096
+
+
+def _read_footer(fs, path: str) -> _Footer:
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path, filesystem=fs)
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+
+    def bounds(rg, col):
+        st = rg.column(names.index(col)).statistics if col in names else None
+        return (st.min, st.max) if st is not None and st.has_min_max \
+            else (None, None)
+
+    lo = hi = None
+    range_stats = True
+    groups = []
+    for r in range(md.num_row_groups):
+        rg = md.row_group(r)
+        r_lo, r_hi = bounds(rg, "range_id")
+        if r_lo is None:
+            range_stats = False
+        else:
+            lo = r_lo if lo is None else min(lo, r_lo)
+            hi = r_hi if hi is None else max(hi, r_hi)
+        groups.append((*bounds(rg, "bucket"), *bounds(rg, "term"),
+                       {n: rg.column(i).total_compressed_size
+                        for i, n in enumerate(names)}))
+    return _Footer(None if lo is None else (lo, hi), range_stats,
+                   tuple(groups))
+
+
+def _footers(fs, infos: list) -> list[_Footer]:
+    """The footer summary of each postings file (``FileInfo``s of
+    ``fs``), cached per file snapshot (path, mtime, size): an append
+    adds files and re-reads only theirs."""
+    out = []
+    for i in infos:
+        key = (i.path, i.mtime_ns, i.size)
+        ft = _FOOTERS.get(key)
+        if ft is None:
+            if len(_FOOTERS) >= _FOOTERS_MAX:
+                _FOOTERS.clear()
+            ft = _FOOTERS[key] = _read_footer(fs, i.path)
+        out.append(ft)
+    return out
+
+
+def _aligned(feet: list[_Footer]) -> bool:
+    """Pairwise-disjoint ``range_id`` spans ⟹ every range lives wholly
+    in one file."""
+    return (all(ft.range_stats for ft in feet)
+            and _spans_disjoint(ft.span for ft in feet))
 
 
 def _ranges_file_aligned(fs, files: list[str]) -> bool:
@@ -153,39 +234,108 @@ def _ranges_file_aligned(fs, files: list[str]) -> bool:
     Every builder writes range-aligned files, but an external rewrite
     (a crash-simulation overwrite, a third-party compaction) can
     scatter a range across files, and a kernel that sees only part of
-    a range would emit wrong partial scores. Checked from parquet
-    FOOTER stats only (range_id min/max per file, pairwise-disjoint
-    intervals ⟹ aligned); memoized per (path, mtime, size) snapshot."""
-    key = tuple((i.path, i.mtime_ns, i.size) for i in fs.get_file_info(files))
-    hit = _ALIGN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    try:
-        ok = _spans_disjoint(_range_spans(fs, files))
-    except ValueError:
-        ok = False
-    if len(_ALIGN_CACHE) > 64:
-        _ALIGN_CACHE.clear()
-    _ALIGN_CACHE[key] = ok
-    return ok
+    a range would emit wrong partial scores. Checked from the cached
+    footer summaries only (:func:`_footers`)."""
+    return _aligned(_footers(fs, fs.get_file_info(files)))
+
+
+def _footprint(feet: list[_Footer], buckets: dict[str, int],
+               cols: list[str]) -> int:
+    """Compressed bytes of ``cols`` in the row groups whose bucket and
+    term statistics admit one of the live terms (``buckets``: term →
+    bucket) — what the bucket/term-pruned read decodes."""
+    terms = sorted(buckets)
+    total = 0
+    for ft in feet:
+        for b_lo, b_hi, t_lo, t_hi, nbytes in ft.groups:
+            i = 0 if t_lo is None else bisect.bisect_left(terms, t_lo)
+            j = (len(terms) if t_hi is None
+                 else bisect.bisect_right(terms, t_hi))
+            if any((b_lo is None or b_lo <= buckets[t] <= b_hi)
+                   for t in terms[i:j]):
+                total += sum(nbytes.get(c, 0) for c in cols)
+    return total
+
+
+# ------------------------------------------------- the sized decision
+#
+# A distributed call pays a fixed cost before any work (mapInPandas task
+# turnaround, closure shipping, the top-k Window's shuffle job); a driver
+# call does the work serially. With per-call work W = α·B + β·Q
+# (B compressed postings bytes to decode, Q queries to score and rank)
+# and S task slots, the driver wins iff W ≤ F + W/S, i.e.
+# W·(1 − 1/S) ≤ F. Fitted by least squares to 11 same-session pairs on a
+# 4-CPU box (local[4], Spark 4.1, pyarrow 16; synthetic indexes of 1,500
+# and 6,000 pages, 4 ranges, B 1.2–6.5 MB, Q 1–1,024, median of 3 calls
+# per side): driver call = 19 ms + α·B + β·Q, distributed call =
+# 624 ms + W/4. The model puts 10 of the 11 on their faster side; the
+# eleventh (1.2 MB, 1,024 queries) was a tie (821 vs 823 ms), and 6.5 MB
+# at 1,024 queries stays distributed (1,175 vs 931 ms).
+DRIVER_MS_PER_MB = 27.0       # α: pyarrow read + decode + kernel, per MB
+DRIVER_MS_PER_QUERY = 0.85    # β: kernel + pandas rank, per query
+DISTRIBUTED_FIXED_MS = 600.0  # F: distributed minus driver call at W = 0
+# The driver never reads more than this many compressed postings bytes,
+# whatever the cost model says (with one slot it always says driver): it
+# bounds the driver's memory.
+DRIVER_MAX_BYTES = 32 << 20
+
+
+def _runs_on_driver(footprint: int, n_queries: int, slots: int) -> bool:
+    """The one sized decision of :func:`execute` (see the constants)."""
+    if footprint > DRIVER_MAX_BYTES:
+        return False
+    work = (DRIVER_MS_PER_MB * footprint / (1 << 20)
+            + DRIVER_MS_PER_QUERY * n_queries)
+    return work * (1.0 - 1.0 / max(1, slots)) <= DISTRIBUTED_FIXED_MS
+
+
+# ---------------------------------------------------- the one executor
+
+def _kernel_over(fs, files, cols: list[str], filters: list, kernel,
+                 use_threads: bool):
+    """The one scan body: read ``files`` (one path or a list) with the
+    bucket/term ``filters``, group the rows by ``range_id`` (across
+    files, so a range split over several files is still whole) and
+    yield each non-empty ``kernel`` output."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(files, columns=cols, filters=filters,
+                        use_threads=use_threads, filesystem=fs)
+    if tbl.num_rows == 0:
+        return
+    for _rid, grp in tbl.to_pandas().groupby("range_id", sort=False):
+        out = kernel(grp)
+        if len(out):
+            yield out
 
 
 def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
-            live_terms: list[str], kernel, *, need_positions: bool = False,
+            live_terms: list[str], kernel, *, n_queries: int,
+            k: int | None = None, need_positions: bool = False,
             allowed: DataFrame | None = None,
             schema: str = RESULT_SCHEMA) -> DataFrame:
     """The one postings executor: run ``kernel`` on the bucket/term-pruned
     postings rows of ``live_terms``, one WHOLE doc range per call, and
-    return the union of its outputs (``schema``).
+    return the union of its outputs (``schema``) — or, with ``k``, the
+    global top-k page of them (:data:`RANKED`, the :func:`ranked_topk`
+    rule).
 
     ``kernel(pdf)`` gets one range's postings rows; with ``allowed`` (a
     (doc_id, range_id) frame, see :func:`_allowed_docs`) it is called as
     ``kernel(pdf, allowed_ids)`` with that range's allowed doc_ids. The
     ``poss`` column is read only with ``need_positions=True``.
+    ``n_queries`` is the number of queries the kernel scores.
 
     Branches (this is the only place that reads the postings table for a
     query):
 
+    * unfiltered and small — the driver scan: when the sized decision
+      (:func:`_runs_on_driver`) says the footprint of the pruned row
+      groups (from the cached footers, :func:`_footers`) and
+      ``n_queries`` cost less on the driver than a distributed call's
+      fixed cost, the driver reads the postings with pyarrow, runs the
+      kernel per range, ranks in pandas and returns the rows as a local
+      relation: no Spark job at all;
     * unfiltered, range-aligned postings — the pyio scan: one
       ``mapInPandas`` task per bin of postings files reads them with
       pyarrow through the resolved filesystem (``filters=`` gives
@@ -201,50 +351,93 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
       global id broadcast;
     * a range split across files — the JVM scan grouped by
       ``range_id``. A per-file task would see part of a range and emit
-      wrong partial scores, so this is the only correct path for that
-      layout.
+      wrong partial scores, so this is the distributed path for that
+      layout (the driver scan groups across files and is correct too).
 
-    No ``live_terms`` → :func:`empty_frame`: no postings are read.
+    No ``live_terms`` (or ``k`` < 1) → :func:`empty_frame`: no postings
+    are read.
     """
+    if k is not None and k < 1:
+        return empty_frame(spark, RANKED)
     if not live_terms:
-        return empty_frame(spark, schema)
-    buckets = sorted({bucket_of(t, stats.n_buckets) for t in live_terms})
-    terms = sorted(live_terms)
+        return empty_frame(spark, schema if k is None else RANKED)
+    bucket = {t: bucket_of(t, stats.n_buckets) for t in live_terms}
+    buckets = sorted(set(bucket.values()))
+    terms = sorted(bucket)
+    cols = [c for c in _postings_arrow_schema().names
+            if need_positions or c != "poss"]
     if allowed is None:
         fs, post_dir = tablefs.resolve(spark, paths.postings)
         files = tablefs.list_files(fs, post_dir)
-        if files and _ranges_file_aligned(fs, [f.path for f in files]):
-            return _pyio_scan(spark, fs, files, kernel, buckets, terms,
-                              need_positions, schema)
+        feet = _footers(fs, files)
+        slots = max(1, spark.sparkContext.defaultParallelism)
+        if _runs_on_driver(_footprint(feet, bucket, cols), n_queries, slots):
+            return _driver_scan(spark, fs, files, kernel, cols, buckets,
+                                terms, schema, k)
+        if files and _aligned(feet):
+            return _ranked(_pyio_scan(spark, fs, files, kernel, buckets,
+                                      terms, cols, schema), k)
     postings = _filter_in(                                    # row-group pruning
-        spark.read.parquet(paths.postings)
+        tablefs.spark_read(spark, paths.postings, _postings_arrow_schema())
         .filter(F.col("bucket").isin(buckets)),               # partition pruning
-        "term", terms)
-    if not need_positions:
-        postings = postings.drop("poss")
+        "term", terms).select(*cols)
     if allowed is not None:
-        return (postings.groupBy("range_id")
-                .cogroup(allowed.groupBy("range_id"))
-                .applyInPandas(
-                    lambda pdf, ok: kernel(
-                        pdf, ok["doc_id"].to_numpy(np.int64)),
-                    schema=schema))
-    return (postings.groupBy("range_id")
-            .applyInPandas(lambda pdf: kernel(pdf), schema=schema))
+        return _ranked(postings.groupBy("range_id")
+                       .cogroup(allowed.groupBy("range_id"))
+                       .applyInPandas(
+                           lambda pdf, ok: kernel(
+                               pdf, ok["doc_id"].to_numpy(np.int64)),
+                           schema=schema), k)
+    return _ranked(postings.groupBy("range_id")
+                   .applyInPandas(lambda pdf: kernel(pdf), schema=schema), k)
+
+
+def _ranked(per_range: DataFrame, k: int | None) -> DataFrame:
+    return per_range if k is None else ranked_topk(per_range, k)
+
+
+def _driver_scan(spark: SparkSession, fs, files: list, kernel,
+                 cols: list[str], buckets: list[int], terms: list[str],
+                 schema: str, k: int | None) -> DataFrame:
+    """:func:`execute`'s driver branch: ONE pyarrow read of every
+    postings file (``FileInfo``s of ``fs``) with the bucket/term
+    filters, the kernel per range, the pandas top-k with ``k``, and the
+    rows as a local relation — ``createDataFrame`` of a pandas frame
+    plans a ``LocalRelation``, which collects with no Spark job."""
+    filters = [("bucket", "in", buckets), ("term", "in", terms)]
+    outs = list(_kernel_over(fs, [f.path for f in files], cols, filters,
+                             kernel, use_threads=True)) if files else []
+    if k is not None:
+        schema = RANKED
+    if not outs:
+        return empty_frame(spark, schema)
+    pdf = pd.concat(outs, ignore_index=True)
+    if k is not None:
+        pdf = _rank_pandas(pdf, k)
+    names = [f.split()[0] for f in schema.split(",")]
+    return spark.createDataFrame(pdf[names], schema)
+
+
+def _rank_pandas(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
+    """:func:`ranked_topk` in pandas: per query, (score desc, doc_id
+    asc), ``rank`` int32 from 1, ranks ≤ ``k``."""
+    pdf = pdf.sort_values(["query_id", "score", "doc_id"],
+                          ascending=[True, False, True], kind="mergesort",
+                          ignore_index=True)
+    rank = pdf.groupby("query_id", sort=False).cumcount() + 1
+    pdf = pdf.assign(rank=rank.astype("int32"))
+    return pdf[pdf["rank"] <= k]
 
 
 def _pyio_scan(spark: SparkSession, fs, files: list, kernel,
-               buckets: list[int], terms: list[str], need_positions: bool,
+               buckets: list[int], terms: list[str], cols: list[str],
                schema: str) -> DataFrame:
-    """:func:`execute`'s unfiltered branch over range-aligned postings
+    """:func:`execute`'s distributed branch over range-aligned postings
     ``files`` (``FileInfo``s of ``fs``; every range's rows live in
     exactly one file, by the build's range-alignment invariant)."""
-    cols = [c for c in _postings_arrow_schema().names
-            if need_positions or c != "poss"]
 
     def task(it):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         # Spark's task slots are the parallelism; Arrow's own pool
         # defaults to ALL host CPUs per process (oversubscription)
@@ -253,15 +446,8 @@ def _pyio_scan(spark: SparkSession, fs, files: list, kernel,
         filters = [("bucket", "in", buckets), ("term", "in", terms)]
         for fdf in it:
             for path in (p for b in fdf["bin"] for p in bins[int(b)]):
-                tbl = pq.read_table(path, columns=cols, filters=filters,
-                                    use_threads=False, filesystem=fs)
-                if tbl.num_rows == 0:
-                    continue
-                pdf = tbl.to_pandas()
-                for _rid, grp in pdf.groupby("range_id", sort=False):
-                    out = kernel(grp)
-                    if len(out):
-                        yield out
+                yield from _kernel_over(fs, path, cols, filters, kernel,
+                                        use_threads=False)
 
     # task granularity (round 6): each mapInPandas task pays a fixed
     # JVM↔worker turnaround (closure deserialize — the query batch's
@@ -644,7 +830,7 @@ def _allowed_docs(spark: SparkSession, paths: IndexPaths,
         return None
     if filter_root:
         paths = IndexPaths(filter_root)
-    return (spark.read.parquet(paths.docs).filter(doc_filter)
+    return (tablefs.spark_read(spark, paths.docs).filter(doc_filter)
             .select("doc_id", "range_id"))
 
 
@@ -852,7 +1038,7 @@ def explain_scores(spark: SparkSession, index_dir: str,
                                                              "doc_id")
     else:
         hits = hits.select("query_id", "doc_id")
-    docs = spark.read.parquet(paths.docs).select("doc_id", "text")
+    docs = tablefs.spark_read(spark, paths.docs).select("doc_id", "text")
     hit_docs = (hits.join(docs, "doc_id")
                 .withColumn("dl", token_count_udf(F.col("text"))
                             .cast("double")))
@@ -960,8 +1146,8 @@ class Searcher:
                              msm_spec=msm_spec)
         allowed = _allowed_docs(self.spark, self.paths, doc_filter,
                                 filter_root)
-        return ranked_topk(execute(self.spark, self.paths, stats,
-                                   live_terms, kern, allowed=allowed), k)
+        return execute(self.spark, self.paths, stats, live_terms, kern,
+                       n_queries=len(qinfo), k=k, allowed=allowed)
 
     def phrase_search(self, queries: list[tuple[int, str]], k: int = 10,
                       doc_filter: str | None = None,
@@ -994,6 +1180,6 @@ class Searcher:
         kern = _phrase_kernel(qinfo, k, stats, slop=slop)
         allowed = _allowed_docs(self.spark, self.paths, doc_filter,
                                 filter_root)
-        return ranked_topk(execute(self.spark, self.paths, stats,
-                                   live_terms, kern, need_positions=True,
-                                   allowed=allowed), k)
+        return execute(self.spark, self.paths, stats, live_terms, kern,
+                       n_queries=len(qinfo), k=k, need_positions=True,
+                       allowed=allowed)

@@ -54,6 +54,7 @@ def get_spark(app: str = "pdf_to_opensearch_spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
     )
     if daemon:
         builder = builder.config("spark.python.daemon.module", daemon)

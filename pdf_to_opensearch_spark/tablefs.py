@@ -99,6 +99,24 @@ def read_small_table(spark, path: str, **kwargs) -> pd.DataFrame:
     return pq.read_table(files, filesystem=fs, **kwargs).to_pandas()
 
 
+def spark_read(spark, path: str, arrow_schema=None):
+    """``spark.read.parquet(path)`` with the schema declared, so Spark
+    starts no schema-inference job before reading: ``arrow_schema`` when
+    the caller knows it, else the Arrow schema of the table's first data
+    file's footer, converted as Spark converts it. A dir without data
+    files reads as before."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if arrow_schema is None:
+        fs, p = resolve(spark, path)
+        files = list_files(fs, p)
+        if not files:
+            return spark.read.parquet(path)
+        arrow_schema = pq.read_schema(files[0].path, filesystem=fs)
+    return spark.read.schema(from_arrow_schema(arrow_schema)).parquet(path)
+
+
 def write_small_table(spark, pdf: pd.DataFrame, path: str) -> None:
     """Overwrite a tiny driver-side table (one file): a full Spark job for
     a 1-row parquet is pure scheduling overhead (~0.3 s) that shows up

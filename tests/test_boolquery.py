@@ -229,12 +229,38 @@ def _tfnorm(oracle, term, k1=1.2, b=0.75):
     return out
 
 
+def _fuzzy_brute(oracle, qtext: str, max_edits: int, max_exp: int,
+                 k: int) -> list[tuple[int, float]]:
+    """Brute-force fuzzy top-k: per source token the closest-first
+    Levenshtein-≤max_edits expansion cut at max_exp, each term weighted
+    (1 − d/|src|)·idf and accumulated across source tokens."""
+    from pdf_to_opensearch_spark.oracle import idf as idf_fn
+
+    vocab = sorted(oracle.index)
+    weights: dict[str, float] = {}
+    for src in tokenize_text(qtext):
+        exp = sorted(((_lev(t, src), t) for t in vocab
+                      if _lev(t, src) <= max_edits))[:max_exp]
+        for d, t in exp:
+            boost = 1.0 - d / len(src)
+            if boost <= 0:
+                continue
+            w = float(idf_fn(oracle.N, np.array([len(oracle.index[t])]))[0])
+            weights[t] = weights.get(t, 0.0) + boost * w
+    scores: dict[int, float] = {}
+    for t, w in weights.items():
+        for i, tn in _tfnorm(oracle, t).items():
+            scores[i] = scores.get(i, 0.0) + w * tn
+    return sorted(((int(oracle.doc_ids[i]), s)
+                   for i, s in scores.items() if s > 0),
+                  key=lambda kv: (-kv[1], kv[0]))[:k]
+
+
 def test_fuzzy_vs_brute(spark, index_dir, corpus):
     """FuzzyQuery: Levenshtein-≤2 expansion, closest-first cut at
     max_expansions, per-term weight (1 − d/|src|)·idf accumulated across
     source tokens, scored as a weighted disjunction."""
     from pdf_to_opensearch_spark.boolquery import fuzzy_search
-    from pdf_to_opensearch_spark.oracle import idf as idf_fn
 
     _, oracle = corpus
     queries = [(1, "sprak"), (2, "documnt postng"), (3, "zqzqzqzq")]
@@ -242,29 +268,66 @@ def test_fuzzy_vs_brute(spark, index_dir, corpus):
     got = fuzzy_search(spark, index_dir, queries, k=k,
                        max_edits=max_edits,
                        max_expansions=max_exp).toPandas()
-    vocab = sorted(oracle.index)
     for qid, qtext in queries:
-        weights: dict[str, float] = {}
-        for src in tokenize_text(qtext):
-            exp = sorted(((_lev(t, src), t) for t in vocab
-                          if _lev(t, src) <= max_edits))[:max_exp]
-            for d, t in exp:
-                boost = 1.0 - d / len(src)
-                if boost <= 0:
-                    continue
-                w = float(idf_fn(oracle.N, np.array([len(oracle.index[t])]))[0])
-                weights[t] = weights.get(t, 0.0) + boost * w
-        scores: dict[int, float] = {}
-        for t, w in weights.items():
-            for i, tn in _tfnorm(oracle, t).items():
-                scores[i] = scores.get(i, 0.0) + w * tn
-        exp_rank = sorted(((int(oracle.doc_ids[i]), s)
-                           for i, s in scores.items() if s > 0),
-                          key=lambda kv: (-kv[1], kv[0]))[:k]
+        exp_rank = _fuzzy_brute(oracle, qtext, max_edits, max_exp, k)
         sub = got[got.query_id == qid].sort_values("rank")
         assert list(sub.doc_id) == [d for d, _ in exp_rank], f"qid {qid}"
         np.testing.assert_allclose(sub.score.to_numpy(),
                                    [s for _, s in exp_rank], rtol=1e-9)
+
+
+SIDE_CASES = ("bool", "fuzzy", "prefix")
+
+
+@pytest.mark.parametrize("case", SIDE_CASES)
+def test_execute_sides_agree_and_match_brute(spark, index_dir, corpus,
+                                             force_side, case):
+    """Both sides of query.execute's sized decision give the same doc ids
+    with bit-identical scores for bool, fuzzy and prefix, and both match
+    the brute-force oracles."""
+    from pdf_to_opensearch_spark.boolquery import fuzzy_search
+
+    _, oracle = corpus
+    if case == "bool":
+        queries = [(i + 1, q) for i, q in enumerate(BOOL_CASES)]
+        run = lambda: boolean_search(spark, index_dir, queries, k=K)  # noqa
+    elif case == "fuzzy":
+        queries = [(1, "sprak"), (2, "documnt postng")]
+        run = lambda: fuzzy_search(spark, index_dir, queries, k=K)  # noqa
+    else:
+        queries = [(1, "po"), (2, "sp"), (3, "do")]
+        run = lambda: prefix_search(spark, index_dir, queries, k=K)  # noqa
+    got = {}
+    for side in ("driver", "distributed"):
+        force_side(side)
+        df = run()
+        tree = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted").split("\n\n")[0]
+        assert ("MapInPandas" in tree) == (side == "distributed"), tree
+        got[side] = (df.toPandas()
+                     .sort_values(["query_id", "rank"], ignore_index=True))
+    drv, dist = got["driver"], got["distributed"]
+    assert len(drv) > 0
+    assert list(drv.query_id) == list(dist.query_id)
+    assert list(drv.doc_id) == list(dist.doc_id)
+    np.testing.assert_array_equal(drv.score.to_numpy(), dist.score.to_numpy())
+    for qid, q in queries:
+        if case == "bool":
+            allowed = _bool_allowed(oracle, q.get("must", ""),
+                                    q.get("must_not", ""))
+            scoring = (q.get("must", "") + " " + q.get("should", "")).strip()
+            want = ([] if q.get("must") and any(
+                t not in oracle.index for t in tokenize_text(q["must"]))
+                else oracle.search(scoring, k=K, allowed=allowed))
+        elif case == "fuzzy":
+            want = _fuzzy_brute(oracle, q, 2, 50, K)
+        else:
+            exp = sorted(t for t in oracle.index if t.startswith(q))[:50]
+            want = oracle.search(" ".join(exp), K)
+        sub = drv[drv.query_id == qid]
+        assert list(sub.doc_id) == [d for d, _ in want], (case, qid)
+        np.testing.assert_allclose(sub.score.to_numpy(),
+                                   [s for _, s in want], rtol=1e-9)
 
 
 def test_wildcard_prefix_equivalence(spark, index_dir, corpus):

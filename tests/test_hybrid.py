@@ -163,3 +163,16 @@ def test_search_hybrid_lsh_mode(spark, hybrid_setup):
     assert list(got["rank"]) == list(range(1, K + 1))
     with pytest.raises(ValueError, match="vector_mode"):
         search_hybrid(spark, root, queries, vector_mode="bogus")
+
+
+def test_knn_docs_scan_reads_two_columns(spark, hybrid_setup):
+    """knn_docs_topk's docs scan reads only doc_id and the embedding:
+    the parquet ReadSchema holds those two columns, never text/url."""
+    from pdf_to_opensearch_spark.hybrid import knn_docs_topk
+
+    root, _oracle, emb = hybrid_setup
+    df = knn_docs_topk(spark, root, [(1, list(emb[0]))], k=5)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    schemas = [seg.split("\n")[0] for seg in plan.split("ReadSchema: ")[1:]]
+    assert schemas == ["struct<doc_id:bigint,embedding:array<double>>"], plan

@@ -333,11 +333,14 @@ def _split_one_range(root: str) -> None:
 
 
 def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
-                                                       corpus, tmp_path):
-    """Both sides of query.execute's unfiltered fork: with one range
-    split across two postings files the per-file pyio scan would score
-    partial ranges, so execute must take the JVM range_id grouping —
-    and every surface must return the rows of the aligned index."""
+                                                       corpus, tmp_path,
+                                                       force_side):
+    """Both sides of query.execute's unfiltered distributed fork: with
+    one range split across two postings files the per-file pyio scan
+    would score partial ranges, so execute must take the JVM range_id
+    grouping — and every surface must return the rows of the aligned
+    index. (The distributed side of the sized decision is pinned; the
+    driver side is :func:`test_driver_scan_reads_split_ranges_whole`.)"""
     import glob
     import os
     import shutil
@@ -348,6 +351,7 @@ def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
     from pdf_to_opensearch_spark.boolquery import fuzzy_search
     from pdf_to_opensearch_spark.query import Searcher, _ranges_file_aligned
 
+    force_side("distributed")
     _, oracle = corpus
     split = str(tmp_path / "split_idx")
     shutil.copytree(index_dir, split)
@@ -388,6 +392,190 @@ def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
         assert list(sub["doc_id"]) == [d for d, _ in want], qtext
         np.testing.assert_allclose(
             sub["score"].to_numpy(), [s for _, s in want], rtol=0, atol=1e-6)
+
+
+def test_driver_scan_reads_split_ranges_whole(spark, index_dir, tmp_path):
+    """The driver side of query.execute's sized decision reads every
+    pruned postings file in one table and groups by range_id across
+    files, so a range split over two files is scored whole: on the split
+    index search, phrase and fuzzy return the aligned index's rows, and
+    each plan is one local relation (no Spark scan)."""
+    import shutil
+
+    import pandas as pd
+
+    from pdf_to_opensearch_spark.boolquery import fuzzy_search
+    from pdf_to_opensearch_spark.query import Searcher
+
+    split = str(tmp_path / "split_idx")
+    shutil.copytree(index_dir, split)
+    _split_one_range(split)
+
+    def rows(df):
+        tree = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted").split("\n\n")[0]
+        assert tree.splitlines()[1:] == ["LocalTableScan (1)"], tree
+        return (df.toPandas().sort_values(["query_id", "rank"],
+                                          ignore_index=True))
+
+    got = {}
+    for name, root in (("aligned", index_dir), ("split", split)):
+        got[name] = (
+            rows(search(spark, root, QUERIES, k=K, prune=False)),
+            rows(Searcher(spark, root).phrase_search(
+                [(1, "duplicate content row"), (3, "spark index")], k=K)),
+            rows(fuzzy_search(spark, root, [(1, "sprak indx")], k=K)))
+    for a, b in zip(got["aligned"], got["split"]):
+        assert len(a) > 0
+        pd.testing.assert_frame_equal(a, b)
+
+
+def _rows_after(ranked, after):
+    """The oracle's ranked (doc_id, score) rows after a search_after
+    cursor: those below the cursor's doc in the oracle's own order (the
+    cursor's score is the engine's, so it is matched by doc_id)."""
+    if after is None:
+        return ranked
+    ids = [d for d, _ in ranked]
+    return ranked[ids.index(after[1]) + 1:]
+
+
+SIDE_CASES = {
+    "prune": dict(prune=True),
+    "exact": dict(prune=False),
+    "msm": dict(minimum_should_match="67%"),
+    "after": dict(after=True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SIDE_CASES))
+def test_execute_sides_agree_and_match_oracle(spark, index_dir, corpus,
+                                              force_side, case):
+    """Both sides of query.execute's sized decision return the same doc
+    ids with bit-identical scores, and both match BruteForceBM25, for
+    search with prune on and off, minimum_should_match and a
+    search_after cursor."""
+    from pdf_to_opensearch_spark.analyzer import tokenize_text
+    from pdf_to_opensearch_spark.query import resolve_msm
+
+    _, oracle = corpus
+    opts = dict(SIDE_CASES[case])
+    cursors = None
+    if opts.pop("after", False):
+        first = search(spark, index_dir, QUERIES, k=3).toPandas()
+        cursors = {int(q): (float(g.score.iloc[-1]), int(g.doc_id.iloc[-1]))
+                   for q, g in first.sort_values("rank").groupby("query_id")}
+        opts["after"] = cursors
+    got = {}
+    for side in ("driver", "distributed"):
+        force_side(side)
+        df = search(spark, index_dir, QUERIES, k=K, **opts)
+        tree = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted").split("\n\n")[0]
+        assert ("MapInPandas" in tree) == (side == "distributed"), tree
+        got[side] = (df.toPandas()
+                     .sort_values(["query_id", "rank"], ignore_index=True))
+    drv, dist = got["driver"], got["distributed"]
+    assert list(drv.query_id) == list(dist.query_id)
+    assert list(drv.doc_id) == list(dist.doc_id)
+    assert list(drv["rank"]) == list(dist["rank"])
+    np.testing.assert_array_equal(drv.score.to_numpy(), dist.score.to_numpy())
+    assert len(drv) > 0
+    for qid, qtext in QUERIES:
+        allowed = None
+        if case == "msm":
+            m = resolve_msm("67%", len(set(tokenize_text(qtext))))
+            tally: dict[int, int] = {}
+            for t in set(tokenize_text(qtext)):
+                for d in oracle.index.get(t, {}):
+                    tally[d] = tally.get(d, 0) + 1
+            allowed = {int(oracle.doc_ids[d]) for d, c in tally.items()
+                       if c >= m}
+        want = (oracle.search(qtext, oracle.N, allowed=allowed)
+                if allowed is None or allowed else [])
+        want = _rows_after(want, (cursors or {}).get(qid))[:K]
+        sub = drv[drv["query_id"] == qid]
+        assert list(sub["doc_id"]) == [d for d, _ in want], (case, qtext)
+        np.testing.assert_allclose(
+            sub["score"].to_numpy(), [s for _, s in want], rtol=0, atol=1e-6)
+
+
+def test_below_the_bound_search_and_phrase_run_no_spark_job(spark,
+                                                            index_dir):
+    """With the default bound the small fixture index is served by the
+    driver scan: Searcher.search(...).collect() and
+    phrase_search(...).collect() start no Spark job at all."""
+    from pdf_to_opensearch_spark.query import Searcher
+
+    sc = spark.sparkContext
+    searcher = Searcher(spark, index_dir)
+    calls = {
+        "search": lambda: searcher.search(QUERIES, k=K).collect(),
+        "search_exact": lambda: searcher.search(QUERIES, k=K,
+                                                prune=False).collect(),
+        "phrase": lambda: searcher.phrase_search(
+            [(1, "duplicate content row"), (2, "spark index")],
+            k=K).collect(),
+    }
+    for name, call in calls.items():
+        group = f"no-job-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows, name
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
+def test_sized_decision_counts_bytes_and_queries():
+    """The decision's measured side of each probe point (4 slots): a
+    point query and a 64-query batch over a few MB run on the driver; a
+    1,024-query batch over a 6.5 MB footprint stays distributed, as does
+    anything above the driver's byte cap; with one slot there is nothing
+    to parallelize, so only the cap decides."""
+    from pdf_to_opensearch_spark.query import DRIVER_MAX_BYTES, _runs_on_driver
+
+    mb = 1 << 20
+    assert _runs_on_driver(int(1.2 * mb), 1, 4)
+    assert _runs_on_driver(int(1.2 * mb), 64, 4)
+    assert _runs_on_driver(int(6.5 * mb), 256, 4)
+    assert not _runs_on_driver(int(6.5 * mb), 1024, 4)
+    assert not _runs_on_driver(DRIVER_MAX_BYTES + 1, 1, 4)
+    assert _runs_on_driver(DRIVER_MAX_BYTES, 100_000, 1)
+    assert not _runs_on_driver(DRIVER_MAX_BYTES + 1, 1, 1)
+
+
+def test_small_derived_docs_max_both_sides_build_equal_tables(
+        spark, tmp_path, monkeypatch):
+    """The same corpus built with SMALL_DERIVED_DOCS_MAX at its default
+    (driver-side derived tables) and at 0 (the distributed epilogue)
+    gives equal dictionary, manifest, stats and docs_meta tables."""
+    import pandas as pd
+
+    from pdf_to_opensearch_spark import indexer, tablefs
+
+    pages = make_pages(spark, n_docs=60, seed=13, partitions=2)
+    roots = {}
+    for name, bound in (("driver", indexer.SMALL_DERIVED_DOCS_MAX),
+                        ("distributed", 0)):
+        monkeypatch.setattr(indexer, "SMALL_DERIVED_DOCS_MAX", bound)
+        roots[name] = str(tmp_path / name)
+        build_index(spark, extract_docs(pages), roots[name], num_ranges=3,
+                    n_buckets=8, id_partitions=2)
+    keys = {"dictionary": ["term"], "manifest": ["range_id"],
+            "stats": None, "docs_meta": None}
+    clock = {"committed_at", "wall_ms"}  # when each build ran, not what
+    for table, key in keys.items():
+        a, b = (tablefs.read_small_table(spark, f"{roots[n]}/{table}")
+                for n in ("driver", "distributed"))
+        assert len(a) > 0, table
+        assert sorted(a.columns) == sorted(b.columns), table
+        cols = sorted(set(a.columns) - clock)
+        key = key or cols
+        a = a[cols].sort_values(key, ignore_index=True)
+        b = b[cols].sort_values(key, ignore_index=True)
+        pd.testing.assert_frame_equal(a, b, check_dtype=False, obj=table)
 
 
 def test_filter_in_both_sides_of_in_list_max(spark, index_dir):

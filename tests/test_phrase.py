@@ -180,6 +180,54 @@ def test_phrase_slop_vs_brute(spark, phrase_setup):
                                        [s for _, s in want], atol=1e-6)
 
 
+@pytest.mark.parametrize("slop", [0, 2])
+def test_execute_sides_agree_and_match_brute(spark, phrase_setup,
+                                             force_side, slop):
+    """Both sides of query.execute's sized decision give the same phrase
+    hits with bit-identical scores, at slop 0 (checked against
+    BruteForceBM25.phrase_search) and slop 2 (against the ordered-window
+    brute force)."""
+    from pdf_to_opensearch_spark.oracle import idf as idf_fn
+    from pdf_to_opensearch_spark.query import phrase_search
+
+    root, oracle = phrase_setup
+    cases = [(1, "duplicate content row"), (2, "spark posting"),
+             (3, "content duplicate")]
+    got = {}
+    for side in ("driver", "distributed"):
+        force_side(side)
+        df = phrase_search(spark, root, cases, k=20, slop=slop)
+        tree = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted").split("\n\n")[0]
+        assert ("MapInPandas" in tree) == (side == "distributed"), tree
+        got[side] = (df.toPandas()
+                     .sort_values(["query_id", "rank"], ignore_index=True))
+    drv, dist = got["driver"], got["distributed"]
+    assert len(drv) > 0
+    assert list(drv.query_id) == list(dist.query_id)
+    assert list(drv.doc_id) == list(dist.doc_id)
+    np.testing.assert_array_equal(drv.score.to_numpy(), dist.score.to_numpy())
+    for qid, phrase in cases:
+        if slop == 0:
+            want = oracle.phrase_search(phrase, 20)
+        else:
+            terms = phrase.split()
+            idf_sum = sum(float(idf_fn(oracle.N, np.array(
+                [len(oracle.index.get(t, {}))]))[0]) for t in terms)
+            scores = []
+            for d, toks in enumerate(oracle.doc_tokens):
+                tf = _slop_tf(toks, terms, slop)
+                if tf:
+                    dl = float(oracle.dl[d])
+                    scores.append((d, idf_sum * tf * 2.2 / (
+                        tf + 1.2 * (1 - 0.75 + 0.75 * dl / oracle.avgdl))))
+            want = sorted(scores, key=lambda kv: (-kv[1], kv[0]))[:20]
+        sub = drv[drv["query_id"] == qid]
+        assert list(sub["doc_id"]) == [d for d, _ in want], (slop, phrase)
+        np.testing.assert_allclose(sub["score"].to_numpy(),
+                                   [s for _, s in want], atol=1e-6)
+
+
 def test_phrase_slop_widens_match_set(spark, phrase_setup):
     """A slop window can only ADD matches relative to exact phrase."""
     from pdf_to_opensearch_spark.query import phrase_search

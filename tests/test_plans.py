@@ -69,11 +69,14 @@ def test_docs_scan_prunes_text_for_stats(spark, index_dir):
     assert "html" not in rs
 
 
-def test_search_has_single_aggregation_exchange(spark, index_dir):
+def test_search_has_single_aggregation_exchange(spark, index_dir,
+                                                force_side):
     """The query path should shuffle once for the per-range kernel and once
-    for the tiny global top-k window — no full-corpus wide exchange."""
+    for the tiny global top-k window — no full-corpus wide exchange
+    (distributed side of query.execute's sized decision)."""
     from pdf_to_opensearch_spark.query import search
 
+    force_side("distributed")
     res = search(spark, index_dir, [(1, "spark index")], k=5)
     plan = _plan(res)
     n_exchanges = plan.count("Exchange")
@@ -230,13 +233,14 @@ def test_term_suggest_single_dictionary_expansion_scan(spark, index_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_stats_agg_prunes_docs_scan_columns(spark, index_dir):
+def test_stats_agg_prunes_docs_scan_columns(spark, index_dir, force_side):
     """search_stats must read only (doc_id, text) from the docs table —
     url/lang/embedding never leave the parquet reader (ReadSchema), and
     the hit-set aggregation is partial (map-side combined) before its
-    single exchange."""
+    single exchange (distributed side of query.execute)."""
     from pdf_to_opensearch_spark.boolquery import search_stats
 
+    force_side("distributed")
     res = search_stats(spark, index_dir, [(1, "spark index")],
                        value_expr="length(text)")
     plan = _plan(res)
@@ -249,12 +253,15 @@ def test_stats_agg_prunes_docs_scan_columns(spark, index_dir):
 
 
 def test_top_hits_no_extra_shuffle_beyond_group_join_window(spark,
-                                                            index_dir):
+                                                            index_dir,
+                                                            force_side):
     """search_top_hits: postings scan grouped once into the kernel, one
     join against the column-pruned facet scan, one ranked window — no
-    stray exchanges (facet side may broadcast)."""
+    stray exchanges (facet side may broadcast; distributed side of
+    query.execute)."""
     from pdf_to_opensearch_spark.boolquery import search_top_hits
 
+    force_side("distributed")
     res = search_top_hits(spark, index_dir, [(1, "spark index")],
                           facet_col="lang", per_bucket=2)
     plan = _plan(res)
@@ -267,14 +274,17 @@ def test_top_hits_no_extra_shuffle_beyond_group_join_window(spark,
     assert facet_schemas and all("text" not in s for s in facet_schemas)
 
 
-def test_percolate_has_no_window_or_global_sort(spark, index_dir):
+def test_percolate_has_no_window_or_global_sort(spark, index_dir,
+                                                force_side):
     """percolate emits the match set straight from the per-range kernel:
     no Window (the set is not a page), no global Sort, no Exchange at all
     — the unfiltered postings scan runs inside the kernel's pyio tasks
     (bucket/term pruning happens in pyarrow there), so no postings
-    parquet scan appears in the Spark plan."""
+    parquet scan appears in the Spark plan (distributed side of
+    query.execute)."""
     from pdf_to_opensearch_spark.boolquery import percolate
 
+    force_side("distributed")
     res = percolate(spark, index_dir, [(1, "spark index"), (2, "document")])
     plan = _plan(res)
     tree = plan.split("\n\n")[0]
@@ -304,16 +314,12 @@ def _exchanges_below_topk_window(plan: str) -> list[str]:
     return out
 
 
-def test_ranked_surfaces_have_no_exchange_below_topk_window(spark,
-                                                            index_dir):
-    """Every unfiltered single-index ranked surface goes through
-    query.execute's pyio branch: the only Exchange under the top-k Window
-    is the window's own query_id partitioning — no range_id grouping, no
-    JVM postings scan below it."""
+def _ranked_surfaces(spark, index_dir) -> dict:
+    """Every unfiltered single-index ranked surface, one small call each."""
     from pdf_to_opensearch_spark import boolquery as bq
     from pdf_to_opensearch_spark.query import Searcher, search
 
-    surfaces = {
+    return {
         "search": lambda: search(spark, index_dir, [(1, "spark index")],
                                  k=5),
         "phrase_search": lambda: Searcher(spark, index_dir).phrase_search(
@@ -337,7 +343,18 @@ def test_ranked_surfaces_have_no_exchange_below_topk_window(spark,
         "intervals_search": lambda: bq.intervals_search(
             spark, index_dir, [(1, "spark index")], k=5),
     }
-    for name, run in surfaces.items():
+
+
+def test_ranked_surfaces_have_no_exchange_below_topk_window(spark,
+                                                            index_dir,
+                                                            force_side):
+    """Every unfiltered single-index ranked surface goes through
+    query.execute's pyio branch (the distributed side of its sized
+    decision): the only Exchange under the top-k Window is the window's
+    own query_id partitioning — no range_id grouping, no JVM postings
+    scan below it."""
+    force_side("distributed")
+    for name, run in _ranked_surfaces(spark, index_dir).items():
         plan = _plan(run())
         tree = plan.split("\n\n")[0]
         assert "Scan parquet" not in tree, (name, tree)
@@ -345,3 +362,23 @@ def test_ranked_surfaces_have_no_exchange_below_topk_window(spark,
         assert len(below) == 1, (name, below, tree)
         assert below[0].startswith("hashpartitioning(query_id"), \
             (name, below)
+
+
+def test_ranked_surfaces_below_the_bound_read_no_postings_in_spark(
+        spark, index_dir):
+    """The driver side of query.execute's sized decision (the small
+    fixture index is below the bound): every unfiltered ranked surface
+    reads its postings on the driver, so its plan holds no postings scan
+    and no Python task. A surface ranked by execute is one local
+    relation; one that ranks again in Spark (rounded, re-joined) keeps
+    only that Window above a local relation."""
+    spark_ranked = {"more_like_this", "span_near_search", "intervals_search"}
+    for name, run in _ranked_surfaces(spark, index_dir).items():
+        tree = _plan(run()).split("\n\n")[0]
+        assert "Scan parquet" not in tree, (name, tree)
+        assert "MapInPandas" not in tree and "Python" not in tree, \
+            (name, tree)
+        assert "LocalTableScan" in tree, (name, tree)
+        if name not in spark_ranked:
+            assert tree.splitlines()[1:] == ["LocalTableScan (1)"], \
+                (name, tree)

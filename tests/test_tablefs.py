@@ -166,3 +166,57 @@ def test_every_index_table_goes_through_resolve(spark, tmp_path,
                 "idx/postings", "snap/stats", "merged/postings"):
         assert rel in routed, rel
     assert pd.read_parquet(f"{merged}/stats")["format_version"].notna().all()
+
+
+def test_declared_schema_equals_inferred_schema(spark, tmp_path):
+    """tablefs.spark_read declares each table's schema from its first
+    data file's footer: on a built, appended and force-merged index it
+    equals the schema Spark infers for every table (so reads keep their
+    columns and types), and building a filter frame with it starts no
+    Spark job."""
+    from pdf_to_opensearch_spark.extract import extract_docs
+    from pdf_to_opensearch_spark.indexer import (
+        IndexPaths,
+        _postings_arrow_schema,
+        build_index,
+    )
+    from pdf_to_opensearch_spark.maintenance import force_merge
+    from pdf_to_opensearch_spark.query import _allowed_docs
+    from pdf_to_opensearch_spark.streaming import append_batch
+    from pdf_to_opensearch_spark.synth import make_pages
+
+    root, merged = str(tmp_path / "idx"), str(tmp_path / "merged")
+    build_index(spark, extract_docs(make_pages(spark, n_docs=60, seed=8,
+                                               partitions=2)),
+                root, num_ranges=3, n_buckets=8, id_partitions=2)
+    extra = make_pages_pdf(n_docs=12, seed=81)
+    extra["url"] = extra["url"].str.replace("example.org", "more.org",
+                                            regex=False)
+    append_batch(spark, spark.createDataFrame(extra[["url", "text",
+                                                     "lang"]]),
+                 root, batch_id=1)
+    force_merge(spark, root, merged)
+    seen = 0
+    for idx in (root, merged):
+        for name in sorted(os.listdir(idx)):
+            fs, p = tablefs.resolve(spark, f"{idx}/{name}")
+            if name.startswith(("_", ".")) or not tablefs.list_files(fs, p):
+                continue
+            declared = tablefs.spark_read(spark, f"{idx}/{name}").schema
+            assert declared == spark.read.parquet(f"{idx}/{name}").schema, \
+                (idx, name)
+            seen += 1
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        assert (from_arrow_schema(_postings_arrow_schema())
+                == spark.read.parquet(f"{idx}/postings").schema), idx
+    assert seen >= 12
+
+    sc = spark.sparkContext
+    sc.setJobGroup("allowed-docs", "allowed-docs")
+    try:
+        _allowed_docs(spark, IndexPaths(merged), "lang = 'en'")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("allowed-docs")) == []
+

@@ -4,6 +4,9 @@ on DuckDB at the given sf, compare row-count + column set + an
 order-insensitive value hash.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
+
+The last line states the result: ``N ok, M failed, R rows-only of T``
+(T entries run; rows-only entries have no oracle twin).
 """
 
 from __future__ import annotations
@@ -56,10 +59,11 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = entry.queries(), entry.oracle_sql()
-    failures = 0
+    failures = ok = rows_only = total = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        total += 1
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
@@ -70,6 +74,7 @@ def main() -> None:
         t_spark = time.time() - t0
         if name not in oracles:
             print(f"[rows-only] {name}: {len(got)} rows in {t_spark:.1f}s")
+            rows_only += 1
             continue
         try:
             want = con.execute(oracles[name]).fetchdf()
@@ -83,6 +88,8 @@ def main() -> None:
         status = "OK" if (ok_rows and ok_hash) else "FAIL"
         if status == "FAIL":
             failures += 1
+        else:
+            ok += 1
         print(f"[{status}] {name}: rows {len(got)}/{len(want)} "
               f"cols={ok_cols} hash={ok_hash} ({t_spark:.1f}s)")
         if status == "FAIL" and ok_cols:
@@ -91,6 +98,7 @@ def main() -> None:
                 print(merged.head(8).to_string())
 
     spark.stop()
+    print(f"{ok} ok, {failures} failed, {rows_only} rows-only of {total}")
     sys.exit(1 if failures else 0)
 
 
