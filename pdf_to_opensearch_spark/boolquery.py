@@ -29,8 +29,9 @@ pieces:
   batch for prefix, wildcard, regexp, fuzzy, query_string and
   match_phrase_prefix. Point lookups are :func:`.query.term_stats`.
 * **One postings executor.** :func:`.query.execute` runs a per-range
-  kernel over the bucket/term-pruned postings: on the driver when its
-  sized decision says the call is small (no Spark job), else the
+  kernel over the bucket/term-pruned postings: for a ranked call
+  (``k=``) on the driver when its sized decision says the call is
+  small (no Spark job), else the
   unfiltered per-file pyio scan (no Exchange), the filtered ``cogroup``
   with the allowed-doc frame, or — for ranges split across files — the
   JVM scan grouped by ``range_id``. Positional kernels decode through

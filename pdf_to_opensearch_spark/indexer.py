@@ -40,6 +40,7 @@ import time
 import zlib
 from collections.abc import Iterator
 from dataclasses import asdict, dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -459,26 +460,79 @@ def _postings_arrow_schema():
     return _POSTINGS_ARROW_SCHEMA
 
 
-def _range_spans(fs, files: list[str]) -> list[tuple[int, int] | None]:
-    """(min, max) ``range_id`` of each parquet file, from FOOTER stats
-    only (None for a file without rows). Raises ValueError when a row
-    group carries no ``range_id`` min/max."""
+class _Footer(NamedTuple):
+    """The summary of one parquet file's footer that the engine plans
+    with: ``span``, the (min, max) ``range_id`` over the file (None: no
+    rows); ``range_stats``, every row group carries ``range_id``
+    min/max; ``groups``, per row group, ``(bucket_lo, bucket_hi,
+    term_lo, term_hi, {column: compressed bytes})`` — a None bound means
+    the row group has no statistics for that column and may hold any
+    value."""
+
+    span: tuple[int, int] | None
+    range_stats: bool
+    groups: tuple
+
+
+_FOOTERS: dict[tuple, _Footer] = {}
+_FOOTERS_MAX = 4096
+
+
+def _read_footer(fs, path: str) -> _Footer:
     import pyarrow.parquet as pq
 
-    spans = []
-    for f in files:
-        md = pq.read_metadata(f, filesystem=fs)
-        idx = [md.schema.column(i).path
-               for i in range(md.num_columns)].index("range_id")
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                raise ValueError(f"{f}: no range_id statistics")
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        spans.append(None if lo is None else (lo, hi))
-    return spans
+    md = pq.read_metadata(path, filesystem=fs)
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+
+    def bounds(rg, col):
+        st = rg.column(names.index(col)).statistics if col in names else None
+        return (st.min, st.max) if st is not None and st.has_min_max \
+            else (None, None)
+
+    lo = hi = None
+    range_stats = True
+    groups = []
+    for r in range(md.num_row_groups):
+        rg = md.row_group(r)
+        r_lo, r_hi = bounds(rg, "range_id")
+        if r_lo is None:
+            range_stats = False
+        else:
+            lo = r_lo if lo is None else min(lo, r_lo)
+            hi = r_hi if hi is None else max(hi, r_hi)
+        groups.append((*bounds(rg, "bucket"), *bounds(rg, "term"),
+                       {n: rg.column(i).total_compressed_size
+                        for i, n in enumerate(names)}))
+    return _Footer(None if lo is None else (lo, hi), range_stats,
+                   tuple(groups))
+
+
+def _footers(fs, infos: list) -> list[_Footer]:
+    """The footer summary of each parquet file (``FileInfo``s of
+    ``fs``), cached per file snapshot (path, mtime, size): an append
+    adds files and re-reads only theirs."""
+    out = []
+    for i in infos:
+        key = (i.path, i.mtime_ns, i.size)
+        ft = _FOOTERS.get(key)
+        if ft is None:
+            if len(_FOOTERS) >= _FOOTERS_MAX:
+                _FOOTERS.clear()
+            ft = _FOOTERS[key] = _read_footer(fs, i.path)
+        out.append(ft)
+    return out
+
+
+def _range_spans(fs, infos: list) -> list[tuple[int, int] | None]:
+    """(min, max) ``range_id`` of each parquet file (``FileInfo``s of
+    ``fs``), from the cached footer summaries (None for a file without
+    rows). Raises ValueError when a row group carries no ``range_id``
+    min/max."""
+    feet = _footers(fs, infos)
+    for info, ft in zip(infos, feet):
+        if not ft.range_stats:
+            raise ValueError(f"{info.path}: no range_id statistics")
+    return [ft.span for ft in feet]
 
 
 def _spans_disjoint(spans) -> bool:
@@ -540,7 +594,7 @@ def _spimi_python_io(spark: SparkSession, paths: IndexPaths,
     if skip:
         done = set(skip)
         todo = [(f, sp) for f, sp in
-                zip(files, _range_spans(fs, [f.path for f in files]))
+                zip(files, _range_spans(fs, files))
                 if sp and not set(range(sp[0], sp[1] + 1)) <= done]
         if not _spans_disjoint(sp for _f, sp in todo):
             raise ValueError(

@@ -16,16 +16,19 @@ Physical plan:
    surface calls — runs a per-range kernel on each WHOLE doc range's
    postings rows. Because every document lives in exactly one range,
    per-range scores are complete — no cross-range combine of partial
-   scores is needed. An unfiltered call first takes one sized decision
-   (:func:`_runs_on_driver`): with B the compressed bytes of the pruned
-   row groups (cached footer summaries), Q the queries and S the task
-   slots, it runs on the driver iff (α·B + β·Q)·(1 − 1/S) ≤ F, with α,
-   β and F measured (see the constants) and B capped. Then it picks one
-   of four branches:
+   scores is needed. An unfiltered ranked call (``k`` given) first takes
+   one sized decision (:func:`_runs_on_driver`): with B the compressed
+   bytes of the pruned row groups (cached footer summaries), Q the
+   queries and S the task slots, it runs on the driver iff
+   (α·B + β·Q)·(1 − 1/S) ≤ F, with α, β and F measured (see the
+   constants) and B capped. Then it picks one of four branches:
 
-   * unfiltered and small: the driver reads the pruned postings with
-     pyarrow, runs the same kernel per range, ranks in pandas and
-     returns a local relation — the call runs no Spark job;
+   * unfiltered, ranked and small: the driver reads the pruned
+     postings with pyarrow, runs the same kernel per range, ranks in
+     pandas and returns the page as a local relation — the call runs no
+     Spark job. Unranked calls (hit sets, full score sets under a join
+     or aggregation) stay distributed: their output grows with the
+     matching docs, a cost the model does not cover;
    * unfiltered, range-aligned postings: one ``mapInPandas`` task per
      bin of postings files reads them with pyarrow through the
      filesystem :func:`tablefs.resolve` returns (C++-side bucket/term
@@ -55,7 +58,6 @@ Rank identity: ties broken by ascending doc_id everywhere, scores f64.
 from __future__ import annotations
 
 import bisect
-from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -74,6 +76,8 @@ from .codec import (
 from .indexer import (
     IndexPaths,
     IndexStats,
+    _Footer,
+    _footers,
     _postings_arrow_schema,
     _spans_disjoint,
     bucket_of,
@@ -156,87 +160,19 @@ def result_frame(query_ids, doc_ids, scores=None) -> pd.DataFrame:
     return pd.DataFrame(cols)
 
 
-# ------------------------------------------------- postings footer cache
-
-class _Footer(NamedTuple):
-    """What :func:`execute` needs from one postings file's parquet footer.
-
-    ``span``: (min, max) ``range_id`` over the file (None: no rows);
-    ``range_stats``: every row group carries ``range_id`` min/max;
-    ``groups``: per row group, ``(bucket_lo, bucket_hi, term_lo,
-    term_hi, {column: compressed bytes})`` — a None bound means the row
-    group has no statistics for that column and may hold any value."""
-
-    span: tuple[int, int] | None
-    range_stats: bool
-    groups: tuple
-
-
-_FOOTERS: dict[tuple, _Footer] = {}
-_FOOTERS_MAX = 4096
-
-
-def _read_footer(fs, path: str) -> _Footer:
-    import pyarrow.parquet as pq
-
-    md = pq.read_metadata(path, filesystem=fs)
-    names = [md.schema.column(i).path for i in range(md.num_columns)]
-
-    def bounds(rg, col):
-        st = rg.column(names.index(col)).statistics if col in names else None
-        return (st.min, st.max) if st is not None and st.has_min_max \
-            else (None, None)
-
-    lo = hi = None
-    range_stats = True
-    groups = []
-    for r in range(md.num_row_groups):
-        rg = md.row_group(r)
-        r_lo, r_hi = bounds(rg, "range_id")
-        if r_lo is None:
-            range_stats = False
-        else:
-            lo = r_lo if lo is None else min(lo, r_lo)
-            hi = r_hi if hi is None else max(hi, r_hi)
-        groups.append((*bounds(rg, "bucket"), *bounds(rg, "term"),
-                       {n: rg.column(i).total_compressed_size
-                        for i, n in enumerate(names)}))
-    return _Footer(None if lo is None else (lo, hi), range_stats,
-                   tuple(groups))
-
-
-def _footers(fs, infos: list) -> list[_Footer]:
-    """The footer summary of each postings file (``FileInfo``s of
-    ``fs``), cached per file snapshot (path, mtime, size): an append
-    adds files and re-reads only theirs."""
-    out = []
-    for i in infos:
-        key = (i.path, i.mtime_ns, i.size)
-        ft = _FOOTERS.get(key)
-        if ft is None:
-            if len(_FOOTERS) >= _FOOTERS_MAX:
-                _FOOTERS.clear()
-            ft = _FOOTERS[key] = _read_footer(fs, i.path)
-        out.append(ft)
-    return out
-
+# ------------------------------------------ postings footer summaries
 
 def _aligned(feet: list[_Footer]) -> bool:
-    """Pairwise-disjoint ``range_id`` spans ⟹ every range lives wholly
-    in one file."""
+    """True iff every doc range's postings live WHOLLY in one file
+    (pairwise-disjoint ``range_id`` spans in the cached footer summaries,
+    :func:`.indexer._footers`) — the property that lets a per-file task
+    score its ranges completely. Every builder writes range-aligned
+    files, but an external rewrite (a crash-simulation overwrite, a
+    third-party compaction) can scatter a range across files, and a
+    kernel that sees only part of a range would emit wrong partial
+    scores."""
     return (all(ft.range_stats for ft in feet)
             and _spans_disjoint(ft.span for ft in feet))
-
-
-def _ranges_file_aligned(fs, files: list[str]) -> bool:
-    """True iff every doc range's postings live WHOLLY in one file —
-    the property that lets a per-file task score its ranges completely.
-    Every builder writes range-aligned files, but an external rewrite
-    (a crash-simulation overwrite, a third-party compaction) can
-    scatter a range across files, and a kernel that sees only part of
-    a range would emit wrong partial scores. Checked from the cached
-    footer summaries only (:func:`_footers`)."""
-    return _aligned(_footers(fs, fs.get_file_info(files)))
 
 
 def _footprint(feet: list[_Footer], buckets: dict[str, int],
@@ -271,6 +207,14 @@ def _footprint(feet: list[_Footer], buckets: dict[str, int],
 # 624 ms + W/4. The model puts 10 of the 11 on their faster side; the
 # eleventh (1.2 MB, 1,024 queries) was a tie (821 vs 823 ms), and 6.5 MB
 # at 1,024 queries stays distributed (1,175 vs 931 ms).
+#
+# Only RANKED calls (``k`` given) take this decision: their output is at
+# most k rows per query, the traffic the fit covers. An unranked call's
+# output (a hit set or a full score set that a join or aggregation then
+# consumes) grows with matching docs × Q, and on the driver it would be
+# concatenated and shipped back as a driver-built local relation — a
+# per-row cost the model has no term for and no probe measured — so
+# unranked calls always run distributed.
 DRIVER_MS_PER_MB = 27.0       # α: pyarrow read + decode + kernel, per MB
 DRIVER_MS_PER_QUERY = 0.85    # β: kernel + pandas rank, per query
 DISTRIBUTED_FIXED_MS = 600.0  # F: distributed minus driver call at W = 0
@@ -324,18 +268,20 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
     (doc_id, range_id) frame, see :func:`_allowed_docs`) it is called as
     ``kernel(pdf, allowed_ids)`` with that range's allowed doc_ids. The
     ``poss`` column is read only with ``need_positions=True``.
-    ``n_queries`` is the number of queries the kernel scores.
+    ``n_queries`` is the number of queries the kernel scores (the Q of
+    the sized decision).
 
     Branches (this is the only place that reads the postings table for a
     query):
 
-    * unfiltered and small — the driver scan: when the sized decision
-      (:func:`_runs_on_driver`) says the footprint of the pruned row
-      groups (from the cached footers, :func:`_footers`) and
-      ``n_queries`` cost less on the driver than a distributed call's
-      fixed cost, the driver reads the postings with pyarrow, runs the
-      kernel per range, ranks in pandas and returns the rows as a local
-      relation: no Spark job at all;
+    * unfiltered, ranked and small — the driver scan: when ``k`` is
+      given and the sized decision (:func:`_runs_on_driver`) says the
+      footprint of the pruned row groups (from the cached footer
+      summaries, :func:`.indexer._footers`) and ``n_queries`` cost less
+      on the driver than a distributed call's fixed cost, the driver
+      reads the postings with pyarrow, runs the kernel per range, ranks
+      in pandas and returns the page as a local relation: no Spark job
+      at all. Unranked calls never take it (see the constants);
     * unfiltered, range-aligned postings — the pyio scan: one
       ``mapInPandas`` task per bin of postings files reads them with
       pyarrow through the resolved filesystem (``filters=`` gives
@@ -370,10 +316,11 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
         fs, post_dir = tablefs.resolve(spark, paths.postings)
         files = tablefs.list_files(fs, post_dir)
         feet = _footers(fs, files)
-        slots = max(1, spark.sparkContext.defaultParallelism)
-        if _runs_on_driver(_footprint(feet, bucket, cols), n_queries, slots):
+        if k is not None and _runs_on_driver(
+                _footprint(feet, bucket, cols), n_queries,
+                spark.sparkContext.defaultParallelism):
             return _driver_scan(spark, fs, files, kernel, cols, buckets,
-                                terms, schema, k)
+                                terms, k)
         if files and _aligned(feet):
             return _ranked(_pyio_scan(spark, fs, files, kernel, buckets,
                                       terms, cols, schema), k)
@@ -398,24 +345,20 @@ def _ranked(per_range: DataFrame, k: int | None) -> DataFrame:
 
 def _driver_scan(spark: SparkSession, fs, files: list, kernel,
                  cols: list[str], buckets: list[int], terms: list[str],
-                 schema: str, k: int | None) -> DataFrame:
+                 k: int) -> DataFrame:
     """:func:`execute`'s driver branch: ONE pyarrow read of every
     postings file (``FileInfo``s of ``fs``) with the bucket/term
-    filters, the kernel per range, the pandas top-k with ``k``, and the
-    rows as a local relation — ``createDataFrame`` of a pandas frame
-    plans a ``LocalRelation``, which collects with no Spark job."""
+    filters, the kernel per range, the pandas top-k page, and its rows
+    as a local relation — ``createDataFrame`` of a pandas frame plans a
+    ``LocalRelation``, which collects with no Spark job."""
     filters = [("bucket", "in", buckets), ("term", "in", terms)]
     outs = list(_kernel_over(fs, [f.path for f in files], cols, filters,
                              kernel, use_threads=True)) if files else []
-    if k is not None:
-        schema = RANKED
     if not outs:
-        return empty_frame(spark, schema)
-    pdf = pd.concat(outs, ignore_index=True)
-    if k is not None:
-        pdf = _rank_pandas(pdf, k)
-    names = [f.split()[0] for f in schema.split(",")]
-    return spark.createDataFrame(pdf[names], schema)
+        return empty_frame(spark, RANKED)
+    pdf = _rank_pandas(pd.concat(outs, ignore_index=True), k)
+    return spark.createDataFrame(
+        pdf[["query_id", "rank", "doc_id", "score"]], RANKED)
 
 
 def _rank_pandas(pdf: pd.DataFrame, k: int) -> pd.DataFrame:

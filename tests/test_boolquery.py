@@ -276,21 +276,27 @@ def test_fuzzy_vs_brute(spark, index_dir, corpus):
                                    [s for _, s in exp_rank], rtol=1e-9)
 
 
-SIDE_CASES = ("bool", "fuzzy", "prefix")
+SIDE_CASES = ("bool", "boosting", "fuzzy", "prefix")
 
 
 @pytest.mark.parametrize("case", SIDE_CASES)
 def test_execute_sides_agree_and_match_brute(spark, index_dir, corpus,
                                              force_side, case):
     """Both sides of query.execute's sized decision give the same doc ids
-    with bit-identical scores for bool, fuzzy and prefix, and both match
-    the brute-force oracles."""
-    from pdf_to_opensearch_spark.boolquery import fuzzy_search
+    with bit-identical scores for bool, boosting, fuzzy and prefix, and
+    both match the brute-force oracles."""
+    from pdf_to_opensearch_spark.boolquery import boosting_search, fuzzy_search
 
     _, oracle = corpus
     if case == "bool":
         queries = [(i + 1, q) for i, q in enumerate(BOOL_CASES)]
         run = lambda: boolean_search(spark, index_dir, queries, k=K)  # noqa
+    elif case == "boosting":
+        queries = [(1, {"positive": "spark posting merge",
+                        "negative": "duplicate"}),
+                   (2, {"positive": "index document", "negative": "spark"})]
+        run = lambda: boosting_search(spark, index_dir, queries, k=K,  # noqa
+                                      negative_boost=0.4)
     elif case == "fuzzy":
         queries = [(1, "sprak"), (2, "documnt postng")]
         run = lambda: fuzzy_search(spark, index_dir, queries, k=K)  # noqa
@@ -319,6 +325,14 @@ def test_execute_sides_agree_and_match_brute(spark, index_dir, corpus,
             want = ([] if q.get("must") and any(
                 t not in oracle.index for t in tokenize_text(q["must"]))
                 else oracle.search(scoring, k=K, allowed=allowed))
+        elif case == "boosting":
+            neg = set()
+            for t in tokenize_text(q["negative"]):
+                neg |= set(oracle.index.get(t, {}))
+            demoted = sorted((-(s * 0.4 if d in neg else s), d)
+                             for d, s in oracle.search(q["positive"],
+                                                       k=oracle.N))
+            want = [(d, -ns) for ns, d in demoted[:K]]
         elif case == "fuzzy":
             want = _fuzzy_brute(oracle, q, 2, 50, K)
         else:

@@ -349,17 +349,21 @@ def test_execute_fork_unaligned_postings_match_aligned(spark, index_dir,
     from pyarrow.fs import LocalFileSystem
 
     from pdf_to_opensearch_spark.boolquery import fuzzy_search
-    from pdf_to_opensearch_spark.query import Searcher, _ranges_file_aligned
+    from pdf_to_opensearch_spark.indexer import _footers
+    from pdf_to_opensearch_spark.query import Searcher, _aligned
 
     force_side("distributed")
     _, oracle = corpus
     split = str(tmp_path / "split_idx")
     shutil.copytree(index_dir, split)
     _split_one_range(split)
-    assert _ranges_file_aligned(LocalFileSystem(), sorted(
-        glob.glob(os.path.join(index_dir, "postings", "*.parquet"))))
-    assert not _ranges_file_aligned(LocalFileSystem(), sorted(
-        glob.glob(os.path.join(split, "postings", "*.parquet"))))
+    def aligned(root):
+        fs = LocalFileSystem()
+        return _aligned(_footers(fs, fs.get_file_info(sorted(
+            glob.glob(os.path.join(root, "postings", "*.parquet"))))))
+
+    assert aligned(index_dir)
+    assert not aligned(split)
 
     phrases = [(1, "duplicate content row"), (2, "딸기 육묘는"),
                (3, "spark index")]
@@ -544,6 +548,32 @@ def test_sized_decision_counts_bytes_and_queries():
     assert not _runs_on_driver(DRIVER_MAX_BYTES + 1, 1, 4)
     assert _runs_on_driver(DRIVER_MAX_BYTES, 100_000, 1)
     assert not _runs_on_driver(DRIVER_MAX_BYTES + 1, 1, 1)
+
+
+def test_unranked_execute_calls_stay_distributed(spark, index_dir,
+                                                force_side):
+    """Only ranked calls take the driver side of query.execute: with the
+    bound forced to the driver, a hit set (search_count) and a full
+    score set under a join (function_score) still read their postings in
+    a mapInPandas task, while search's ranked page is a local relation.
+    (The pages ranked on Spark expressions, span_near and intervals, are
+    in the driver twin of the ranked-surface plan test.)"""
+    from pdf_to_opensearch_spark import boolquery as bq
+
+    force_side("driver")
+    q = [(1, "spark posting"), (2, "index merge")]
+    calls = {
+        "search_count": lambda: bq.search_count(spark, index_dir, q),
+        "function_score": lambda: bq.function_score_search(
+            spark, index_dir, q, k=K),
+        "search": lambda: search(spark, index_dir, q, k=K),
+    }
+    for name, call in calls.items():
+        df = call()
+        tree = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted").split("\n\n")[0]
+        assert ("MapInPandas" in tree) == (name != "search"), (name, tree)
+        assert df.count() > 0, name
 
 
 def test_small_derived_docs_max_both_sides_build_equal_tables(
