@@ -23,25 +23,33 @@ pieces:
   empty relation: no postings or docs file is scanned.
   :func:`_with_docs` joins a hit set to the docs table projected to the
   caller's column expressions.
-* **One dictionary-expansion pass.** :func:`_expand` broadcasts the
-  batch's probe table (prefixes, patterns, fuzzy source tokens) against
-  ONE dictionary scan with a per-probe ranked cut — one Spark job per
-  batch for prefix, wildcard, regexp, fuzzy, query_string and
-  match_phrase_prefix. Point lookups are :func:`.query.term_stats`.
+* **One dictionary expansion.** :func:`_expand` matches the batch's
+  probes (prefixes, patterns, fuzzy source tokens) against the term
+  dictionary with a per-probe ranked cut, for prefix, wildcard, regexp,
+  fuzzy, query_string, match_phrase_prefix and completion_suggest. A
+  probe's matcher is one of a closed set of kinds (prefix, like, fuzzy,
+  regexp), each with a Spark form and a driver form. When the
+  dictionary's compressed bytes fit :data:`.query.DRIVER_MAX_BYTES`,
+  the driver pass reads (term, df) with pyarrow and matches in
+  vectorized numpy/pyarrow with no Spark job; otherwise the Spark pass
+  broadcasts the probe table against ONE dictionary scan. Both return
+  the same rows; regexp always takes the Spark pass. Point lookups are
+  :func:`.query.term_stats`.
 * **One postings executor.** :func:`.query.execute` runs a per-range
   kernel over the bucket/term-pruned postings: for a ranked call
   (``k=``) on the driver when its sized decision says the call is
-  small (no Spark job), else the
-  unfiltered per-file pyio scan (no Exchange), the filtered ``cogroup``
-  with the allowed-doc frame, or — for ranges split across files — the
-  JVM scan grouped by ``range_id``. Positional kernels decode through
-  :func:`.query.decode_position_keys`, kernels emit
+  small (no Spark job unfiltered; one job to collect the allowed docs
+  when filtered), else the unfiltered per-file pyio scan (no Exchange),
+  the filtered ``cogroup`` with the allowed-doc frame, or — for ranges
+  split across files — the JVM scan grouped by ``range_id``. Positional
+  kernels decode through :func:`.query.decode_position_keys`, kernels emit
   :func:`.query.result_frame` rows, and ranked pages come from
   ``execute(..., k=k)`` (or, for pages ranked on Spark expressions, the
   one global top-k window, :func:`.query.ranked_topk`).
 
 Nothing here collects more than the dictionary rows of the queries' own
-terms and expansions.
+terms and expansions — besides the driver expansion's (term, df) read,
+which the byte cap bounds.
 """
 
 from __future__ import annotations
@@ -56,7 +64,7 @@ from pyspark.sql import functions as F
 from . import tablefs
 from .analyzer import tokenize_text
 from .codec import decode_postings, tf_norm
-from .indexer import IndexPaths
+from .indexer import IndexPaths, _footers
 from .query import (
     _POS_MASK,
     _POS_SHIFT,
@@ -104,36 +112,203 @@ def _rounded_page(spark: SparkSession, paths: IndexPaths, stats,
                        .withColumn("score", F.round("score", 4)), k)
 
 
-def _expand(spark: SparkSession, paths: IndexPaths, probes: list[tuple],
-            schema: str, cond, cut: int, order: tuple[str, ...] = ("term",),
-            **derived) -> list:
-    """The one dictionary-expansion pass. The batch's probe table
-    (``probes`` rows of ``schema``) is broadcast against ONE dictionary
-    scan; ``derived`` columns are added, ``cond`` filters, and each probe
-    row keeps its first ``cut`` matches by ``order`` — one Spark job for
-    the whole batch (a per-probe scan loop would read a 100-TB-scale
-    term dictionary once per probe, one driver-serialized job each).
+# ------------------------------------------------ dictionary expansion
+#
+# The matcher kinds of _expand, a closed set. Each owns its Spark form
+# (a filter over the dictionary × probe join, on the probe's ``arg``
+# column) and its driver form (in _driver_matches).
 
-    Returns the surviving (probe columns, term, df, derived columns)
-    rows, sorted by (probe columns, ``order``): the order every caller
-    accumulates its weights in. No probes, no job."""
+
+def _spark_match(kind: str, max_edits: int) -> tuple:
+    """(filter Column, derived columns) of ``kind``'s Spark pass."""
+    if kind == "prefix":
+        return F.col("term").startswith(F.col("arg")), {}
+    if kind == "like":
+        return F.expr("term LIKE arg"), {}
+    if kind == "regexp":
+        return F.expr("term RLIKE arg"), {}
+    if kind == "fuzzy":
+        return (F.col("dist") <= max_edits,
+                {"dist": F.levenshtein(F.col("term"), F.col("arg"))})
+    raise ValueError(f"unknown matcher kind {kind!r}")
+
+
+def _expand(spark: SparkSession, paths: IndexPaths,
+            probes: list[tuple[int, str]], kind: str, cut: int,
+            order: tuple[str, ...] = ("term",),
+            max_edits: int = 0) -> list[dict]:
+    """The one dictionary expansion: each distinct ``(key, arg)`` probe
+    keeps its first ``cut`` dictionary matches by ``order`` (column names
+    among ``term``, ``df`` and, for fuzzy, ``dist``; a ``-`` prefix sorts
+    a numeric column descending). Kinds:
+
+    * ``prefix`` — terms starting with ``arg``;
+    * ``like`` — ``term LIKE arg`` (``%`` any run, ``_`` one character);
+    * ``fuzzy`` — Levenshtein distance (code points) to ``arg`` ≤
+      ``max_edits``, as column ``dist``;
+    * ``regexp`` — ``term RLIKE arg``: Java regex semantics, which
+      neither ``re`` nor RE2 reproduce bit for bit, so this kind always
+      takes the Spark pass.
+
+    Two sides, one result. The **Spark pass** broadcasts the probe table
+    against ONE dictionary scan with a per-probe ranked window cut — one
+    pass for the whole batch at any dictionary size. The **driver pass**
+    reads (term, df) with pyarrow and matches every probe with
+    vectorized numpy/pyarrow (:func:`_driver_matches`); pyarrow's sort
+    compares UTF-8 bytes, as Spark's does (and Python ``str`` order, the
+    code-point order, agrees with both), so both cut and order alike. The driver pass runs iff the kind is not
+    regexp and the dictionary's compressed (term, df) bytes (footer
+    summaries) fit :data:`.query.DRIVER_MAX_BYTES` — at any probe count:
+    no measured dictionary size has the Spark pass winning (see the
+    constants in :mod:`.query`).
+
+    Returns the surviving rows as dicts (key, arg, term, df[, dist]),
+    sorted by (key, arg, ``order``): the order every caller accumulates
+    its weights in. No probes, no read."""
+    from . import query
+
+    probes = sorted(set(probes))
     if not probes:
         return []
-    probe = spark.createDataFrame(probes, schema)
-    keys = probe.columns
+    fs, dict_dir = tablefs.resolve(spark, paths.dictionary)
+    files = tablefs.list_files(fs, dict_dir)
+    nbytes = sum(nb.get(c, 0) for ft in _footers(fs, files)
+                 for *_b, nb in ft.groups for c in ("term", "df"))
+    if kind != "regexp" and nbytes <= query.DRIVER_MAX_BYTES:
+        rows = _driver_expand(fs, files, probes, kind, cut, order,
+                              max_edits)
+    else:
+        rows = _spark_expand(spark, paths, probes, kind, cut, order,
+                             max_edits)
+
+    def sort_key(r):
+        return (r["key"], r["arg"], *(-r[c[1:]] if c[0] == "-" else r[c]
+                                      for c in order))
+
+    return sorted(rows, key=sort_key)
+
+
+def _spark_expand(spark: SparkSession, paths: IndexPaths, probes: list,
+                  kind: str, cut: int, order: tuple[str, ...],
+                  max_edits: int) -> list[dict]:
+    """:func:`_expand`'s Spark pass."""
+    cond, derived = _spark_match(kind, max_edits)
+    probe = spark.createDataFrame(probes, "key int, arg string")
     cand = tablefs.spark_read(spark, paths.dictionary).join(F.broadcast(probe))
     for name, col in derived.items():
         cand = cand.withColumn(name, col)
-    w = Window.partitionBy(*keys).orderBy(*order)
-    rows = (cand.filter(cond)
+    w = Window.partitionBy("key", "arg").orderBy(
+        *(F.col(c[1:]).desc() if c[0] == "-" else F.col(c).asc()
+          for c in order))
+    return [r.asDict() for r in
+            cand.filter(cond)
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= cut)
-            .select(*keys, "term", "df", *derived).collect())
-    return sorted(rows, key=lambda r: tuple(r[c] for c in (*keys, *order)))
+            .select("key", "arg", "term", "df", *derived).collect()]
+
+
+def _driver_expand(fs, files: list, probes: list, kind: str, cut: int,
+                   order: tuple[str, ...], max_edits: int) -> list[dict]:
+    """:func:`_expand`'s driver pass: one pyarrow read of (term, df), then
+    each probe's matches, found over the whole term column at once, cut
+    by ``order`` (then term) with pyarrow's sort — binary UTF-8 order,
+    Spark's. Only matched terms leave Arrow memory: the dictionary is
+    never sorted or turned into Python strings."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table([f.path for f in files], columns=["term", "df"],
+                        filesystem=fs)
+    terms, dfs = tbl.column("term"), tbl.column("df")
+    match = _driver_matches(kind, terms, max_edits)
+    keys = [(c.lstrip("-"), "descending" if c[0] == "-" else "ascending")
+            for c in order]
+    if "term" not in order:
+        keys.append(("term", "ascending"))
+    out = []
+    for key, arg in probes:
+        idx, dist = match(arg)
+        if not idx.size:
+            continue
+        hits = {"term": terms.take(idx), "df": dfs.take(idx)}
+        if dist is not None:
+            hits["dist"] = dist
+        top = pa.table(hits)
+        top = top.take(pc.select_k_unstable(top, k=min(cut, top.num_rows),
+                                            sort_keys=keys))
+        out += [{"key": key, "arg": arg, **r} for r in top.to_pylist()]
+    return out
+
+
+def _driver_matches(kind: str, terms, max_edits: int):
+    """``arg → (idx, dist)``: the positions in the ``terms`` column (a
+    pyarrow array) that ``kind`` matches (``dist``: their edit distances
+    for fuzzy, else None)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if kind in ("prefix", "like"):
+        def match(arg):
+            hit = (pc.starts_with(terms, arg) if kind == "prefix"
+                   else pc.match_like(terms, arg))
+            return np.flatnonzero(hit.to_numpy(zero_copy_only=False)), None
+        return match
+    if kind != "fuzzy":
+        raise ValueError(f"no driver form for matcher kind {kind!r}")
+    # every term's code points, concatenated: the column's UTF-8 bytes
+    # decoded once (4 bytes per code point of the dictionary's own text),
+    # plus a 0 sentinel that padding reads
+    arr = terms.combine_chunks().cast(pa.large_string())
+    lens = pc.utf8_length(arr).to_numpy().astype(np.int64)
+    off = np.frombuffer(arr.buffers()[1], np.int64)[
+        arr.offset:arr.offset + len(arr) + 1]
+    raw = arr.buffers()[2]
+    raw = b"" if raw is None else raw.to_pybytes()[off[0]:off[-1]]
+    cps = np.append(np.frombuffer(raw.decode("utf-8").encode("utf-32-le"),
+                                  "<u4"), np.uint32(0))
+    starts = np.cumsum(lens) - lens
+
+    def match(arg):
+        m = len(arg)
+        idx = np.flatnonzero(np.abs(lens - m) <= max_edits)
+        if not idx.size:
+            return idx, None
+        # one row of code points per length-eligible term, zero-padded to
+        # m + max_edits: as large as those terms' own text, however long
+        # the dictionary's longest term
+        col = np.arange(max(1, m + max_edits))
+        codes = np.where(col < lens[idx, None],
+                         cps.take(starts[idx, None] + col, mode="clip"), 0)
+        src = np.array([arg], dtype=f"U{max(1, m)}").view(np.uint32)
+        dist = _levenshtein(codes, lens[idx], src[:m])
+        keep = dist <= max_edits
+        return idx[keep], dist[keep]
+    return match
+
+
+def _levenshtein(codes: np.ndarray, lens: np.ndarray,
+                 src: np.ndarray) -> np.ndarray:
+    """Levenshtein distance of each row's term (``codes``: zero-padded
+    code points, ``lens``: lengths) to ``src`` (code points), all rows at
+    once. Row i of the DP is D_i[j] = min(D_{i-1}[j] + 1,
+    D_{i-1}[j-1] + (src[i-1] ≠ t[j-1]), D_i[j-1] + 1); its last,
+    left-to-right term is a running minimum, D_i[j] = j + min_{l≤j}
+    (E_i[l] − l) over the first two (E_i[0] = i), so each source
+    character costs a few whole-matrix operations."""
+    n, width = codes.shape
+    cols = np.arange(width + 1, dtype=np.int32)
+    prev = np.broadcast_to(cols, (n, width + 1)).copy()
+    e = np.empty_like(prev)
+    for i, ch in enumerate(src, start=1):
+        e[:, 0] = i
+        np.minimum(prev[:, 1:] + 1, prev[:, :-1] + (codes != ch), out=e[:, 1:])
+        prev = np.minimum.accumulate(e - cols, axis=1) + cols
+    return prev[np.arange(n), lens]
 
 
 def _rewrite_search(spark: SparkSession, index_dir: str,
-                    probes: list[tuple], schema: str, cond, k: int,
+                    probes: list[tuple[int, str]], kind: str, k: int,
                     max_expansions: int, doc_filter: str | None,
                     filter_root: str | None) -> DataFrame:
     """The ``scoring_boolean`` rewrite of prefix / wildcard / regexp: each
@@ -144,9 +319,8 @@ def _rewrite_search(spark: SparkSession, index_dir: str,
     paths = IndexPaths(index_dir)
     stats = load_stats(spark, index_dir)
     qinfo: dict[int, dict] = {}
-    for r in _expand(spark, paths, probes, schema, cond, max_expansions):
-        qinfo.setdefault(int(r["query_id"]), {})[r["term"]] = idf_of(
-            stats.N, int(r["df"]))
+    for r in _expand(spark, paths, probes, kind, max_expansions):
+        qinfo.setdefault(r["key"], {})[r["term"]] = idf_of(stats.N, r["df"])
     return _run_kernel(spark, paths, stats, qinfo, k, True, doc_filter,
                        filter_root)
 
@@ -215,9 +389,10 @@ def prefix_search(spark: SparkSession, index_dir: str,
     Each query is a single prefix (analyzed: lowercased through the frozen
     analyzer). Expansion picks the first ``max_expansions`` dictionary
     terms in term order — Lucene's rewrite enumerates the term dict in
-    order and stops at ``max_expansions`` — in ONE distributed dictionary
-    pass for the whole query batch (broadcast prefix table, per-query
-    term-order window cut): the round-5 per-prefix orderBy+limit loop
+    order and stops at ``max_expansions`` — in ONE :func:`_expand` pass
+    for the whole query batch (a sorted-range lookup per prefix on the
+    driver, or a broadcast prefix table with a per-query term-order
+    window cut in Spark): the round-5 per-prefix orderBy+limit loop
     issued one driver-serialized Spark job per query, a scale-killer for
     batch prefix workloads (VERDICT r5 "what's wrong" #1). The expansion
     then scores as a disjunction of TermQuery clauses with boost 1:
@@ -229,9 +404,8 @@ def prefix_search(spark: SparkSession, index_dir: str,
         if toks:
             prefs[int(qid)] = toks[0]
     return _rewrite_search(spark, index_dir, sorted(prefs.items()),
-                           "query_id int, pref string",
-                           F.col("term").startswith(F.col("pref")), k,
-                           max_expansions, doc_filter, filter_root)
+                           "prefix", k, max_expansions, doc_filter,
+                           filter_root)
 
 
 # ------------------------------------------------------------- fuzzy query
@@ -255,10 +429,11 @@ def fuzzy_search(spark: SparkSession, index_dir: str,
     reached from several tokens accumulates their weights (BooleanQuery
     sum-of-clauses).
 
-    The dictionary scan is a distributed filter (Lucene walks an FST
-    automaton; at 100 TB the term dictionary is still millions of rows, a
-    single distributed pass) collecting only the ≤``max_expansions``
-    survivors per token. Block-max pruning stays sound: the prune
+    The expansion is one :func:`_expand` pass (Lucene walks an FST
+    automaton): a vectorized Levenshtein over the whole dictionary on the
+    driver, or, for a large dictionary, a single distributed filter,
+    either collecting only the ≤``max_expansions`` survivors per token.
+    Block-max pruning stays sound: the prune
     thresholds are computed from the same fractional weights
     (query.py:_block_prune_masks scales each upper bound by ``w``).
     """
@@ -272,11 +447,10 @@ def fuzzy_search(spark: SparkSession, index_dir: str,
     srcs = sorted({t for toks in q_toks.values() for t in toks})
     # per source token, closest-first: (distance asc, term asc)
     exp: dict[str, list[tuple[str, int, int]]] = {s: [] for s in srcs}
-    for r in _expand(spark, paths, [(s,) for s in srcs], "src string",
-                     F.col("dist") <= max_edits, max_expansions,
-                     order=("dist", "term"),
-                     dist=F.levenshtein(F.col("term"), F.col("src"))):
-        exp[r["src"]].append((r["term"], int(r["df"]), int(r["dist"])))
+    for r in _expand(spark, paths, list(enumerate(srcs)), "fuzzy",
+                     max_expansions, order=("dist", "term"),
+                     max_edits=max_edits):
+        exp[r["arg"]].append((r["term"], r["df"], r["dist"]))
     qinfo: dict[int, dict] = {}
     for qid, toks in q_toks.items():
         ti: dict[str, float] = {}
@@ -312,7 +486,7 @@ def wildcard_search(spark: SparkSession, index_dir: str,
     Patterns are lowercased and must stay inside the analyzer's alphabet
     plus the two metacharacters; anything else matches no indexed term by
     construction and the query drops out. The dictionary expansion is a
-    LIKE-pushdown scan (``*``→``%``, ``?``→``_`` — the analyzer alphabet
+    LIKE match (``*``→``%``, ``?``→``_`` — the analyzer alphabet
     contains neither SQL metacharacter, so no escaping is needed).
     """
     pats: dict[int, str] = {}
@@ -320,10 +494,8 @@ def wildcard_search(spark: SparkSession, index_dir: str,
         p = (raw or "").strip().lower()
         if p and set(p) <= _WILDCARD_OK:
             pats[int(qid)] = p.replace("*", "%").replace("?", "_")
-    return _rewrite_search(spark, index_dir, sorted(pats.items()),
-                           "query_id int, pat string",
-                           F.expr("term LIKE pat"), k, max_expansions,
-                           doc_filter, filter_root)
+    return _rewrite_search(spark, index_dir, sorted(pats.items()), "like",
+                           k, max_expansions, doc_filter, filter_root)
 
 
 # -------------------------------------------------------------- regexp query
@@ -344,8 +516,9 @@ def regexp_search(spark: SparkSession, index_dir: str,
     alternation, repetition) — the reference's OpenSearch regexp query
     documents the same subset.
 
-    Physical shape: ONE dictionary pass for all patterns (broadcast
-    pattern table, column-valued ``rlike``, per-query term-order cut);
+    Physical shape: ONE Spark dictionary pass for all patterns (broadcast
+    pattern table, column-valued ``rlike``, per-query term-order cut) —
+    always in Spark, as the pattern is a Java regex (:func:`_expand`);
     Lucene's FST automaton walk is the single-node analogue of this
     pruned distributed scan.
     """
@@ -355,9 +528,8 @@ def regexp_search(spark: SparkSession, index_dir: str,
         if p:
             pats[int(qid)] = f"^(?:{p})$"
     return _rewrite_search(spark, index_dir, sorted(pats.items()),
-                           "query_id int, pat string",
-                           F.expr("term RLIKE pat"), k, max_expansions,
-                           doc_filter, filter_root)
+                           "regexp", k, max_expansions, doc_filter,
+                           filter_root)
 
 
 # ------------------------------------------------------------ more_like_this
@@ -981,8 +1153,8 @@ def query_string_search(spark: SparkSession, index_dir: str,
     wildcards are should-clauses. A doc matching ONLY phrases qualifies
     when the query has no must terms.
 
-    Physical shape: ONE dictionary pass for terms, one LIKE-pushdown
-    pass for wildcard patterns, the standard per-range TAAT kernel
+    Physical shape: ONE dictionary lookup for terms, one LIKE
+    :func:`_expand` pass for wildcard patterns, the standard per-range TAAT kernel
     (k=∞, bool constraints range-local) full-outer-combined with the
     phrase kernel's match set — no new shuffle classes.
     """
@@ -997,10 +1169,8 @@ def query_string_search(spark: SparkSession, index_dir: str,
                    for w in ws})
     dfs, idfs = term_stats(spark, paths, stats, all_terms)
     exp: dict[int, list[tuple[str, int]]] = {}
-    for r in _expand(spark, paths, pats, "query_id int, pat string",
-                     F.expr("term LIKE pat"), max_expansions):
-        exp.setdefault(int(r["query_id"]), []).append(
-            (r["term"], int(r["df"])))
+    for r in _expand(spark, paths, pats, "like", max_expansions):
+        exp.setdefault(r["key"], []).append((r["term"], r["df"]))
 
     qinfo: dict[int, dict] = {}
     constraints: dict[int, tuple] = {}
@@ -1649,11 +1819,8 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
     expansions: dict[int, list[tuple[str, int]]] = {}
     for r in _expand(spark, paths,
                      [(qid, pref) for qid, (_f, pref) in parsed.items()],
-                     "query_id int, pref string",
-                     F.col("term").startswith(F.col("pref")),
-                     max_expansions):
-        expansions.setdefault(int(r["query_id"]), []).append(
-            (r["term"], int(r["df"])))
+                     "prefix", max_expansions):
+        expansions.setdefault(r["key"], []).append((r["term"], r["df"]))
     _dfs, idfs = term_stats(spark, paths, stats,
                             sorted({t for qid in expansions
                                     for t in parsed[qid][0]}))
@@ -1806,36 +1973,27 @@ def completion_suggest(spark: SparkSession, index_dir: str,
                        size: int = 5) -> DataFrame:
     """The ``completion`` suggester: prefix → most popular dictionary
     completions, weight = document frequency (the mapping's default
-    weight source), df desc then term asc. One pruned StartsWith
-    dictionary scan per prefix + TakeOrdered — no postings touched.
+    weight source), df desc then term asc. One :func:`_expand` prefix
+    expansion for the whole batch, cut at ``size`` per prefix — no
+    postings touched. A query_id given several prefixes ranks the union
+    of their completions.
 
-    Returns DataFrame(query_id, rank, suggestion, weight)."""
-    paths = IndexPaths(index_dir)
-    out_schema = "query_id int, rank int, suggestion string, weight long"
-    dictionary = tablefs.spark_read(spark, paths.dictionary)
-    outs = []
+    Returns DataFrame(query_id, rank, suggestion, weight), a local
+    relation in (query_id, rank) order."""
+    probes = []
     for qid, raw in prefixes:
         toks = tokenize_text(raw)
-        if not toks:
-            continue
-        pref = toks[0]
-        outs.append(
-            dictionary.filter(F.col("term").startswith(pref))
-            .select(F.lit(int(qid)).cast("int").alias("query_id"),
-                    F.col("term").alias("suggestion"),
-                    F.col("df").cast("long").alias("weight"))
-            .orderBy(F.col("weight").desc(), F.col("suggestion").asc())
-            .limit(size))
-    if not outs:
-        return spark.createDataFrame([], out_schema)
-    allc = outs[0]
-    for o in outs[1:]:
-        allc = allc.unionByName(o)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("weight").desc(), F.col("suggestion").asc())
-    return (allc.withColumn("rank", F.row_number().over(w))
-            .select("query_id", "rank", "suggestion", "weight")
-            .orderBy("query_id", "rank"))
+        if toks:
+            probes.append((int(qid), toks[0]))
+    rows = sorted(_expand(spark, IndexPaths(index_dir), probes, "prefix",
+                          size, order=("-df", "term")),
+                  key=lambda r: (r["key"], -r["df"], r["term"]))
+    ranked, rank = [], 0
+    for i, r in enumerate(rows):
+        rank = rank + 1 if i and rows[i - 1]["key"] == r["key"] else 1
+        ranked.append((r["key"], rank, r["term"], r["df"]))
+    return spark.createDataFrame(
+        ranked, "query_id int, rank int, suggestion string, weight long")
 
 
 # ------------------------------------------------------------- percolator

@@ -16,27 +16,32 @@ Physical plan:
    surface calls — runs a per-range kernel on each WHOLE doc range's
    postings rows. Because every document lives in exactly one range,
    per-range scores are complete — no cross-range combine of partial
-   scores is needed. An unfiltered ranked call (``k`` given) first takes
-   one sized decision (:func:`_runs_on_driver`): with B the compressed
-   bytes of the pruned row groups (cached footer summaries), Q the
-   queries and S the task slots, it runs on the driver iff
-   (α·B + β·Q)·(1 − 1/S) ≤ F, with α, β and F measured (see the
-   constants) and B capped. Then it picks one of four branches:
+   scores is needed. A ranked call (``k`` given) first takes one sized
+   decision (:func:`_runs_on_driver`): with B the compressed bytes of
+   the pruned row groups (cached footer summaries), Q the queries and S
+   the task slots, it runs on the driver iff (α·B + β·Q)·(1 − 1/S) ≤ F,
+   with α, β and F measured (see the constants) and B capped; a
+   filtered call also needs its allowed set, at most N docs, to fit the
+   cap, and adds the driver's cost of collecting it, δ·N, to the left
+   side. Then it picks one of four branches:
 
-   * unfiltered, ranked and small: the driver reads the pruned
-     postings with pyarrow, runs the same kernel per range, ranks in
-     pandas and returns the page as a local relation — the call runs no
-     Spark job. Unranked calls (hit sets, full score sets under a join
-     or aggregation) stay distributed: their output grows with the
-     matching docs, a cost the model does not cover;
+   * ranked and small: the driver reads the pruned postings with
+     pyarrow, runs the same kernel per range, ranks in pandas and
+     returns the page as a local relation. Unfiltered, the call runs no
+     Spark job; filtered, one column-pruned job collects the allowed
+     (doc_id, range_id) set first and each range's kernel gets its
+     sorted allowed ids. Unranked calls (hit sets, full score sets under
+     a join or aggregation) stay distributed: their output grows with
+     the matching docs, a cost the model does not cover;
    * unfiltered, range-aligned postings: one ``mapInPandas`` task per
      bin of postings files reads them with pyarrow through the
      filesystem :func:`tablefs.resolve` returns (C++-side bucket/term
      row-group pruning) — no Exchange, and the postings bytes never
      cross the JVM↔Python Arrow socket;
-   * filtered (``allowed`` doc set): the pushed-down JVM postings scan
-     ``cogroup``-ed with the allowed (doc_id, range_id) frame on
-     ``range_id``, so each range sees only its own allowed ids;
+   * filtered (``allowed`` doc set) and not on the driver: the
+     pushed-down JVM postings scan ``cogroup``-ed with the allowed
+     (doc_id, range_id) frame on ``range_id``, so each range sees only
+     its own allowed ids;
    * postings whose ranges are not file-aligned: the same JVM scan
      grouped by ``range_id`` into ``applyInPandas``.
 
@@ -224,31 +229,79 @@ DISTRIBUTED_FIXED_MS = 600.0  # F: distributed minus driver call at W = 0
 DRIVER_MAX_BYTES = 32 << 20
 
 
-def _runs_on_driver(footprint: int, n_queries: int, slots: int) -> bool:
-    """The one sized decision of :func:`execute` (see the constants)."""
-    if footprint > DRIVER_MAX_BYTES:
+# A filtered ranked call on the driver first collects its allowed
+# (doc_id, range_id) set: at most N rows of 8 + 4 bytes, so the call
+# takes the driver side only when N of them fit under the driver's cap
+# (N ≤ 2.79M). The collection is driver-only work of δ per doc on top of
+# one job; the cogroup's own job and shuffle of the same rows offset
+# that job. Measured on the 4-CPU box above, filter ``lang = 'en'``
+# (half the docs), median of 5 calls per side; collection alone:
+# 220 ms at N = 20,000, 305 ms at 1M, 350 ms at 2.7M, so δ ≈ 5e-5 –
+# 8.5e-5 ms and the larger value, rounded up, is kept. Whole calls,
+# driver vs distributed (B the postings footprint):
+#   N 20,000     B 0.7 MB  3 terms    267 vs   913 ms
+#   N 200,000    B 3.8 MB  3 terms    189 vs   681 ms, 10 terms 517 vs 1,325
+#   N 1,000,000  B 13 MB   3 terms    278 vs   982 ms, 10 terms 532 vs 1,121
+#   N 1,000,000  B 3.2 MB  3 terms    405 vs 1,243 ms
+#   N 2,700,000  B 6.7 MB  3 terms    450 vs 1,179 ms, 10 terms 602 vs 1,530
+# The model puts every one of them on the driver, their faster side.
+ALLOWED_BYTES_PER_DOC = 12
+DRIVER_MS_PER_ALLOWED_DOC = 1e-4  # δ
+
+
+def _runs_on_driver(footprint: int, n_queries: int, slots: int,
+                    n_allowed: int = 0) -> bool:
+    """The one sized decision of :func:`execute` (see the constants):
+    ``n_allowed`` bounds a filtered call's allowed set (0 unfiltered)."""
+    if max(footprint, n_allowed * ALLOWED_BYTES_PER_DOC) > DRIVER_MAX_BYTES:
         return False
     work = (DRIVER_MS_PER_MB * footprint / (1 << 20)
             + DRIVER_MS_PER_QUERY * n_queries)
-    return work * (1.0 - 1.0 / max(1, slots)) <= DISTRIBUTED_FIXED_MS
+    return (work * (1.0 - 1.0 / max(1, slots))
+            + DRIVER_MS_PER_ALLOWED_DOC * n_allowed) <= DISTRIBUTED_FIXED_MS
+
+
+# The dictionary expansion (boolquery._expand) runs on the driver iff the
+# dictionary's compressed (term, df) bytes fit DRIVER_MAX_BYTES, whatever
+# the probe count: the driver pass matches each probe over the whole term
+# column in pyarrow/numpy and is faster than the Spark pass at every
+# measured point. On a 4-CPU box (local[4], Spark 4.1, numpy 1.26,
+# pyarrow 16; synthetic dictionaries of 3–12-character terms, cut 50,
+# median of 3 after a warm-up), driver vs Spark pass in ms:
+#                     1 probe                  64 probes
+#   terms       prefix  like   fuzzy    prefix   like    fuzzy
+#   5,000       4/1068  7/783  7/758    18/946   40/1077  227/924
+#   50,000      13/627  11/702 61/737   60/647   181/3850 1847/3163
+#   500,000     54/636  56/982 485/980  537/1163 1690/25846 21759/27877
+# (fuzzy at max_edits 2). Regexp has no driver form.
+
+# The pins of the sized decisions, by side (module attributes to set):
+# "driver" lifts the fixed cost F past any work, so every ranked call and
+# every non-regexp expansion under the byte cap runs on the driver;
+# "distributed" drops the byte cap below any footprint, so nothing does.
+SIDE_PINS = {"driver": {"DISTRIBUTED_FIXED_MS": float("inf")},
+             "distributed": {"DRIVER_MAX_BYTES": -1}}
 
 
 # ---------------------------------------------------- the one executor
 
 def _kernel_over(fs, files, cols: list[str], filters: list, kernel,
-                 use_threads: bool):
+                 use_threads: bool, allowed: dict | None = None):
     """The one scan body: read ``files`` (one path or a list) with the
     bucket/term ``filters``, group the rows by ``range_id`` (across
     files, so a range split over several files is still whole) and
-    yield each non-empty ``kernel`` output."""
+    yield each non-empty ``kernel`` output — with ``allowed``
+    ({range_id: doc_ids}, whose ranges ``filters`` keep), as
+    ``kernel(pdf, allowed[range_id])``."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(files, columns=cols, filters=filters,
                         use_threads=use_threads, filesystem=fs)
     if tbl.num_rows == 0:
         return
-    for _rid, grp in tbl.to_pandas().groupby("range_id", sort=False):
-        out = kernel(grp)
+    for rid, grp in tbl.to_pandas().groupby("range_id", sort=False):
+        out = kernel(grp) if allowed is None else kernel(grp,
+                                                         allowed[int(rid)])
         if len(out):
             yield out
 
@@ -274,14 +327,20 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
     Branches (this is the only place that reads the postings table for a
     query):
 
-    * unfiltered, ranked and small — the driver scan: when ``k`` is
-      given and the sized decision (:func:`_runs_on_driver`) says the
-      footprint of the pruned row groups (from the cached footer
-      summaries, :func:`.indexer._footers`) and ``n_queries`` cost less
-      on the driver than a distributed call's fixed cost, the driver
-      reads the postings with pyarrow, runs the kernel per range, ranks
-      in pandas and returns the page as a local relation: no Spark job
-      at all. Unranked calls never take it (see the constants);
+    * ranked and small — the driver scan: when ``k`` is given and the
+      sized decision (:func:`_runs_on_driver`) says the footprint of the
+      pruned row groups (from the cached footer summaries,
+      :func:`.indexer._footers`) and ``n_queries`` cost less on the
+      driver than a distributed call's fixed cost, the driver reads the
+      postings with pyarrow, runs the kernel per range, ranks in pandas
+      and returns the page as a local relation: no Spark job at all.
+      With ``allowed`` the decision also counts the allowed set's
+      bound, ``stats.N`` rows (capped by :data:`DRIVER_MAX_BYTES`, priced
+      at δ per row); the call then collects the allowed set in
+      one column-pruned Spark job (:func:`_collect_allowed`), reads only
+      the ranges holding an allowed id and calls ``kernel(pdf,
+      allowed_ids)`` with each range's sorted ids — the cogroup's call.
+      Unranked calls never take it (see the constants);
     * unfiltered, range-aligned postings — the pyio scan: one
       ``mapInPandas`` task per bin of postings files reads them with
       pyarrow through the resolved filesystem (``filters=`` gives
@@ -292,9 +351,9 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
       Spark-free pool control, ~0.86, while the JVM→Arrow transfer path
       scales at ~0.60 — the boundary doubles memory traffic and hits the
       shared-bandwidth wall first);
-    * filtered — the pushed-down JVM scan ``cogroup``-ed with ``allowed``
-      on ``range_id``: each range sees only its own allowed ids, never a
-      global id broadcast;
+    * filtered, not on the driver — the pushed-down JVM scan
+      ``cogroup``-ed with ``allowed`` on ``range_id``: each range sees
+      only its own allowed ids, never a global id broadcast;
     * a range split across files — the JVM scan grouped by
       ``range_id``. A per-file task would see part of a range and emit
       wrong partial scores, so this is the distributed path for that
@@ -312,18 +371,19 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
     terms = sorted(bucket)
     cols = [c for c in _postings_arrow_schema().names
             if need_positions or c != "poss"]
-    if allowed is None:
-        fs, post_dir = tablefs.resolve(spark, paths.postings)
-        files = tablefs.list_files(fs, post_dir)
-        feet = _footers(fs, files)
-        if k is not None and _runs_on_driver(
-                _footprint(feet, bucket, cols), n_queries,
-                spark.sparkContext.defaultParallelism):
-            return _driver_scan(spark, fs, files, kernel, cols, buckets,
-                                terms, k)
-        if files and _aligned(feet):
-            return _ranked(_pyio_scan(spark, fs, files, kernel, buckets,
-                                      terms, cols, schema), k)
+    fs, post_dir = tablefs.resolve(spark, paths.postings)
+    files = tablefs.list_files(fs, post_dir)
+    feet = _footers(fs, files)
+    if k is not None and _runs_on_driver(
+            _footprint(feet, bucket, cols), n_queries,
+            spark.sparkContext.defaultParallelism,
+            0 if allowed is None else stats.N):
+        return _driver_scan(spark, fs, files, kernel, cols, buckets, terms,
+                            k, None if allowed is None
+                            else _collect_allowed(allowed))
+    if allowed is None and files and _aligned(feet):
+        return _ranked(_pyio_scan(spark, fs, files, kernel, buckets,
+                                  terms, cols, schema), k)
     postings = _filter_in(                                    # row-group pruning
         tablefs.spark_read(spark, paths.postings, _postings_arrow_schema())
         .filter(F.col("bucket").isin(buckets)),               # partition pruning
@@ -343,17 +403,39 @@ def _ranked(per_range: DataFrame, k: int | None) -> DataFrame:
     return per_range if k is None else ranked_topk(per_range, k)
 
 
+def _collect_allowed(allowed: DataFrame) -> dict[int, np.ndarray]:
+    """The allowed (doc_id, range_id) frame collected to the driver in
+    ONE column-pruned Spark job: {range_id: sorted allowed doc_ids}."""
+    tbl = allowed.select("doc_id", "range_id").toArrow()
+    rids = tbl.column("range_id").to_numpy().astype(np.int64)
+    ids = tbl.column("doc_id").to_numpy().astype(np.int64)
+    order = np.lexsort((ids, rids))
+    rids, ids = rids[order], ids[order]
+    cuts = np.flatnonzero(np.diff(rids)) + 1
+    return {int(r[0]): d for r, d in zip(np.split(rids, cuts),
+                                         np.split(ids, cuts)) if r.size}
+
+
 def _driver_scan(spark: SparkSession, fs, files: list, kernel,
                  cols: list[str], buckets: list[int], terms: list[str],
-                 k: int) -> DataFrame:
+                 k: int, allowed: dict | None = None) -> DataFrame:
     """:func:`execute`'s driver branch: ONE pyarrow read of every
     postings file (``FileInfo``s of ``fs``) with the bucket/term
     filters, the kernel per range, the pandas top-k page, and its rows
     as a local relation — ``createDataFrame`` of a pandas frame plans a
-    ``LocalRelation``, which collects with no Spark job."""
+    ``LocalRelation``, which collects with no Spark job.
+
+    ``allowed`` ({range_id: sorted doc_ids}, :func:`_collect_allowed`)
+    makes the call filtered: only ranges with an allowed id are read
+    (a ``range_id`` row-group filter), and the kernel is called as
+    ``kernel(pdf, allowed_ids)`` — the call the ``cogroup`` makes."""
+    if not files or allowed == {}:
+        return empty_frame(spark, RANKED)
     filters = [("bucket", "in", buckets), ("term", "in", terms)]
+    if allowed is not None:
+        filters.append(("range_id", "in", sorted(allowed)))
     outs = list(_kernel_over(fs, [f.path for f in files], cols, filters,
-                             kernel, use_threads=True)) if files else []
+                             kernel, use_threads=True, allowed=allowed))
     if not outs:
         return empty_frame(spark, RANKED)
     pdf = _rank_pandas(pd.concat(outs, ignore_index=True), k)

@@ -16,18 +16,14 @@ def spark():
     s.stop()
 
 
-# query.execute's sized decision pinned to one side: "driver" makes every
-# unfiltered call cheap enough for the driver scan, "distributed" (the
-# fixed cost forced to 0) sends every call to the Spark scan.
-SIDES = {"driver": float("inf"), "distributed": 0.0}
-
-
 @pytest.fixture
 def force_side(monkeypatch):
+    """``force_side("driver" | "distributed")`` pins the engine's sized
+    decisions to one side (``query.SIDE_PINS``) for the rest of the test."""
     from pdf_to_opensearch_spark import query
 
     def force(side: str) -> None:
-        monkeypatch.setattr(query, "DISTRIBUTED_FIXED_MS", SIDES[side])
+        for name, value in query.SIDE_PINS[side].items():
+            monkeypatch.setattr(query, name, value)
 
     return force
-

@@ -3,6 +3,7 @@ oracles (boolquery.py; reference bool-query builder
 opensearch_loader.py:395-441)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from pdf_to_opensearch_spark.analyzer import tokenize_text
@@ -112,12 +113,30 @@ def test_prefix_no_match_is_empty(spark, index_dir):
     assert len(got) == 0
 
 
-def test_prefix_batch_single_expansion_pass(spark, index_dir):
+def test_prefix_batch_single_expansion_pass(spark, index_dir, force_side):
     """Batched dictionary expansion: a multi-query batch of every
     expanding surface (prefix, wildcard, regexp, match_phrase_prefix)
     must (a) return exactly the union of per-query results and (b)
     expand every query in ONE dictionary job — a per-query loop runs
-    one Spark job per prefix/pattern."""
+    one Spark job per prefix/pattern. (Spark side of the expansion's
+    sized decision.)"""
+    force_side("distributed")
+    _batch_expansion_check(spark, index_dir, "distributed")
+
+
+def test_prefix_batch_expansion_on_the_driver(spark, index_dir, force_side):
+    """Driver twin of test_prefix_batch_single_expansion_pass: the same
+    union and job-count checks with the expansion and the ranked scan on
+    the driver, where a prefix or wildcard batch runs no Spark job at
+    all."""
+    force_side("driver")
+    jobs = _batch_expansion_check(spark, index_dir, "driver")
+    assert jobs["prefix"] == jobs["wildcard"] == (0, 0), jobs
+
+
+def _batch_expansion_check(spark, index_dir, side: str) -> dict:
+    """The checks of the two tests above; returns {surface: (jobs of one
+    query, jobs of the 4-query batch)} (job groups tagged by ``side``)."""
     from pdf_to_opensearch_spark.boolquery import (
         match_phrase_prefix_search,
         regexp_search,
@@ -140,22 +159,27 @@ def test_prefix_batch_single_expansion_pass(spark, index_dir):
     def count_jobs(fn, tag, queries):
         spark.sparkContext.setJobGroup(tag, "expansion batch")
         try:
-            out = fn(spark, index_dir, queries, k=K).toPandas()
+            out = fn(spark, index_dir, queries, k=K).collect()
+            out = pd.DataFrame([r.asDict() for r in out],
+                               columns=["query_id", "rank", "doc_id",
+                                        "score"])
             return out, len(tracker.getJobIdsForGroup(tag))
         finally:
             spark.sparkContext.setJobGroup(None, None)
 
+    jobs = {}
     for name, (fn, queries) in cases.items():
         per_q = {qid: (fn(spark, index_dir, [(qid, q)], k=K).toPandas()
                        .sort_values("rank", ignore_index=True))
                  for qid, q in queries}
         assert any(len(v) for v in per_q.values()), name
-        _one, jobs1 = count_jobs(fn, f"{name}_b1", queries[:1])
-        batch, jobs4 = count_jobs(fn, f"{name}_b4", queries)
+        _one, jobs1 = count_jobs(fn, f"{name}_b1_{side}", queries[:1])
+        batch, jobs4 = count_jobs(fn, f"{name}_b4_{side}", queries)
         # job count must be independent of the batch size (a per-query
         # expansion loop runs jobs4 ≈ jobs1 + 3)
         assert jobs4 <= jobs1, \
             f"{name}: 1 query: {jobs1} jobs, 4 queries: {jobs4}"
+        jobs[name] = (jobs1, jobs4)
         for qid, _q in queries:
             sub = (batch[batch["query_id"] == qid]
                    .sort_values("rank", ignore_index=True))
@@ -163,6 +187,146 @@ def test_prefix_batch_single_expansion_pass(spark, index_dir):
             assert list(sub["doc_id"]) == list(want["doc_id"]), (name, qid)
             np.testing.assert_allclose(sub["score"].to_numpy(),
                                        want["score"].to_numpy(), rtol=0)
+    return jobs
+
+
+def _expansion_rows(spark, index_dir, force_side, probes, kind, cut,
+                    order=("term",), max_edits=0) -> list:
+    """``_expand``'s rows on each side: asserts they are equal and
+    returns them."""
+    from pdf_to_opensearch_spark.boolquery import _expand
+    from pdf_to_opensearch_spark.indexer import IndexPaths
+
+    got = {}
+    for side in ("driver", "distributed"):
+        force_side(side)
+        got[side] = _expand(spark, IndexPaths(index_dir), probes, kind, cut,
+                            order=order, max_edits=max_edits)
+    assert got["driver"] == got["distributed"], (kind, probes, cut)
+    return got["driver"]
+
+
+def _cut_at_a_tie(rows: list, col: str) -> int:
+    """A cut that falls between two rows of one probe tied on ``col``."""
+    for i in range(1, len(rows)):
+        if (rows[i - 1]["key"] == rows[i]["key"]
+                and rows[i - 1][col] == rows[i][col]):
+            first = next(j for j, r in enumerate(rows)
+                         if r["key"] == rows[i]["key"])
+            return i - first
+    raise AssertionError(f"fixture dictionary has no {col} tie")
+
+
+EXPANSION_CASES = {
+    # prefix: ASCII, Korean, a probe with no match (the prefix_search and
+    # match_phrase_prefix form)
+    "prefix": ("prefix", [(1, "po"), (2, "s"), (3, "w00"), (4, "딸"),
+                          (5, "zzqq")], ("term",), 0),
+    # like: the wildcard_search and query_string wildcard-leg form
+    "like": ("like", [(1, "po%"), (2, "s_ark"), (3, "d%t"), (4, "%기"),
+                      (5, "___"), (6, "zz%")], ("term",), 0),
+    "fuzzy1": ("fuzzy", [(0, "sparc"), (1, "documnt"), (2, "딸기"),
+                         (3, "육묘"), (4, "w001"), (5, "zqzqzqzq")],
+               ("dist", "term"), 1),
+    "fuzzy2": ("fuzzy", [(0, "sprak"), (1, "documnt"), (2, "postng"),
+                         (3, "딸기"), (4, "zqzqzqzq")], ("dist", "term"), 2),
+    # completion_suggest's order: df desc, term asc
+    "completion": ("prefix", [(1, "s"), (2, "w0"), (3, "딸"), (4, "zzqq")],
+                   ("-df", "term"), 0),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EXPANSION_CASES))
+def test_expand_sides_return_equal_rows(spark, index_dir, force_side, case):
+    """The dictionary expansion's driver pass returns exactly the Spark
+    pass's rows, over the fixture dictionary (Korean terms included): at
+    max_expansions 50, at 1, and at a cut that falls inside a tie of the
+    order's leading column (distance ties for fuzzy, df ties for the
+    completion order); a probe without matches contributes no row."""
+    kind, probes, order, max_edits = EXPANSION_CASES[case]
+    full = _expansion_rows(spark, index_dir, force_side, probes, kind,
+                           1 << 30, order, max_edits)
+    keys = {r["key"] for r in full}
+    assert len(keys) == len(probes) - 1, keys  # the last probe: no match
+    assert any(ord(r["term"][0]) > 0x3000 for r in full), "no Korean term"
+    cuts = [50, 1]
+    if order[0] != "term":  # terms are unique: only other keys can tie
+        cuts.append(_cut_at_a_tie(full, order[0].lstrip("-")))
+    for cut in cuts:
+        rows = _expansion_rows(spark, index_dir, force_side, probes, kind,
+                               cut, order, max_edits)
+        for key in keys:
+            mine = [r for r in full if r["key"] == key][:cut]
+            assert [r for r in rows if r["key"] == key] == mine, (key, cut)
+
+
+def test_fuzzy_driver_pass_with_one_very_long_term(spark, tmp_path,
+                                                   force_side):
+    """A dictionary with one 40,000-character term (an unspaced run in a
+    PDF is one token): the driver's fuzzy pass holds code points only
+    for the terms within max_edits of a probe's length, so its peak
+    allocation stays far below rows × longest term × 4 bytes (80 MB
+    here), and its rows equal the Spark pass's."""
+    import tracemalloc
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_to_opensearch_spark.boolquery import _expand
+    from pdf_to_opensearch_spark.indexer import IndexPaths
+
+    rng = np.random.default_rng(7)
+    letters = list("abcdefgh") + ["딸", "기"]
+    terms = sorted({"".join(rng.choice(letters, int(rng.integers(3, 9))))
+                    for _ in range(600)})[:499] + ["ab" * 20_000]
+    paths = IndexPaths(str(tmp_path))
+    (tmp_path / "dictionary").mkdir()
+    pq.write_table(pa.table({"term": terms,
+                             "df": rng.integers(1, 50, len(terms))}),
+                   str(tmp_path / "dictionary" / "part-0.parquet"))
+    probes = [(i, t[:-1] + "x") for i, t in enumerate(terms[:20])]
+    force_side("driver")
+    tracemalloc.start()
+    try:
+        driver = _expand(spark, paths, probes, "fuzzy", 50,
+                         order=("dist", "term"), max_edits=2)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 8 << 20, peak
+    assert driver and all(len(r["term"]) < 10 for r in driver)
+    force_side("distributed")
+    assert driver == _expand(spark, paths, probes, "fuzzy", 50,
+                             order=("dist", "term"), max_edits=2)
+
+
+@pytest.mark.parametrize("surface", ["match_phrase_prefix", "query_string"])
+def test_expanding_surfaces_agree_across_expansion_sides(spark, index_dir,
+                                                         force_side, surface):
+    """match_phrase_prefix (prefix expansion) and query_string (its
+    wildcard leg, a LIKE expansion) return identical pages whichever side
+    expands, including max_expansions=1."""
+    from pdf_to_opensearch_spark.boolquery import (
+        match_phrase_prefix_search,
+        query_string_search,
+    )
+
+    if surface == "match_phrase_prefix":
+        fn, queries = match_phrase_prefix_search, [
+            (1, "posting me"), (2, "spark in"), (3, "index zzqq")]
+    else:
+        fn, queries = query_string_search, [
+            (1, '+spark -stream doc*'), (2, 'po* s?ark'), (3, 'zzqq*')]
+    for max_exp in (50, 1):
+        got = {}
+        for side in ("driver", "distributed"):
+            force_side(side)
+            got[side] = (fn(spark, index_dir, queries, k=K,
+                            max_expansions=max_exp).toPandas()
+                         .sort_values(["query_id", "rank"],
+                                      ignore_index=True))
+        assert len(got["driver"]) > 0
+        pd.testing.assert_frame_equal(got["driver"], got["distributed"])
 
 
 def test_facets_vs_brute(spark, index_dir, corpus):
@@ -276,18 +440,49 @@ def test_fuzzy_vs_brute(spark, index_dir, corpus):
                                    [s for _, s in exp_rank], rtol=1e-9)
 
 
-SIDE_CASES = ("bool", "boosting", "fuzzy", "prefix")
+FILTERS = {
+    "fuzzy_filter": "lang = 'en'",
+    "fuzzy_filter_matches_nothing": "doc_id < 0",
+    "fuzzy_filter_empties_a_range": "range_id <> 1",
+}
+SIDE_CASES = ("bool", "boosting", "fuzzy", "prefix", "wildcard", "regexp",
+              "more_like_this", *FILTERS)
+
+
+def _expanded_brute(oracle, pattern: str, k: int) -> list:
+    """The scoring_boolean rewrite's oracle: the first 50 vocabulary terms
+    (term order) that fully match the Python regex ``pattern``, scored as
+    one unweighted match query."""
+    import re
+
+    exp = sorted(t for t in oracle.index if re.fullmatch(pattern, t))[:50]
+    return oracle.search(" ".join(exp), k) if exp else []
 
 
 @pytest.mark.parametrize("case", SIDE_CASES)
 def test_execute_sides_agree_and_match_brute(spark, index_dir, corpus,
                                              force_side, case):
-    """Both sides of query.execute's sized decision give the same doc ids
-    with bit-identical scores for bool, boosting, fuzzy and prefix, and
-    both match the brute-force oracles."""
-    from pdf_to_opensearch_spark.boolquery import boosting_search, fuzzy_search
+    """Both sides of query.execute's sized decision (and of the dictionary
+    expansion's, which the same constant pins) give the same doc ids with
+    bit-identical scores for bool, boosting, fuzzy, prefix, wildcard,
+    regexp, more_like_this and filtered fuzzy calls, and both match the
+    brute-force oracles."""
+    from pdf_to_opensearch_spark.boolquery import (
+        boosting_search,
+        fuzzy_search,
+        more_like_this,
+        regexp_search,
+        wildcard_search,
+    )
 
-    _, oracle = corpus
+    pdf, oracle = corpus
+    doc_filter = FILTERS.get(case)
+    allowed = None
+    if doc_filter is not None:
+        docs = spark.read.parquet(f"{index_dir}/docs")
+        allowed = {int(r.doc_id) for r in
+                   docs.filter(doc_filter).select("doc_id").collect()}
+        assert docs.filter("range_id = 1").count() > 0
     if case == "bool":
         queries = [(i + 1, q) for i, q in enumerate(BOOL_CASES)]
         run = lambda: boolean_search(spark, index_dir, queries, k=K)  # noqa
@@ -297,23 +492,37 @@ def test_execute_sides_agree_and_match_brute(spark, index_dir, corpus,
                    (2, {"positive": "index document", "negative": "spark"})]
         run = lambda: boosting_search(spark, index_dir, queries, k=K,  # noqa
                                       negative_boost=0.4)
-    elif case == "fuzzy":
+    elif case == "fuzzy" or doc_filter is not None:
         queries = [(1, "sprak"), (2, "documnt postng")]
-        run = lambda: fuzzy_search(spark, index_dir, queries, k=K)  # noqa
+        run = lambda: fuzzy_search(spark, index_dir, queries, k=K,  # noqa
+                                   doc_filter=doc_filter)
+    elif case == "wildcard":
+        queries = [(1, "po*"), (2, "s?ark"), (3, "d*t")]
+        run = lambda: wildcard_search(spark, index_dir, queries, k=K)  # noqa
+    elif case == "regexp":
+        queries = [(1, "pos.*|mer.e"), (2, "s[a-z]+"), (3, "ost")]
+        run = lambda: regexp_search(spark, index_dir, queries, k=K)  # noqa
+    elif case == "more_like_this":
+        queries = [(1, 5), (2, 17)]
+        run = lambda: more_like_this(spark, index_dir, queries, k=K,  # noqa
+                                     max_query_terms=10, min_term_freq=2,
+                                     min_doc_freq=2)
     else:
         queries = [(1, "po"), (2, "sp"), (3, "do")]
         run = lambda: prefix_search(spark, index_dir, queries, k=K)  # noqa
+    marker = "MapInPandas" if allowed is None else "FlatMapCoGroupsInPandas"
     got = {}
     for side in ("driver", "distributed"):
         force_side(side)
         df = run()
         tree = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted").split("\n\n")[0]
-        assert ("MapInPandas" in tree) == (side == "distributed"), tree
+        assert (marker in tree) == (side == "distributed"), tree
+        assert ("InPandas" in tree) == (side == "distributed"), tree
         got[side] = (df.toPandas()
                      .sort_values(["query_id", "rank"], ignore_index=True))
     drv, dist = got["driver"], got["distributed"]
-    assert len(drv) > 0
+    assert (len(drv) > 0) == (allowed is None or bool(allowed))
     assert list(drv.query_id) == list(dist.query_id)
     assert list(drv.doc_id) == list(dist.doc_id)
     np.testing.assert_array_equal(drv.score.to_numpy(), dist.score.to_numpy())
@@ -335,6 +544,17 @@ def test_execute_sides_agree_and_match_brute(spark, index_dir, corpus,
             want = [(d, -ns) for ns, d in demoted[:K]]
         elif case == "fuzzy":
             want = _fuzzy_brute(oracle, q, 2, 50, K)
+        elif allowed is not None:
+            want = [(d, s) for d, s in _fuzzy_brute(oracle, q, 2, 50,
+                                                    oracle.N)
+                    if d in allowed][:K]
+        elif case == "wildcard":
+            want = _expanded_brute(
+                oracle, q.replace("*", ".*").replace("?", "."), K)
+        elif case == "regexp":
+            want = _expanded_brute(oracle, q, K)
+        elif case == "more_like_this":
+            want = _mlt_brute(pdf, oracle, q, 10, 2, 2, K)
         else:
             exp = sorted(t for t in oracle.index if t.startswith(q))[:50]
             want = oracle.search(" ".join(exp), K)
@@ -384,10 +604,27 @@ def test_mlt_selection_and_seed_exclusion(spark, index_dir, corpus):
     """more_like_this == match query over the top tf·idf seed terms
     (min_tf/min_df gates), with the seed doc dropped from the hits."""
     from pdf_to_opensearch_spark.boolquery import more_like_this
-    from pdf_to_opensearch_spark.oracle import idf as idf_fn
 
     pdf, oracle = corpus
     seed, max_terms, min_tf, min_df = 5, 10, 2, 2
+    got = (more_like_this(spark, index_dir, [(1, seed)], k=K,
+                          max_query_terms=max_terms, min_term_freq=min_tf,
+                          min_doc_freq=min_df)
+           .toPandas().sort_values("rank", ignore_index=True))
+    assert seed not in set(got.doc_id)
+    want = _mlt_brute(pdf, oracle, seed, max_terms, min_tf, min_df, K)
+    assert list(got.doc_id) == [d for d, _ in want]
+    np.testing.assert_allclose(got.score.to_numpy(),
+                               [s for _, s in want], rtol=1e-9)
+
+
+def _mlt_brute(pdf, oracle, seed: int, max_terms: int, min_tf: int,
+               min_df: int, k: int) -> list[tuple[int, float]]:
+    """more_like_this's oracle: the seed doc's top tf·idf terms (min_tf /
+    min_df gates, round(tf·idf, 6) desc, term asc) as one match query,
+    the seed doc dropped from its hits."""
+    from pdf_to_opensearch_spark.oracle import idf as idf_fn
+
     tf = {}
     for t in tokenize_text(pdf["text"].iloc[seed]):
         tf[t] = tf.get(t, 0) + 1
@@ -401,16 +638,8 @@ def test_mlt_selection_and_seed_exclusion(spark, index_dir, corpus):
     scored.sort(key=lambda x: (-x[0], x[1]))
     sel = [t for _s, t in scored[:max_terms]]
     assert sel, "seed doc must yield MLT terms"
-    got = (more_like_this(spark, index_dir, [(1, seed)], k=K,
-                          max_query_terms=max_terms, min_term_freq=min_tf,
-                          min_doc_freq=min_df)
-           .toPandas().sort_values("rank", ignore_index=True))
-    assert seed not in set(got.doc_id)
-    want = [(d, s) for d, s in oracle.search(" ".join(sel), k=K + 1)
-            if d != seed][:K]
-    assert list(got.doc_id) == [d for d, _ in want]
-    np.testing.assert_allclose(got.score.to_numpy(),
-                               [s for _, s in want], rtol=1e-9)
+    return [(d, s) for d, s in oracle.search(" ".join(sel), k=k + 1)
+            if d != seed][:k]
 
 
 def test_histogram_vs_brute(spark, index_dir, corpus):
@@ -1327,6 +1556,54 @@ def test_completion_suggest_weight_order(spark, index_dir, corpus):
                   key=lambda x: (-x[1], x[0]))[:4]
     assert list(zip(got.suggestion, got.weight)) == want
     assert list(got["rank"]) == list(range(1, len(want) + 1))
+
+
+def test_completion_suggest_batch_ties_and_punct(spark, index_dir,
+                                                 force_side):
+    """completion_suggest is one prefix expansion ordered (df desc, term
+    asc): on both sides of the expansion's decision a 4-prefix batch
+    returns, in (query_id, rank) order, each prefix's brute-force top
+    ``size`` (with a df tie across the cut), the same rows as one call
+    per prefix, and no more Spark jobs than a single prefix; a
+    punctuation-only prefix and one without completions add no row."""
+    from pdf_to_opensearch_spark.analyzer import tokenize_text as tok
+    from pdf_to_opensearch_spark.boolquery import completion_suggest
+
+    texts = (spark.read.parquet(f"{index_dir}/docs")
+             .selectExpr("text").toPandas()["text"])
+    dfs: dict[str, int] = {}
+    for t in texts:
+        for w in set(tok(t)):
+            dfs[w] = dfs.get(w, 0) + 1
+    batch = [(1, "s"), (2, "w0"), (3, "딸"), (4, "po")]
+    ranked = {p: sorted(((w, c) for w, c in dfs.items() if w.startswith(p)),
+                        key=lambda x: (-x[1], x[0])) for _q, p in batch}
+    size = next(n for n in range(2, 30)
+                if any(len(r) > n and r[n - 1][1] == r[n][1]
+                       for r in ranked.values()))
+    want = [(qid, i + 1, w, c) for qid, p in batch
+            for i, (w, c) in enumerate(ranked[p][:size])]
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(tag, prefixes):
+        spark.sparkContext.setJobGroup(tag, "completion")
+        try:
+            rows = [tuple(r) for r in completion_suggest(
+                spark, index_dir, prefixes, size=size).collect()]
+            return rows, len(tracker.getJobIdsForGroup(tag))
+        finally:
+            spark.sparkContext.setJobGroup(None, None)
+
+    for side in ("driver", "distributed"):
+        force_side(side)
+        got, jobs4 = run(f"completion4_{side}", batch + [(5, "!!! ..."),
+                                                         (6, "zzqq")])
+        assert got == want, side
+        _one, jobs1 = run(f"completion1_{side}", batch[:1])
+        assert jobs4 <= jobs1, (side, jobs1, jobs4)
+        for qid, p in batch:
+            single, _jobs = run(f"completion_{side}_{qid}", [(qid, p)])
+            assert single == [r for r in want if r[0] == qid], (side, p)
 
 
 # ------------------------------------------------------------- percolator

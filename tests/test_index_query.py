@@ -181,6 +181,37 @@ def test_dense_batch_path_matches_loop_path(spark, index_dir):
                                loop["score"].to_numpy(), rtol=1e-14)
 
 
+def test_dense_kernel_gate_both_sides(spark, index_dir, corpus):
+    """The dense-accumulator gate fires at 16 live, unpruned, unfiltered
+    queries: 15 of them take the reduceat loop, 16 the dense path. Over
+    the same queries both give identical doc ids and ranks, scores within
+    1 ULP of each other (the accumulator's sequential adds vs reduceat's
+    SIMD association) and within 1e-6 of BruteForceBM25."""
+    _, oracle = corpus
+    live = [q for _qid, q in QUERIES if oracle.search(q, 1)]
+    batch = [(i, q) for i, q in enumerate((live * 2)[:16])]
+    got = {}
+    for n in (15, 16):
+        got[n] = (search(spark, index_dir, batch[:n], k=K, prune=False)
+                  .toPandas().sort_values(["query_id", "rank"],
+                                          ignore_index=True))
+    assert got[16]["query_id"].nunique() == 16  # every query is live
+    loop, dense = got[15], got[16][got[16]["query_id"] < 15]
+    assert list(loop["query_id"]) == list(dense["query_id"])
+    assert list(loop["rank"]) == list(dense["rank"])
+    assert list(loop["doc_id"]) == list(dense["doc_id"])
+    np.testing.assert_array_max_ulp(loop["score"].to_numpy(),
+                                    dense["score"].to_numpy(), maxulp=1)
+    for side in (loop, got[16]):
+        for qid, q in batch[:side["query_id"].nunique()]:
+            want = oracle.search(q, K)
+            sub = side[side["query_id"] == qid]
+            assert list(sub["doc_id"]) == [d for d, _ in want], (qid, q)
+            np.testing.assert_allclose(sub["score"].to_numpy(),
+                                       [s for _, s in want], rtol=0,
+                                       atol=1e-6)
+
+
 def test_k_edge_cases(spark, index_dir, corpus):
     # k=0 → empty frame, not an error; k >> corpus → every matching doc,
     # ranks dense from 1
@@ -449,7 +480,32 @@ SIDE_CASES = {
     "exact": dict(prune=False),
     "msm": dict(minimum_should_match="67%"),
     "after": dict(after=True),
+    "filter": dict(doc_filter="lang = 'en'"),
+    "filter_matches_nothing": dict(doc_filter="doc_id < 0"),
+    "filter_empties_a_range": dict(
+        doc_filter="range_id <> 1 AND lang <> 'de'"),
 }
+
+
+def _filter_allowed(spark, index_dir, doc_filter):
+    """doc_ids of the docs table rows passing ``doc_filter`` (None: no
+    filter), read with Spark: the oracle's side of a filtered call."""
+    if doc_filter is None:
+        return None
+    return {int(r.doc_id) for r in spark.read.parquet(f"{index_dir}/docs")
+            .filter(doc_filter).select("doc_id").collect()}
+
+
+def _side_of(tree: str, filtered: bool) -> str:
+    """Which side of query.execute's decision planned a ranked page: a
+    Python scan task below it (the pyio scan, or the cogroup with the
+    allowed docs when filtered) is the distributed side; none is the
+    driver."""
+    if "InPandas" not in tree:
+        return "driver"
+    assert ("FlatMapCoGroupsInPandas" if filtered else "MapInPandas") \
+        in tree, tree
+    return "distributed"
 
 
 @pytest.mark.parametrize("case", sorted(SIDE_CASES))
@@ -457,8 +513,9 @@ def test_execute_sides_agree_and_match_oracle(spark, index_dir, corpus,
                                               force_side, case):
     """Both sides of query.execute's sized decision return the same doc
     ids with bit-identical scores, and both match BruteForceBM25, for
-    search with prune on and off, minimum_should_match and a
-    search_after cursor."""
+    search with prune on and off, minimum_should_match, a search_after
+    cursor and a doc_filter (one that keeps some docs of every range, one
+    that keeps none and one that empties a whole range)."""
     from pdf_to_opensearch_spark.analyzer import tokenize_text
     from pdf_to_opensearch_spark.query import resolve_msm
 
@@ -476,7 +533,7 @@ def test_execute_sides_agree_and_match_oracle(spark, index_dir, corpus,
         df = search(spark, index_dir, QUERIES, k=K, **opts)
         tree = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted").split("\n\n")[0]
-        assert ("MapInPandas" in tree) == (side == "distributed"), tree
+        assert _side_of(tree, "doc_filter" in opts) == side, tree
         got[side] = (df.toPandas()
                      .sort_values(["query_id", "rank"], ignore_index=True))
     drv, dist = got["driver"], got["distributed"]
@@ -484,9 +541,15 @@ def test_execute_sides_agree_and_match_oracle(spark, index_dir, corpus,
     assert list(drv.doc_id) == list(dist.doc_id)
     assert list(drv["rank"]) == list(dist["rank"])
     np.testing.assert_array_equal(drv.score.to_numpy(), dist.score.to_numpy())
-    assert len(drv) > 0
+    assert (len(drv) > 0) == (case != "filter_matches_nothing")
+    filtered = _filter_allowed(spark, index_dir, opts.get("doc_filter"))
+    if case == "filter_empties_a_range":
+        ranges = {int(r.doc_id): int(r.range_id) for r in
+                  spark.read.parquet(f"{index_dir}/docs").collect()}
+        assert 1 not in {ranges[d] for d in filtered}
+        assert 1 in set(ranges.values())
     for qid, qtext in QUERIES:
-        allowed = None
+        allowed = filtered
         if case == "msm":
             m = resolve_msm("67%", len(set(tokenize_text(qtext))))
             tally: dict[int, int] = {}
@@ -537,7 +600,9 @@ def test_sized_decision_counts_bytes_and_queries():
     point query and a 64-query batch over a few MB run on the driver; a
     1,024-query batch over a 6.5 MB footprint stays distributed, as does
     anything above the driver's byte cap; with one slot there is nothing
-    to parallelize, so only the cap decides."""
+    to parallelize, so only the cap decides. A filtered call's allowed
+    set (at most N docs) must fit the same cap: the measured 2.7M-doc
+    filtered calls run on the driver, one past the cap does not."""
     from pdf_to_opensearch_spark.query import DRIVER_MAX_BYTES, _runs_on_driver
 
     mb = 1 << 20
@@ -548,6 +613,9 @@ def test_sized_decision_counts_bytes_and_queries():
     assert not _runs_on_driver(DRIVER_MAX_BYTES + 1, 1, 4)
     assert _runs_on_driver(DRIVER_MAX_BYTES, 100_000, 1)
     assert not _runs_on_driver(DRIVER_MAX_BYTES + 1, 1, 1)
+    assert _runs_on_driver(int(13.4 * mb), 1, 4, 1_000_000)
+    assert _runs_on_driver(int(6.7 * mb), 1, 4, 2_700_000)
+    assert not _runs_on_driver(0, 1, 4, DRIVER_MAX_BYTES // 12 + 1)
 
 
 def test_unranked_execute_calls_stay_distributed(spark, index_dir,

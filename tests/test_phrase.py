@@ -187,29 +187,61 @@ def test_execute_sides_agree_and_match_brute(spark, phrase_setup,
     hits with bit-identical scores, at slop 0 (checked against
     BruteForceBM25.phrase_search) and slop 2 (against the ordered-window
     brute force)."""
+    _phrase_sides_agree(spark, phrase_setup, force_side, slop, None)
+
+
+FILTERS = {
+    "some": "doc_id % 2 = 0",
+    "nothing": "doc_id < 0",
+    "empties_a_range": "range_id <> 1",
+}
+
+
+@pytest.mark.parametrize("slop", [0, 2])
+@pytest.mark.parametrize("flt", sorted(FILTERS))
+def test_filtered_execute_sides_agree_and_match_brute(spark, phrase_setup,
+                                                      force_side, slop, flt):
+    """The same two-sided check with a doc_filter: the driver side
+    collects the allowed docs and runs the kernel on each range's allowed
+    ids, the distributed side cogroups them with the postings scan."""
+    _phrase_sides_agree(spark, phrase_setup, force_side, slop, FILTERS[flt])
+
+
+def _phrase_sides_agree(spark, phrase_setup, force_side, slop, doc_filter):
     from pdf_to_opensearch_spark.oracle import idf as idf_fn
     from pdf_to_opensearch_spark.query import phrase_search
 
     root, oracle = phrase_setup
     cases = [(1, "duplicate content row"), (2, "spark posting"),
              (3, "content duplicate")]
+    allowed = None
+    if doc_filter is not None:
+        docs = spark.read.parquet(f"{root}/docs")
+        allowed = {int(r.doc_id) for r in
+                   docs.filter(doc_filter).select("doc_id").collect()}
+        if "range_id" in doc_filter:
+            assert docs.filter("range_id = 1").count() > 0
     got = {}
     for side in ("driver", "distributed"):
         force_side(side)
-        df = phrase_search(spark, root, cases, k=20, slop=slop)
+        df = phrase_search(spark, root, cases, k=20, slop=slop,
+                           doc_filter=doc_filter)
         tree = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted").split("\n\n")[0]
-        assert ("MapInPandas" in tree) == (side == "distributed"), tree
+        marker = ("MapInPandas" if doc_filter is None
+                  else "FlatMapCoGroupsInPandas")
+        assert (marker in tree) == (side == "distributed"), tree
+        assert ("InPandas" in tree) == (side == "distributed"), tree
         got[side] = (df.toPandas()
                      .sort_values(["query_id", "rank"], ignore_index=True))
     drv, dist = got["driver"], got["distributed"]
-    assert len(drv) > 0
+    assert (len(drv) > 0) == (allowed is None or bool(allowed))
     assert list(drv.query_id) == list(dist.query_id)
     assert list(drv.doc_id) == list(dist.doc_id)
     np.testing.assert_array_equal(drv.score.to_numpy(), dist.score.to_numpy())
     for qid, phrase in cases:
         if slop == 0:
-            want = oracle.phrase_search(phrase, 20)
+            want = oracle.phrase_search(phrase, oracle.N)
         else:
             terms = phrase.split()
             idf_sum = sum(float(idf_fn(oracle.N, np.array(
@@ -221,7 +253,9 @@ def test_execute_sides_agree_and_match_brute(spark, phrase_setup,
                     dl = float(oracle.dl[d])
                     scores.append((d, idf_sum * tf * 2.2 / (
                         tf + 1.2 * (1 - 0.75 + 0.75 * dl / oracle.avgdl))))
-            want = sorted(scores, key=lambda kv: (-kv[1], kv[0]))[:20]
+            want = sorted(scores, key=lambda kv: (-kv[1], kv[0]))
+        want = [(d, s) for d, s in want
+                if allowed is None or d in allowed][:20]
         sub = drv[drv["query_id"] == qid]
         assert list(sub["doc_id"]) == [d for d, _ in want], (slop, phrase)
         np.testing.assert_allclose(sub["score"].to_numpy(),

@@ -3,7 +3,14 @@
 on DuckDB at the given sf, compare row-count + column set + an
 order-insensitive value hash.
 
-Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
+Usage: python tools/check_oracles.py [--side auto|driver|distributed]
+                                     [sf_dir] [only_query ...]
+
+``--side`` pins the engine's sized driver/distributed decisions (the
+postings executor's and the dictionary expansion's) through the module
+constants ``query.SIDE_PINS`` names for that side, the pins the tests'
+``force_side`` fixture sets; ``auto`` (the default) keeps the measured
+values. Run the board once per side to check both.
 
 The last line states the result: ``N ok, M failed, R rows-only of T``
 (T entries run; rows-only entries have no oracle twin).
@@ -11,6 +18,7 @@ The last line states the result: ``N ok, M failed, R rows-only of T``
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import sys
 import time
@@ -44,11 +52,19 @@ def _norm(v) -> str:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--side", choices=["auto", "driver", "distributed"],
+                    default="auto")
+    args, sys.argv[1:] = ap.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
+    from pdf_to_opensearch_spark import query
     from pdf_to_opensearch_spark.session import get_spark
+
+    for name, value in query.SIDE_PINS.get(args.side, {}).items():
+        setattr(query, name, value)
 
     spark = get_spark("check_oracles", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -98,7 +114,8 @@ def main() -> None:
                 print(merged.head(8).to_string())
 
     spark.stop()
-    print(f"{ok} ok, {failures} failed, {rows_only} rows-only of {total}")
+    print(f"{ok} ok, {failures} failed, {rows_only} rows-only of {total}"
+          f" (side {args.side})")
     sys.exit(1 if failures else 0)
 
 
