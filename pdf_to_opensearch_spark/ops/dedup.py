@@ -1,22 +1,38 @@
 """Deduplication operators for web-scale corpora.
 
-All hot paths are JVM-side built-ins (xxhash64, md5, groupBy) — the
-MinHash signature computation never leaves whole-stage codegen; only the
+Where each MinHash stage runs:
+- shingles: one Arrow-batch pandas UDF call per partition, one DISTINCT
+  shingle array per doc (no explode);
+- signatures: ``array_min(transform(sh, hash_i))`` inside the same per-doc
+  row (xxhash64, or the md5-60 oracle family) — the frame of id, set and
+  signatures is localCheckpoint'ed once and read by both later stages;
+- candidates: band keys → one groupBy per (band, bucket), behind a
+  partial-aggregated bucket-size guard and a broadcast anti-join;
+- verification, one form for every input size: each candidate pair's
+  endpoints join the per-doc sets and regroup by pair; a size filter
+  (min/max ≥ threshold, exact since J ≤ min/max) runs before the
+  ``array_intersect``;
+- clustering: pairs go to the driver once for a vectorized union-find;
+  above ``small_max`` pairs, distributed star contraction.
 SimHash bit-unpacking uses a vectorized numpy kernel.
 
 Scale notes (100 TB):
 - exact dedup: one shuffle on a 128-bit digest — uniformly distributed
   keys, no skew by construction.
-- MinHash-LSH: signatures via ``min(xxhash64(shingle, seed_i))`` per doc
-  (map-side partial min, skew-immune); candidate generation via band
-  buckets; verification joins only within buckets. Hot buckets (boiler-
-  plate shingles) are bounded by banding width; a count-based guard drops
-  degenerate buckets larger than ``max_bucket`` (logged, like Spark's own
-  MinHashLSH behavior on trivial signatures).
+- MinHash-LSH: the shingle and signature work is map-side, per doc;
+  candidate generation shuffles only band keys; hot buckets (boiler-
+  plate shingles) are bounded by banding width, and the guard drops
+  degenerate buckets larger than ``max_bucket`` (like Spark's own
+  MinHashLSH behavior on trivial signatures). Verification joins the
+  candidate endpoints to the per-doc frame: AQE broadcasts the endpoints
+  while they fit its broadcast threshold (the per-doc frame then stays
+  in place); beyond that the join shuffles the frame by id.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -112,71 +128,77 @@ def shingles(df: DataFrame, text_col: str = "text", n: int = 3,
 
 def raw_shingles(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", shingle_n: int = 3) -> DataFrame:
-    """(id, shingle) pairs WITH duplicates — the shared input of MinHash
-    signature generation (min is idempotent under duplicates, so the
-    full-corpus distinct shuffle is unnecessary there) AND Jaccard
-    verification (which needs distinct SETS, but only over candidate
-    docs — dedupe after the candidate semi-join, never corpus-wide)."""
+    """(id, shingle) pairs WITH duplicates — the exploded form, for the
+    all-pairs :func:`jaccard_pairs` self-join and for callers that want
+    one row per shingle. The MinHash stages read :func:`_shingle_sets`
+    (one set per doc) instead."""
     return (shingles(df.select(id_col, text_col), text_col, n=shingle_n)
             .select(F.col(id_col).alias("id"), "shingle"))
 
 
 def distinct_shingles(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", shingle_n: int = 3) -> DataFrame:
-    """(id, shingle) distinct pairs. Prefer :func:`raw_shingles` in fused
-    pipelines — corpus-wide distinct is a full shuffle whose only consumer
-    (Jaccard verification) needs distinct sets for candidate docs only."""
+    """(id, shingle) distinct pairs — a full shuffle on (id, shingle)."""
     return raw_shingles(df, id_col, text_col, shingle_n).distinct()
 
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", num_hashes: int = 16,
-                       shingle_n: int = 3,
-                       shingle_df: DataFrame | None = None,
-                       hash_family: str = "xxhash64") -> DataFrame:
-    """MinHash signatures: sig_i = min over shingles of hash_i(shingle).
+def _shingle_set(text: Column, shingle_n: int = 3) -> Column:
+    """A doc's DISTINCT word n-gram set as an array (empty below
+    ``shingle_n`` tokens or for a null text)."""
+    return F.array_distinct(_shingle_udf(shingle_n)(text))
 
-    Entirely built-in expressions → map-side combined min aggregation.
-    Output: (id, sig_0..sig_{h-1}). ``shingle_df``: optional precomputed
-    (id, shingle) table — distinct or raw (min is idempotent under
-    duplicate shingles, so :func:`raw_shingles` works and skips a full
-    shuffle). ``hash_family``: 'xxhash64' (production default) or 'md5'
-    (:func:`md5_60`, exactly reproducible in the DuckDB oracle).
-    """
-    sh = (shingle_df if shingle_df is not None
-          else raw_shingles(df, id_col, text_col, shingle_n))
+
+def _shingle_sets(df: DataFrame, id_col: str = "doc_id",
+                  text_col: str = "text", shingle_n: int = 3,
+                  shingle_df: DataFrame | None = None) -> DataFrame:
+    """(id, sh): one row per doc, ``sh`` its :func:`_shingle_set` — no
+    explode, a doc's set stays one row. A caller's (id, shingle) table,
+    raw or distinct, is folded into the same frame instead."""
+    if shingle_df is not None:
+        return shingle_df.groupBy("id").agg(
+            F.collect_set("shingle").alias("sh"))
+    return (_spread(df.select(id_col, text_col))
+            .select(F.col(id_col).alias("id"),
+                    _shingle_set(F.col(text_col), shingle_n).alias("sh")))
+
+
+def _seeded_hash(hash_family: str, seed: int):
+    """hash_seed(shingle) as a one-argument column function. A factory, not
+    ``lambda s, i=i: …``: ``F.transform`` passes the element INDEX as a
+    two-parameter lambda's second argument, which would silently hash with
+    the index instead of the seed."""
     if hash_family == "md5":
-        aggs = [F.min(md5_60(F.col("shingle"), seed=i)).alias(f"sig_{i}")
-                for i in range(num_hashes)]
-    else:
-        aggs = [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"sig_{i}")
-                for i in range(num_hashes)]
-    return sh.groupBy("id").agg(*aggs).withColumnRenamed("id", id_col)
+        return lambda s: md5_60(s, seed=seed)
+    return lambda s: F.xxhash64(s, F.lit(seed))
 
 
-def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text", num_hashes: int = 32,
-                            bands: int = 8, shingle_n: int = 3,
-                            max_bucket: int = 1000,
-                            shingle_df: DataFrame | None = None,
-                            hash_family: str = "xxhash64",
-                            materialize: bool = True) -> DataFrame:
-    """LSH candidate pairs: same band-bucket in any band → candidate.
+def _with_signatures(sets: DataFrame, num_hashes: int,
+                     hash_family: str) -> DataFrame:
+    """``sets`` plus sig_0..sig_{h-1}: sig_i = min over the doc's set of
+    hash_i (null for an empty set), computed inside the per-doc row as
+    ``array_min(transform(sh, hash_i))`` — no explode, no exchange.
 
-    Returns distinct (id_a, id_b) with id_a < id_b. Buckets larger than
-    ``max_bucket`` are dropped (degenerate boilerplate guard).
+    The other form, explode + a partial-aggregated ``groupBy(id)`` min, is
+    codegen but adds an exchange, and a consumer that reads the
+    signatures twice (the bucket guard and the bucket grouping) either
+    reuses that exchange or recomputes. Measured on the perfbench bulk
+    dedup corpus (480 docs, 4 CPUs), the signature stage alone:
+    xxhash64 0.52 s here vs 0.38 s exploded, md5 1.73 vs 1.78 s. A whole
+    ``clean_corpus`` call: xxhash64 2.0–2.6 s in 10 Spark jobs here vs
+    1.9–2.9 s in 11 exploded; md5 2.6–3.3 s vs 2.9–3.2 s. This form is
+    kept for both families: the signatures are materialized with the
+    per-doc frame, and the candidate stage starts from them."""
+    return sets.select("*", *[
+        F.array_min(F.transform("sh", _seeded_hash(hash_family, i)))
+        .alias(f"sig_{i}") for i in range(num_hashes)])
 
-    With ``materialize=True`` (default) the candidate set — tiny by
-    construction: it is bounded by the near-duplicate pair count — is
-    localCheckpoint'ed inside (materialized AND lineage-truncated, so
-    downstream consumers never re-analyze the signature DAG), after which
-    the intermediate ``banded`` cache is released deterministically.
-    ``materialize=False`` returns the lazy plan (intermediate frames stay
-    persisted until the session's LRU evicts them) — for plan
-    inspection/tests only.
-    """
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n,
-                              shingle_df=shingle_df, hash_family=hash_family)
+
+def _lsh_candidates(frame: DataFrame, num_hashes: int, bands: int,
+                    max_bucket: int, hash_family: str) -> DataFrame:
+    """(id_a, id_b), id_a < id_b, of docs sharing a band bucket, from a
+    per-doc (id, sh, sig_*) frame — once per shared band, so a pair may
+    repeat. Docs with no shingle take no part. Buckets larger than
+    ``max_bucket`` are dropped first (degenerate boilerplate guard)."""
     rows = num_hashes // bands
     if hash_family == "md5":
         # equality-only band key: the plain concat of the band's signature
@@ -192,99 +214,120 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
                        F.lit(b))
             for b in range(bands)
         ])
-    # one posexplode + one self-join (vs a union of per-band joins, which
+    # one posexplode + one grouping (vs a union of per-band joins, which
     # would recompute the signature DAG per band)
-    from pyspark import StorageLevel
-
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(band_arr).alias("band", "bucket"))
-    # persist BEFORE the guard + self-join: banded is tiny (docs × bands
-    # rows) but its upstream is the whole shingle→signature pipeline,
-    # which would otherwise run once per join side
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    banded = (frame.filter(F.size("sh") > 0)
+              .select("id", F.posexplode(band_arr).alias("band", "bucket")))
     # degenerate-bucket guard as a map-side-combinable groupBy count +
-    # broadcast anti-join of the (rare) oversized buckets — the previous
-    # count(*) OVER (PARTITION BY band, bucket) window shuffled and sorted
-    # EVERY banded row
+    # broadcast anti-join of the (rare) oversized buckets — a count(*)
+    # OVER (PARTITION BY band, bucket) window would shuffle and sort EVERY
+    # banded row
     big = (banded.groupBy("band", "bucket")
            .agg(F.count("*").alias("bn"))
            .filter(F.col("bn") > max_bucket)
            .select("band", "bucket"))
     kept = banded.join(F.broadcast(big), ["band", "bucket"], "left_anti")
-    # pair generation via ONE groupBy + in-row combination explode (round
-    # 6): the previous a⋈b self-join shuffled the banded table twice and
-    # sorted/probed per bucket; collecting each bucket's ids (safe: the
-    # guard above bounds every surviving bucket at max_bucket) and
-    # exploding the i<j combinations inside the row emits the identical
-    # pair set with a single exchange and no join
+    # pair generation via ONE groupBy + in-row combination explode: a
+    # bucket's ids (bounded at max_bucket by the guard) explode into their
+    # i<j combinations inside the row — one exchange, no self-join
     grp = (kept.groupBy("band", "bucket")
            .agg(F.collect_list("id").alias("ids"))
            .filter(F.size("ids") >= 2))
-    out = (grp.select(F.explode("ids").alias("id_a"), "ids")
-           .select("id_a",
-                   F.explode(F.filter(F.col("ids"),
-                                      lambda x: x > F.col("id_a")))
-                   .alias("id_b"))
-           .distinct())
+    return (grp.select(F.explode("ids").alias("id_a"), "ids")
+            .select("id_a",
+                    F.explode(F.filter(F.col("ids"),
+                                       lambda x: x > F.col("id_a")))
+                    .alias("id_b")))
+
+
+def _verify(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Distinct (id_a, id_b, jaccard) of the (id_a < id_b) candidate pairs
+    — repeats allowed — whose exact shingle-set Jaccard is ≥
+    ``threshold``, rounded to 6 dp. One form for every input size: each
+    pair's two endpoints join the per-doc (id, sh) sets and regroup by
+    pair, which also folds repeated pairs. Koios' size filter runs before
+    the intersection and is exact: J ≤ min(|A|,|B|)/max(|A|,|B|), and f64
+    division is monotone, so no pair it drops can reach the threshold."""
+    ends = cands.select("id_a", "id_b",
+                        F.explode(F.array("id_a", "id_b")).alias("id"))
+    pairs = (ends.join(sets.filter(F.size("sh") > 0).select("id", "sh"), "id")
+             .groupBy("id_a", "id_b")
+             .agg(F.min_by("sh", "id").alias("sh_a"),
+                  F.max_by("sh", "id").alias("sh_b"),
+                  F.min("id").alias("lo"), F.max("id").alias("hi"))
+             # both endpoints found (a pair with a doc missing from
+             # ``sets``, or with no shingle, would otherwise compare one
+             # set with itself)
+             .filter(F.col("lo") < F.col("hi")))
+    n_a, n_b = F.size("sh_a"), F.size("sh_b")
+    inter = F.col("inter")
+    return (pairs
+            .filter(F.least(n_a, n_b) / F.greatest(n_a, n_b) >= threshold)
+            .select("id_a", "id_b",
+                    F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+                    (n_a + n_b).alias("n"))
+            .withColumn("jaccard", inter / (F.col("n") - inter))
+            .filter((inter > 0) & (F.col("jaccard") >= threshold))
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
+
+
+def _near_pairs(frame: DataFrame, num_hashes: int, bands: int,
+                threshold: float, max_bucket: int,
+                hash_family: str) -> DataFrame:
+    """Verified MinHash-LSH pairs (lazy) of a per-doc (id, sh, sig_*)
+    frame; the frame is read twice (band keys, verification sets), so
+    callers materialize it first."""
+    cands = _lsh_candidates(frame, num_hashes, bands, max_bucket,
+                            hash_family)
+    return _verify(cands, frame, threshold)
+
+
+def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
+                       text_col: str = "text", num_hashes: int = 16,
+                       shingle_n: int = 3,
+                       shingle_df: DataFrame | None = None,
+                       hash_family: str = "xxhash64") -> DataFrame:
+    """MinHash signatures: sig_i = min over shingles of hash_i(shingle).
+
+    Output: (id, sig_0..sig_{h-1}), one row per doc with ≥1 shingle.
+    ``shingle_df``: optional precomputed (id, shingle) table, raw or
+    distinct (min is idempotent under duplicate shingles).
+    ``hash_family``: 'xxhash64' (production default) or 'md5'
+    (:func:`md5_60`, exactly reproducible in the DuckDB oracle).
+    """
+    sets = _shingle_sets(df, id_col, text_col, shingle_n, shingle_df)
+    return (_with_signatures(sets.filter(F.size("sh") > 0), num_hashes,
+                             hash_family)
+            .drop("sh").withColumnRenamed("id", id_col))
+
+
+def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
+                            text_col: str = "text", num_hashes: int = 32,
+                            bands: int = 8, shingle_n: int = 3,
+                            max_bucket: int = 1000,
+                            shingle_df: DataFrame | None = None,
+                            hash_family: str = "xxhash64",
+                            materialize: bool = True) -> DataFrame:
+    """LSH candidate pairs: same band-bucket in any band → candidate.
+
+    Returns distinct (id_a, id_b) with id_a < id_b. Buckets larger than
+    ``max_bucket`` are dropped (degenerate boilerplate guard).
+
+    With ``materialize=True`` (default) the per-doc signature frame and
+    then the candidate set — tiny by construction: it is bounded by the
+    near-duplicate pair count — are localCheckpoint'ed (materialized AND
+    lineage-truncated, so downstream consumers never re-analyze the
+    signature DAG). ``materialize=False`` returns the lazy plan — for plan
+    inspection/tests only.
+    """
+    frame = _with_signatures(
+        _shingle_sets(df, id_col, text_col, shingle_n, shingle_df),
+        num_hashes, hash_family)
     if materialize:
-        # localCheckpoint materializes the (tiny) candidate set AND
-        # truncates its lineage — verification references the candidates
-        # twice, and without truncation every downstream action would
-        # re-analyze the whole shingle→signature→banding plan
-        out = out.localCheckpoint(eager=True)
-        banded.unpersist()
-    return out
-
-
-def _round6_half_up(x: float) -> float:
-    """Spark ``round(col, 6)`` semantics for DoubleType: shortest-repr
-    decimal, HALF_UP at the 6th place (BigDecimal.valueOf + setScale).
-    Python's builtin round is half-even — NOT equivalent."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(float(x))).quantize(Decimal("1e-6"),
-                                                  rounding=ROUND_HALF_UP))
-
-
-# Driver fast path for candidate-restricted Jaccard verification: at or
-# below these bounds the candidate docs' shingle sets collect to the
-# driver and the pair loop runs in Python sets — one Spark job instead of
-# the ~6-stage join cascade. Same spirit (and same safety argument) as
-# duplicate_clusters' small_max union-find: candidate sets are the
-# near-dup pair neighborhood, tiny relative to the corpus; web-scale
-# candidate sets keep the distributed joins.
-JACCARD_SMALL_PAIRS_MAX = 10_000
-JACCARD_SMALL_DOCS_MAX = 5_000
-
-
-def _jaccard_driver(spark, sh: DataFrame, cand_pdf, threshold: float):
-    """Candidate-pair Jaccard on the driver: ``sh`` is the candidate-
-    restricted (id, shingle) frame (one Spark job to collect), pairs and
-    set ops run in Python. Emits exactly the join path's rows: pairs
-    sharing ≥1 shingle, ``inter / (|A| + |B| − inter) ≥ threshold`` in
-    f64, rounded to 6 dp with Spark's HALF_UP."""
-    sh_pdf = sh.toPandas()
-    sets: dict[int, set] = {}
-    for i, s in zip(sh_pdf["id"].to_numpy(), sh_pdf["shingle"].to_numpy()):
-        sets.setdefault(int(i), set()).add(s)
-    rows = []
-    for a, b in zip(cand_pdf["id_a"].to_numpy(),
-                    cand_pdf["id_b"].to_numpy()):
-        a, b = int(a), int(b)
-        if a >= b:  # the join path only emits canonical id_a < id_b pairs
-            continue
-        sa, sb = sets.get(a), sets.get(b)
-        if not sa or not sb:
-            continue
-        inter = len(sa & sb)
-        if inter == 0:
-            continue
-        j = inter / (len(sa) + len(sb) - inter)
-        if j >= threshold:
-            rows.append((int(a), int(b), _round6_half_up(j)))
-    rows.sort()
-    return spark.createDataFrame(rows, "id_a long, id_b long, jaccard double")
+        frame = frame.localCheckpoint(eager=True)
+    out = _lsh_candidates(frame, num_hashes, bands, max_bucket,
+                          hash_family).distinct()
+    return out.localCheckpoint(eager=True) if materialize else out
 
 
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -300,68 +343,24 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     quadratic in hot-shingle frequency. At scale ALWAYS pass the LSH
     ``candidates`` (the verification stage of MinHash-LSH) — or call
     :func:`minhash_near_duplicates`, which wires the two together over one
-    shared shingle table.
+    per-doc shingle frame.
 
-    Jaccard = |A∩B| / |A∪B| over distinct shingle sets.
-    ``shingles_distinct`` describes the PROVIDED ``shingle_df`` (True =
-    "my frame is already per-doc distinct"); when no frame is given it
-    selects which producer builds one. With ``shingles_distinct=False``
-    the frame carries duplicates (:func:`raw_shingles` — the preferred
-    producer) and the distinct is applied AFTER the candidate
-    restriction — candidate docs are a vanishing fraction of the corpus,
-    so this replaces a corpus-wide dedup shuffle with one over the
-    candidate subset. On the ``candidates`` path a caller-provided frame
-    is deduped defensively regardless of the flag (cheap on the
-    candidate subset; a mislabeled raw frame used to inflate Jaccard
-    silently). Without ``candidates``, the flag is trusted as given.
+    Jaccard = |A∩B| / |A∪B| over distinct shingle sets, rounded to 6 dp
+    (Spark's HALF_UP ``round``). With ``candidates``, its canonical
+    (id_a < id_b) pairs join the per-doc shingle sets (:func:`_verify`); a
+    given ``shingle_df`` is folded into sets, so its duplicates never
+    count whatever the flag. Without ``candidates`` the shingle table
+    self-joins; ``shingles_distinct`` then describes the PROVIDED
+    ``shingle_df`` (True = "my frame is already per-doc distinct") and is
+    trusted as given.
     """
-    if shingle_df is not None:
-        sh = shingle_df
-    elif shingles_distinct:
-        sh = distinct_shingles(df, id_col, text_col, shingle_n)
-    else:
-        sh = raw_shingles(df, id_col, text_col, shingle_n)
-    cand_shingles = None
     if candidates is not None:
-        # shrink the shingle table to candidate docs BEFORE the heavy
-        # self-join — avoids the all-pairs blowup at scale
-        cand_ids = (candidates.select(F.col("id_a").alias("id"))
-                    .unionByName(candidates.select(F.col("id_b").alias("id")))
-                    .distinct())
-        sh = sh.join(F.broadcast(cand_ids), "id", "left_semi")
-        # dedupe whenever the frame is not one WE built distinct: a
-        # caller-provided frame may carry duplicates regardless of the
-        # flag, and the distinct runs over the candidate subset only
-        # (the driver fast path below dedups implicitly: sets)
-        if shingle_df is not None or not shingles_distinct:
-            sh = sh.distinct()
-        # DRIVER fast path (round 6): a bounded candidate set verifies in
-        # one collect + a Python set loop — the distributed path costs a
-        # ~6-stage join cascade (self-join by shingle, two size joins, a
-        # pair semi-join) whose scheduling dwarfs the data at pair counts
-        # this small. f64 arithmetic and HALF_UP rounding replicate the
-        # Spark expressions exactly (hash-verified); above the bounds the
-        # join path runs unchanged.
-        n_pairs = candidates.count()
-        if n_pairs <= JACCARD_SMALL_PAIRS_MAX:
-            import pandas as pd
-
-            cand_pdf = candidates.select("id_a", "id_b").toPandas()
-            uniq_ids = pd.concat([cand_pdf["id_a"],
-                                  cand_pdf["id_b"]]).nunique()
-            if uniq_ids <= JACCARD_SMALL_DOCS_MAX:
-                return _jaccard_driver(df.sparkSession, sh, cand_pdf,
-                                       threshold)
-        # the candidate-restricted shingle sets feed THREE consumers
-        # (sizes, both self-join sides) — persist the tiny frame so the
-        # semi-join + distinct over the full shingle table runs once;
-        # exposed on the result as ``_cand_shingles`` so materializing
-        # callers can release it deterministically
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        cand_shingles = sh
-    elif not shingles_distinct:
+        sets = _shingle_sets(df, id_col, text_col, shingle_n, shingle_df)
+        return _verify(candidates.filter(F.col("id_a") < F.col("id_b")),
+                       sets, threshold)
+    sh = (shingle_df if shingle_df is not None
+          else raw_shingles(df, id_col, text_col, shingle_n))
+    if shingle_df is None or not shingles_distinct:
         sh = sh.distinct()
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
@@ -369,20 +368,16 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     inter = (a.join(b, "shingle")
              .filter(F.col("id_a") < F.col("id_b"))
              .groupBy("id_a", "id_b").agg(F.count("*").alias("inter")))
-    if candidates is not None:
-        inter = inter.join(candidates, ["id_a", "id_b"], "left_semi")
-    out = (inter
-           .join(sizes.withColumnRenamed("id", "id_a")
-                 .withColumnRenamed("sz", "sz_a"), "id_a")
-           .join(sizes.withColumnRenamed("id", "id_b")
-                 .withColumnRenamed("sz", "sz_b"), "id_b")
-           .withColumn("jaccard",
-                       F.col("inter") /
-                       (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
-    out._cand_shingles = cand_shingles
-    return out
+    return (inter
+            .join(sizes.withColumnRenamed("id", "id_a")
+                  .withColumnRenamed("sz", "sz_a"), "id_a")
+            .join(sizes.withColumnRenamed("id", "id_b")
+                  .withColumnRenamed("sz", "sz_b"), "id_b")
+            .withColumn("jaccard",
+                        F.col("inter") /
+                        (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
 def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
@@ -391,39 +386,19 @@ def minhash_near_duplicates(df: DataFrame, id_col: str = "doc_id",
                             threshold: float = 0.7,
                             max_bucket: int = 1000,
                             hash_family: str = "xxhash64") -> DataFrame:
-    """MinHash-LSH near-duplicate pairs, Jaccard-verified — the fused
-    pipeline: ONE raw shingle table (tokenize+explode runs once,
-    persisted, NO corpus-wide distinct — min-hash is idempotent under
-    duplicates and verification dedupes only the candidate subset) feeds
-    both the signature/banding stage and the verification join.
+    """MinHash-LSH near-duplicate pairs, Jaccard-verified: ONE per-doc
+    frame (id, shingle set, signatures) is built and localCheckpoint'ed,
+    and both the band keys and the verification join read it.
 
-    Returns (id_a, id_b, jaccard) with jaccard ≥ threshold.
+    Returns (id_a, id_b, jaccard) with jaccard ≥ threshold, materialized
+    (localCheckpoint'ed: its blocks, like the per-doc frame's, are freed
+    by the context cleaner once unreferenced).
     """
-    from pyspark import StorageLevel
-
-    sh = raw_shingles(df, id_col, text_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    # minhash_candidate_pairs materializes the (tiny) candidate set and
-    # releases its own intermediate cache; the verification stage joins the
-    # candidates twice, so the persisted frame is reused, not recomputed
-    cands = minhash_candidate_pairs(df, id_col, text_col, num_hashes, bands,
-                                    shingle_n, max_bucket, shingle_df=sh,
-                                    hash_family=hash_family)
-    out = jaccard_pairs(df, id_col, text_col, shingle_n, threshold,
-                        candidates=cands, shingle_df=sh,
-                        shingles_distinct=False)
-    # materialize the (tiny) verified-pair result, then deterministically
-    # release the big shingle cache and the candidate-subset cache — no
-    # frame outlives this call except the persisted result itself (the
-    # candidate set is localCheckpoint'ed inside minhash_candidate_pairs;
-    # its blocks are freed by the context cleaner)
-    cand_sh = getattr(out, "_cand_shingles", None)
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sh.unpersist()
-    if cand_sh is not None:
-        cand_sh.unpersist()
-    return out
+    frame = _with_signatures(_shingle_sets(df, id_col, text_col, shingle_n),
+                             num_hashes, hash_family).localCheckpoint(
+                                 eager=True)
+    return _near_pairs(frame, num_hashes, bands, threshold, max_bucket,
+                       hash_family).localCheckpoint(eager=True)
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id",
@@ -528,6 +503,32 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     return out
 
 
+def _union_find(ids_a, ids_b):
+    """Connected components of the edges (ids_a[i], ids_b[i]) on the
+    driver: returns (node, root) int64 arrays over every endpoint, root =
+    the component's minimum id. Vectorized hooking with full pointer
+    jumping: each round hooks every edge's larger root onto its smaller
+    one (``minimum.at`` over all edges at once) and then jumps every
+    pointer to its root; pointers only ever go to smaller ids, so roots
+    are component minima, and a round with no hook is the fixed point."""
+    nodes, idx = np.unique(np.concatenate([np.asarray(ids_a, np.int64),
+                                           np.asarray(ids_b, np.int64)]),
+                           return_inverse=True)
+    a, b = idx[:len(idx) // 2], idx[len(idx) // 2:]
+    root = np.arange(len(nodes))
+    while True:
+        ra, rb = root[a], root[b]
+        hook = ra != rb
+        if not hook.any():
+            return nodes, nodes[root]
+        np.minimum.at(root, np.maximum(ra, rb)[hook], np.minimum(ra, rb)[hook])
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped
+
+
 def duplicate_clusters(pairs: DataFrame, max_iters: int = 20,
                        small_max: int = 500_000) -> DataFrame:
     """Near-duplicate pair set → duplicate CLUSTERS (connected components):
@@ -539,11 +540,10 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20,
 
     Pair sets are tiny relative to the corpus (they are the near-dup
     graph, not the doc set), so at or below ``small_max`` pairs the
-    closure runs as driver-side union-find — one Arrow-batched toPandas,
-    zero iterative Spark jobs. The default is sized against a
-    default-sized driver (~16 bytes/edge in two int64 numpy columns plus
-    the dict; the previous 5M default pushed hundreds of MB of Row
-    objects through collect()).
+    closure runs as driver-side union-find (:func:`_union_find`) — one
+    Arrow-batched toPandas of at most ``small_max`` + 1 rows, zero
+    iterative Spark jobs. The default is sized against a default-sized
+    driver (~16 bytes/edge in two int64 numpy columns).
 
     Above ``small_max``, the distributed path runs alternating
     LARGE-STAR / SMALL-STAR contraction — the published MapReduce
@@ -567,31 +567,14 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20,
     The result DataFrame carries ``_cc_rounds`` (rounds executed) and
     ``_cc_converged`` attributes as instrumentation.
     """
-    spark = pairs.sparkSession
-    n_pairs = pairs.count()
-    if n_pairs <= small_max:
-        pdf = pairs.select("id_a", "id_b").toPandas()
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy()):
-            a, b = int(a), int(b)
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min: the smaller root stays the representative
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        rows = sorted((find(n), n) for n in parent)
-        out = spark.createDataFrame(rows, "cluster_id long, doc_id long")
+    pdf = pairs.select("id_a", "id_b").limit(small_max + 1).toPandas()
+    if len(pdf) <= small_max:
+        nodes, roots = _union_find(pdf["id_a"], pdf["id_b"])
+        order = np.lexsort((nodes, roots))
+        out = pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"cluster_id": roots[order],
+                          "doc_id": nodes[order]}),
+            "cluster_id long, doc_id long")
         out._cc_rounds = 0
         out._cc_converged = True
         return out

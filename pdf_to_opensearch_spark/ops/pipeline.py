@@ -6,24 +6,36 @@ Stage order is frozen (and mirrored in the SQL oracle):
 1. quality — token count / stopword ratio / alpha ratio thresholds over
    :func:`ops.textstats.quality_scores` features;
 2. exact dedup among quality passers — md5(text) groups, keeper = min id;
-3. near dedup among exact survivors — MinHash-LSH pairs
-   (:func:`ops.dedup.minhash_near_duplicates`) closed into clusters
-   (:func:`ops.dedup.duplicate_clusters`), keeper = min id per cluster.
+3. near dedup among exact survivors — MinHash-LSH pairs closed into
+   clusters, keeper = min id per cluster.
+
+Where each stage runs: all three are ONE per-doc frame, built in one
+pass and localCheckpoint'ed once — doc_id, the quality gate (the
+:func:`ops.textstats.quality_columns` expressions), the exact-dup flag
+(min id over a window on the md5 digest) and, for exact survivors only,
+the distinct shingle set and its MinHash signatures. It never keeps the
+text. Band keys and the Jaccard verification join read it
+(:mod:`ops.dedup`); the verified pairs go to the driver once for
+union-find (:func:`ops.dedup.duplicate_clusters`, distributed star
+contraction above its ``small_max``), and the non-keeper members come
+back as a small local relation that the fates, projected from the same
+frame, join.
 
 Scale notes (100 TB): stage 1 is pure whole-stage-codegen column math;
-stage 2 is one shuffle on a uniform 128-bit digest; stage 3 is the
-banded LSH pipeline (never all-pairs). Each stage only processes the
-previous stage's survivors, so the expensive stage sees the smallest
-corpus.
+stage 2's window exchange is the one shuffle of the text, on a uniform
+128-bit key; stage 3 is the banded LSH pipeline (never all-pairs), whose
+shingle and signature work runs per doc after that exchange, for exact
+survivors only; its verification join is sized as in :mod:`ops.dedup`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import duplicate_clusters, minhash_near_duplicates
-from .textstats import quality_scores
+from .dedup import (_near_pairs, _shingle_set, _with_signatures,
+                    duplicate_clusters)
+from .textstats import quality_columns
 
 
 def clean_corpus(docs: DataFrame, id_col: str = "doc_id",
@@ -38,45 +50,45 @@ def clean_corpus(docs: DataFrame, id_col: str = "doc_id",
     cleaned corpus; the other fates say which stage removed the doc and
     why (auditable attrition, the thing corpus reports are made of).
     """
-    q = quality_scores(docs, id_col, text_col)
-    qok = q.select(
-        F.col(id_col),
-        ((F.col("n_tokens") >= min_tokens) &
-         (F.col("stopword_ratio") >= min_stopword_ratio) &
-         (F.col("alpha_ratio") >= min_alpha_ratio)).alias("q_ok"))
-    base = docs.select(id_col, text_col).join(qok, id_col)
-    passers = base.filter(F.col("q_ok"))
-
-    # exact stage: keeper = min id per content hash (skew-free digest key)
-    hashed = passers.withColumn("_h", F.md5(F.col(text_col)))
-    keepers = hashed.groupBy("_h").agg(F.min(id_col).alias("_keeper"))
-    with_keeper = hashed.join(keepers, "_h")
-    exact_dups = (with_keeper.filter(F.col(id_col) != F.col("_keeper"))
-                  .select(id_col).withColumn("_exact", F.lit(True)))
-    survivors = (with_keeper.filter(F.col(id_col) == F.col("_keeper"))
-                 .select(id_col, text_col))
-
-    # near stage: LSH pairs over exact survivors, closed into clusters;
-    # non-representative members are dropped
-    pairs = minhash_near_duplicates(survivors, id_col=id_col,
-                                    text_col=text_col,
-                                    threshold=near_threshold,
-                                    hash_family=hash_family)
+    spark = docs.sparkSession
+    q_ok = ((F.col("n_tokens") >= min_tokens) &
+            (F.col("stopword_ratio") >= min_stopword_ratio) &
+            (F.col("alpha_ratio") >= min_alpha_ratio))
+    # exact keeper = min id per content digest among quality passers
+    # (equal text ⇒ equal gate, so a digest group never straddles it)
+    keeper = F.min(id_col).over(Window.partitionBy("_h", "q_ok"))
+    survivor = F.col("q_ok") & ~F.col("_exact")
+    # the window's exchange is given its partition count: AQE would
+    # coalesce a few MB into one partition, and the shingle and signature
+    # work after it would run on one core
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    frame = (docs.select(id_col, text_col, *quality_columns(text_col),
+                         F.md5(F.col(text_col)).alias("_h"))
+             .select(id_col, text_col, q_ok.alias("q_ok"), "_h")
+             .repartition(parts, "_h", "q_ok")
+             .withColumn("_exact", F.col("q_ok") & (F.col(id_col) != keeper))
+             .select(F.col(id_col).alias("id"), "q_ok", "_exact",
+                     _shingle_set(F.when(survivor, F.col(text_col)))
+                     .alias("sh")))
+    # one materialization; a checkpointed frame is an RDD scan, while each
+    # read of a persisted one would be a query stage of its own (one more
+    # Spark job per read under AQE)
+    frame = _with_signatures(frame, num_hashes=32,
+                             hash_family=hash_family).localCheckpoint(
+                                 eager=True)
+    # minhash_near_duplicates' defaults
+    pairs = _near_pairs(frame, num_hashes=32, bands=8,
+                        threshold=near_threshold, max_bucket=1000,
+                        hash_family=hash_family)
     clusters = duplicate_clusters(pairs)
-    # duplicate_clusters consumes pairs EAGERLY (driver union-find collect
-    # on the small path, localCheckpointed label rounds on the distributed
-    # path), so the persisted pair cache can be released here — without
-    # this it outlived the whole pass
-    pairs.unpersist()
-    near_dups = (clusters.filter(F.col("doc_id") != F.col("cluster_id"))
-                 .select(F.col("doc_id").alias(id_col))
-                 .withColumn("_near", F.lit(True)))
+    near = (clusters.filter(F.col("doc_id") != F.col("cluster_id"))
+            .select(F.col("doc_id").alias(id_col))
+            .withColumn("_near", F.lit(True)))
 
     fate = (F.when(~F.col("q_ok"), F.lit("quality"))
             .when(F.col("_exact"), F.lit("exact_dup"))
             .when(F.col("_near"), F.lit("near_dup"))
             .otherwise(F.lit("kept")))
-    return (base.select(id_col, "q_ok")
-            .join(exact_dups, id_col, "left")
-            .join(near_dups, id_col, "left")
+    return (frame.withColumnRenamed("id", id_col)
+            .join(F.broadcast(near), id_col, "left")
             .select(F.col(id_col), fate.alias("fate")))

@@ -66,12 +66,18 @@ def quality_scores(df: DataFrame, id_col: str = "doc_id",
     and sums over character runs need neither. Verified exactly equal
     (bit-for-bit, all four columns) against the HOF form on the bench
     corpus."""
+    return df.select(F.col(id_col), *quality_columns(text_col))
+
+
+def quality_columns(text_col: str = "text") -> list:
+    """The four :func:`quality_scores` feature columns as expressions over
+    ``text_col`` — for callers that fold the features into a wider
+    per-doc projection instead of a separate frame."""
     low = F.lower(F.col(text_col))
     n_tok = F.regexp_count(low, F.lit(_TOKEN_SQL_RE))
     sum_len = F.length(F.regexp_replace(low, "[^0-9a-z]", ""))
     stop_n = F.regexp_count(low, F.lit(_stop_count_re(STOPWORDS["en"])))
-    return df.select(
-        F.col(id_col),
+    return [
         n_tok.cast("long").alias("n_tokens"),
         F.round(
             F.when(n_tok > 0, sum_len.cast("double") / n_tok)
@@ -86,7 +92,7 @@ def quality_scores(df: DataFrame, id_col: str = "doc_id",
              .cast("double") /
              F.greatest(F.length(text_col), F.lit(1))), 6
         ).alias("alpha_ratio"),
-    )
+    ]
 
 
 def quality_scores_oracle_sql(table: str = "documents",

@@ -56,20 +56,37 @@ def test_minhash_finds_near_dupes(spark, docs_df):
     assert j01 == 1.0
 
 
-def test_jaccard_driver_path_equals_join_path(spark, docs_df, monkeypatch):
-    """The round-6 bounded driver verification path must emit the exact
-    rows (values included, HALF_UP 6-dp rounding) of the distributed
-    join path; forcing the bound to 0 re-runs the join path."""
+def test_jaccard_candidates_equal_all_pairs_rows(spark, docs_df):
+    """Candidate-restricted verification (the candidate pairs joined to
+    per-doc shingle sets) must emit exactly the rows, values included, of
+    the all-pairs shingle self-join filtered to the candidate pairs —
+    whatever the candidates' order or repeats, and with a candidate doc
+    (102) too short for a shingle. Docs 100/101 share 13 of 70 and 71
+    shingles: J = 13/128 = 0.1015625 sits on a 6-dp boundary, which
+    Spark's HALF_UP round takes to 0.101563 (half-even: 0.101562)."""
     from pdf_to_opensearch_spark.ops import dedup
 
-    cands = dedup.minhash_candidate_pairs(docs_df)
-    fast = (dedup.jaccard_pairs(docs_df, threshold=0.1, candidates=cands)
-            .toPandas().sort_values(["id_a", "id_b"], ignore_index=True))
-    monkeypatch.setattr(dedup, "JACCARD_SMALL_PAIRS_MAX", 0)
-    slow = (dedup.jaccard_pairs(docs_df, threshold=0.1, candidates=cands)
-            .toPandas().sort_values(["id_a", "id_b"], ignore_index=True))
-    assert len(fast) > 0
-    assert fast.equals(slow)
+    common = [f"c{i}" for i in range(15)]
+    docs = docs_df.unionByName(spark.createDataFrame(
+        [(100, " ".join(common + [f"a{i}" for i in range(57)])),
+         (101, " ".join(common + [f"b{i}" for i in range(58)])),
+         (102, "c0 c1")],
+        "doc_id long, text string"))
+    cands = dedup.minhash_candidate_pairs(docs).unionByName(
+        spark.createDataFrame([(101, 100), (100, 101), (100, 101),
+                               (100, 102), (102, 102)],
+                              "id_a long, id_b long"))
+    want_pairs = {(min(a, b), max(a, b))
+                  for a, b in cands.toPandas().itertuples(index=False)}
+    key = ["id_a", "id_b"]
+    got = (dedup.jaccard_pairs(docs, threshold=0.1, candidates=cands)
+           .toPandas().sort_values(key, ignore_index=True))
+    full = dedup.jaccard_pairs(docs, threshold=0.1).toPandas()
+    full = (full[[p in want_pairs for p in zip(full["id_a"], full["id_b"])]]
+            .sort_values(key, ignore_index=True))
+    assert len(got) > 1
+    pd.testing.assert_frame_equal(got, full, check_exact=True)
+    assert got.set_index(key).loc[(100, 101), "jaccard"] == 0.101563
 
 
 def test_jaccard_matches_python_reference(spark, docs_df):
@@ -401,6 +418,192 @@ def test_clean_corpus_fates(spark):
     assert out[4] == "quality"
     assert out[5] == "quality"      # quality beats exact (stage order)
     assert out[6] == "kept"
+
+
+def _letter_words(rng, n: int) -> list[str]:
+    """``n`` distinct lowercase 6-letter words (pass the quality gate)."""
+    words = set()
+    while len(words) < n:
+        words.add("".join(rng.choice(list("abcdefghijklmnopqrstuvwxyz"), 6)))
+    return sorted(words)
+
+
+def _brute_fates(rows, min_tokens: int, min_alpha: float,
+                 threshold: float) -> dict:
+    """clean_corpus' contract in plain Python: quality gate, exact keeper
+    = min id per text, all-pairs shingle Jaccard among exact survivors,
+    union-find over pairs ≥ threshold, keeper = min id per cluster."""
+    import re
+
+    from pdf_to_opensearch_spark.analyzer import tokenize_text
+
+    fates, keeper = {}, {}
+    for i, t in sorted(rows):
+        low = t.lower()
+        ok = (len(re.findall("[0-9a-z]+", low)) >= min_tokens and
+              len(re.sub("[^a-z]", "", low)) / max(len(t), 1) >= min_alpha)
+        if not ok:
+            fates[i] = "quality"
+        elif t in keeper:
+            fates[i] = "exact_dup"
+        else:
+            keeper[t] = i
+    sets = {}
+    for t, i in keeper.items():
+        toks = tokenize_text(t)
+        sets[i] = {" ".join(toks[j:j + 3]) for j in range(len(toks) - 2)}
+    parent = {i: i for i in sets}
+
+    def root(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    ids = sorted(sets)
+    for x, a in enumerate(ids):
+        for b in ids[x + 1:]:
+            A, B = sets[a], sets[b]
+            if A and B and len(A & B) / len(A | B) >= threshold:
+                ra, rb = root(a), root(b)
+                parent[max(ra, rb)] = min(ra, rb)
+    for i in ids:
+        fates[i] = "kept" if root(i) == i else "near_dup"
+    return fates
+
+
+def _planted_corpus(seed: int = 7):
+    """An exact triple (10-12), an exact pair failing quality (20-21), a
+    near chain 30~31~32 with 30≁32 (7 of 202 tokens respelled per step:
+    J ≈ 0.81 per step, 0.65 end to end), an exact copy of the chain's head
+    (33) and unrelated filler (40-51)."""
+    rng = np.random.default_rng(seed)
+    words = _letter_words(rng, 4000)
+    draw = lambda k: list(rng.choice(words, size=k, replace=False))  # noqa
+    triple = " ".join(draw(80))
+    a = draw(202)
+    b = list(a)
+    for j in range(7):
+        b[10 + 27 * j] = "zq" + b[10 + 27 * j]
+    c = list(b)
+    for j in range(7):
+        c[23 + 27 * j] = "zx" + c[23 + 27 * j]
+    rows = [(10, triple), (11, triple), (12, triple),
+            (20, "too short"), (21, "too short"),
+            (30, " ".join(a)), (31, " ".join(b)), (32, " ".join(c)),
+            (33, " ".join(a))]
+    rows += [(40 + k, " ".join(draw(90))) for k in range(12)]
+    return rows
+
+
+def test_clean_corpus_fates_match_brute_reference(spark):
+    """clean_corpus fates equal a pure-Python reference (analyzer
+    shingles, all-pairs Jaccard, union-find) on both hash families; with
+    max_bucket=1 the guard drops every bucket, so no pair — and no
+    near_dup — survives."""
+    from pdf_to_opensearch_spark.ops.dedup import (
+        duplicate_clusters,
+        minhash_candidate_pairs,
+        minhash_near_duplicates,
+    )
+    from pdf_to_opensearch_spark.ops.pipeline import clean_corpus
+
+    rows = _planted_corpus()
+    want = _brute_fates(rows, min_tokens=20, min_alpha=0.4, threshold=0.7)
+    assert [want[i] for i in (10, 11, 12, 20, 21, 30, 31, 32, 33)] == [
+        "kept", "exact_dup", "exact_dup", "quality", "quality",
+        "kept", "near_dup", "near_dup", "exact_dup"]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for fam in ("xxhash64", "md5"):
+        got = {r["doc_id"]: r["fate"]
+               for r in clean_corpus(docs, hash_family=fam).collect()}
+        assert got == want, fam
+        assert minhash_candidate_pairs(docs, max_bucket=1,
+                                       hash_family=fam).count() == 0, fam
+        pairs = minhash_near_duplicates(docs, max_bucket=1, hash_family=fam)
+        assert pairs.count() == 0, fam
+        assert duplicate_clusters(pairs).count() == 0, fam
+
+
+def test_clean_corpus_job_budget(spark):
+    """clean_corpus is one per-doc pass: on a 480-doc planted corpus (400
+    originals, 40 exact and 40 near copies, input persisted like the
+    perfbench dedup frame) one call plus its collect runs ≤ 12 Spark jobs
+    (the staged pipeline it replaced ran 45), and minhash_near_duplicates
+    ≤ 8 (was 19)."""
+    from pdf_to_opensearch_spark.ops.dedup import minhash_near_duplicates
+    from pdf_to_opensearch_spark.ops.pipeline import clean_corpus
+
+    rng = np.random.default_rng(11)
+    words = _letter_words(rng, 5000)
+    texts = [" ".join(rng.choice(words, size=int(rng.integers(60, 300))))
+             for _ in range(400)]
+    for src in rng.choice(400, size=80, replace=False)[:40]:
+        texts.append(texts[src])
+    for src in rng.choice(400, size=40, replace=False):
+        toks = texts[src].split()
+        for j in rng.choice(len(toks), size=max(1, len(toks) // 33),
+                            replace=False):
+            toks[j] = str(rng.choice(words))
+        texts.append(" ".join(toks))
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string").persist()
+    docs.count()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(tag, fn):
+        sc.setJobGroup(tag, tag)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(tracker.getJobIdsForGroup(tag))
+
+    try:
+        fates, n_clean = jobs("clean_corpus_budget",
+                              lambda: clean_corpus(docs).collect())
+        _pairs, n_mh = jobs("minhash_budget",
+                            lambda: minhash_near_duplicates(docs))
+    finally:
+        docs.unpersist()
+    counts = pd.Series([r["fate"] for r in fates]).value_counts()
+    assert counts.get("exact_dup") == 40 and counts.get("near_dup", 0) > 0
+    assert n_clean <= 12, n_clean
+    assert n_mh <= 8, n_mh
+
+
+def test_union_find_matches_bfs_components():
+    """The driver union-find equals BFS components, root = component min,
+    on random multigraphs and on a path whose ids are shuffled."""
+    from pdf_to_opensearch_spark.ops.dedup import _union_find
+
+    rng = np.random.default_rng(5)
+    graphs = []
+    for _ in range(30):
+        n = int(rng.integers(2, 60))
+        ids = rng.choice(10**9, size=n, replace=False)
+        m = int(rng.integers(1, 90))
+        graphs.append((ids[rng.integers(0, n, m)], ids[rng.integers(0, n, m)]))
+    path = rng.permutation(2000)
+    graphs.append((path[:-1], path[1:]))
+    for a, b in graphs:
+        adj = {}
+        for x, y in zip(a.tolist(), b.tolist()):
+            adj.setdefault(x, set()).add(y)
+            adj.setdefault(y, set()).add(x)
+        want = {}
+        for s0 in adj:
+            if s0 in want:
+                continue
+            comp, todo = {s0}, [s0]
+            while todo:
+                for y in adj[todo.pop()] - comp:
+                    comp.add(y)
+                    todo.append(y)
+            for x in comp:
+                want[x] = min(comp)
+        nodes, roots = _union_find(a, b)
+        assert dict(zip(nodes.tolist(), roots.tolist())) == want
 
 
 def test_duplicate_clusters_long_chain_converges_logarithmically(spark):
