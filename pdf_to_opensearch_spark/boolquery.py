@@ -41,11 +41,12 @@ pieces:
   small (no Spark job unfiltered; one job to collect the allowed docs
   when filtered), else the unfiltered per-file pyio scan (no Exchange),
   the filtered ``cogroup`` with the allowed-doc frame, or — for ranges
-  split across files — the JVM scan grouped by ``range_id``. Positional
-  kernels decode through :func:`.query.decode_position_keys`, kernels emit
-  :func:`.query.result_frame` rows, and ranked pages come from
-  ``execute(..., k=k)`` (or, for pages ranked on Spark expressions, the
-  one global top-k window, :func:`.query.ranked_topk`).
+  split across files — the JVM scan grouped by ``range_id``. Every
+  kernel reads one decoded range, :class:`.query.PostingsRange`
+  (positional kernels its :meth:`~.query.PostingsRange.positions`
+  view), and emits :func:`.query.result_frame` rows; ranked pages come
+  from ``execute(..., k=k)`` (or, for pages ranked on Spark
+  expressions, the one global top-k window, :func:`.query.ranked_topk`).
 
 Nothing here collects more than the dictionary rows of the queries' own
 terms and expansions — besides the driver expansion's (term, df) read,
@@ -63,17 +64,18 @@ from pyspark.sql import functions as F
 
 from . import tablefs
 from .analyzer import tokenize_text
-from .codec import decode_postings, tf_norm
+from .codec import tf_norm
 from .indexer import IndexPaths, _footers
 from .query import (
     _POS_MASK,
     _POS_SHIFT,
     RANKED,
+    PostingsRange,
     _allowed_docs,
+    _emit,
     _filter_in,
     _score_kernel,
     _weighted_qinfo,
-    decode_position_keys,
     execute,
     idf_of,
     load_stats,
@@ -636,23 +638,18 @@ def _match_docs(spark: SparkSession, index_dir: str,
     q_terms = {qid: ts for qid, ts in q_terms.items() if ts}
     terms = sorted({t for ts in q_terms.values() for t in ts})
 
-    def match_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        dec: dict[str, np.ndarray] = {}
+    def match_kernel(rng: PostingsRange) -> pd.DataFrame:
+        hit = np.empty(rng.width, dtype=bool)
         out_q: list[np.ndarray] = []
         out_d: list[np.ndarray] = []
         for qid, ts in q_terms.items():
-            idss = []
-            for t in ts:
-                if t not in by_term:
-                    continue
-                ids = dec.get(t)
-                if ids is None:
-                    ids = dec[t] = decode_postings(by_term[t])[0]
-                idss.append(ids)
-            if not idss:
+            live = [t for t in ts if t in rng]
+            if not live:
                 continue
-            u = np.unique(np.concatenate(idss))
+            hit[:] = False
+            for t in live:
+                hit[rng.col[rng.span(t)]] = True
+            u = np.flatnonzero(hit) + rng.lo
             out_q.append(np.full(u.size, qid, dtype=np.int32))
             out_d.append(u)
         if not out_q:
@@ -1029,26 +1026,21 @@ def boosting_search(spark: SparkSession, index_dir: str,
 
     base = _score_kernel(qinfo, 1 << 31, stats, prune=False)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        out = base(pdf)
+    def kernel(rng: PostingsRange) -> pd.DataFrame:
+        out = base(rng)
         if not len(out):
             return out
-        neg_ids: dict[int, np.ndarray] = {}
+        sc = out["score"].to_numpy().copy()
+        qs = out["query_id"].to_numpy()
+        ds = out["doc_id"].to_numpy()
         for qid, ts in neg_terms.items():
-            parts = [decode_postings(by_term[t])[0]
-                     for t in ts if t in by_term]
-            if parts:
-                neg_ids[qid] = np.unique(np.concatenate(parts))
-        if neg_ids:
-            sc = out["score"].to_numpy().copy()
-            qs = out["query_id"].to_numpy()
-            ds = out["doc_id"].to_numpy()
-            for qid, ids in neg_ids.items():
-                m = (qs == qid) & np.isin(ds, ids)
-                sc[m] *= nb
-            out = out.assign(score=sc)
-        return out
+            neg = np.zeros(rng.width, dtype=bool)
+            for t in ts:
+                if t in rng:
+                    neg |= rng.has(t)
+            if neg.any():
+                sc[(qs == qid) & neg[ds - rng.lo]] *= nb
+        return out.assign(score=sc)
 
     return execute(spark, paths, stats, live, kernel, n_queries=len(qinfo),
                    k=k)
@@ -1768,14 +1760,13 @@ def span_first_search(spark: SparkSession, index_dir: str,
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     end_i = int(end)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        out_q, out_d, out_s = [], [], []
+    def kernel(rng: PostingsRange) -> pd.DataFrame:
+        out: list = []
         for qid, t in q_term.items():
-            rec = by_term.get(t)
-            if rec is None:
+            if t not in rng:
                 continue
-            doc_ids, tfs, dls, keys = decode_position_keys(rec)
+            doc_ids, tfs, dls = rng.postings(t)
+            keys = rng.positions(t)
             seg = np.repeat(np.arange(doc_ids.size), tfs)
             qtf = np.bincount(seg[(keys & _POS_MASK) < end_i],
                               minlength=doc_ids.size)
@@ -1783,10 +1774,9 @@ def span_first_search(spark: SparkSession, index_dir: str,
             if not keep.any():
                 continue
             sc = idfs[t] * tf_norm(qtf[keep], dls[keep], avgdl, k1, b)
-            out_q.extend([qid] * int(keep.sum()))
-            out_d.extend(doc_ids[keep].tolist())
-            out_s.extend(sc.tolist())
-        return result_frame(out_q, out_d, out_s)
+            out.append((np.full(sc.size, qid, dtype=np.int32),
+                        doc_ids[keep], sc))
+        return _emit(out)
 
     return _rounded_page(spark, paths, stats, sorted(set(q_term.values())),
                          kernel, k, len(q_term))
@@ -1835,26 +1825,23 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
                       "idf": idf}
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        out_q, out_d, out_s = [], [], []
+    def kernel(rng: PostingsRange) -> pd.DataFrame:
+        out: list = []
         for qid, info in qinfo.items():
             fixed, exp = info["fixed"], info["exp"]
-            if any(t not in by_term for t in fixed):
+            if any(t not in rng for t in fixed):
                 continue
-            exp_here = [t for t in exp if t in by_term]
+            exp_here = [t for t in exp if t in rng]
             if not exp_here:
                 continue
-            decoded = {t: decode_position_keys(by_term[t])
-                       for t in set(fixed) | set(exp_here)}
             union_keys = np.sort(np.concatenate(
-                [decoded[t][3] for t in exp_here]))
-            d0, _tf0, dl0, keys0 = decoded[fixed[0]]
-            cand = keys0
+                [rng.positions(t) for t in exp_here]))
+            d0, _tf0, dl0 = rng.postings(fixed[0])
+            cand = rng.positions(fixed[0])
             for i, t in enumerate(fixed[1:], start=1):
                 if cand.size == 0:
                     break
-                cand = cand[np.isin(cand + np.uint64(i), decoded[t][3])]
+                cand = cand[np.isin(cand + np.uint64(i), rng.positions(t))]
             if cand.size:
                 cand = cand[np.isin(cand + np.uint64(len(fixed)),
                                     union_keys)]
@@ -1864,10 +1851,8 @@ def match_phrase_prefix_search(spark: SparkSession, index_dir: str,
             uniq, pf = np.unique(cand_docs, return_counts=True)
             dl_map = dl0[np.searchsorted(d0, uniq)]
             sc = info["idf"] * tf_norm(pf, dl_map, avgdl, k1, b)
-            out_q.extend([qid] * uniq.size)
-            out_d.extend(uniq.tolist())
-            out_s.extend(sc.tolist())
-        return result_frame(out_q, out_d, out_s)
+            out.append((np.full(uniq.size, qid, dtype=np.int32), uniq, sc))
+        return _emit(out)
 
     live = sorted({t for info in qinfo.values()
                    for t in info["fixed"] + info["exp"]})
@@ -2098,16 +2083,14 @@ def span_near_search(spark: SparkSession, index_dir: str,
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     slop_i = int(slop)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        out_q, out_d, out_s = [], [], []
+    def kernel(rng: PostingsRange) -> pd.DataFrame:
+        out: list = []
         for qid, info in qinfo.items():
             terms_q = info["terms"]
-            if any(t not in by_term for t in terms_q):
+            if any(t not in rng for t in terms_q):
                 continue
-            decoded = {t: decode_position_keys(by_term[t])
-                       for t in dict.fromkeys(terms_q)}
-            d0, _tf0, dl0, keys0 = decoded[terms_q[0]]
+            d0, _tf0, dl0 = rng.postings(terms_q[0])
+            keys0 = rng.positions(terms_q[0])
             if keys0.size == 0:
                 continue
             win = np.uint64(slop_i + len(terms_q) - 1)
@@ -2116,7 +2099,7 @@ def span_near_search(spark: SparkSession, index_dir: str,
             lo_pos = np.where(p0 > win, p0 - win, np.uint64(0))
             alive = np.ones(keys0.size, dtype=bool)
             for t in dict.fromkeys(terms_q[1:]):
-                keys_t = decoded[t][3]
+                keys_t = rng.positions(t)
                 # smallest occurrence of t at or after (doc, p0−win);
                 # the anchor survives iff it lands in-doc and ≤ p0+win
                 lookup = (docs_a << _POS_SHIFT) | lo_pos
@@ -2134,10 +2117,8 @@ def span_near_search(spark: SparkSession, index_dir: str,
             uniq, pf = np.unique(cand_docs, return_counts=True)
             dl_map = dl0[np.searchsorted(d0, uniq)]
             sc = info["idf"] * tf_norm(pf, dl_map, avgdl, k1, b)
-            out_q.extend([qid] * uniq.size)
-            out_d.extend(uniq.tolist())
-            out_s.extend(sc.tolist())
-        return result_frame(out_q, out_d, out_s)
+            out.append((np.full(uniq.size, qid, dtype=np.int32), uniq, sc))
+        return _emit(out)
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
     return _rounded_page(spark, paths, stats, live, kernel, k,
@@ -2756,21 +2737,19 @@ def span_not_search(spark: SparkSession, index_dir: str,
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     dist_i = int(dist)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        out_q, out_d, out_s = [], [], []
+    def kernel(rng: PostingsRange) -> pd.DataFrame:
+        out: list = []
         for qid, (inc, excludes) in parsed.items():
-            rec = by_term.get(inc)
-            if rec is None:
+            if inc not in rng:
                 continue
-            doc_ids, tfs, dls, anchors = decode_position_keys(rec)
+            doc_ids, tfs, dls = rng.postings(inc)
+            anchors = rng.positions(inc)
             poss = anchors & _POS_MASK
             alive = np.ones(anchors.size, dtype=bool)
             for ex in excludes:
-                rec_e = by_term.get(ex)
-                if rec_e is None:
+                if ex not in rng:
                     continue
-                e_keys = decode_position_keys(rec_e)[3]
+                e_keys = rng.positions(ex)
                 for off in range(-dist_i, dist_i + 1):
                     if off == 0:
                         continue  # two terms can't share a position
@@ -2791,10 +2770,9 @@ def span_not_search(spark: SparkSession, index_dir: str,
             qtf = np.bincount(seg[alive], minlength=doc_ids.size)
             keep = qtf > 0
             sc = idfs[inc] * tf_norm(qtf[keep], dls[keep], avgdl, k1, b)
-            out_q.extend([qid] * int(keep.sum()))
-            out_d.extend(doc_ids[keep].tolist())
-            out_s.extend(sc.tolist())
-        return result_frame(out_q, out_d, out_s)
+            out.append((np.full(sc.size, qid, dtype=np.int32),
+                        doc_ids[keep], sc))
+        return _emit(out)
 
     live = sorted({t for inc, ex in parsed.values()
                    for t in [inc] + ex})
@@ -2841,39 +2819,33 @@ def synonym_search(spark: SparkSession, index_dir: str,
             qinfo[qid] = scored_groups
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        dec: dict[str, tuple] = {}
-        out_q, out_d, out_s = [], [], []
+    def kernel(rng: PostingsRange) -> pd.DataFrame:
+        width = rng.width
+        acc, g_tf, g_dl = np.empty(width), np.empty(width), np.empty(width)
+        out: list = []
         for qid, groups in qinfo.items():
-            acc: dict[int, float] = {}
-            doc_dl: dict[int, float] = {}
+            acc[:] = 0.0
             for members, g_idf in groups:
-                idss, tfss = [], []
-                for t in members:
-                    rec = by_term.get(t)
-                    if rec is None:
-                        continue
-                    d = dec.get(t)
-                    if d is None:
-                        d = dec[t] = decode_postings(rec)
-                    idss.append(d[0])
-                    tfss.append(d[1])
-                    doc_dl.update(zip(d[0].tolist(), d[2].tolist()))
-                if not idss:
+                live = [t for t in members if t in rng]
+                if not live:
                     continue
-                all_ids = np.concatenate(idss)
-                all_tfs = np.concatenate(tfss).astype(np.float64)
-                uniq, inv = np.unique(all_ids, return_inverse=True)
-                g_tf = np.bincount(inv, weights=all_tfs)
-                g_dl = np.array([doc_dl[d] for d in uniq.tolist()])
-                g_sc = g_idf * tf_norm(g_tf, g_dl, avgdl, k1, b)
-                for d, s in zip(uniq.tolist(), g_sc.tolist()):
-                    acc[d] = acc.get(d, 0.0) + s
-            out_q.extend([qid] * len(acc))
-            out_d.extend(acc.keys())
-            out_s.extend(acc.values())
-        return result_frame(out_q, out_d, out_s)
+                # the group is one term: tf = Σ member tfs per doc, dl
+                # the doc's own length (equal in every member's postings)
+                g_tf[:] = 0.0
+                hit = np.zeros(width, dtype=bool)
+                for t in live:
+                    s = rng.span(t)
+                    cols = rng.col[s]
+                    g_tf[cols] += rng.tfs[s]
+                    g_dl[cols] = rng.dls[s]
+                    hit[cols] = True
+                cols = np.flatnonzero(hit)
+                acc[cols] += g_idf * tf_norm(g_tf[cols], g_dl[cols],
+                                             avgdl, k1, b)
+            cols = np.flatnonzero(acc > 0.0)
+            out.append((np.full(cols.size, qid, dtype=np.int32),
+                        cols + rng.lo, acc[cols]))
+        return _emit(out)
 
     live = sorted({t for groups in qinfo.values()
                    for members, _ in groups for t in members})
@@ -3077,20 +3049,18 @@ def intervals_search(spark: SparkSession, index_dir: str,
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
     gaps = int(max_gaps)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {rec["term"]: rec for rec in pdf.to_dict("records")}
-        out_q, out_d, out_s = [], [], []
+    def kernel(rng: PostingsRange) -> pd.DataFrame:
+        out: list = []
         for qid, info in qinfo.items():
             toks = info["terms"]
-            if any(t not in by_term for t in toks):
+            if any(t not in rng for t in toks):
                 continue
-            decoded = {t: decode_position_keys(by_term[t])
-                       for t in set(toks)}
-            d0, _tf0, dl0, keys0 = decoded[toks[0]]
+            d0, _tf0, dl0 = rng.postings(toks[0])
+            keys0 = rng.positions(toks[0])
             cur = keys0.copy()
             alive = np.ones(cur.size, dtype=bool)
             for t in toks[1:]:
-                nxt_keys = decoded[t][3]
+                nxt_keys = rng.positions(t)
                 ix = np.searchsorted(nxt_keys, cur + np.uint64(1))
                 ok = ix < nxt_keys.size
                 nxt = np.zeros_like(cur)
@@ -3109,10 +3079,8 @@ def intervals_search(spark: SparkSession, index_dir: str,
             dl_map = dl0[np.searchsorted(d0, uniq)]
             sc = info["idf"] * tf_norm(qtf.astype(np.float64), dl_map,
                                        avgdl, k1, b)
-            out_q.extend([qid] * uniq.size)
-            out_d.extend(uniq.tolist())
-            out_s.extend(sc.tolist())
-        return result_frame(out_q, out_d, out_s)
+            out.append((np.full(uniq.size, qid, dtype=np.int32), uniq, sc))
+        return _emit(out)
 
     live = sorted({t for info in qinfo.values() for t in info["terms"]})
     return _rounded_page(spark, paths, stats, live, kernel, k,

@@ -467,7 +467,8 @@ def main(argv: list[str] | None = None, keep_session: bool = False) -> int:
             done = resume_info(spark, args.index) if args.resume else set()
             t0 = time.monotonic()
             build_index(spark, df, args.index, num_ranges=args.ranges,
-                        n_buckets=args.buckets, completed_ranges=done)
+                        n_buckets=args.buckets, id_partitions=args.ranges,
+                        completed_ranges=done)
             n = spark.read.parquet(f"{args.index}/docs").count()
             print(json.dumps({"built": args.index, "docs": n,
                               "resumed_ranges": sorted(done),

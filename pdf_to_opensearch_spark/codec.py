@@ -51,22 +51,27 @@ def encode_varint(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def decode_varint(buf: bytes) -> np.ndarray:
-    """Decode LEB128 bytes to a uint64 array (vectorized)."""
+def decode_varint(buf) -> np.ndarray:
+    """Decode LEB128 bytes (``bytes`` or a uint8 array) to a uint64 array
+    (vectorized: one pass finds the terminator bytes, then one pass per
+    byte slot over the values that still have a byte there)."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_start = np.empty(b.shape, dtype=bool)
-    is_start[0] = True
-    is_start[1:] = (b[:-1] & 0x80) == 0  # new value starts after a terminator byte
-    val_idx = np.cumsum(is_start) - 1
-    start_pos = np.flatnonzero(is_start)
-    pos_in_val = np.arange(b.size) - start_pos[val_idx]
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * pos_in_val.astype(np.uint64)
-    )
-    out = np.zeros(start_pos.size, dtype=np.uint64)
-    np.bitwise_or.at(out, val_idx, contrib)
+    last = b < 0x80  # a value ends at a byte without the 0x80 flag
+    if last.all():
+        return b.astype(np.uint64)  # every value is one byte
+    ends = np.flatnonzero(last)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    out = (b[starts] & 0x7F).astype(np.uint64)
+    more = ends - starts
+    idx = np.flatnonzero(more)
+    k = 1
+    while idx.size:
+        out[idx] |= ((b[starts[idx] + k] & 0x7F).astype(np.uint64)
+                     << np.uint64(7 * k))
+        idx = idx[more[idx] > k]
+        k += 1
     return out
 
 

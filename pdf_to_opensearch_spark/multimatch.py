@@ -32,16 +32,17 @@ from pyspark.sql import functions as F
 
 from . import tablefs
 from .analyzer import tokenize_text
-from .codec import decode_postings, tf_norm
 from .fields import field_root
 from .indexer import IndexPaths, _postings_arrow_schema, bucket_of
 from .query import (
     RANKED,
     RESULT_SCHEMA,
+    PostingsRange,
+    _emit,
     _filter_in,
+    _topk,
     load_stats,
     ranked_topk,
-    result_frame,
     term_stats,
 )
 
@@ -50,92 +51,59 @@ _ROOT_NAMES = (None, "current", "text")
 
 def _mm_kernel(qinfos: dict, boosts: dict, fparams: dict, k: int, mode: str,
                tie_breaker: float = 0.0):
-    """Per-range multi-field scorer. ``qinfos``: {field: {query_id: {term:
+    """Per-range multi-field scorer over one :class:`.query.PostingsRange`
+    of every field's rows, keyed by (field, term) — the fields share the
+    range's doc columns. ``qinfos``: {field: {query_id: {term:
     idf·count}}}; ``fparams``: {field: (avgdl, k1, b)} — per-field norms,
-    exactly Lucene's per-field similarity state. ``tie_breaker`` (best
-    mode only) is DisjunctionMaxQuery's: max + tie_breaker·(sum − max)."""
+    exactly Lucene's per-field similarity state.
+
+    The engine's one accumulation rule, per field: the field's term
+    contributions (``boost · weight · tf_norm``) are added in term order
+    into a zeroed array over the range's doc columns — Lucene sums clause
+    scores inside each field's BooleanQuery. The fields' arrays then
+    combine elementwise: sum (``most_fields``), max (``best_fields``), or
+    with ``tie_breaker`` DisjunctionMaxQuery's max + tie_breaker·(sum −
+    max). A doc with no posting in a field holds 0 there, which changes
+    neither the sum nor the max of positive scores; a boost may be 0, so
+    the hits are the docs with a posting of any of the query's terms."""
 
     best = mode == "best_fields"
     tb = float(tie_breaker)
-
-    def _segment(ids: np.ndarray, sc: np.ndarray, combine) -> tuple:
-        order = np.argsort(ids, kind="stable")
-        ids_s, sc_s = ids[order], sc[order]
-        chg = np.empty(ids_s.size, dtype=bool)
-        chg[0] = True
-        chg[1:] = ids_s[1:] != ids_s[:-1]
-        starts = np.flatnonzero(chg)
-        return ids_s[starts], combine(sc_s, starts)
-
-    def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_ft: dict[tuple, dict] = {}
-        for rec in pdf.to_dict("records"):
-            by_ft[(rec["fld"], rec["term"])] = rec
-        dec: dict[tuple, tuple] = {}
-        out_q, out_d, out_s = [], [], []
-        qids = sorted({qid for qi in qinfos.values() for qid in qi})
-        for qid in qids:
-            f_ids, f_sc = [], []
-            for fld, qi in qinfos.items():
-                ti = qi.get(qid)
-                if not ti:
-                    continue
-                avgdl, k1, b = fparams[fld]
-                boost = boosts[fld]
-                parts_i, parts_s = [], []
-                for t, w in ti.items():
-                    rec = by_ft.get((fld, t))
-                    if rec is None:
-                        continue
-                    got = dec.get((fld, t))
-                    if got is None:
-                        got = dec[(fld, t)] = decode_postings(rec)
-                    ids, tfs, dls = got
-                    if not ids.size:
-                        continue
-                    parts_i.append(ids)
-                    parts_s.append(boost * w * tf_norm(tfs, dls, avgdl,
-                                                       k1, b))
-                if not parts_i:
-                    continue
-                # per-field per-doc totals (term contributions sum within
-                # the field regardless of mode — Lucene sums clause scores
-                # inside each field's BooleanQuery)
-                u, a = _segment(np.concatenate(parts_i),
-                                np.concatenate(parts_s),
-                                lambda s, st: np.add.reduceat(s, st))
-                f_ids.append(u)
-                f_sc.append(a)
-            if not f_ids:
-                continue
-            if best and tb > 0.0:
-                # DisjunctionMaxQuery with tie_breaker: the max field
-                # score plus tb times the runner-up fields' total
-                def combine(s, st):
-                    mx = np.maximum.reduceat(s, st)
-                    sm = np.add.reduceat(s, st)
-                    return mx + tb * (sm - mx)
-            else:
-                combine = ((lambda s, st: np.maximum.reduceat(s, st))
-                           if best
-                           else (lambda s, st: np.add.reduceat(s, st)))
-            uniq, acc = _segment(np.concatenate(f_ids),
-                                 np.concatenate(f_sc), combine)
-            top = min(k, uniq.size)
-            if uniq.size > top:
-                # tie-safe: keep every doc at or above the k-th score so
-                # boundary ties break by doc_id, not argpartition order
-                kth = np.partition(acc, acc.size - top)[acc.size - top]
-                m = acc >= kth
-                uniq, acc = uniq[m], acc[m]
-            order = np.lexsort((uniq, -acc))[:top]
-            out_q.extend([qid] * top)
-            out_d.extend(uniq[order].tolist())
-            out_s.extend(acc[order].tolist())
-        return result_frame(out_q, out_d, out_s)
+    qids = sorted({qid for qi in qinfos.values() for qid in qi})
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_range(pdf)
+        rng = PostingsRange.from_pandas(
+            pdf, keys=list(zip(pdf["fld"], pdf["term"])))
+        width = rng.width
+        hit = np.empty(width, dtype=bool)
+        out: list = []
+        for qid in qids:
+            fields = []
+            hit[:] = False
+            for fld, qi in qinfos.items():
+                live = [(t, w) for t, w in (qi.get(qid) or {}).items()
+                        if (fld, t) in rng]
+                if not live:
+                    continue
+                norm = rng.norm(*fparams[fld])
+                acc = np.zeros(width)
+                for t, w in live:
+                    s = rng.span((fld, t))
+                    cols = rng.col[s]
+                    acc[cols] += boosts[fld] * w * norm[s]
+                    hit[cols] = True
+                fields.append(acc)
+            if not fields:
+                continue
+            total = fields[0].copy()
+            for acc in fields[1:]:
+                total += acc
+            if best:
+                top = np.maximum.reduce(fields)
+                total = top + tb * (total - top) if tb > 0.0 else top
+            cols = np.flatnonzero(hit)
+            _topk(qid, cols + rng.lo, total[cols], k, out)
+        return _emit(out)
 
     return kernel
 

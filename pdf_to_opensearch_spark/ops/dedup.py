@@ -56,11 +56,16 @@ def md5_60(col: Column, seed: int | None = None) -> Column:
 
 def _spread(df: DataFrame) -> DataFrame:
     """Widen a narrow input (e.g. one small parquet file) to the session's
-    default parallelism BEFORE the per-row tokenize/hash work — otherwise
-    the whole map side runs single-threaded. At real scale inputs have
-    plenty of partitions and this is a no-op (no shuffle added)."""
+    default parallelism BEFORE the per-row tokenize/hash/vector work —
+    otherwise the whole map side runs single-threaded. At real scale
+    inputs have plenty of partitions and this is a no-op (no shuffle
+    added). The partition count comes from the physical plan's output
+    partitioning, which runs no Spark job (``df.rdd.getNumPartitions()``
+    runs an adaptive plan's shuffle as a job of its own)."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min(target, 16):
+    parts = (df._jdf.queryExecution().executedPlan()
+             .outputPartitioning().numPartitions())
+    if parts < min(target, 16):
         return df.repartition(target)
     return df
 

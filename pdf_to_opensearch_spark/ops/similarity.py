@@ -20,18 +20,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _spread
+
 
 def _as_matrix(col: pd.Series) -> np.ndarray:
     return np.stack([np.asarray(v, dtype=np.float64) for v in col])
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Widen a narrow input (single small file) to session parallelism so
-    the vector kernels don't run on one task; no-op at real scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min(target, 16):
-        return df.repartition(target)
-    return df
 
 
 def _query_vectors(embeddings: DataFrame, query_ids: list[int],

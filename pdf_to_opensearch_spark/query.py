@@ -45,11 +45,19 @@ Physical plan:
    * postings whose ranges are not file-aligned: the same JVM scan
      grouped by ``range_id`` into ``applyInPandas``.
 
-   The BM25 kernel scores **term-at-a-time, fully vectorized** (numpy
-   concat → groupby-sum) and keeps a per-range top-k. Optional
-   block-max pruning drops whole 128-posting blocks whose summed upper
-   bounds cannot reach the running threshold (sound: uses the per-block
-   max stored at build time; differential-tested vs exhaustive).
+   Every branch hands the kernel one decoded range
+   (:class:`PostingsRange`: each binary column decoded in one varint
+   pass per range, ``tf_norm`` once per range). The BM25 kernel scores
+   **term-at-a-time, fully vectorized**, under one accumulation rule:
+   per query, each term's contributions are added in the query's term
+   order into a zeroed range-local array over the range's doc columns,
+   so a query's scores do not depend on its batch mates, bit for bit.
+   Filter, bool, ``minimum_should_match`` and search_after constraints
+   are masks over that array; the kernel keeps a per-range top-k.
+   Optional block-max pruning drops whole 128-posting blocks whose
+   summed upper bounds cannot reach the running threshold before they
+   are added (sound: uses the per-block max stored at build time;
+   differential-tested vs exhaustive).
 4. Global top-k (``execute(..., k=k)``): per-range candidates are
    ≤ k·n_ranges rows → (score desc, doc_id asc) rank ≤ k per query, in
    pandas on the driver side and as the :func:`ranked_topk` window
@@ -63,6 +71,7 @@ Rank identity: ties broken by ascending doc_id everywhere, scores f64.
 from __future__ import annotations
 
 import bisect
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -75,7 +84,7 @@ from .codec import (
     BLOCK,
     decode_block_meta,
     decode_positions,
-    decode_postings,
+    decode_varint,
     tf_norm,
 )
 from .indexer import (
@@ -111,8 +120,8 @@ def _filter_in(df: DataFrame, col: str, values: list) -> DataFrame:
 
 
 def lookup_dict_rows(spark: SparkSession, dict_path: str,
-                     terms: list[str]) -> list:
-    """Dictionary point-lookup: (term, df, …) rows for ``terms``.
+                     terms: list[str]) -> pd.DataFrame:
+    """Dictionary point-lookup: the (term, df, …) rows of ``terms``.
 
     A driver-side pyarrow read with a C++-side ``term IN`` filter
     (parquet row-group min/max pruning) and NO Spark job: a search
@@ -122,10 +131,9 @@ def lookup_dict_rows(spark: SparkSession, dict_path: str,
     on one node too). No terms, no read.
     """
     if not terms:
-        return []
+        return pd.DataFrame({"term": [], "df": []})
     return tablefs.read_small_table(
-        spark, dict_path, filters=[("term", "in", list(terms))]
-    ).to_dict("records")
+        spark, dict_path, filters=[("term", "in", list(terms))])
 
 
 def idf_of(n_docs: int, df: int) -> float:
@@ -140,8 +148,8 @@ def term_stats(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
     """(dfs, idfs) of the ``terms`` the dictionary holds — one
     :func:`lookup_dict_rows` point-lookup; a term absent from the corpus
     is in neither dict."""
-    dfs = {r["term"]: int(r["df"])
-           for r in lookup_dict_rows(spark, paths.dictionary, terms)}
+    rows = lookup_dict_rows(spark, paths.dictionary, terms)
+    dfs = dict(zip(rows["term"], rows["df"].astype(int).tolist()))
     return dfs, {t: idf_of(stats.N, dfs[t]) for t in terms if t in dfs}
 
 
@@ -283,25 +291,240 @@ SIDE_PINS = {"driver": {"DISTRIBUTED_FIXED_MS": float("inf")},
              "distributed": {"DRIVER_MAX_BYTES": -1}}
 
 
+# ------------------------------------------------------ the decoded range
+
+_POS_SHIFT = np.uint64(24)  # doc_id<<24 | position keys: dl < 2^24 tokens,
+#                             doc_id < 2^39 — both safe at 10^12-doc scale
+_POS_MASK = (np.uint64(1) << _POS_SHIFT) - np.uint64(1)
+
+# A column is decoded in chunks of rows of about this many encoded bytes,
+# so the decode's temporaries (about 40 bytes per encoded byte) stay
+# cache-sized and do not grow with the range: a decoder whose temporaries
+# left the cache took 0.88 s on whole ranges of 200,000 docs × 4 ranges
+# against 0.58 s per term.
+DECODE_CHUNK_BYTES = 1 << 16
+
+
+class PostingsRange:
+    """One doc range's postings rows (an Arrow table), decoded once for
+    every kernel that scores the range.
+
+    * ``ids``, ``tfs`` and ``dls`` hold every row's postings back to
+      back, in row order: each column is decoded in one varint pass over
+      its Arrow data buffer (in cache-sized chunks of rows) and split by
+      ``n``; doc ids come from one segmented cumsum seeded by each row's
+      ``first_doc_id``. :meth:`span` is a row's slice of them, keyed by
+      ``term`` (or by the ``keys`` given, e.g. (field, term) pairs).
+      Rows with no postings are not keys.
+    * A range's doc ids are one contiguous span, from ``lo``, ``width``
+      wide, so each posting's column in a range-local array is a direct
+      offset, ``col = doc_id − lo``. Every kernel accumulates into
+      arrays over these columns, and :meth:`mask_of` turns a doc-id set
+      into a mask over them.
+    * :meth:`norm` is ``tf_norm`` over the whole range, once per
+      (avgdl, k1, b).
+    * Block metadata (:meth:`block_bound`), positions
+      (:meth:`positions`) and per-key doc masks (:meth:`has`) are
+      decoded lazily, per key, and cached for the batch.
+    """
+
+    def __init__(self, tbl, keys: list | None = None):
+        self._tbl = tbl
+        self.n = tbl.column("n").to_numpy().astype(np.int64)
+        self.bounds = np.zeros(self.n.size + 1, dtype=np.int64)
+        np.cumsum(self.n, out=self.bounds[1:])
+        if keys is None:
+            keys = tbl.column("term").to_pylist()
+        self._row = {key: i for i, key in enumerate(keys) if self.n[i]}
+        self._cache: dict[tuple, np.ndarray] = {}
+
+    @classmethod
+    def from_pandas(cls, pdf: pd.DataFrame,
+                    keys: list | None = None) -> "PostingsRange":
+        """The range of a pandas group of postings rows (the JVM scan's
+        ``applyInPandas`` / ``cogroup`` groups and ``multi_match``)."""
+        import pyarrow as pa
+
+        schema = _postings_arrow_schema()
+        return cls(pa.table({c: pa.array(pdf[c], type=schema.field(c).type)
+                             for c in schema.names if c in pdf.columns}),
+                   keys)
+
+    def __contains__(self, key) -> bool:
+        return key in self._row
+
+    def span(self, key) -> slice:
+        i = self._row[key]
+        return slice(self.bounds[i], self.bounds[i + 1])
+
+    def postings(self, key) -> tuple:
+        """(doc_ids, tfs, dls) of one key — views of the range arrays."""
+        s = self.span(key)
+        return self.ids[s], self.tfs[s], self.dls[s]
+
+    def _values(self, name: str) -> np.ndarray:
+        """Every row's varints of binary column ``name``, decoded and
+        concatenated (int64)."""
+        out = np.empty(self.bounds[-1], dtype=np.int64)
+        if not out.size:
+            return out
+        arr = self._tbl.column(name).combine_chunks()
+        off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+            arr.offset:arr.offset + len(arr) + 1].astype(np.int64)
+        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+        cuts = np.searchsorted(
+            off, np.arange(off[0], off[-1], DECODE_CHUNK_BYTES), "right") - 1
+        cuts = np.unique(np.concatenate([[0], cuts, [off.size - 1]]))
+        vb = self.bounds
+        for r0, r1 in zip(cuts[:-1], cuts[1:]):
+            out[vb[r0]:vb[r1]] = decode_varint(
+                data[off[r0]:off[r1]]).view(np.int64)
+        return out
+
+    @cached_property
+    def ids(self) -> np.ndarray:
+        deltas = self._values("doc_ids")
+        csum = np.zeros(deltas.size + 1, dtype=np.int64)
+        np.cumsum(deltas, out=csum[1:])
+        first = self._tbl.column("first_doc_id").to_numpy().astype(np.int64)
+        return csum[1:] + np.repeat(first - csum[self.bounds[:-1]], self.n)
+
+    @cached_property
+    def tfs(self) -> np.ndarray:
+        return self._values("tfs") + 1
+
+    @cached_property
+    def dls(self) -> np.ndarray:
+        return self._values("dls")
+
+    @cached_property
+    def lo(self) -> int:
+        """The range's first doc id (0 without postings)."""
+        return int(self.ids.min()) if self.ids.size else 0
+
+    @cached_property
+    def width(self) -> int:
+        """Columns of the range-local arrays: its doc-id span."""
+        return int(self.ids.max()) - self.lo + 1 if self.ids.size else 0
+
+    @cached_property
+    def col(self) -> np.ndarray:
+        """Each posting's column: its direct offset ``doc_id − lo``."""
+        return self.ids - self.lo
+
+    def mask_of(self, doc_ids: np.ndarray) -> np.ndarray:
+        """Bool mask over the columns: the given doc ids of the range."""
+        m = np.zeros(self.width, dtype=bool)
+        c = np.asarray(doc_ids, dtype=np.int64) - self.lo
+        m[c[(c >= 0) & (c < self.width)]] = True
+        return m
+
+    def norm(self, avgdl: float, k1: float, b: float) -> np.ndarray:
+        """``tf_norm`` of every posting of the range."""
+        return self._cached(("norm", avgdl, k1, b), None, lambda: tf_norm(
+            self.tfs, self.dls, avgdl, k1, b))
+
+    def _blob(self, name: str, key) -> bytes:
+        return self._tbl.column(name)[self._row[key]].as_py()
+
+    def _cached(self, kind, key, make) -> np.ndarray:
+        got = self._cache.get((kind, key))
+        if got is None:
+            got = self._cache[(kind, key)] = make()
+        return got
+
+    def has(self, key) -> np.ndarray:
+        """Bool mask over the columns: the docs with a posting of
+        ``key``."""
+        def make():
+            m = np.zeros(self.width, dtype=bool)
+            m[self.col[self.span(key)]] = True
+            return m
+        return self._cached("has", key, make)
+
+    def block_bound(self, key, avgdl: float, k1: float,
+                    b: float) -> np.ndarray:
+        """Per-128-posting-block upper bound of ``key``'s ``tf_norm``
+        (unweighted): ``tf_norm(max_tf, min_dl)`` is valid at ANY avgdl;
+        the (1 + 1e-9) pad absorbs float monotonicity edge cases."""
+        def make():
+            btf, bdl = decode_block_meta(self._blob("block_max_tf", key),
+                                         self._blob("block_min_dl", key))
+            return tf_norm(btf, bdl, avgdl, k1, b) * (1.0 + 1e-9)
+        return self._cached(("bound", avgdl, k1, b), key, make)
+
+    def positions(self, key) -> np.ndarray:
+        """The positional view of ``key`` (read with ``poss``): one
+        ``doc_id<<24 | position`` key per occurrence. The codec emits
+        doc_ids and each doc's positions ascending, so the keys are
+        sorted — positional kernels intersect with ``isin`` /
+        ``searchsorted`` on them directly; ``keys & _POS_MASK`` recovers
+        the positions, ``keys >> _POS_SHIFT`` the docs."""
+        def make():
+            ids, tfs, _dls = self.postings(key)
+            poss = decode_positions(self._blob("poss", key), tfs)
+            return ((np.repeat(ids, tfs).astype(np.uint64) << _POS_SHIFT)
+                    | poss.astype(np.uint64))
+        return self._cached("positions", key, make)
+
+
+def _ranges_of(tbl):
+    """(range_id, :class:`PostingsRange`) of each range in a postings
+    Arrow table, ascending by range_id (a range split over several files
+    is still whole)."""
+    rid = tbl.column("range_id").to_numpy()
+    if np.any(rid[1:] < rid[:-1]):
+        order = np.argsort(rid, kind="stable")
+        tbl, rid = tbl.take(order), rid[order]
+    cuts = np.flatnonzero(rid[1:] != rid[:-1]) + 1
+    for lo, hi in zip(np.concatenate([[0], cuts]),
+                      np.concatenate([cuts, [rid.size]])):
+        yield int(rid[lo]), PostingsRange(tbl.slice(lo, hi - lo))
+
+
+def _topk(qid: int, docs: np.ndarray, sc: np.ndarray, k: int,
+          out: list) -> None:
+    """Append query ``qid``'s top-k (score desc, doc_id asc) of (docs,
+    sc) to ``out`` as (query_ids, doc_ids, scores). Tie-safe: every doc
+    at or above the k-th score is kept, then only those are ranked —
+    argpartition alone would break boundary ties arbitrarily instead of
+    by ascending doc_id (the rank-identity contract)."""
+    top = min(k, docs.size)
+    if docs.size > top:
+        kth = np.partition(sc, sc.size - top)[sc.size - top]
+        m = sc >= kth
+        docs, sc = docs[m], sc[m]
+    order = np.lexsort((docs, -sc))[:top]
+    out.append((np.full(top, qid, dtype=np.int32), docs[order], sc[order]))
+
+
+def _emit(out: list) -> pd.DataFrame:
+    """One :func:`result_frame` of the (query_ids, doc_ids, scores)
+    parts a kernel appended."""
+    if not out:
+        return result_frame([], [], [])
+    return result_frame(*(np.concatenate(c) for c in zip(*out)))
+
+
 # ---------------------------------------------------- the one executor
 
 def _kernel_over(fs, files, cols: list[str], filters: list, kernel,
                  use_threads: bool, allowed: dict | None = None):
     """The one scan body: read ``files`` (one path or a list) with the
-    bucket/term ``filters``, group the rows by ``range_id`` (across
-    files, so a range split over several files is still whole) and
-    yield each non-empty ``kernel`` output — with ``allowed``
+    bucket/term ``filters``, split the rows by ``range_id`` (across
+    files, so a range split over several files is still whole) into
+    :class:`PostingsRange` s — no pandas frame of the binary columns —
+    and yield each non-empty ``kernel`` output — with ``allowed``
     ({range_id: doc_ids}, whose ranges ``filters`` keep), as
-    ``kernel(pdf, allowed[range_id])``."""
+    ``kernel(rng, allowed[range_id])``."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(files, columns=cols, filters=filters,
                         use_threads=use_threads, filesystem=fs)
     if tbl.num_rows == 0:
         return
-    for rid, grp in tbl.to_pandas().groupby("range_id", sort=False):
-        out = kernel(grp) if allowed is None else kernel(grp,
-                                                         allowed[int(rid)])
+    for rid, rng in _ranges_of(tbl):
+        out = kernel(rng) if allowed is None else kernel(rng, allowed[rid])
         if len(out):
             yield out
 
@@ -317,9 +540,12 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
     global top-k page of them (:data:`RANKED`, the :func:`ranked_topk`
     rule).
 
-    ``kernel(pdf)`` gets one range's postings rows; with ``allowed`` (a
-    (doc_id, range_id) frame, see :func:`_allowed_docs`) it is called as
-    ``kernel(pdf, allowed_ids)`` with that range's allowed doc_ids. The
+    ``kernel(rng)`` gets one range's postings rows as a
+    :class:`PostingsRange`, built once per range on every branch (from
+    the Arrow rows on the driver and pyio branches, from the pandas
+    group on the JVM branches); with ``allowed`` (a (doc_id, range_id)
+    frame, see :func:`_allowed_docs`) it is called as
+    ``kernel(rng, allowed_ids)`` with that range's allowed doc_ids. The
     ``poss`` column is read only with ``need_positions=True``.
     ``n_queries`` is the number of queries the kernel scores (the Q of
     the sized decision).
@@ -338,7 +564,7 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
       bound, ``stats.N`` rows (capped by :data:`DRIVER_MAX_BYTES`, priced
       at δ per row); the call then collects the allowed set in
       one column-pruned Spark job (:func:`_collect_allowed`), reads only
-      the ranges holding an allowed id and calls ``kernel(pdf,
+      the ranges holding an allowed id and calls ``kernel(rng,
       allowed_ids)`` with each range's sorted ids — the cogroup's call.
       Unranked calls never take it (see the constants);
     * unfiltered, range-aligned postings — the pyio scan: one
@@ -393,10 +619,13 @@ def execute(spark: SparkSession, paths: IndexPaths, stats: IndexStats,
                        .cogroup(allowed.groupBy("range_id"))
                        .applyInPandas(
                            lambda pdf, ok: kernel(
-                               pdf, ok["doc_id"].to_numpy(np.int64)),
+                               PostingsRange.from_pandas(pdf),
+                               ok["doc_id"].to_numpy(np.int64)),
                            schema=schema), k)
     return _ranked(postings.groupBy("range_id")
-                   .applyInPandas(lambda pdf: kernel(pdf), schema=schema), k)
+                   .applyInPandas(
+                       lambda pdf: kernel(PostingsRange.from_pandas(pdf)),
+                       schema=schema), k)
 
 
 def _ranked(per_range: DataFrame, k: int | None) -> DataFrame:
@@ -428,7 +657,7 @@ def _driver_scan(spark: SparkSession, fs, files: list, kernel,
     ``allowed`` ({range_id: sorted doc_ids}, :func:`_collect_allowed`)
     makes the call filtered: only ranges with an allowed id are read
     (a ``range_id`` row-group filter), and the kernel is called as
-    ``kernel(pdf, allowed_ids)`` — the call the ``cogroup`` makes."""
+    ``kernel(rng, allowed_ids)`` — the call the ``cogroup`` makes."""
     if not files or allowed == {}:
         return empty_frame(spark, RANKED)
     filters = [("bucket", "in", buckets), ("term", "in", terms)]
@@ -528,21 +757,34 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
     per query-term occurrence (Lucene BooleanQuery / BruteForceBM25.search
     semantics), so 'the the cat' scores 'the' twice.
 
-    The kernel is ``score_range(pdf, allowed_ids=None)`` (the
-    :func:`execute` contract): ``allowed_ids`` carries the doc_ids of
-    this range that pass the metadata filter (the Lucene bool/filter
-    context: scores are corpus-global, the filter only restricts the
-    candidate set — opensearch_loader.py:873-884 semantics).
+    The kernel is ``score_range(rng, allowed_ids=None)`` (the
+    :func:`execute` contract, ``rng`` a :class:`PostingsRange`):
+    ``allowed_ids`` carries the doc_ids of this range that pass the
+    metadata filter (the Lucene bool/filter context: scores are
+    corpus-global, the filter only restricts the candidate set —
+    opensearch_loader.py:873-884 semantics).
+
+    **One accumulation rule.** Per query, each term's contributions
+    ``weight · tf_norm`` are added, in the query's term order, into a
+    zeroed range-local array over the range's doc columns
+    (:attr:`PostingsRange.col`, a direct offset). A doc's score is
+    therefore the same left-to-right sum of the same floats whatever
+    other queries share the batch, the range or the call — bit for bit.
+    Weights are positive (idf > 0 as df ≤ N) and ``tf_norm`` > 0, so the
+    hits are the columns above 0. Every constraint below is a mask over
+    that array:
+
+    ``allowed_ids`` — the docs passing the filter.
 
     ``after_spec``: {query_id: (score, doc_id)} — the search_after
     cursor: only docs sorting STRICTLY AFTER the cursor in the
     (score desc, doc_id asc) total order compete for the page's top-k.
-    The filter runs range-locally before selection, so a deep page
-    never materializes more than k rows per range (the OpenSearch
-    search_after contract, vs the from+size deep-paging trap). Cursor
-    scores must come from the same engine (bit-identical f64); callers
-    pass ``prune=False`` — block-max thresholds assume the
-    unconstrained top-k, and the after-page lives below it.
+    The mask is range-local, so a deep page never materializes more than
+    k rows per range (the OpenSearch search_after contract, vs the
+    from+size deep-paging trap). Cursor scores must come from the same
+    engine (bit-identical f64); callers pass ``prune=False`` — block-max
+    thresholds assume the unconstrained top-k, and the after-page lives
+    below it.
 
     ``bool_spec``: {query_id: (must_terms, must_not_terms)} — Lucene
     BooleanQuery clause constraints (the reference's bool query builder,
@@ -553,286 +795,115 @@ def _score_kernel(qinfo: dict, k: int, stats: IndexStats, prune: bool,
     ``prune=False`` with a non-empty bool_spec: block-max thresholds are
     computed over unconstrained candidates, and clause filtering can push
     the true k-th score below that threshold (same soundness argument as
-    the metadata-filter path).
+    the metadata filter, under which pruning is off).
 
     ``msm_spec``: {query_id: m} — the ``minimum_should_match`` parameter
     of the reference's match queries (the OpenSearch search body the
     repo's verify step issues, opensearch_loader.py:873-884): a doc
-    qualifies only if it matches ≥ m DISTINCT query terms. The matched
-    count per doc falls out of the TAAT combine for free (one
-    contribution segment per distinct matched term — reduceat segment
-    lengths), so this is a vectorized mask, not a second pass. Requires
+    qualifies only if it matches ≥ m DISTINCT query terms, counted by a
+    per-doc hit counter filled in the same pass as the scores. Requires
     ``prune=False`` for the same soundness reason as bool_spec: block-max
     masks drop low-scoring postings, which would undercount a doc's
     matched-term tally.
+
+    ``prune``: block-max masks (:func:`_block_prune`) drop a term's
+    contributions before they are added.
     """
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
-    # dense-accumulator batch path (guide §1.2 "the distributed algorithm
-    # first"): eligible when nothing query-specific constrains the doc set
-    # — per-doc sums are bit-identical to the loop path (see score_range)
-    # ≥16 queries: dense per-query work is O(range span), which only
-    # beats the loop when a batch amortizes the per-range setup — and
-    # small declared query sets (3-5 queries, oracle-hash-gated) keep the
-    # loop path byte-for-byte (the dense accumulator's per-doc sums can
-    # differ from np.add.reduceat's SIMD association by 1 ULP)
-    # (and no metadata filter: checked per call, on allowed_ids)
-    dense_ok = (not prune and not bool_spec and not after_spec
-                and not msm_spec and len(qinfo) >= 16)
-    batch_terms = sorted({t for ti in qinfo.values() for t in ti})
 
-    def score_range(pdf: pd.DataFrame,
+    def score_range(rng: PostingsRange,
                     allowed_ids: np.ndarray | None = None) -> pd.DataFrame:
-        by_term: dict[str, dict] = {}
-        for rec in pdf.to_dict("records"):
-            by_term[rec["term"]] = rec
-        # per-range caches shared across the query batch: each term is
-        # decoded and tf-normalized ONCE even when thousands of queries hit
-        # it (the per-query idf·count weight is a cheap scalar multiply)
-        dec_cache: dict[str, tuple] = {}
-        norm_cache: dict[str, np.ndarray] = {}
-        ub_cache: dict[str, np.ndarray] = {}
-
-        def get_decoded(t: str):
-            got = dec_cache.get(t)
-            if got is None:
-                ids, tfs, dls = decode_postings(by_term[t])
-                if allowed_ids is not None:
-                    m = np.isin(ids, allowed_ids)
-                    ids, tfs, dls = ids[m], tfs[m], dls[m]
-                got = dec_cache[t] = (ids, tfs, dls)
-            return got
-
-        # ---- dense-accumulator batch path (round 6): a doc range is a
-        # CONTIGUOUS doc_id span, so scores accumulate into a direct-
-        # offset array (col = doc_id - range_min): no per-query concat,
-        # no argsort, no reduceat. Contributions are strictly positive
-        # and added in the same per-query term order as the loop path
-        # (and IEEE 0.0 + x == x, so the zeros start adds nothing);
-        # differential-tested equal to the loop on ranks/doc sets — raw
-        # scores can differ from np.add.reduceat's SIMD-internal
-        # association by 1 ULP, which is why dense_ok requires a ≥16
-        # query batch (oracle-gated small query sets never come here).
-        # Gated on density — per-query work is O(ncols), which only
-        # beats the loop's O(Σ|lists| · log) when the batch touches most
-        # columns; sparse workloads keep the loop.
-        if dense_ok and allowed_ids is None:
-            live: dict[str, tuple] = {}
-            lo_id = hi_id = None
-            nnz = 0
-            for t in batch_terms:
-                if t not in by_term:
-                    continue
-                ids, tfs, dls = get_decoded(t)
-                if ids.size == 0:
-                    continue
-                c = norm_cache.get(t)
-                if c is None:
-                    c = norm_cache[t] = tf_norm(tfs, dls, avgdl, k1, b)
-                live[t] = (ids, c)
-                nnz += ids.size
-                lo_id = ids[0] if lo_id is None else min(lo_id, ids[0])
-                hi_id = ids[-1] if hi_id is None else max(hi_id, ids[-1])
-            ncols = 0 if lo_id is None else int(hi_id) - int(lo_id) + 1
-            if live and 0 < ncols <= 8_000_000 and nnz >= ncols:
-                lo_id = int(lo_id)
-                # pre-bind (cols, contrib) per term so the per-query loop
-                # does two dict gets and one fancy-indexed add per term
-                pre = {t: (ids - lo_id, c) for t, (ids, c) in live.items()}
-                parts_q, parts_d, parts_s = [], [], []
-                acc = np.empty(ncols)
-                for query_id, term_idfs in qinfo.items():
-                    acc[:] = 0.0
-                    n_hit = 0
-                    for t, w in term_idfs.items():
-                        tl = pre.get(t)
-                        if tl is None:
-                            continue
-                        acc[tl[0]] += w * tl[1]
-                        n_hit += 1
-                    if n_hit == 0:
-                        continue
-                    uniq0 = np.flatnonzero(acc > 0.0)
-                    if uniq0.size == 0:
-                        continue
-                    accm = acc[uniq0]
-                    uniq = (uniq0 + lo_id).astype(np.int64)
-                    top = min(k, uniq.size)
-                    if uniq.size > top:
-                        kth = np.partition(
-                            accm, accm.size - top)[accm.size - top]
-                        mm = accm >= kth
-                        cand_u, cand_a = uniq[mm], accm[mm]
-                    else:
-                        cand_u, cand_a = uniq, accm
-                    order = np.lexsort((cand_u, -cand_a))[:top]
-                    parts_q.append(np.full(top, query_id, dtype=np.int32))
-                    parts_d.append(cand_u[order])
-                    parts_s.append(cand_a[order])
-                if not parts_q:
-                    return result_frame([], [], [])
-                return result_frame(np.concatenate(parts_q),
-                                    np.concatenate(parts_d),
-                                    np.concatenate(parts_s))
-
-        # NOTE: a fully-batched variant (one global (query,doc) key sort
-        # across the query set) was tried and measured 4× SLOWER than this
-        # per-query loop — many small cache-resident accumulates beat one
-        # huge uint64 sort. The shared decode/contrib caches above are
-        # what matters for batch workloads.
-        out_q, out_d, out_s = [], [], []
-        for query_id, term_idfs in qinfo.items():
-            hits = [(t, w, by_term[t]) for t, w in term_idfs.items()
-                    if t in by_term]
+        norm = rng.norm(avgdl, k1, b)
+        acc = np.empty(rng.width)
+        tally = None
+        allowed = None if allowed_ids is None else rng.mask_of(allowed_ids)
+        out: list = []
+        for qid, term_idfs in qinfo.items():
+            hits = [(t, w) for t, w in term_idfs.items() if t in rng]
             if not hits:
                 continue
-            decoded = {t: get_decoded(t) for t, _w, _rec in hits}
-            hits = [(t, w, rec) for t, w, rec in hits if decoded[t][0].size]
-            if not hits:
-                continue
-            spec = bool_spec.get(query_id) if bool_spec else None
-            if spec:
-                live = {t for t, _w, _rec in hits}
-                if any(t not in live for t in spec[0]):
-                    continue  # a must term has no postings in this range
-            m_req = msm_spec.get(query_id) if msm_spec else None
+            spec = bool_spec.get(qid) if bool_spec else None
+            if spec and any(t not in rng for t in spec[0]):
+                continue  # a must term has no postings in this range
+            m_req = msm_spec.get(qid) if msm_spec else None
             if m_req is not None and len(hits) < m_req:
                 continue  # fewer live terms than the floor: nothing matches
-            contribs = {}
-            for t, w, _rec in hits:
-                c = norm_cache.get(t)
-                if c is None:
-                    c = norm_cache[t] = tf_norm(
-                        decoded[t][1], decoded[t][2], avgdl, k1, b)
-                contribs[t] = w * c
-            # block maxes index ORIGINAL posting positions → pruning is
-            # disabled under a metadata filter (positions no longer align)
-            if prune and len(hits) > 1 and allowed_ids is None:
-                masks = _block_prune_masks(hits, contribs, k, avgdl, k1, b,
-                                           ub_cache)
-            else:
-                masks = None
-            parts_ids, parts_sc = [], []
-            for t, _w, _rec in hits:
-                doc_ids = decoded[t][0]
-                sc_t = contribs[t]
-                if masks is not None and masks[t] is not None:
-                    keep = masks[t]
-                    doc_ids, sc_t = doc_ids[keep], sc_t[keep]
-                parts_ids.append(doc_ids)
-                parts_sc.append(sc_t)
-            ids = np.concatenate(parts_ids)
-            sc = np.concatenate(parts_sc)
-            if ids.size == 0:
-                continue
-            # vectorized TAAT combine: stable sort by doc → segmented sum.
-            # reduceat's left-to-right per-segment sum adds contributions
-            # in the SAME order as the former unique+add.at (stable sort
-            # keeps term order within a doc; IEEE: 0+c1 == c1), so scores
-            # are bit-identical — ~2× less work than unique(return_inverse)
-            order0 = np.argsort(ids, kind="stable")
-            ids_s, sc_s = ids[order0], sc[order0]
-            chg = np.empty(ids_s.size, dtype=bool)
-            chg[0] = True
-            chg[1:] = ids_s[1:] != ids_s[:-1]
-            starts = np.flatnonzero(chg)
-            acc = np.add.reduceat(sc_s, starts)
-            uniq = ids_s[starts]
-            if m_req is not None and m_req > 1:
-                # contribution segments per doc = distinct matched terms
-                seglen = np.diff(np.append(starts, ids_s.size))
-                keep = seglen >= m_req
-                uniq, acc = uniq[keep], acc[keep]
-                if uniq.size == 0:
-                    continue
+            parts = [(rng.col[s], w * norm[s])
+                     for s, w in ((rng.span(t), w) for t, w in hits)]
+            # block maxes index a term's ORIGINAL posting positions and
+            # bound the unfiltered top-k: no pruning under a filter
+            if prune and len(hits) > 1 and allowed is None:
+                parts = _block_prune(rng, hits, parts, k, avgdl, k1, b)
+            acc[:] = 0.0
+            count = m_req is not None and m_req > 1
+            if count:
+                if tally is None:
+                    tally = np.empty(rng.width, dtype=np.int32)
+                tally[:] = 0
+            for cols, contrib in parts:
+                acc[cols] += contrib
+                if count:
+                    tally[cols] += 1
+            keep = acc > 0.0
+            if count:
+                keep &= tally >= m_req
             if spec:
-                keep = np.ones(uniq.size, dtype=bool)
-                for t in spec[0]:           # must: intersect posting sets
-                    keep &= np.isin(uniq, decoded[t][0])
-                for t in spec[1]:           # must_not: subtract
-                    if t in by_term:
-                        keep &= ~np.isin(uniq, get_decoded(t)[0])
-                uniq, acc = uniq[keep], acc[keep]
-                if uniq.size == 0:
-                    continue
-            aft = after_spec.get(query_id) if after_spec else None
+                for t in spec[0]:           # must: every posting set
+                    keep &= rng.has(t)
+                for t in spec[1]:           # must_not: none of them
+                    if t in rng:
+                        keep &= ~rng.has(t)
+            if allowed is not None:
+                keep &= allowed
+            cols = np.flatnonzero(keep)
+            docs, sc = cols + rng.lo, acc[cols]
+            aft = after_spec.get(qid) if after_spec else None
             if aft is not None:
                 a_s, a_d = aft
-                keep = (acc < a_s) | ((acc == a_s) & (uniq > a_d))
-                uniq, acc = uniq[keep], acc[keep]
-                if uniq.size == 0:
-                    continue
-            top = min(k, uniq.size)
-            if uniq.size > top:
-                # tie-safe selection: keep every doc scoring >= the k-th
-                # value (boundary ties included), then rank only those —
-                # argpartition alone would break boundary ties arbitrarily
-                # instead of by ascending doc_id (rank-identity contract)
-                kth = np.partition(acc, acc.size - top)[acc.size - top]
-                m = acc >= kth
-                cand_u, cand_a = uniq[m], acc[m]
-            else:
-                cand_u, cand_a = uniq, acc
-            order = np.lexsort((cand_u, -cand_a))[:top]
-            out_q.extend([query_id] * top)
-            out_d.extend(cand_u[order].tolist())
-            out_s.extend(cand_a[order].tolist())
-        return result_frame(out_q, out_d, out_s)
+                m = (sc < a_s) | ((sc == a_s) & (docs > a_d))
+                docs, sc = docs[m], sc[m]
+            if docs.size:
+                _topk(qid, docs, sc, k, out)
+        return _emit(out)
 
     return score_range
 
 
-def _block_prune_masks(hits: list, contribs: dict, k: int,
-                       avgdl: float, k1: float, b: float,
-                       ub_cache: dict | None = None) -> dict:
-    """Block-max pruning masks (BMW family; sound, vectorized).
+def _block_prune(rng: PostingsRange, hits: list, parts: list, k: int,
+                 avgdl: float, k1: float, b: float) -> list:
+    """Block-max pruning (BMW family; sound, vectorized): ``parts``, one
+    (cols, contributions) pair per term of ``hits`` ((term, weight)
+    pairs), with the postings of skippable blocks dropped.
 
-    Threshold seeding: the *champion* term (largest idf·block-max) has its
-    actual per-posting contributions already computed — each is a lower
-    bound on that doc's final score, so the k-th largest contribution is a
-    sound lower bound on the true k-th best total score in this range.
+    Threshold seeding: the *champion* term (largest weight·block-max) has
+    its actual per-posting contributions already computed — each is a
+    lower bound on that doc's final score, so the k-th largest
+    contribution is a sound lower bound on the true k-th best total score
+    in this range.
 
     Block prune rule: a 128-posting block b of term t is skippable iff
-    ``idf_t·block_max_t[b] + Σ_{t'≠t} max(idf_t'·block_max_t') < threshold``
+    ``w_t·block_max_t[b] + Σ_{t'≠t} max(w_t'·block_max_t') < threshold``
     — every doc in that block then provably misses top-k, so dropping its
     t-contribution cannot perturb the top-k set or the exact scores of its
     members (their own blocks are never prunable). Differential-tested
     against exhaustive scoring (prune=False).
-
-    Returns {term: bool posting mask or None (keep all)}.
     """
-    ubs = {}
-    for t, w, rec in hits:
-        u = ub_cache.get(t) if ub_cache is not None else None
-        if u is None:
-            btf, bdl = decode_block_meta(rec["block_max_tf"],
-                                         rec["block_min_dl"])
-            # (max_tf, min_dl) bound is valid at ANY avgdl; the (1+1e-9)
-            # pad absorbs float monotonicity edge cases. Cached unweighted:
-            # the per-query idf·count weight w varies across queries.
-            u = tf_norm(btf, bdl, avgdl, k1, b) * (1.0 + 1e-9)
-            if ub_cache is not None:
-                ub_cache[t] = u
-        ubs[t] = w * u
-    term_max = {t: (u.max() if u.size else 0.0) for t, u in ubs.items()}
-    total_ub = float(sum(term_max.values()))
-    champ = max(term_max, key=term_max.get)
-    champ_contrib = contribs[champ]
-    masks: dict = {t: None for t, _w, _r in hits}
-    if champ_contrib.size < k:
-        return masks  # not enough evidence to seed a sound threshold
-    thresh = float(np.partition(champ_contrib,
-                                champ_contrib.size - k)[champ_contrib.size - k])
-    for t, _w, _rec in hits:
-        ub = ubs[t]
-        if not ub.size:
-            continue
-        bound = ub + (total_ub - term_max[t])
-        keep_blocks = bound >= thresh
-        if keep_blocks.all():
-            continue
-        n = contribs[t].size
-        masks[t] = np.repeat(keep_blocks, BLOCK)[:n]
-    return masks
+    ubs = [w * rng.block_bound(t, avgdl, k1, b) for t, w in hits]
+    term_max = [u.max() if u.size else 0.0 for u in ubs]
+    total_ub = float(sum(term_max))
+    champ = parts[int(np.argmax(term_max))][1]
+    if champ.size < k:
+        return parts  # not enough evidence to seed a sound threshold
+    thresh = float(np.partition(champ, champ.size - k)[champ.size - k])
+    out = []
+    for (cols, contrib), ub, t_max in zip(parts, ubs, term_max):
+        if ub.size:
+            keep_blocks = ub + (total_ub - t_max) >= thresh
+            if not keep_blocks.all():
+                keep = np.repeat(keep_blocks, BLOCK)[:contrib.size]
+                cols, contrib = cols[keep], contrib[keep]
+        out.append((cols, contrib))
+    return out
 
 
 def _allowed_docs(spark: SparkSession, paths: IndexPaths,
@@ -887,26 +958,6 @@ def search(spark: SparkSession, index_dir: str, queries: list[tuple[int, str]],
 
 # --------------------------------------------------------- phrase queries
 
-_POS_SHIFT = np.uint64(24)  # doc_id<<24 | position keys: dl < 2^24 tokens,
-#                             doc_id < 2^39 — both safe at 10^12-doc scale
-_POS_MASK = (np.uint64(1) << _POS_SHIFT) - np.uint64(1)
-
-
-def decode_position_keys(rec) -> tuple:
-    """The one positional decoder: a posting row (read with ``poss``) →
-    (doc_ids, tfs, dls, keys) with one ``doc_id<<24 | position`` key per
-    occurrence. The codec emits doc_ids and each doc's positions
-    ascending, so ``keys`` is sorted — every positional kernel
-    intersects with ``isin``/``searchsorted`` on it directly;
-    ``keys & _POS_MASK`` recovers the positions, ``keys >> _POS_SHIFT``
-    the docs."""
-    doc_ids, tfs, dls = decode_postings(rec)
-    poss = decode_positions(rec["poss"], tfs)
-    keys = ((np.repeat(doc_ids, tfs).astype(np.uint64) << _POS_SHIFT)
-            | poss.astype(np.uint64))
-    return doc_ids, tfs, dls, keys
-
-
 def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
     """Per-doc-range phrase scorer (match_phrase semantics,
     opensearch_loader.py:386-408 / Lucene PhraseQuery):
@@ -937,26 +988,23 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
     """
     k1, b, avgdl = stats.k1, stats.b, stats.avgdl
 
-    def score_range(pdf: pd.DataFrame,
+    def score_range(rng: PostingsRange,
                     allowed_ids: np.ndarray | None = None) -> pd.DataFrame:
-        by_term: dict[str, dict] = {}
-        for rec in pdf.to_dict("records"):
-            by_term[rec["term"]] = rec
-        out_q, out_d, out_s = [], [], []
+        out: list = []
         for query_id, info in qinfo.items():
             terms = info["terms"]
-            if not all(t in by_term for t in terms):
+            if not all(t in rng for t in terms):
                 continue
-            decoded = {t: decode_position_keys(by_term[t])
-                       for t in set(terms)}
             # anchor: (doc, pos) pairs of the first term
-            d0, t0f, dl0, keys0 = decoded[terms[0]]
+            d0, _tf0, dl0 = rng.postings(terms[0])
+            keys0 = rng.positions(terms[0])
             if slop == 0:
                 cand = keys0
                 for i, t in enumerate(terms[1:], start=1):
                     if cand.size == 0:
                         break
-                    cand = cand[np.isin(cand + np.uint64(i), decoded[t][3])]
+                    cand = cand[np.isin(cand + np.uint64(i),
+                                        rng.positions(t))]
             else:
                 # greedy chain: for each anchor, repeatedly take the
                 # SMALLEST next-term occurrence after the previous one
@@ -972,7 +1020,7 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
                 for t in terms[1:]:
                     if not alive.any():
                         break
-                    keys_t = decoded[t][3]
+                    keys_t = rng.positions(t)
                     lookup = (docs_a << _POS_SHIFT) | (prev + np.uint64(1))
                     idx = np.searchsorted(keys_t, lookup, side="left")
                     ok = idx < keys_t.size
@@ -993,13 +1041,9 @@ def _phrase_kernel(qinfo: dict, k: int, stats: IndexStats, slop: int = 0):
                     continue
             # dl lookup from the anchor term's posting run
             dl_map = dl0[np.searchsorted(d0, uniq)]
-            sc = info["idf"] * tf_norm(pf, dl_map, avgdl, k1, b)
-            top = min(k, uniq.size)
-            order = np.lexsort((uniq, -sc))[:top]
-            out_q.extend([query_id] * top)
-            out_d.extend(uniq[order].tolist())
-            out_s.extend(sc[order].tolist())
-        return result_frame(out_q, out_d, out_s)
+            _topk(query_id, uniq,
+                  info["idf"] * tf_norm(pf, dl_map, avgdl, k1, b), k, out)
+        return _emit(out)
 
     return score_range
 

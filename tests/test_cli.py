@@ -84,3 +84,18 @@ def test_cli_dedup_exact(cli_index, capsys, spark, tmp_path):
     docs.to_parquet(p, index=False)
     rows = _run(capsys, ["dedup", "--docs", p, "--method", "exact"])
     assert any(r.get("n_docs") == 2 for r in rows)
+
+
+def test_cli_build_ranges_match_stats(cli_index, capsys, spark, tmp_path):
+    """``build --ranges N`` writes N ranges, and ``stats.num_ranges``
+    records the written layout: the manifest's range count."""
+    from pdf_to_opensearch_spark import tablefs
+    from pdf_to_opensearch_spark.indexer import IndexPaths, load_stats
+
+    _, pages = cli_index
+    idx = str(tmp_path / "idx3")
+    _run(capsys, ["build", "--pages", pages, "--index", idx,
+                  "--ranges", "3", "--buckets", "8"])
+    manifest = tablefs.read_small_table(spark, IndexPaths(idx).manifest)
+    assert load_stats(spark, idx).num_ranges == \
+        manifest["range_id"].nunique() == 3

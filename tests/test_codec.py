@@ -84,3 +84,69 @@ def test_encode_empty_postings():
                           np.array([], dtype=np.int64))
     ids, tfs, dls = decode_postings(enc)
     assert ids.size == tfs.size == dls.size == 0
+
+
+@st.composite
+def _posting_rows(draw):
+    """Encoded (term, range) rows of one range: sorted doc ids in a shared
+    span, tfs, dls and per-doc sorted positions (some rows empty)."""
+    rows = []
+    for i in range(draw(st.integers(min_value=1, max_value=8))):
+        ids = np.array(sorted(draw(st.sets(
+            st.integers(min_value=500, max_value=900), max_size=60))),
+            dtype=np.int64)
+        tfs = np.array([draw(st.integers(min_value=1, max_value=4))
+                        for _ in ids], dtype=np.int64)
+        dls = 10 + ids % 7
+        poss = np.concatenate([np.sort(np.random.default_rng(d).choice(
+            10, size=tf, replace=False)) for d, tf in zip(ids, tfs)]
+            + [np.empty(0, np.int64)])
+        rows.append({"term": f"t{i}", "range_id": 0, "bucket": 0,
+                     **encode_postings(ids, tfs, dls, poss),
+                     "positions": poss})
+    return rows
+
+
+@given(_posting_rows(), st.integers(min_value=1, max_value=64),
+       st.integers(min_value=0, max_value=2))
+@settings(max_examples=100, deadline=None)
+def test_decoded_range_matches_per_row_decode(rows, chunk, skip):
+    """A :class:`PostingsRange` — whole-range decode in chunks of rows,
+    from a sliced Arrow table or from a pandas group — gives every row's
+    postings, doc columns and positions exactly as the per-row decode."""
+    import pyarrow as pa
+
+    from pdf_to_opensearch_spark import query
+    from pdf_to_opensearch_spark.codec import decode_positions
+    from pdf_to_opensearch_spark.indexer import _postings_arrow_schema
+
+    schema = _postings_arrow_schema()
+    pad = [dict(rows[0], term="pad")] * skip
+    tbl = pa.Table.from_pylist(
+        [{c: r.get(c, 0) for c in schema.names} for r in pad + rows],
+        schema=schema).slice(skip)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(query, "DECODE_CHUNK_BYTES", chunk)
+        ranges = [query.PostingsRange(tbl),
+                  query.PostingsRange.from_pandas(tbl.to_pandas())]
+        for rng in ranges:  # decode under the patched chunk size
+            rng.ids, rng.tfs, rng.dls
+    for rng in ranges:
+        for r in rows:
+            want = decode_postings(r)
+            if not r["n"]:
+                assert r["term"] not in rng
+                continue
+            for got, exp in zip(rng.postings(r["term"]), want):
+                assert np.array_equal(got, exp)
+            assert np.array_equal(rng.col[rng.span(r["term"])] + rng.lo,
+                                  want[0])
+            keys = rng.positions(r["term"])
+            assert np.array_equal(keys >> np.uint64(24),
+                                  np.repeat(want[0], want[1]))
+            assert np.array_equal(
+                keys & np.uint64((1 << 24) - 1),
+                decode_positions(r["poss"], want[1]))
+        live = [r["first_doc_id"] for r in rows if r["n"]]
+        assert rng.lo == (min(live) if live else 0)
+        assert rng.width == (rng.ids.max() - rng.lo + 1 if live else 0)

@@ -2,7 +2,10 @@
 (SURVEY.md §5.2/§5.4); resume + delete semantics."""
 
 import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from pdf_to_opensearch_spark.extract import extract_docs
 from pdf_to_opensearch_spark.indexer import build_index, resume_info
@@ -161,32 +164,24 @@ def test_batch_kernel_matches_per_query(spark, index_dir, corpus):
 
 
 def test_dense_batch_path_matches_loop_path(spark, index_dir):
-    """The round-6 dense-accumulator batch kernel (fires at ≥16 queries,
-    prune=False, no filter/specs) must agree with the per-query loop
-    path: identical doc sets and ranks, scores equal to ≤1 ULP (the
-    accumulator's sequential adds vs np.add.reduceat's SIMD-internal
-    association). minimum_should_match=1 forces the loop path without
-    changing semantics (every matched doc matches ≥1 term)."""
+    """A ≥16-query batch scores bit for bit like the same batch under
+    ``minimum_should_match=1`` (which adds the per-doc hit counter and
+    changes nothing else: every matched doc matches ≥1 term) — one
+    accumulation rule, whatever masks a call adds."""
     big = [(i, q) for i, (qid, q) in enumerate(QUERIES * 3)]
     assert len(big) >= 16
-    dense = (search(spark, index_dir, big, k=K, prune=False).toPandas()
+    plain = (search(spark, index_dir, big, k=K, prune=False).toPandas()
              .sort_values(["query_id", "rank"], ignore_index=True))
-    loop = (search(spark, index_dir, big, k=K, prune=False,
-                   minimum_should_match=1).toPandas()
-            .sort_values(["query_id", "rank"], ignore_index=True))
-    assert list(dense["query_id"]) == list(loop["query_id"])
-    assert list(dense["rank"]) == list(loop["rank"])
-    assert list(dense["doc_id"]) == list(loop["doc_id"])
-    np.testing.assert_allclose(dense["score"].to_numpy(),
-                               loop["score"].to_numpy(), rtol=1e-14)
+    msm = (search(spark, index_dir, big, k=K, prune=False,
+                  minimum_should_match=1).toPandas()
+           .sort_values(["query_id", "rank"], ignore_index=True))
+    pd.testing.assert_frame_equal(plain, msm, check_exact=True)
 
 
 def test_dense_kernel_gate_both_sides(spark, index_dir, corpus):
-    """The dense-accumulator gate fires at 16 live, unpruned, unfiltered
-    queries: 15 of them take the reduceat loop, 16 the dense path. Over
-    the same queries both give identical doc ids and ranks, scores within
-    1 ULP of each other (the accumulator's sequential adds vs reduceat's
-    SIMD association) and within 1e-6 of BruteForceBM25."""
+    """15- and 16-query batches (the two sides of the former dense-kernel
+    gate) score their 15 shared queries bit for bit alike, and within
+    1e-6 of BruteForceBM25."""
     _, oracle = corpus
     live = [q for _qid, q in QUERIES if oracle.search(q, 1)]
     batch = [(i, q) for i, q in enumerate((live * 2)[:16])]
@@ -196,20 +191,84 @@ def test_dense_kernel_gate_both_sides(spark, index_dir, corpus):
                   .toPandas().sort_values(["query_id", "rank"],
                                           ignore_index=True))
     assert got[16]["query_id"].nunique() == 16  # every query is live
-    loop, dense = got[15], got[16][got[16]["query_id"] < 15]
-    assert list(loop["query_id"]) == list(dense["query_id"])
-    assert list(loop["rank"]) == list(dense["rank"])
-    assert list(loop["doc_id"]) == list(dense["doc_id"])
-    np.testing.assert_array_max_ulp(loop["score"].to_numpy(),
-                                    dense["score"].to_numpy(), maxulp=1)
-    for side in (loop, got[16]):
-        for qid, q in batch[:side["query_id"].nunique()]:
-            want = oracle.search(q, K)
-            sub = side[side["query_id"] == qid]
-            assert list(sub["doc_id"]) == [d for d, _ in want], (qid, q)
-            np.testing.assert_allclose(sub["score"].to_numpy(),
-                                       [s for _, s in want], rtol=0,
-                                       atol=1e-6)
+    pd.testing.assert_frame_equal(
+        got[15], got[16][got[16]["query_id"] < 15].reset_index(drop=True),
+        check_exact=True)
+    for qid, q in batch:
+        want = oracle.search(q, K)
+        sub = got[16][got[16]["query_id"] == qid]
+        assert list(sub["doc_id"]) == [d for d, _ in want], (qid, q)
+        np.testing.assert_allclose(sub["score"].to_numpy(),
+                                   [s for _, s in want], rtol=0, atol=1e-6)
+
+
+# The batch-independence property: a query's page is the same bit for bit
+# alone and inside any batch, under every mask the kernel applies.
+WORDS = sorted({t for _qid, text in QUERIES for t in text.lower().split()}
+               - {"nonexistentterm12345"})
+
+
+@st.composite
+def _batch_case(draw):
+    mode = draw(st.sampled_from(["prune", "exhaustive", "filter", "bool",
+                                 "msm", "after"]))
+    n = draw(st.integers(1, 64))
+    texts = draw(st.lists(st.lists(st.sampled_from(WORDS), min_size=1,
+                                   max_size=6).map(" ".join),
+                          min_size=n, max_size=n))
+    return mode, texts, draw(st.integers(0, n - 1)), draw(
+        st.sampled_from(WORDS))
+
+
+def _pages(frame) -> dict:
+    pdf = frame.toPandas().sort_values(["query_id", "rank"])
+    return {int(q): (g["doc_id"].to_numpy(), g["score"].to_numpy())
+            for q, g in pdf.groupby("query_id")}
+
+
+@settings(max_examples=30, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(case=_batch_case())
+def test_score_is_batch_independent(spark, index_dir, case):
+    """score(q alone) == score(q inside a random batch of 1–64 queries),
+    bit for bit, with block-max pruning, exhaustive, a metadata filter,
+    bool clauses, minimum_should_match and a search_after cursor."""
+    from pdf_to_opensearch_spark.boolquery import boolean_search
+    from pdf_to_opensearch_spark.query import Searcher
+
+    mode, texts, at, other = case
+    qid = at + 1
+    batch = list(enumerate(texts, 1))
+    s = Searcher(spark, index_dir)
+    if mode == "bool":
+        def as_bool(text):
+            first, *rest = text.split()
+            return {"must": first, "should": " ".join(rest),
+                    "must_not": other if other != first else ""}
+
+        def run(qs):
+            return _pages(boolean_search(
+                spark, index_dir, [(i, as_bool(t)) for i, t in qs], k=5))
+    else:
+        kw = {"prune": mode == "prune"}
+        if mode == "filter":
+            kw["doc_filter"] = "doc_id % 3 != 1"
+        if mode == "msm":
+            kw["minimum_should_match"] = 2
+        if mode == "after":
+            first = _pages(s.search([(qid, texts[at])], k=3, prune=False))
+            if qid in first:
+                ids, scores = first[qid]
+                kw["after"] = {qid: (scores[-1], ids[-1])}
+
+        def run(qs):
+            return _pages(s.search(qs, k=5, **kw))
+    alone = run([(qid, texts[at])])
+    inside = run(batch)
+    assert (qid in alone) == (qid in inside)
+    if qid in alone:
+        np.testing.assert_array_equal(alone[qid][0], inside[qid][0])
+        np.testing.assert_array_equal(alone[qid][1], inside[qid][1])
 
 
 def test_k_edge_cases(spark, index_dir, corpus):

@@ -572,6 +572,31 @@ def test_clean_corpus_job_budget(spark):
     assert n_mh <= 8, n_mh
 
 
+def test_spread_reads_partitions_without_a_job(spark):
+    """``_spread`` reads the partition count from the physical plan: on
+    an adaptive groupBy it starts no Spark job (``df.rdd`` ran the
+    shuffle as one), a one-partition scan is widened to the session's
+    parallelism, and a scan that is already wide is returned as is."""
+    from pyspark.sql import functions as F
+
+    from pdf_to_opensearch_spark.ops.dedup import _spread
+
+    sc = spark.sparkContext
+    grouped = (spark.range(0, 1000, 1, numPartitions=2)
+               .groupBy((F.col("id") % 7).alias("g")).count())
+    sc.setJobGroup("spread_probe", "spread_probe")
+    try:
+        _spread(grouped)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("spread_probe") == []
+    slots = sc.defaultParallelism
+    narrow = spark.range(0, 100, 1, numPartitions=1)
+    assert _spread(narrow).rdd.getNumPartitions() == slots
+    wide = spark.range(0, 100, 1, numPartitions=slots)
+    assert _spread(wide) is wide
+
+
 def test_union_find_matches_bfs_components():
     """The driver union-find equals BFS components, root = component min,
     on random multigraphs and on a path whose ids are shuffled."""
